@@ -163,10 +163,6 @@ def run_pass(spark, seq, sf_dir: str, work: str, cpus: int, bench_queries, qs):
             tiers=(("1s", 100), ("1m", 60), ("1h", 60)),
             run_id="bench",
             resume=False,
-            # measured: the fused single-pass kernel is ~1.5x slower here
-            # (object-dtype padding + wider Arrow frames outweigh the
-            # saved second scan)
-            fused_ingest=False,
             # FAIR-pooled concurrent stages are the default (see
             # pipeline.py); PTS_BENCH_SERIAL=1/true forces serial for
             # A/Bs ("0"/"false" keep the default — raw truthiness would

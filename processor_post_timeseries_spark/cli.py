@@ -52,7 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--fused", action="store_true", help="single-pass blocks+tiers kernel")
     ap.add_argument("--master", default=None, help="override master (default: env/local)")
     ap.add_argument(
         "--legacy-export",
@@ -276,7 +275,6 @@ def main(argv: list[str] | None = None) -> int:
         n_buckets=args.buckets,
         tiers=parse_tiers(args.tiers),
         resume=not args.no_resume,
-        fused_ingest=args.fused,
     )
     if args.run_id:
         kw["run_id"] = args.run_id

@@ -77,16 +77,20 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
     # names (grep: this is the only createOrReplaceTempView site), so
     # skipping the re-registration cannot change any result; pointing
     # the same session at a DIFFERENT sf_dir still reloads.
+    # the caller supplies its own SparkSession — pin the tz so the
+    # NTZ -> timestamp cast below is UTC wall-clock (matching DuckDB's
+    # naive epoch_us) regardless of that session's defaults. Pinned on
+    # every call, cache hit included: the queries' own timestamp
+    # functions (hour, to_date, casts to string) read the session tz at
+    # query time, so a caller that changes the tz between queries would
+    # otherwise shift them.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = f"{sf_dir}"
     try:
         if spark.conf.get("spark.pts.loadedViews") == key:
             return
     except Exception:
         pass
-    # the driver supplies its own SparkSession — pin the tz so the
-    # NTZ -> timestamp cast below is UTC wall-clock (matching DuckDB's
-    # naive epoch_us) regardless of that session's defaults
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     par = max(spark.sparkContext.defaultParallelism, 1)
     try:  # "134217728b" -> bytes; unparsed forms ("128MB") -> default
         max_split = int(

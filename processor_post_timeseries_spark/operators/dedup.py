@@ -148,6 +148,8 @@ def minhash_signatures(
             for pdf in batches:
                 ids, sigs = [], []
                 for d, text in zip(pdf[id_col], pdf[text_col]):
+                    if text is None:  # NULL text has no grams, not "None"
+                        continue
                     words = str(text).split(" ")
                     m = len(words) - (n - 1)
                     if m <= 0:

@@ -177,15 +177,19 @@ def interp_fill(
     prev_p = F.last(obs_pos, ignorenulls=True).over(wb)
     next_v = F.last(v, ignorenulls=True).over(wf)
     next_p = F.last(obs_pos, ignorenulls=True).over(wf)
-    num = (next_v - prev_v) * (F.col(ord_col) - prev_p)
-    den = next_p - prev_p
+    # num, den and pm run in DECIMAL(38,0), not bigint or double: a wide
+    # gap x a large cent delta passes 2^63 (a bigint product would wrap
+    # or fail) and 2^53 (a double loses low bits), while a product of two
+    # factors below 2^63 fits 38 digits. (num - pm) is exactly divisible
+    # by den, so the decimal quotient keeps every bit; decimal overflow
+    # beyond that is loud, never wrong
+    def dec(c):
+        return c.cast("decimal(38,0)")
+
+    num = (dec(next_v) - dec(prev_v)) * (dec(F.col(ord_col)) - dec(prev_p))
+    den = dec(next_p) - dec(prev_p)
     pm = ((num % den) + den) % den
-    # the quotient division runs in DECIMAL(38,0)/bigint, not double:
-    # (num - pm) is exactly divisible by den, and decimal division keeps
-    # every bit for |num| >= 2^53 (a wide gap x a large cent delta),
-    # where the former double path silently lost low bits; true decimal
-    # overflow is loud (null), never wrong
-    q_exact = (num - pm).cast("decimal(38,0)") / den
+    q_exact = (num - pm) / den
     interp = (
         F.when(v.isNotNull(), v)
         .when(prev_v.isNull(), next_v)

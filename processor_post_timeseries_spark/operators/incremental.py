@@ -12,8 +12,8 @@ window is appended verbatim. Cost: one shuffle of the (small) delta +
 one of the touched docs' tier rows — the raw corpus is never rescanned,
 which is the only affordable maintenance shape at 100 TB.
 
-Kernel shape: the merge is BATCH-vectorized like the tier-1 kernel
-(``rollup._batch_window_stats``) — one phase-aware ``ufunc.reduceat``
+Kernel shape: the merge is BATCH-vectorized like the tier kernel
+(``rollup.tier_batches``) — one phase-aware ``ufunc.reduceat``
 over the batch's concatenated delta tokens, scatter into a flattened
 output layout via cumsum offsets, ``np.split`` back per doc. No per-doc
 Python loop in the merge path (the same discipline that got the simhash

@@ -25,12 +25,3 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS, key: str = "doc
     """Deterministic salt bucket from the doc key (stable across runs —
     xxhash64 with fixed seed, never Python hash())."""
     return df.withColumn("bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int"))
-
-
-def salt_and_repartition(
-    df: DataFrame, n_buckets: int = DEFAULT_BUCKETS, key: str = "doc_id"
-) -> DataFrame:
-    """Bucket + repartition on (source, bucket): hot sources spread over
-    n_buckets tasks instead of one."""
-    out = df if "bucket" in df.columns else with_bucket(df, n_buckets, key)
-    return out.repartition("source", "bucket")

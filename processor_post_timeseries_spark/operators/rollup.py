@@ -7,13 +7,22 @@ cascade itself is new, designed Spark-first.
 Scale design
 ------------
 Each sequence's token stream is one channel, sample index = time. A tier
-window therefore never crosses a row: tier-1 aggregates are a pure
-**narrow map** over the ``tokens`` array (numpy reshape inside an Arrow
-batch), and each higher tier re-aggregates the previous tier's arrays the
-same way — ZERO shuffles for the whole cascade at any scale. Exploding to
-one row per token (10^12+ rows) and shuffling on ``(doc, window)`` would
-be the naive plan; we keep block form end to end. Cross-doc/source stats
-are tiny tier summaries and shuffle only those.
+window therefore never crosses a row, so the whole cascade is a **narrow
+map** — ZERO shuffles at any scale. Exploding to one row per token
+(10^12+ rows) and shuffling on ``(doc, window)`` would be the naive plan;
+we keep block form end to end. Cross-doc/source stats are tiny tier
+summaries and shuffle only those.
+
+One kernel (``tier_batches``, run through ``mapInArrow``) computes every
+tier. It reads a list column's offsets and values straight from the Arrow
+batch; raw tokens enter as a window-1 tier (min = max = sum = token,
+cnt = 1), and each tier is one ``ufunc.reduceat`` per statistic over the
+tier below it. Tiers leave as Arrow batches whose list columns are built
+from the reduced values and their window offsets — no per-doc Python
+objects and no pandas frame on either side of the boundary.
+``fused_tiers`` runs the whole cascade in one crossing; the single-tier
+entry points (``tier1_from_tokens``, ``cascade_tier``) run the same kernel
+over one factor.
 
 Determinism: sums are int64 over int32 tokens (exact, order-free); mean
 is derived at read time as ``sum/cnt`` (never accumulated in float), per
@@ -29,7 +38,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,36 +62,11 @@ TIER_SCHEMA = T.StructType(
 DEFAULT_TIERS = (("1s", 100), ("1m", 60), ("1h", 60))  # factors vs previous tier
 
 
-def _window_reduce(a: np.ndarray, w: int, op) -> np.ndarray:
-    """Reduce 1-D array in windows of w (last window ragged)."""
-    n = len(a)
-    full = (n // w) * w
-    head = op(a[:full].reshape(-1, w), axis=1) if full else np.empty(0, a.dtype)
-    if n > full:
-        return np.concatenate([head, [op(a[full:])]])
-    return head
-
-
-def _batch_window_stats(arrays: list[np.ndarray], w: int):
-    """Window min/max/sum/cnt for a whole Arrow batch in FOUR numpy calls.
-
-    Concatenates every doc's values and runs ``ufunc.reduceat`` over the
-    combined window-start boundaries; windows never straddle docs because
-    each doc's offset is itself a boundary. This removes the per-doc
-    Python loop — the difference between interpreter-bound and
-    memory-bound throughput at high core counts.
-    """
-    starts, nws, total = _window_starts([len(a) for a in arrays], w)
-    if total == 0:
-        empty = np.empty(0, np.int64)
-        return empty, empty, empty, empty, nws
-    vals = np.concatenate(arrays).astype(np.int64, copy=False)
-    mins = np.minimum.reduceat(vals, starts)
-    maxs = np.maximum.reduceat(vals, starts)
-    sums = np.add.reduceat(vals, starts)
-    ends = np.concatenate([starts[1:], [len(vals)]])
-    cnts = ends - starts
-    return mins, maxs, sums, cnts, nws
+_STATS = ("mins", "maxs", "sums", "cnts")
+# composition rules, in _STATS order: min of mins, max of maxes, sum of
+# sums, sum of cnts — exact tier-k -> tier-k+1 algebra (A6)
+_COMPOSE = (np.minimum, np.maximum, np.add, np.add)
+_COLS = [f.name for f in TIER_SCHEMA.fields]
 
 
 def _window_starts(lengths, w: int):
@@ -98,78 +83,78 @@ def _window_starts(lengths, w: int):
     return starts, nws, total
 
 
+def _list_values(batch: pa.RecordBatch, name: str) -> tuple[np.ndarray, np.ndarray]:
+    """(per-row lengths, flat int64 values) of a list column, read from its
+    offsets. A sliced batch's offsets need not start at 0. A NULL row
+    raises: its offsets span no values, so it would otherwise pass as an
+    empty doc."""
+    arr = batch.column(name)
+    if arr.null_count:
+        row = pc.index(arr.is_null(), True).as_py()
+        doc = batch.column("doc_id")[row].as_py()
+        raise ValueError(f"NULL {name} for doc_id {doc!r}")
+    off = arr.offsets.to_numpy()
+    vals = arr.values.slice(off[0], off[-1] - off[0]).to_numpy()
+    return np.diff(off), vals.astype(np.int64, copy=False)
+
+
+def tier_batches(
+    batch: pa.RecordBatch, tiers: tuple[tuple[str, int], ...]
+) -> Iterator[pa.RecordBatch]:
+    """The tier kernel: one ``TIER_SCHEMA`` batch per tier of ``tiers``,
+    each composed from the one below it.
+
+    ``batch`` holds ``doc_id``, ``source`` and either raw ``tokens`` or a
+    stored tier's ``window`` and mins/maxs/sums/cnts. Each tier costs one
+    ``ufunc.reduceat`` per statistic over the batch's concatenated
+    values; windows never straddle docs because each doc's offset is
+    itself a window start.
+    """
+    n = batch.num_rows
+    if "tokens" in batch.schema.names:
+        lengths, vals = _list_values(batch, "tokens")
+        stats = (vals, vals, vals, np.ones(len(vals), np.int64))
+        window = np.ones(n, np.int64)
+    else:
+        cols = [_list_values(batch, c) for c in _STATS]
+        lengths, stats = cols[0][0], tuple(v for _, v in cols)
+        window = batch.column("window").to_numpy()
+    for name, factor in tiers:
+        starts, lengths, total = _window_starts(lengths, factor)
+        stats = tuple(u.reduceat(v, starts) if total else v[:0] for u, v in zip(_COMPOSE, stats))
+        window = window * factor
+        offsets = pa.array(np.concatenate([[0], np.cumsum(lengths)]).astype(np.int32))
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id"),
+                batch.column("source"),
+                pa.array([name] * n, pa.string()),
+                pa.array(window),
+                pa.array(lengths.astype(np.int32)),
+                *(pa.ListArray.from_arrays(offsets, pa.array(v)) for v in stats),
+            ],
+            names=_COLS,
+        )
+
+
+def _map_tiers(df: DataFrame, tiers, inputs: list[str]) -> DataFrame:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield from tier_batches(batch, tiers)
+
+    return df.select("doc_id", "source", *inputs).mapInArrow(kernel, TIER_SCHEMA)
+
+
 def tier1_from_tokens(seq_df: DataFrame, window: int, tier: str = "1s") -> DataFrame:
     """Raw -> first tier. Narrow map: no shuffle, no explode."""
-
-    def agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrays = [np.asarray(t) for t in pdf["tokens"]]
-            mins, maxs, sums, cnts, nws = _batch_window_stats(arrays, window)
-            bounds = np.cumsum(nws)[:-1] if len(nws) else []
-            res = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "source": pdf["source"].values,
-                    "n_windows": nws.astype(np.int32) if len(nws) else nws,
-                    "mins": np.split(mins, bounds),
-                    "maxs": np.split(maxs, bounds),
-                    "sums": np.split(sums, bounds),
-                    "cnts": np.split(cnts, bounds),
-                }
-            )
-            res["tier"] = tier
-            res["window"] = np.int64(window)
-            yield res[[f.name for f in TIER_SCHEMA.fields]]
-
-    return seq_df.mapInPandas(agg, schema=TIER_SCHEMA)
+    return _map_tiers(seq_df, ((tier, window),), ["tokens"])
 
 
 def cascade_tier(prev: DataFrame, factor: int, tier: str) -> DataFrame:
-    """Tier k -> k+1 by re-aggregating the previous tier's arrays.
-
-    min of mins / max of maxes / sum of sums / sum of cnts — exact
-    composition, still a narrow per-row map.
-    """
-
-    def agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = [len(a) for a in pdf["mins"]]
-            starts, nws, total = _window_starts(lens, factor)
-            col = {}
-            # composition rules: min of mins, max of maxes, sum of sums,
-            # sum of cnts — exact tier-k -> tier-k+1 algebra (A6)
-            for name, ufunc in (
-                ("mins", np.minimum),
-                ("maxs", np.maximum),
-                ("sums", np.add),
-                ("cnts", np.add),
-            ):
-                vals = (
-                    np.concatenate([np.asarray(a) for a in pdf[name]]).astype(np.int64, copy=False)
-                    if total
-                    else np.empty(0, np.int64)
-                )
-                col[name] = ufunc.reduceat(vals, starts) if total else vals
-            bounds = np.cumsum(nws)[:-1] if len(nws) else []
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "source": pdf["source"].values,
-                    "tier": tier,
-                    "window": (pdf["window"].values * factor).astype(np.int64),
-                    "n_windows": nws.astype(np.int32) if len(nws) else nws,
-                    "mins": np.split(col["mins"], bounds),
-                    "maxs": np.split(col["maxs"], bounds),
-                    "sums": np.split(col["sums"], bounds),
-                    "cnts": np.split(col["cnts"], bounds),
-                }
-            )[[f.name for f in TIER_SCHEMA.fields]]
-
-    return prev.mapInPandas(agg, schema=TIER_SCHEMA)
+    """Tier k -> k+1 by re-aggregating the previous tier's arrays —
+    exact composition, still a narrow per-row map."""
+    return _map_tiers(prev, ((tier, factor),), ["window", *_STATS])
 
 
 def fused_tiers(
@@ -178,61 +163,11 @@ def fused_tiers(
     """ALL retention tiers in one narrow pass (rows tagged by ``tier``).
 
     Semantics identical to ``rollup_all_tiers`` — tier k+1 is composed
-    from tier k's arrays (min-of-mins / max-of-maxes / sum-of-sums /
-    sum-of-cnts) inside the same kernel — but the plan touches the raw
+    from tier k inside the same kernel — but the plan touches the raw
     ``tokens`` exactly once and produces one output, so the pipeline
     needs one write job instead of three chained write+read-backs.
-    That read-amplification difference is the scaling-efficiency lever:
-    serial per-job overhead happens once.
     """
-
-    def agg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TIER_SCHEMA.fields]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrays = [np.asarray(t) for t in pdf["tokens"]]
-            frames = []
-            window = 1
-            cur = None  # (mins, maxs, sums, cnts, nws)
-            for name, factor in tiers:
-                window *= factor
-                if cur is None:
-                    cur = _batch_window_stats(arrays, factor)
-                else:
-                    mins0, maxs0, sums0, cnts0, nws0 = cur
-                    starts, nws, total = _window_starts(nws0, factor)
-                    bounds0 = np.cumsum(nws0)[:-1]
-                    # previous tier's arrays are already concatenated
-                    # batch-wide; reduceat composes them directly
-                    cur = (
-                        np.minimum.reduceat(mins0, starts) if total else mins0[:0],
-                        np.maximum.reduceat(maxs0, starts) if total else maxs0[:0],
-                        np.add.reduceat(sums0, starts) if total else sums0[:0],
-                        np.add.reduceat(cnts0, starts) if total else cnts0[:0],
-                        nws,
-                    )
-                    del bounds0
-                mins, maxs, sums, cnts, nws = cur
-                bounds = np.cumsum(nws)[:-1] if len(nws) else []
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": pdf["doc_id"].values,
-                            "source": pdf["source"].values,
-                            "tier": name,
-                            "window": np.int64(window),
-                            "n_windows": nws.astype(np.int32) if len(nws) else nws,
-                            "mins": np.split(mins, bounds),
-                            "maxs": np.split(maxs, bounds),
-                            "sums": np.split(sums, bounds),
-                            "cnts": np.split(cnts, bounds),
-                        }
-                    )[cols]
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return seq_df.mapInPandas(agg, schema=TIER_SCHEMA)
+    return _map_tiers(seq_df, tiers, ["tokens"])
 
 
 def rollup_all_tiers(

@@ -25,18 +25,6 @@ def window_stats(a: np.ndarray, w: int) -> dict[str, np.ndarray]:
     return {"mins": mins, "maxs": maxs, "sums": sums, "cnts": cnts}
 
 
-def cascade_stats(prev: dict[str, np.ndarray], factor: int) -> dict[str, np.ndarray]:
-    nw = (len(prev["mins"]) + factor - 1) // factor
-    out = {k: np.empty(nw, np.int64) for k in prev}
-    for k in range(nw):
-        s = slice(k * factor, (k + 1) * factor)
-        out["mins"][k] = prev["mins"][s].min()
-        out["maxs"][k] = prev["maxs"][s].max()
-        out["sums"][k] = prev["sums"][s].sum()
-        out["cnts"][k] = prev["cnts"][s].sum()
-    return out
-
-
 def gap_fill_ffill(idx: np.ndarray, val: np.ndarray, n: int, fill_first: int = 0) -> np.ndarray:
     """Forward-fill missing sample indices over [0, n); leading gap gets
     ``fill_first``. Matches operators/gapfill.py policy."""

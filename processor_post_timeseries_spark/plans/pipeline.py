@@ -6,9 +6,13 @@ The engine's flagship plan (reference lifecycle §3.1 re-expressed):
       -> salt bucket (partitioning.with_bucket)
       -> [stage blocks]  DoD-compress fixed-size blocks, write
          partitionBy(source, bucket)                    (narrow map)
-      -> [stage tier_*]  cascading continuous aggregates raw->1s->1m->1h,
-         each tier written partitionBy(source, bucket)  (narrow maps)
+      -> [stage tiers]   cascading continuous aggregates raw->1s->1m->1h,
+         all tiers from one tier-kernel pass (rollup.fused_tiers),
+         written partitionBy(tier, source, bucket)      (narrow map)
       -> checkpoint rows per (source, bucket) per stage (lineage.py)
+
+There is one ingest path: the blocks and tiers stages each scan the raw
+sequences once, and run as concurrent Spark jobs by default.
 
 Every stage is independently resumable: inputs are filtered through the
 checkpoint anti-join, outputs land with dynamic partition overwrite
@@ -36,6 +40,10 @@ from . import lineage
 
 @dataclass
 class PipelineConfig:
+    """Settings of the one ingest path: a blocks stage and a tiers stage
+    (every tier from one tier-kernel pass), each checkpointed per
+    (source, bucket)."""
+
     out_dir: str
     block_size: int = 131_072
     n_buckets: int = DEFAULT_BUCKETS
@@ -47,10 +55,6 @@ class PipelineConfig:
     # /root/reference/processor/importer.py:117-127, re-expressed with
     # zero extra jobs)
     metrics: dict = field(default_factory=dict)
-    # single-pass blocks+tiers kernel (plans/ingest.py): one raw scan and
-    # one Arrow transfer instead of two — the production mode for large
-    # corpora; modular per-stage mode kept for operator-level reuse
-    fused_ingest: bool = False
     # run the blocks stage as a concurrent Spark job alongside the tier
     # cascade (fills idle cores during tail tasks). r3 same-window A/B:
     # under FIFO this was BIMODAL (15-42 s on identical input — whichever
@@ -60,9 +64,6 @@ class PipelineConfig:
     # 20.9, 20.5} s vs serial {43.1, 50.1, 26.7, 23.0} s alternating in
     # the same windows, and beats the r1 pin (21.6-28.6 s).
     concurrent_stages: bool = True
-    # record lineage on helper threads (the scan+groupBy certification
-    # jobs overlap the next stage) — small jobs, kept on by default
-    async_lineage: bool = True
 
 
 def _write_stage(
@@ -70,10 +71,10 @@ def _write_stage(
     cfg: PipelineConfig,
     stage: str,
     df: DataFrame,
-    key_cols: list[str] = ("source", "bucket"),
-    record_threads: list | None = None,
-    keys_from: DataFrame | None = None,
-) -> DataFrame:
+    key_cols: list[str],
+    record_threads: list,
+    keys_from: DataFrame,
+) -> None:
     """Write one stage partition-first + record lineage from read-back.
 
     Lineage rows cover only the partitions THIS run wrote (a resumed run
@@ -81,11 +82,11 @@ def _write_stage(
     semi-joined on the just-written keys — a broadcast of a tiny key set,
     and the parquet scan prunes to those partitions.
 
-    When ``record_threads`` is given, the lineage job (a scan+groupBy of
-    the just-written, already-reduced files) runs as a concurrent Spark
-    job instead of a barrier — the next stage starts immediately; the
-    pipeline joins all lineage jobs before returning, so a checkpoint row
-    still never precedes its data.
+    The lineage job (a scan+groupBy of the just-written, already-reduced
+    files) runs on a helper thread appended to ``record_threads`` as a
+    concurrent Spark job instead of a barrier — the next stage starts
+    immediately; the pipeline joins all lineage jobs before returning, so
+    a checkpoint row still never precedes its data.
     """
     import threading
 
@@ -108,26 +109,22 @@ def _write_stage(
     # partition keys this run wrote, WITHOUT re-executing the stage plan:
     # derived from the (column-pruned) stage input, whose key set equals
     # the output's (bucket is a pure function of doc_id)
-    keys = (keys_from if keys_from is not None else df).select(*key_cols).distinct()
+    keys = keys_from.select(*key_cols).distinct()
     try:
         written = spark.read.parquet(path)
     except Exception:
         # a zero-row stage leaves no data files to read back — nothing to
         # certify, so no lineage rows (resume will re-attempt the keys)
-        return df.limit(0)
+        return
 
     def _record() -> None:
         lineage.record_stage(
             spark, cfg.out_dir, stage, written, key_cols, cfg.run_id, only_keys=keys
         )
 
-    if record_threads is None or not cfg.async_lineage:
-        _record()
-    else:
-        t = threading.Thread(target=_record, name=f"lineage-{stage}")
-        t.start()
-        record_threads.append(t)
-    return written
+    t = threading.Thread(target=_record, name=f"lineage-{stage}")
+    t.start()
+    record_threads.append(t)
 
 
 def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) -> dict[str, str]:
@@ -151,39 +148,6 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     blocks_err: list[BaseException] = []
     record_threads: list = []
 
-    if cfg.fused_ingest:
-        from .ingest import fused_ingest
-
-        stage = "ingest"
-        pending = (
-            lineage.pending_only(seq, spark, cfg.out_dir, stage, ["source", "bucket"])
-            if cfg.resume
-            else seq
-        )
-        if not cfg.resume or not pending.isEmpty():
-            ing = with_bucket(
-                fused_ingest(pending.drop("bucket"), cfg.tiers, cfg.block_size),
-                cfg.n_buckets,
-            )
-            path = f"{cfg.out_dir}/{stage}"
-            ing.repartition("source", "bucket").write.mode("overwrite").partitionBy(
-                "kind", "source", "bucket"
-            ).parquet(path)
-            written = spark.read.parquet(path)
-            lineage.record_stage(
-                spark,
-                cfg.out_dir,
-                stage,
-                written,
-                ["source", "bucket"],
-                cfg.run_id,
-                only_keys=pending.select("source", "bucket").distinct(),
-            )
-        out[stage] = f"{cfg.out_dir}/{stage}"
-        out["blocks"] = f"{cfg.out_dir}/{stage}/kind=block"
-        out["tiers"] = f"{cfg.out_dir}/{stage}/kind=tier"
-        return out
-
     # -- stage: blocks (concurrent job) -----------------------------------
     def _blocks_stage() -> None:
         try:
@@ -204,7 +168,7 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
             if not cfg.resume or not pending.isEmpty():
                 blocks = to_blocks(pending.drop("bucket"), cfg.block_size)
                 blocks = with_bucket(blocks, cfg.n_buckets)
-                _write_stage(spark, cfg, stage, blocks,
+                _write_stage(spark, cfg, stage, blocks, ["source", "bucket"],
                              record_threads=record_threads, keys_from=pending)
         except BaseException as e:  # surface on the caller thread
             blocks_err.append(e)
@@ -220,7 +184,7 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
             raise blocks_err[0]
     out["blocks"] = f"{cfg.out_dir}/blocks"
 
-    # -- stage: tiers (fused cascade, one pass over raw) ------------------
+    # -- stage: tiers (every tier from one kernel pass over raw) ----------
     stage = "tiers"
     tier_names = [name for name, _f in cfg.tiers]
     if cfg.resume:
@@ -270,7 +234,3 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
         raise blocks_err[0]
     return out
 
-
-def pipeline_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Checkpoint-table metrics view: rows/checksums per stage+partition."""
-    return lineage.read_checkpoint(spark, out_dir).orderBy("stage", "partition_key")

@@ -4,9 +4,8 @@ paths in the sandbox — identical engine semantics either way (SURVEY §7).
 No Iceberg runtime jar ships in this offline environment, so
 ``iceberg_available()`` gates the format: when any
 ``spark.sql.catalog.*`` is configured (a real cluster submitted via
-``spark-submit --packages org.apache.iceberg:...``), tables resolve to
-catalog identifiers and writes go through Iceberg commits (snapshot
-isolation, hidden partitioning); otherwise the same logical tables are
+``spark-submit --packages org.apache.iceberg:...``), input tables
+resolve to catalog identifiers; otherwise the same logical tables are
 hive-partitioned Parquet directories and the engine's checkpoint table
 (plans/lineage.py) supplies the snapshot/manifest role.
 """
@@ -27,24 +26,3 @@ def read_table(spark: SparkSession, locator: str) -> DataFrame:
     if iceberg_available(spark) and "/" not in locator:
         return spark.read.format("iceberg").load(locator)
     return spark.read.parquet(locator)
-
-
-def write_table(
-    df: DataFrame,
-    locator: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    spark = df.sparkSession
-    if iceberg_available(spark) and "/" not in locator:
-        w = df.writeTo(locator)
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        (w.createOrReplace() if mode == "overwrite" else w.append())
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(locator)

@@ -1,0 +1,46 @@
+"""Registry view loading (contract.load_views) under session-config drift."""
+
+from __future__ import annotations
+
+import datetime as dt
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from processor_post_timeseries_spark.contract import TABLES, load_views
+
+# hour()/to_date()/string casts read the session tz at query time, so
+# they shift even though the views' own NTZ casts were resolved at load
+Q = """SELECT event_id, unix_micros(ts) AS us, hour(ts) AS h, to_date(ts) AS d,
+          CAST(ts AS STRING) AS s
+   FROM events ORDER BY event_id"""
+
+
+def _sf_dir(tmp_path):
+    base = dt.datetime(2024, 3, 9, 22, 30)
+    events = pa.table(
+        {
+            "event_id": pa.array(range(6), pa.int64()),
+            "ts": pa.array([base + dt.timedelta(hours=3 * i) for i in range(6)], pa.timestamp("us")),
+        }
+    )
+    for t in TABLES:
+        table = events if t == "events" else pa.table({"id": pa.array([1], pa.int64())})
+        pq.write_table(table, tmp_path / f"{t}.parquet")
+    return str(tmp_path)
+
+
+def test_cached_views_stay_utc_after_session_tz_change(spark, tmp_path):
+    sf_dir = _sf_dir(tmp_path)
+    try:
+        load_views(spark, sf_dir)
+        first = spark.sql(Q).collect()
+        # a caller that moves the session tz between queries must not
+        # shift the timestamps served through the view cache
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        load_views(spark, sf_dir)  # cache hit: same sf_dir
+        second = spark.sql(Q).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert len(first) == 6 and first == second
+    assert first[0]["h"] == 22 and str(first[1]["d"]) == "2024-03-10"

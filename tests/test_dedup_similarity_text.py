@@ -56,6 +56,16 @@ def test_shingles_and_jaccard(spark):
     assert pairs[("d1", "d3")] == 0.75
 
 
+def test_minhash_md5_skips_null_text(spark):
+    # n=1: every non-empty word is a gram, so str(None) would have made
+    # the NULL doc a one-gram "None" signature
+    docs = spark.createDataFrame(
+        [("a", "alpha beta"), ("b", None)], "doc_id string, text string"
+    )
+    got = {r["doc_id"] for r in minhash_signatures(docs, 4, n=1, hash_fn="md5").collect()}
+    assert got == {"a"}
+
+
 def test_minhash_lsh_finds_near_dups(spark):
     sig = minhash_signatures(_docs(spark), 16)
     assert len(sig.columns) == 17

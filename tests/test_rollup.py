@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +11,7 @@ from processor_post_timeseries_spark.operators.rollup import (
     rollup_all_tiers,
     source_stats,
     tier1_from_tokens,
+    tier_batches,
     tier_points,
 )
 from processor_post_timeseries_spark.sources.synth import sequences
@@ -121,3 +123,41 @@ def test_empty_token_arrays_survive_kernels(spark):
     t2 = {r["doc_id"]: r for r in cascade_tier(tier1_from_tokens(df, 2, "1s"), 2, "1m").collect()}
     assert t2["d2"]["n_windows"] == 0
     assert list(t2["d1"]["sums"]) == [18]
+
+
+def _token_batch(docs):
+    return pa.RecordBatch.from_pydict(
+        {
+            "doc_id": [d for d, _ in docs],
+            "source": ["s"] * len(docs),
+            "tokens": pa.array([t for _, t in docs], pa.list_(pa.int32())),
+        }
+    )
+
+
+def test_null_tokens_row_raises_naming_the_doc(spark):
+    batch = _token_batch([("d0", [1, 2]), ("bad-doc", None)])
+    with pytest.raises(ValueError, match="bad-doc"):
+        list(tier_batches(batch, TIERS))
+    df = spark.createDataFrame(
+        [("d0", [1, 2], 2, "s"), ("bad-doc", None, 0, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    with pytest.raises(Exception, match="ValueError.*bad-doc"):
+        tier1_from_tokens(df, 2).collect()
+
+
+def test_kernel_on_sliced_batch_equals_unsliced():
+    rng = np.random.default_rng(0)
+    docs = [(f"d{i}", rng.integers(-1000, 1000, int(rng.integers(0, 40))).tolist()) for i in range(12)]
+    batch = _token_batch(docs)
+    sliced = batch.slice(5, 6)  # list offsets start mid-buffer
+    assert sliced.column("tokens").offsets[0].as_py() > 0
+    got = [b.to_pylist() for b in tier_batches(sliced, TIERS)]
+    exp = [b.to_pylist() for b in tier_batches(_token_batch(docs[5:11]), TIERS)]
+    assert got == exp
+    # and a stored tier re-aggregates the same from a slice
+    t1 = next(tier_batches(batch, TIERS[:1]))
+    got = [b.to_pylist() for b in tier_batches(t1.slice(5, 6), TIERS[1:])]
+    exp = [b.to_pylist() for b in tier_batches(next(tier_batches(_token_batch(docs[5:11]), TIERS[:1])), TIERS[1:])]
+    assert got == exp

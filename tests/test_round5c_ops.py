@@ -109,6 +109,18 @@ def test_interp_fill_edges_clamp(spark):
     assert got == {0: 7, 1: 7, 2: 7, 3: 9, 4: 9, 5: 9}
 
 
+def test_interp_fill_exact_past_int64_products(spark):
+    # (next_v - prev_v) * (pos - prev_p) reaches 3 * (2^62 + 3) > 2^63:
+    # a bigint product wraps or fails, the interpolated values must not
+    lo, hi = 5, 5 + 2**62 + 3
+    df = _interp_frame(spark, [(0, lo), (4, hi)], 5)
+    got = {
+        r["pos"]: r["v_interp"]
+        for r in interp_fill(df, "part", "pos", "v").collect()
+    }
+    assert got == {k: lo + (hi - lo) * k // 4 for k in range(5)}
+
+
 def test_interp_fill_plan_has_no_unbounded_following_frame(spark):
     """Spark's UnboundedFollowing window frame re-aggregates from scratch
     per row (O(n^2) per partition); the backward pass must be a running

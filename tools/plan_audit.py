@@ -111,7 +111,7 @@ def audit(df) -> dict:
         "cartesian": "CartesianProduct" in plan,
         "bnl_join": "BroadcastNestedLoopJoin" in plan,
         "python_row_udf": "BatchEvalPython" in plan,  # non-Arrow Python UDF
-        "arrow_stages": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas", plan)),
+        "arrow_stages": len(re.findall(r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas", plan)),
         "codegen_spans": len(re.findall(r"WholeStageCodegen", plan)),
     }
 

@@ -248,7 +248,7 @@ baseline to beat round over round.
 | lineage keys from stage *input* | stops a full re-execution of the encode plan per stage |
 | concurrent blocks/tiers jobs + async lineage | fills idle cores when a stage's task count < cores |
 | GEMM pandas kernel for ANN top-k | 10x on the ann_cosine_topk bench query |
-| fused single-pass blocks+tiers kernel | REJECTED: measured 1.5x slower (padding + wider Arrow frames); kept as opt-in plans/ingest.py |
+| fused single-pass blocks+tiers kernel | REJECTED: measured 1.5x slower (padding + wider Arrow frames); removed, the pipeline keeps one ingest path |
 | alternating-pairs scaling protocol | cancels +-30-45% host drift a single pair cannot |
 | r2: IVF centroid update as per-batch partial sums | removes the collect_list OOM path; build cost unchanged |
 | r2: cogrouped per-cluster GEMM + lossless per-cluster top-k | ann_ivf_topk 9s -> ~4s at sf0.1 (kills a multi-M-row distinct) |
