@@ -120,10 +120,11 @@ def _pack_single_source(spark, sf_dir):
     cumsum. The two-phase bucketed prefix sum (operators/packing.py)
     keeps it multi-task; this row evidences parallel single-source
     packing (VERDICT r3 ask #1)."""
-    from processor_post_timeseries_spark.contract import _char_tokens_df
+    from processor_post_timeseries_spark.contract import _char_tokens_df, load_views
     from processor_post_timeseries_spark.operators.packing import pack_manifest
 
-    seq = _char_tokens_df(spark, sf_dir).withColumn("source", F.lit("one"))
+    load_views(spark, sf_dir)
+    seq = _char_tokens_df(spark).withColumn("source", F.lit("one"))
     return pack_manifest(seq, ctx_len=512)
 
 
@@ -163,12 +164,6 @@ def run_pass(spark, seq, sf_dir: str, work: str, cpus: int, bench_queries, qs):
             tiers=(("1s", 100), ("1m", 60), ("1h", 60)),
             run_id="bench",
             resume=False,
-            # FAIR-pooled concurrent stages are the default (see
-            # pipeline.py); PTS_BENCH_SERIAL=1/true forces serial for
-            # A/Bs ("0"/"false" keep the default — raw truthiness would
-            # read PTS_BENCH_SERIAL=0 as serial)
-            concurrent_stages=os.environ.get("PTS_BENCH_SERIAL", "").lower()
-            not in ("1", "true"),
         ),
     )
     rollup_sec = time.perf_counter() - t0

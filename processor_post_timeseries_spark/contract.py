@@ -16,39 +16,90 @@ Determinism policy (so order-insensitive value hashes match exactly):
 * ties in window orders broken by a unique id column;
 * every computed column aliased identically on both sides.
 
-``_REGISTRY`` maps name -> (spark_fn, oracle_sql | None). A ``None``
-oracle would mark a non-SQL-expressible op (the driver then records a
-weaker rows-only check) — currently every registered query carries a
-full oracle: even the iterative IVF index and the bit-level simhash are
-replayed exactly in DuckDB (deterministic md5 seeds + quantized
-centroids make it possible).
+Every query is registered through one helper, ``_query`` — the only
+writer of ``_REGISTRY`` (name -> (run, oracle_sql | None)):
+
+* ``@_query(name, oracle)`` over ``def _name(spark, sf_dir)``: the body
+  builds the Spark side from the views;
+* ``_query(name, sql=template)``: one SQL text for both engines, dialect
+  placeholders substituted per engine — a single source of truth kills
+  semantic drift (``oracle`` overrides the DuckDB side where the
+  dialects cannot share a text).
+
+The registered function calls ``load_views`` once, then the body; the
+oracle is rendered through ``_DUCK_DIALECT`` (a no-op on oracles already
+written for DuckDB). ``queries()`` / ``oracle_sql()`` are the public view.
+A ``None`` oracle marks a non-SQL-expressible op (the correctness gate
+then records a weaker rows-only check): only
+``dedup_minhash_lsh64_parity`` has one (DuckDB has no xxhash64). Even
+the iterative IVF index and the bit-level simhash are replayed exactly in
+DuckDB (deterministic md5 seeds + quantized centroids make it possible).
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import os
+import shutil
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
+
+from .functions import codec, legacy, multimodal, text
+from .operators import (
+    anomaly,
+    asof,
+    blocks,
+    bpe,
+    decontam,
+    dedup,
+    downsample,
+    gapfill,
+    heavy_hitters,
+    incremental,
+    interval,
+    irregular,
+    ordering,
+    packing,
+    quantiles,
+    resample,
+    rollup,
+    sampling,
+    segments,
+    similarity,
+    spans,
+    trend,
+)
+from .plans import curation, legacy_export, legacy_import, lineage, pipeline, retention
+from .sources import synth
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
 
 
-def _table_bytes(path: str) -> int:
-    import os
-
+def _table_stat(path: str) -> tuple[int, int]:
+    """(total bytes, newest mtime_ns) of one table path: a parquet file
+    or a directory of part files; (0, 0) when it cannot be read."""
     try:
         if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
+            stats = [
+                os.stat(os.path.join(r, f))
                 for r, _d, fs in os.walk(path)
                 for f in fs
                 if not f.startswith(("_", "."))
-            )
-        return os.path.getsize(path)
+            ]
+        else:
+            stats = [os.stat(path)]
     except OSError:
-        return 0
+        return 0, 0
+    return sum(st.st_size for st in stats), max((st.st_mtime_ns for st in stats), default=0)
 
 
 # tables whose queries run heavy PER-ROW compute before any shuffle
@@ -59,24 +110,21 @@ def _table_bytes(path: str) -> int:
 # re-shuffle anyway; an extra round-robin exchange of full rows only
 # slows them (measured at sf0.1: q1 +0.6 s, events window suite
 # 8.1 s -> 11.4 s, ann_ivf_topk 1.46 s -> 2.39 s with a blanket
-# repartition), so they are left to the scan. Override with
-# PTS_SPREAD_TABLES="a,b" for A/Bs.
-_SPREAD_TABLES = frozenset(
-    __import__("os").environ.get("PTS_SPREAD_TABLES", "documents").split(",")
-)
+# repartition), so they are left to the scan.
+_SPREAD_TABLES = frozenset({"documents"})
 
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    # Idempotent per (session, sf_dir): a bench pass calls every query
-    # fn back-to-back and each one calls load_views — re-reading 10
-    # parquet footers and re-registering 10 views costs ~0.2-0.5 s of
+    # Idempotent per (session, sf_dir, table files): a bench pass runs
+    # every query back-to-back and each one loads the views — re-reading
+    # 10 parquet footers and re-registering 10 views costs ~0.2-0.5 s of
     # pure driver overhead PER QUERY. Nothing else registers these view
     # names (grep: this is the only createOrReplaceTempView site), so
     # skipping the re-registration cannot change any result; pointing
-    # the same session at a DIFFERENT sf_dir still reloads.
+    # the same session at a DIFFERENT sf_dir still reloads, and so do
+    # files regenerated in place: the key carries the tables' total
+    # bytes and newest mtime, or the views would keep serving plans over
+    # the old files.
     # the caller supplies its own SparkSession — pin the tz so the
     # NTZ -> timestamp cast below is UTC wall-clock (matching DuckDB's
     # naive epoch_us) regardless of that session's defaults. Pinned on
@@ -85,7 +133,11 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
     # query time, so a caller that changes the tz between queries would
     # otherwise shift them.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = f"{sf_dir}"
+    paths = {t: f"{sf_dir}/{t}.parquet" for t in TABLES}
+    stats = {t: _table_stat(p) for t, p in paths.items()}
+    key = "|".join(
+        (sf_dir, str(sum(b for b, _m in stats.values())), str(max(m for _b, m in stats.values())))
+    )
     try:
         if spark.conf.get("spark.pts.loadedViews") == key:
             return
@@ -98,8 +150,7 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
         )
     except Exception:
         max_split = 128 << 20
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
+    for t, path in paths.items():
         df = spark.read.parquet(path)
         # parquet timestamps land as TIMESTAMP_NTZ in Spark 4; cast to
         # session-UTC timestamps so unix_micros() == DuckDB's epoch_us()
@@ -113,7 +164,7 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
         # exchange moves only a few MB and is partition-invariant (every
         # registry query is certified order-insensitive). Tables big
         # enough to split on their own are left to the scan.
-        sz = _table_bytes(path)
+        sz = stats[t][0]
         est_splits = max(1, -(-sz // max_split))
         # >128 KiB: sf0.1's documents (0.6 MB compressed) carries ~2.4M
         # chars of text through hash/explode kernels — well worth
@@ -124,8 +175,18 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
     spark.conf.set("spark.pts.loadedViews", key)
 
 
-_SPARK_DIALECT = {"{EPOCH_US}": "unix_micros", "{IDIV}": " div ", "{SEQ_GRID}": "explode(sequence(0, 43200))"}
-_DUCK_DIALECT = {"{EPOCH_US}": "epoch_us", "{IDIV}": "//", "{SEQ_GRID}": "unnest(range(0, 43201))"}
+_SPARK_DIALECT = {
+    "{EPOCH_US}": "unix_micros",
+    "{IDIV}": " div ",
+    "{SEQ_GRID}": "explode(sequence(0, 43200))",
+    "{DOW}": "(extract(DAYOFWEEK FROM ts) - 1)",  # 1-7 Sun-start -> 0-6
+}
+_DUCK_DIALECT = {
+    "{EPOCH_US}": "epoch_us",
+    "{IDIV}": "//",
+    "{SEQ_GRID}": "unnest(range(0, 43201))",
+    "{DOW}": "extract(dow FROM ts)",  # already 0-6 Sun-start
+}
 
 
 def _render(template: str, dialect: dict[str, str]) -> str:
@@ -135,17 +196,38 @@ def _render(template: str, dialect: dict[str, str]) -> str:
     return out
 
 
-def _shared(template: str, oracle_override: str | None = None) -> tuple[Callable, str | None]:
-    """One SQL text for both engines (dialect placeholders substituted) —
-    a single source of truth kills semantic drift."""
-    spark_sql = _render(template, _SPARK_DIALECT)
-    duck_sql = oracle_override if oracle_override is not None else _render(template, _DUCK_DIALECT)
+_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_views(spark, sf_dir)
-        return spark.sql(spark_sql)
 
-    return run, duck_sql
+def _query(name: str, oracle: str | None = None, *, sql: str | None = None):
+    """Register query ``name`` (see the module docstring). Used as a
+    decorator it returns the body unchanged; with ``sql`` it registers
+    the shared text at once. Registering a name twice raises."""
+    if name in _REGISTRY:
+        raise ValueError(f"registry query {name!r} registered twice")
+    oracle = sql if oracle is None else oracle
+    duck_sql = None if oracle is None else _render(oracle, _DUCK_DIALECT)
+
+    def register(body):
+        def load_and_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            load_views(spark, sf_dir)
+            return body(spark, sf_dir)
+
+        _REGISTRY[name] = (load_and_run, duck_sql)
+        return body
+
+    if sql is not None:
+        spark_sql = _render(sql, _SPARK_DIALECT)
+        return register(lambda spark, _sf_dir: spark.sql(spark_sql))
+    return register
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: fn for name, (fn, _s) in _REGISTRY.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: s for name, (_fn, s) in _REGISTRY.items() if s is not None}
 
 
 # --------------------------------------------------------------------------
@@ -154,7 +236,7 @@ def _shared(template: str, oracle_override: str | None = None) -> tuple[Callable
 # (threshold 2×(1/rate) at :199). 30-minute gap on the events stream.
 # --------------------------------------------------------------------------
 
-_W1_SESSIONIZE = """
+_query("w1_sessionize_events", sql="""
 WITH e AS (
   SELECT user_id, event_id, {EPOCH_US}(ts) AS ts_us FROM events
 ), d AS (
@@ -172,9 +254,9 @@ SELECT user_id, CAST(seg_id AS BIGINT) AS seg_id,
        MIN(ts_us) AS seg_start_us, MAX(ts_us) AS seg_end_us,
        COUNT(*) AS n_samples
 FROM s GROUP BY user_id, seg_id
-"""
+""")
 
-_W1_GAP_COUNT = """
+_query("w1_gap_count", sql="""
 WITH e AS (
   SELECT user_id, event_id, {EPOCH_US}(ts) AS ts_us FROM events
 ), d AS (
@@ -187,14 +269,14 @@ SELECT user_id,
        MAX(delta) AS max_gap_us
 FROM d WHERE delta IS NOT NULL
 GROUP BY user_id
-"""
+""")
 
 # --------------------------------------------------------------------------
 # A1 — channel extents (reference reader.channels min/max,
 # /root/reference/processor/reader.py:146-175)
 # --------------------------------------------------------------------------
 
-_A1_EXTENTS = """
+_query("a1_channel_extents", sql="""
 SELECT user_id,
        MIN({EPOCH_US}(ts)) AS start_us,
        MAX({EPOCH_US}(ts)) AS end_us,
@@ -202,14 +284,14 @@ SELECT user_id,
        MIN(value) AS min_v,
        MAX(value) AS max_v
 FROM events GROUP BY user_id
-"""
+""")
 
 # --------------------------------------------------------------------------
 # A2 — sampling-rate inference: median delta of the first 10 samples
 # (reference /root/reference/processor/utils.py:6-13, reader.py:85-106)
 # --------------------------------------------------------------------------
 
-_A2_RATE = """
+_query("a2_rate_inference", sql="""
 WITH first10 AS (
   SELECT user_id, ts_us FROM (
     SELECT user_id, {EPOCH_US}(ts) AS ts_us, event_id,
@@ -225,7 +307,7 @@ SELECT user_id,
        CAST(median(d) AS DOUBLE) AS median_delta_us,
        CAST(ROUND(1e6 / NULLIF(median(d), 0), 9) AS DOUBLE) AS inferred_rate_hz
 FROM deltas WHERE d IS NOT NULL GROUP BY user_id
-"""
+""")
 
 # --------------------------------------------------------------------------
 # W5/A6 — tumbling tier aggregates + cascade (north-rule caggs).
@@ -233,14 +315,14 @@ FROM deltas WHERE d IS NOT NULL GROUP BY user_id
 # composition == direct aggregation.
 # --------------------------------------------------------------------------
 
-_W5_TUMBLING_1M = """
+_query("w5_tumbling_1m", sql="""
 SELECT event_type,
        {EPOCH_US}(ts) {IDIV} 60000000 AS win_1m,
        MIN(value) AS min_v, MAX(value) AS max_v, COUNT(*) AS cnt,
        CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))), 6) AS DOUBLE) AS sum_v
 FROM events
 GROUP BY event_type, {EPOCH_US}(ts) {IDIV} 60000000
-"""
+""")
 
 _W5_CASCADE_1H = """
 WITH t1m AS (
@@ -270,13 +352,15 @@ FROM events
 GROUP BY event_type, epoch_us(ts) // 3600000000
 """
 
+_query("w5_cascade_1h_from_1m", _W5_CASCADE_1H_ORACLE, sql=_W5_CASCADE_1H)
+
 # --------------------------------------------------------------------------
 # W2 — gap-fill onto a 1-minute grid with forward fill (north rule; the
 # reference only detects gaps — this is the required inverse). Forward
 # fill via gaps-and-islands (portable; IGNORE NULLS syntax diverges).
 # --------------------------------------------------------------------------
 
-_W2_GAPFILL = """
+_query("w2_gapfill_grid", sql="""
 WITH b AS (
   SELECT user_id,
          MIN({EPOCH_US}(ts) {IDIV} 60000000) AS w0,
@@ -304,14 +388,14 @@ SELECT user_id,
        CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
        CAST(ROUND(SUM(CAST(COALESCE(v_filled, 0) AS DECIMAL(18,6))), 6) AS DOUBLE) AS sum_filled
 FROM filled GROUP BY user_id
-"""
+""")
 
 # --------------------------------------------------------------------------
 # W3/W4 — fixed-size chunking with per-chunk frame bounds
 # (reference /root/reference/processor/writer.py:46-51)
 # --------------------------------------------------------------------------
 
-_W3_BLOCKS = """
+_query("w3_fixed_blocks", sql="""
 WITH numbered AS (
   SELECT user_id, event_id, {EPOCH_US}(ts) AS ts_us,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS rn
@@ -320,7 +404,7 @@ WITH numbered AS (
 SELECT user_id, rn {IDIV} 25 AS block_no,
        MIN(ts_us) AS start_us, MAX(ts_us) AS end_us, COUNT(*) AS n
 FROM numbered GROUP BY user_id, rn {IDIV} 25
-"""
+""")
 
 # --------------------------------------------------------------------------
 # P1/P2 — affine scaling + unit normalization
@@ -328,7 +412,7 @@ FROM numbered GROUP BY user_id, rn {IDIV} 25
 # * channel_conversion + offset; unit map lookup at :11-18)
 # --------------------------------------------------------------------------
 
-_P1_SCALE = """
+_query("p1_affine_scale", sql="""
 SELECT l_returnflag, l_linestatus,
        CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
                       * CAST(1 - l_discount AS DECIMAL(18,4))), 4) AS DOUBLE) AS revenue,
@@ -336,9 +420,9 @@ SELECT l_returnflag, l_linestatus,
                       * CAST(1 - l_discount AS DECIMAL(18,4))
                       * CAST(1 + l_tax AS DECIMAL(18,4))), 4) AS DOUBLE) AS charged
 FROM lineitem GROUP BY l_returnflag, l_linestatus
-"""
+""")
 
-_P2_UNIT_NORM = """
+_query("p2_unit_normalization", sql="""
 SELECT event_type,
        CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))
                       * CASE lower(event_type)
@@ -346,20 +430,20 @@ SELECT event_type,
                           WHEN 'view' THEN 1000
                           ELSE 1 END), 6) AS DOUBLE) AS normalized_uv
 FROM events GROUP BY event_type
-"""
+""")
 
 # --------------------------------------------------------------------------
 # P4 — timestamp arithmetic (µs ints at boundaries,
 # reference /root/reference/processor/reader.py:166-171)
 # --------------------------------------------------------------------------
 
-_P4_TS_MATH = """
+_query("p4_timestamp_math", sql="""
 SELECT event_id,
        {EPOCH_US}(ts) AS ts_us,
        {EPOCH_US}(ts) {IDIV} 1000000 AS ts_sec,
        ({EPOCH_US}(ts) {IDIV} 1000000) * 1000000 AS ts_us_trunc
 FROM events WHERE event_id % 97 = 0
-"""
+""")
 
 # --------------------------------------------------------------------------
 # P7/P8/P11 — key formatting, regex extract, string normalize
@@ -367,22 +451,22 @@ FROM events WHERE event_id % 97 = 0
 # timeseries_channel.py:26-33)
 # --------------------------------------------------------------------------
 
-_P7_KEY_FORMAT = """
+_query("p7_key_format", sql="""
 SELECT user_id,
        printf('channel-%05d_%d_%d', user_id, MIN({EPOCH_US}(ts)), MAX({EPOCH_US}(ts))) AS key
 FROM events GROUP BY user_id
-"""
+""")
 
-_P8_REGEX_EXTRACT = """
+_query("p8_regex_extract", sql="""
 SELECT doc_id, regexp_extract(source, '([0-9]+)', 1) AS src_no
 FROM documents
-"""
+""")
 
-_P11_STR_NORM = """
+_query("p11_string_normalize", sql="""
 SELECT upper(trim(lang)) AS lang_norm, COUNT(*) AS n_docs,
        CAST(SUM(n_chars) AS BIGINT) AS total_chars
 FROM documents GROUP BY upper(trim(lang))
-"""
+""")
 
 # --------------------------------------------------------------------------
 # P12 — JSON parse (reference JSON round-trip,
@@ -403,13 +487,7 @@ SELECT event_type,
 FROM events GROUP BY event_type
 """
 
-
-def _p12() -> tuple[Callable, str]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        load_views(spark, sf_dir)
-        return spark.sql(_P12_SPARK)
-
-    return run, _P12_DUCK
+_query("p12_json_extract", _P12_DUCK, sql=_P12_SPARK)
 
 
 # --------------------------------------------------------------------------
@@ -418,7 +496,7 @@ def _p12() -> tuple[Callable, str]:
 # band, /root/reference/processor/timeseries_channel.py:71-80)
 # --------------------------------------------------------------------------
 
-_J1_RECONCILE = """
+_query("j1_reconcile_theta", sql="""
 SELECT n.n_name AS nation,
        COUNT(*) AS n_matched_pairs
 FROM supplier s
@@ -428,39 +506,39 @@ JOIN customer c
  AND abs(1 - s.s_acctbal / c.c_acctbal) < 0.02
 JOIN nation n ON n.n_nationkey = s.s_nationkey
 GROUP BY n.n_name
-"""
+""")
 
-_J1_ANTI = """
+_query("j1_create_set_anti", sql="""
 SELECT c.c_custkey FROM customer c
 WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-"""
+""")
 
-_J2_LOOKUP = """
+_query("j2_key_bind_lookup", sql="""
 SELECT p.p_brand,
        COUNT(*) AS n_items,
        CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))), 4) AS DOUBLE) AS total_price
 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 GROUP BY p.p_brand
-"""
+""")
 
 # --------------------------------------------------------------------------
 # L1 — first-k sampling (reference limit-k prefixes,
 # /root/reference/processor/utils.py:12, reader.py:85,104)
 # --------------------------------------------------------------------------
 
-_L1_FIRST_K = """
+_query("l1_first_k", sql="""
 SELECT user_id, event_id, rn FROM (
   SELECT user_id, event_id,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
   FROM events
 ) x WHERE rn <= 3
-"""
+""")
 
 # --------------------------------------------------------------------------
 # Relational headliners (scan/filter/agg/join/sort/limit coverage)
 # --------------------------------------------------------------------------
 
-_Q1_PRICING = """
+_query("q1_pricing_summary", sql="""
 SELECT l_returnflag, l_linestatus,
        CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 4) AS DOUBLE) AS sum_qty,
        CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 4) AS DOUBLE) AS sum_base_price,
@@ -470,9 +548,9 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-"""
+""")
 
-_Q3_TOPK = """
+_query("q3_shipping_priority", sql="""
 SELECT o.o_orderkey,
        CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))
                       * CAST(1 - l.l_discount AS DECIMAL(18,4))), 4) AS DOUBLE) AS revenue,
@@ -484,40 +562,7 @@ WHERE c.c_mktsegment = 'BUILDING'
 GROUP BY o.o_orderkey, o.o_orderdate
 ORDER BY revenue DESC, o.o_orderkey
 LIMIT 10
-"""
-
-
-_REGISTRY: dict[str, tuple[Callable, str | None]] = {
-    "w1_sessionize_events": _shared(_W1_SESSIONIZE),
-    "w1_gap_count": _shared(_W1_GAP_COUNT),
-    "a1_channel_extents": _shared(_A1_EXTENTS),
-    "a2_rate_inference": _shared(_A2_RATE),
-    "w5_tumbling_1m": _shared(_W5_TUMBLING_1M),
-    "w5_cascade_1h_from_1m": _shared(_W5_CASCADE_1H, _W5_CASCADE_1H_ORACLE),
-    "w2_gapfill_grid": _shared(_W2_GAPFILL),
-    "w3_fixed_blocks": _shared(_W3_BLOCKS),
-    "p1_affine_scale": _shared(_P1_SCALE),
-    "p2_unit_normalization": _shared(_P2_UNIT_NORM),
-    "p4_timestamp_math": _shared(_P4_TS_MATH),
-    "p7_key_format": _shared(_P7_KEY_FORMAT),
-    "p8_regex_extract": _shared(_P8_REGEX_EXTRACT),
-    "p11_string_normalize": _shared(_P11_STR_NORM),
-    "p12_json_extract": _p12(),
-    "j1_reconcile_theta": _shared(_J1_RECONCILE),
-    "j1_create_set_anti": _shared(_J1_ANTI),
-    "j2_key_bind_lookup": _shared(_J2_LOOKUP),
-    "l1_first_k": _shared(_L1_FIRST_K),
-    "q1_pricing_summary": _shared(_Q1_PRICING),
-    "q3_shipping_priority": _shared(_Q3_TOPK),
-}
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _s) in _REGISTRY.items()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {name: s for name, (_fn, s) in _REGISTRY.items() if s is not None}
+""")
 
 
 # ==========================================================================
@@ -538,28 +583,28 @@ words AS (
 )
 """
 
+# md5-family MinHash signature (16 hashes) and its 4 bands of 4 rows,
+# replayed by every oracle that bands documents
+_DUCK_MINHASH_MINS = ",\n         ".join(
+    f"MIN(md5('{k}' || ':' || shingle)) AS h{k:02d}" for k in range(16)
+)
+_DUCK_MINHASH_BANDS = " UNION ALL ".join(
+    "SELECT doc_id, {b} AS band_no, md5({cols}) AS band_hash FROM sig".format(
+        b=b, cols=" || '|' || ".join(f"h{b * 4 + i:02d}" for i in range(4))
+    )
+    for b in range(4)
+)
 
-def _q_dedup_exact():
-    def run(spark, sf_dir):
-        from .operators.dedup import exact_dedup
 
-        load_views(spark, sf_dir)
-        return exact_dedup(spark.table("documents"))
-
-    return run, """
+@_query("dedup_exact", """
 SELECT md5(text) AS text_hash, COUNT(*) AS n_docs, MIN(doc_id) AS keeper_id
 FROM documents GROUP BY md5(text)
-"""
+""")
+def _dedup_exact(spark, sf_dir):
+    return dedup.exact_dedup(spark.table("documents"))
 
 
-def _q_dedup_jaccard():
-    def run(spark, sf_dir):
-        from .operators.dedup import ngram_jaccard_pairs
-
-        load_views(spark, sf_dir)
-        return ngram_jaccard_pairs(spark.table("documents"), n=3, threshold=0.5)
-
-    return run, f"""
+@_query("dedup_ngram_jaccard", f"""
 WITH {_DUCK_SHINGLES_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
@@ -573,60 +618,83 @@ FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.5
-"""
+""")
+def _dedup_ngram_jaccard(spark, sf_dir):
+    return dedup.ngram_jaccard_pairs(spark.table("documents"), n=3, threshold=0.5)
 
 
-def _q_dedup_minhash():
-    def run(spark, sf_dir):
-        from .operators.dedup import lsh_candidate_pairs
-
-        load_views(spark, sf_dir)
-        # the oracle replays UNCAPPED banding, so disable the production
-        # skew cap here — the certified semantics and the engine's must
-        # be the same definition, not merely agree on friendly data.
-        # hash_fn pinned to md5 (DuckDB-replayable); the xxh64 production
-        # default is certified by dedup_minhash_lsh64_parity
-        return lsh_candidate_pairs(
-            spark.table("documents"),
-            n_hashes=16,
-            n_bands=4,
-            max_bucket_size=None,
-            hash_fn="md5",
-        )
-
-    mins = ",\n         ".join(
-        f"MIN(md5('{k}' || ':' || shingle)) AS h{k:02d}" for k in range(16)
-    )
-    band_selects = []
-    for b in range(4):
-        cols = " || '|' || ".join(f"h{b * 4 + i:02d}" for i in range(4))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_no, md5({cols}) AS band_hash FROM sig"
-        )
-    bands = " UNION ALL ".join(band_selects)
-    return run, f"""
+@_query("dedup_minhash_lsh", f"""
 WITH {_DUCK_SHINGLES_CTE},
 sig AS (
   SELECT doc_id,
-         {mins}
+         {_DUCK_MINHASH_MINS}
   FROM sh GROUP BY doc_id
 ),
-bands AS ({bands})
+bands AS ({_DUCK_MINHASH_BANDS})
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_bands_shared
 FROM bands a JOIN bands b USING (band_no, band_hash)
 WHERE a.doc_id < b.doc_id
 GROUP BY a.doc_id, b.doc_id
-"""
+""")
+def _dedup_minhash_lsh(spark, sf_dir):
+    # the oracle replays UNCAPPED banding, so disable the production
+    # skew cap here — the certified semantics and the engine's must
+    # be the same definition, not merely agree on friendly data.
+    # hash_fn pinned to md5 (DuckDB-replayable); the xxh64 production
+    # default is certified by dedup_minhash_lsh64_parity
+    return dedup.lsh_candidate_pairs(
+        spark.table("documents"),
+        n_hashes=16,
+        n_bands=4,
+        max_bucket_size=None,
+        hash_fn="md5",
+    )
 
 
-def _q_ann_cosine():
-    def run(spark, sf_dir):
-        from .operators.similarity import cosine_topk_np
+def _md5_byte(j: int) -> str:
+    """DuckDB expression for byte j (0-based) of the hex md5 digest ``h``:
+    the two hex digits at 2j+1, 2j+2."""
+    hexd = "strpos('0123456789abcdef', substr(h, {p}, 1)) - 1"
+    return f"(({hexd.format(p=2 * j + 1)}) * 16 + ({hexd.format(p=2 * j + 2)}))"
 
-        load_views(spark, sf_dir)
-        return cosine_topk_np(spark.table("embeddings"), k=5, n_queries=20)
 
-    return run, """
+_SIMHASH_VOTES = ",\n         ".join(
+    f"SUM(CASE WHEN ({_md5_byte(b // 8)} >> {b % 8}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
+    for b in range(64)
+)
+_SIMHASH_PACKED = " + ".join(
+    f"CASE WHEN v.v{b} > 0 THEN CAST({-(2**63) if b == 63 else 2**b} AS BIGINT) ELSE 0 END"
+    for b in range(64)
+)
+
+
+@_query("dedup_simhash", f"""
+WITH w AS (
+  SELECT DISTINCT doc_id, w FROM (
+    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+  ) WHERE w <> ''
+), fp AS (
+  SELECT doc_id, md5(w) AS h FROM w
+), v AS (
+  SELECT doc_id,
+         {_SIMHASH_VOTES}
+  FROM fp GROUP BY doc_id
+)
+SELECT CAST(d.doc_id AS VARCHAR) AS doc_id,
+       COALESCE({_SIMHASH_PACKED}, 0) AS simhash
+FROM documents d LEFT JOIN v ON v.doc_id = d.doc_id
+""")
+def _dedup_simhash(spark, sf_dir):
+    """SimHash is md5-derived, so DuckDB can replay it bit-exactly: decode
+    the first 8 md5 bytes per unique (doc, word) via hex-digit lookup
+    (little-endian uint64, matching numpy's frombuffer), pivot 64 bit-vote
+    sums in one grouped scan, and pack the sign bits into a signed BIGINT
+    (bit 63 contributes INT64_MIN — two's-complement wrap, matching the
+    engine's uint64 -> int64 view)."""
+    return dedup.simhash64(spark.table("documents"))
+
+
+@_query("ann_cosine_topk", """
 WITH v AS (
   SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS norm
@@ -644,7 +712,9 @@ SELECT query_id, neighbor_id, rank, cos_sim FROM (
                                ORDER BY cos_sim DESC, neighbor_id) AS rank
   FROM pairs
 ) x WHERE rank <= 5
-"""
+""")
+def _ann_cosine_topk(spark, sf_dir):
+    return similarity.cosine_topk_np(spark.table("embeddings"), k=5, n_queries=20)
 
 
 def _duck_lsh_bucket_expr(n_planes: int = 8, vec: str = "embedding") -> str:
@@ -664,52 +734,27 @@ def _duck_lsh_bucket_expr(n_planes: int = 8, vec: str = "embedding") -> str:
     return " + ".join(plane_terms)
 
 
-def _q_ann_lsh_hist():
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.similarity import lsh_buckets
-
-        load_views(spark, sf_dir)
-        return (
-            lsh_buckets(spark.table("embeddings"), n_planes=8)
-            .groupBy("bucket")
-            .agg(F.count("*").alias("n_vecs"))
-        )
-
-    return run, f"""
+@_query("ann_lsh_bucket_hist", f"""
 SELECT CAST({_duck_lsh_bucket_expr()} AS INTEGER) AS bucket, COUNT(*) AS n_vecs
 FROM embeddings GROUP BY 1
-"""
+""")
+def _ann_lsh_bucket_hist(spark, sf_dir):
+    return (
+        similarity.lsh_buckets(spark.table("embeddings"), n_planes=8)
+        .groupBy("bucket")
+        .agg(F.count("*").alias("n_vecs"))
+    )
 
 
-def _q_dedup_embedding_cosine():
-    """Embedding-cosine near-dup (task-mandate dedup family): sign-LSH
-    bucket candidates, exact cosine >= threshold verification. The oracle
-    replays the md5-parity planes, the bucket join, and the cosine.
-    4 planes / 0.35 picked so the synthetic corpus yields a non-trivial
-    pair set (34 at sf0.01) — a 0-row query certifies nothing."""
-    threshold = 0.35
-    n_planes = 4
+_EMB_COS_THRESHOLD = 0.35
+_EMB_COS_PLANES = 4
 
-    def run(spark, sf_dir):
-        from .operators.dedup import embedding_near_dup_pairs
 
-        load_views(spark, sf_dir)
-        # uncapped, matching the oracle's uncapped bucket join (the skew
-        # cap is the production default, certified by the skew pytest)
-        return embedding_near_dup_pairs(
-            spark.table("embeddings"),
-            threshold=threshold,
-            n_planes=n_planes,
-            max_bucket_size=None,
-        )
-
-    return run, f"""
+@_query("dedup_embedding_cosine", f"""
 WITH b AS (
   SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))) AS norm,
-         CAST({_duck_lsh_bucket_expr(n_planes)} AS INTEGER) AS bucket
+         CAST({_duck_lsh_bucket_expr(_EMB_COS_PLANES)} AS INTEGER) AS bucket
   FROM embeddings
 )
 SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b,
@@ -719,53 +764,45 @@ SELECT DISTINCT a.vec_id AS id_a, c.vec_id AS id_b,
 FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
 WHERE ROUND(list_sum(list_transform(range(1, len(a.embedding) + 1),
             i -> CAST(a.embedding[i] AS DOUBLE) * c.embedding[i]))
-      / (a.norm * c.norm), 6) >= {threshold}
-"""
+      / (a.norm * c.norm), 6) >= {_EMB_COS_THRESHOLD}
+""")
+def _dedup_embedding_cosine(spark, sf_dir):
+    """Embedding-cosine near-dup (task-mandate dedup family): sign-LSH
+    bucket candidates, exact cosine >= threshold verification. The oracle
+    replays the md5-parity planes, the bucket join, and the cosine.
+    4 planes / 0.35 picked so the synthetic corpus yields a non-trivial
+    pair set (34 at sf0.01) — a 0-row query certifies nothing."""
+    # uncapped, matching the oracle's uncapped bucket join (the skew
+    # cap is the production default, certified by the skew pytest)
+    return dedup.embedding_near_dup_pairs(
+        spark.table("embeddings"),
+        threshold=_EMB_COS_THRESHOLD,
+        n_planes=_EMB_COS_PLANES,
+        max_bucket_size=None,
+    )
 
 
-def _q_text_tokens():
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.text import bpe_token_count, ws_token_count
-
-        load_views(spark, sf_dir)
-        t = F.col("text")
-        return spark.table("documents").select(
-            "doc_id",
-            ws_token_count(t).alias("n_ws_tokens"),
-            bpe_token_count(t).alias("n_bpe_tokens"),
-        )
-
-    return run, """
+@_query("text_token_counts", """
 SELECT doc_id,
        CASE WHEN len(trim(text)) = 0 THEN 0
             ELSE len(string_split_regex(trim(text), ' +')) END AS n_ws_tokens,
        len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9 ]')) AS n_bpe_tokens
 FROM documents
-"""
-
-
-def _q_text_quality():
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions import text as X
-
-        load_views(spark, sf_dir)
-        t = F.col("text")
-        return spark.table("documents").select(
-            "doc_id",
-            X.avg_word_len(t).alias("avg_word_len"),
-            X.punct_ratio(t).alias("punct_ratio"),
-            X.stopword_ratio(t).alias("stopword_ratio"),
-            X.quality_score(t).alias("quality"),
-        )
-
-    stop_list = "', '".join(
-        ("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
+""")
+def _text_token_counts(spark, sf_dir):
+    t = F.col("text")
+    return spark.table("documents").select(
+        "doc_id",
+        text.ws_token_count(t).alias("n_ws_tokens"),
+        text.bpe_token_count(t).alias("n_bpe_tokens"),
     )
-    return run, f"""
+
+
+# functions/text.py's stopword list as the body of a SQL IN (...)
+_STOP_LIST = "', '".join(text.STOPWORDS)
+
+
+@_query("text_quality", f"""
 WITH base AS (
   SELECT doc_id, text,
          string_split_regex(trim(text), ' +') AS words,
@@ -777,7 +814,7 @@ WITH base AS (
          ROUND(list_sum(list_transform(words, w -> len(w)))
                / greatest(len(words), 1), 6) AS avg_word_len,
          ROUND(n_punct / greatest(len(text), 1), 6) AS punct_ratio,
-         ROUND(len(list_filter(lwords, w -> w IN ('{stop_list}')))
+         ROUND(len(list_filter(lwords, w -> w IN ('{_STOP_LIST}')))
                / greatest(len(lwords), 1), 6) AS stopword_ratio,
          CASE WHEN len(trim(text)) = 0 THEN 0
               ELSE len(string_split_regex(trim(text), ' +')) END AS n_ws
@@ -788,87 +825,70 @@ SELECT doc_id, avg_word_len, punct_ratio, stopword_ratio,
               + least(stopword_ratio * 5, 1.0)
               + (1.0 - least(punct_ratio * 4, 1.0))) / 3, 6) AS quality
 FROM m
-"""
+""")
+def _text_quality(spark, sf_dir):
+    t = F.col("text")
+    return spark.table("documents").select(
+        "doc_id",
+        text.avg_word_len(t).alias("avg_word_len"),
+        text.punct_ratio(t).alias("punct_ratio"),
+        text.stopword_ratio(t).alias("stopword_ratio"),
+        text.quality_score(t).alias("quality"),
+    )
 
 
-def _q_text_lang():
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
+_LANG_CODES = sorted(text.LANG_MARKERS)
+_LANG_HITS = ", ".join(
+    "len(list_filter(string_split_regex(lower(text), ' +'), "
+    "w -> w IN ('{}'))) AS h_{}".format("', '".join(text.LANG_MARKERS[c]), c)
+    for c in _LANG_CODES
+)
+_LANG_MAX = "greatest(" + ", ".join(f"h_{c}" for c in _LANG_CODES) + ")"
+_LANG_CASE = " ".join(f"WHEN h_{c} = m THEN '{c}'" for c in _LANG_CODES)
 
-        from .functions.text import lang_id
 
-        load_views(spark, sf_dir)
-        return spark.table("documents").select(
-            "doc_id", lang_id(F.col("text")).alias("pred_lang")
-        )
-
-    from .functions.text import LANG_MARKERS
-
-    hit_cols = []
-    for code, markers in sorted(LANG_MARKERS.items()):
-        lst = "', '".join(markers)
-        hit_cols.append(
-            f"len(list_filter(string_split_regex(lower(text), ' +'), "
-            f"w -> w IN ('{lst}'))) AS h_{code}"
-        )
-    hits = ", ".join(hit_cols)
-    codes = sorted(LANG_MARKERS)
-    m = "greatest(" + ", ".join(f"h_{c}" for c in codes) + ")"
-    case = " ".join(f"WHEN h_{c} = m THEN '{c}'" for c in codes)
-    return run, f"""
-WITH h AS (SELECT doc_id, {hits} FROM documents),
-     s AS (SELECT doc_id, *, {m} AS m FROM h)
-SELECT doc_id, CASE WHEN m = 0 THEN 'und' {case} END AS pred_lang
+@_query("text_lang_id", f"""
+WITH h AS (SELECT doc_id, {_LANG_HITS} FROM documents),
+     s AS (SELECT doc_id, *, {_LANG_MAX} AS m FROM h)
+SELECT doc_id, CASE WHEN m = 0 THEN 'und' {_LANG_CASE} END AS pred_lang
 FROM s
-"""
+""")
+def _text_lang_id(spark, sf_dir):
+    return spark.table("documents").select(
+        "doc_id", text.lang_id(F.col("text")).alias("pred_lang")
+    )
 
 
-def _q_text_fingerprint():
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.text import fingerprint
-
-        load_views(spark, sf_dir)
-        return spark.table("documents").select(
-            "doc_id", fingerprint(F.col("text")).alias("fingerprint")
-        )
-
-    return run, """
+@_query("text_fingerprint", """
 SELECT doc_id,
        md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fingerprint
 FROM documents
-"""
+""")
+def _text_fingerprint(spark, sf_dir):
+    return spark.table("documents").select(
+        "doc_id", text.fingerprint(F.col("text")).alias("fingerprint")
+    )
 
 
-def _q_multimodal_inventory():
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.multimodal import media_from_documents
-
-        load_views(spark, sf_dir)
-        media = media_from_documents(spark.table("documents"))
-        return media.groupBy("modality").agg(
-            F.count("*").alias("n_media"),
-            F.sum("n_bytes").cast("bigint").alias("total_bytes"),
-            F.countDistinct("content_sha").alias("n_distinct_sha"),
-        )
-
-    return run, """
+@_query("multimodal_inventory", """
 SELECT CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
        COUNT(*) AS n_media,
        CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes,
        COUNT(DISTINCT sha256(text)) AS n_distinct_sha
 FROM documents GROUP BY 1
-"""
+""")
+def _multimodal_inventory(spark, sf_dir):
+    media = multimodal.media_from_documents(spark.table("documents"))
+    return media.groupBy("modality").agg(
+        F.count("*").alias("n_media"),
+        F.sum("n_bytes").cast("bigint").alias("total_bytes"),
+        F.countDistinct("content_sha").alias("n_distinct_sha"),
+    )
 
 
 def _char_tokens_of(docs):
     """Any documents-shaped frame -> input_hint-shaped sequences with
     ascii-code tokens."""
-    from pyspark.sql import functions as F
-
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.transform(
@@ -879,33 +899,12 @@ def _char_tokens_of(docs):
     ).filter(F.col("n_tok") > 0)
 
 
-def _char_tokens_df(spark, sf_dir):
-    """documents -> input_hint-shaped sequences with ascii-code tokens."""
-    load_views(spark, sf_dir)
+def _char_tokens_df(spark):
+    """documents view -> input_hint-shaped sequences with ascii-code tokens."""
     return _char_tokens_of(spark.table("documents"))
 
 
-def _q_rollup_tier_parity():
-    """Core engine parity: shuffle-free tier rollup vs direct SQL windows."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.rollup import rollup_all_tiers, tier_points
-
-        seq = _char_tokens_df(spark, sf_dir)
-        tiers = rollup_all_tiers(seq, (("1s", 16), ("1m", 4)))
-        return tier_points(tiers["1m"]).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            "win_no",
-            F.col("min_v"),
-            F.col("max_v"),
-            F.col("sum_v"),
-            F.col("cnt"),
-            F.col("mean_v"),
-        )
-
-    return run, """
+@_query("rollup_tier_parity", """
 WITH chars AS (
   SELECT doc_id, i, ascii(substr(text, CAST(i AS INTEGER), 1)) AS v
   FROM documents, (SELECT unnest(range(1, 100001)) AS i) g
@@ -917,213 +916,64 @@ SELECT doc_id,
        CAST(SUM(v) AS BIGINT) AS sum_v, COUNT(*) AS cnt,
        ROUND(CAST(SUM(v) AS DOUBLE) / COUNT(*), 6) AS mean_v
 FROM chars GROUP BY doc_id, (i - 1) // 64
-"""
+""")
+def _rollup_tier_parity(spark, sf_dir):
+    """Core engine parity: shuffle-free tier rollup vs direct SQL windows."""
+    seq = _char_tokens_df(spark)
+    tiers = rollup.rollup_all_tiers(seq, (("1s", 16), ("1m", 4)))
+    return rollup.tier_points(tiers["1m"]).select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        "win_no",
+        F.col("min_v"),
+        F.col("max_v"),
+        F.col("sum_v"),
+        F.col("cnt"),
+        F.col("mean_v"),
+    )
 
 
-def _q_codec_roundtrip():
-    """Gorilla/DoD codec round-trip certified against an independent count."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.codec import dod_decode, dod_encode
-
-        seq = _char_tokens_df(spark, sf_dir)
-        return seq.select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.col("n_tok").cast("bigint").alias("n_tok"),
-            (dod_decode(dod_encode("tokens")) == F.col("tokens")).alias("ok"),
-        )
-
-    return run, """
+@_query("codec_roundtrip", """
 SELECT doc_id, length(text) AS n_tok, true AS ok
 FROM documents WHERE length(text) > 0
-"""
+""")
+def _codec_roundtrip(spark, sf_dir):
+    """Gorilla/DoD codec round-trip certified against an independent count."""
+    seq = _char_tokens_df(spark)
+    return seq.select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.col("n_tok").cast("bigint").alias("n_tok"),
+        (codec.dod_decode(codec.dod_encode("tokens")) == F.col("tokens")).alias("ok"),
+    )
 
 
-def _q_blocks_roundtrip():
+@_query("blocks_roundtrip", """
+SELECT doc_id, length(text) AS n_tok, true AS ok
+FROM documents WHERE length(text) > 0
+""")
+def _blocks_roundtrip(spark, sf_dir):
     """Block cut + binary sink + reassembly == identity (north-rule
     per-row token-array equality)."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.blocks import from_blocks, to_blocks
-
-        seq = _char_tokens_df(spark, sf_dir)
-        back = from_blocks(to_blocks(seq, block_size=64))
-        joined = seq.alias("a").join(back.alias("b"), "doc_id")
-        return joined.select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.col("a.n_tok").cast("bigint").alias("n_tok"),
-            (F.col("a.tokens") == F.col("b.tokens")).alias("ok"),
-        )
-
-    return run, """
-SELECT doc_id, length(text) AS n_tok, true AS ok
-FROM documents WHERE length(text) > 0
-"""
-
-
-def _q_simhash():
-    """SimHash is md5-derived, so DuckDB can replay it bit-exactly: decode
-    the first 8 md5 bytes per unique (doc, word) via hex-digit lookup
-    (little-endian uint64, matching numpy's frombuffer), pivot 64 bit-vote
-    sums in one grouped scan, and pack the sign bits into a signed BIGINT
-    (bit 63 contributes INT64_MIN — two's-complement wrap, matching the
-    engine's uint64 -> int64 view)."""
-
-    def run(spark, sf_dir):
-        from .operators.dedup import simhash64
-
-        load_views(spark, sf_dir)
-        return simhash64(spark.table("documents"))
-
-    hexd = "strpos('0123456789abcdef', substr(h, {p}, 1)) - 1"
-    # byte j (0-based) of the md5 digest = two hex digits at 2j+1, 2j+2
-    vote_cols = []
-    for b in range(64):
-        j, s = b // 8, b % 8
-        hi = hexd.format(p=2 * j + 1)
-        lo = hexd.format(p=2 * j + 2)
-        byte = f"(({hi}) * 16 + ({lo}))"
-        vote_cols.append(
-            f"SUM(CASE WHEN ({byte} >> {s}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        )
-    votes = ",\n         ".join(vote_cols)
-    terms = []
-    for b in range(64):
-        c = -(2**63) if b == 63 else 2**b
-        terms.append(f"CASE WHEN v.v{b} > 0 THEN CAST({c} AS BIGINT) ELSE 0 END")
-    packed = " + ".join(terms)
-    return run, f"""
-WITH w AS (
-  SELECT DISTINCT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-  ) WHERE w <> ''
-), fp AS (
-  SELECT doc_id, md5(w) AS h FROM w
-), v AS (
-  SELECT doc_id,
-         {votes}
-  FROM fp GROUP BY doc_id
-)
-SELECT CAST(d.doc_id AS VARCHAR) AS doc_id,
-       COALESCE({packed}, 0) AS simhash
-FROM documents d LEFT JOIN v ON v.doc_id = d.doc_id
-"""
-
-
-_REGISTRY.update(
-    {
-        "dedup_exact": _q_dedup_exact(),
-        "dedup_ngram_jaccard": _q_dedup_jaccard(),
-        "dedup_minhash_lsh": _q_dedup_minhash(),
-        "dedup_simhash": _q_simhash(),
-        "ann_cosine_topk": _q_ann_cosine(),
-        "ann_lsh_bucket_hist": _q_ann_lsh_hist(),
-        "dedup_embedding_cosine": _q_dedup_embedding_cosine(),
-        "text_token_counts": _q_text_tokens(),
-        "text_quality": _q_text_quality(),
-        "text_lang_id": _q_text_lang(),
-        "text_fingerprint": _q_text_fingerprint(),
-        "multimodal_inventory": _q_multimodal_inventory(),
-        "rollup_tier_parity": _q_rollup_tier_parity(),
-        "codec_roundtrip": _q_codec_roundtrip(),
-        "blocks_roundtrip": _q_blocks_roundtrip(),
-    }
-)
-
-
-def _q_s6_channel_metadata():
-    """S6 sink + P12 round-trip parity: emit the reference's full channel
-    metadata JSON (name/start/end/unit/rate/type/group/lastAnnotation/
-    properties[, id] — id omitted when null, reference
-    timeseries_channel.py:37-53), then parse it back through the
-    from_dict-equivalent (channelType alias + defaulting) and certify the
-    extracted fields. The oracle rebuilds the same JSON string byte-exact
-    with DuckDB json_object."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.legacy import (
-            channel_from_json,
-            channel_metadata_json,
-            legacy_metadata_key,
-        )
-
-        load_views(spark, sf_dir)
-        ext = (
-            spark.table("events")
-            .groupBy("user_id")
-            .agg(
-                F.min(F.unix_micros("ts")).alias("start_us"),
-                F.max(F.unix_micros("ts")).alias("end_us"),
-                F.count("*").alias("n"),
-            )
-        )
-        # samples/day keeps the double in the plain-decimal print range
-        # ([1e-3, 1e7)): Spark's Jackson and DuckDB's formatter agree there
-        # but diverge on scientific notation (2.2E-5 vs 0.000022).
-        # GREATEST(span,1): a single-sample channel would otherwise divide
-        # by zero -> NULL rate, and the engines serialize a null field
-        # differently (Spark omits it, json_object emits "rate":null)
-        rate = F.round(
-            F.col("n")
-            * 86400000000.0
-            / F.greatest(F.col("end_us") - F.col("start_us"), F.lit(1)),
-            6,
-        )
-        props = F.array(
-            F.struct(F.lit("src").alias("key"), F.lit("events").alias("value")),
-            F.struct(
-                F.lit("uid").alias("key"), F.col("user_id").cast("string").alias("value")
-            ),
-        )
-        cid = F.when(
-            F.col("user_id") % 2 == 0,
-            F.concat(F.lit("N:channel:"), F.col("user_id").cast("string")),
-        )
-        j = channel_metadata_json(
-            name=F.concat(F.lit(" ch-"), F.col("user_id").cast("string"), F.lit(" ")),
-            start_us=F.col("start_us"),
-            end_us=F.col("end_us"),
-            rate=rate,
-            group=F.lit("default"),
-            channel_type=F.lit("continuous"),
-            properties=props,
-            id=cid,
-        )
-        with_json = ext.select(
-            "user_id",
-            legacy_metadata_key(F.col("user_id")).alias("meta_key"),
-            j.alias("channel_json"),
-        )
-        p = channel_from_json(F.col("channel_json"))
-        return with_json.select(
-            "user_id",
-            "meta_key",
-            "channel_json",
-            p["name"].alias("rt_name"),
-            p["type"].alias("rt_type"),
-            p["type_valid"].alias("rt_type_valid"),
-            p["rate"].alias("rt_rate"),
-            p["last_annotation"].alias("rt_last_annotation"),
-            p["id"].alias("rt_id"),
-            F.size(p["properties"]).alias("rt_n_props"),
-            p["index"].alias("rt_index"),
-        )
-
-    jo = (
-        "json_object('name', 'ch-' || CAST(user_id AS VARCHAR), "
-        "'start', start_us, 'end', end_us, 'unit', 'uV', 'rate', rate, "
-        "'type', 'CONTINUOUS', 'group', 'default', "
-        "'lastAnnotation', CAST(0 AS BIGINT), "
-        "'properties', [{{'key': 'src', 'value': 'events'}}, "
-        "{{'key': 'uid', 'value': CAST(user_id AS VARCHAR)}}]{id_part})::VARCHAR"
+    seq = _char_tokens_df(spark)
+    back = blocks.from_blocks(blocks.to_blocks(seq, block_size=64))
+    joined = seq.alias("a").join(back.alias("b"), "doc_id")
+    return joined.select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.col("a.n_tok").cast("bigint").alias("n_tok"),
+        (F.col("a.tokens") == F.col("b.tokens")).alias("ok"),
     )
-    return run, f"""
+
+
+_S6_JSON_OBJECT = (
+    "json_object('name', 'ch-' || CAST(user_id AS VARCHAR), "
+    "'start', start_us, 'end', end_us, 'unit', 'uV', 'rate', rate, "
+    "'type', 'CONTINUOUS', 'group', 'default', "
+    "'lastAnnotation', CAST(0 AS BIGINT), "
+    "'properties', [{{'key': 'src', 'value': 'events'}}, "
+    "{{'key': 'uid', 'value': CAST(user_id AS VARCHAR)}}]{id_part})::VARCHAR"
+)
+
+
+@_query("s6_channel_metadata", f"""
 WITH ext AS (
   SELECT user_id, MIN(epoch_us(ts)) AS start_us, MAX(epoch_us(ts)) AS end_us,
          COUNT(*) AS n
@@ -1137,8 +987,8 @@ WITH ext AS (
 )
 SELECT user_id,
        printf('channel-%05d.metadata.json', user_id) AS meta_key,
-       CASE WHEN cid IS NULL THEN {jo.format(id_part="")}
-            ELSE {jo.format(id_part=", 'id', cid")} END AS channel_json,
+       CASE WHEN cid IS NULL THEN {_S6_JSON_OBJECT.format(id_part="")}
+            ELSE {_S6_JSON_OBJECT.format(id_part=", 'id', cid")} END AS channel_json,
        'ch-' || CAST(user_id AS VARCHAR) AS rt_name,
        'CONTINUOUS' AS rt_type,
        true AS rt_type_valid,
@@ -1148,45 +998,78 @@ SELECT user_id,
        2 AS rt_n_props,
        -1 AS rt_index
 FROM c
-"""
-
-
-_REGISTRY["s6_channel_metadata"] = _q_s6_channel_metadata()
-
-
-def _q_a2_rate_validation():
-    """Rate-vs-timestamps cross-validation (reference reader.py:82-106):
-    inferred rate (A2 median-delta) against a declared rate synthesized
-    at -2/-1/0/+1/+2 % of inferred per user-id bucket — so the strict
-    ``error > 0.02`` boundary is exercised both ways: declared 2% HIGH
-    gives error 0.0196 (valid), declared 2% LOW gives 0.0204 (invalid)."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
-
-        from .operators.segments import infer_rate_hz, validate_rates
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events").select(
-            "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
+""")
+def _s6_channel_metadata(spark, sf_dir):
+    """S6 sink + P12 round-trip parity: emit the reference's full channel
+    metadata JSON (name/start/end/unit/rate/type/group/lastAnnotation/
+    properties[, id] — id omitted when null, reference
+    timeseries_channel.py:37-53), then parse it back through the
+    from_dict-equivalent (channelType alias + defaulting) and certify the
+    extracted fields. The oracle rebuilds the same JSON string byte-exact
+    with DuckDB json_object."""
+    ext = (
+        spark.table("events")
+        .groupBy("user_id")
+        .agg(
+            F.min(F.unix_micros("ts")).alias("start_us"),
+            F.max(F.unix_micros("ts")).alias("end_us"),
+            F.count("*").alias("n"),
         )
-        inf = infer_rate_hz(ev, "user_id", "ts_us", tiebreak=["event_id"])
-        declared = F.round(
-            F.col("inferred_rate_hz")
-            * (F.lit(1.0) + (F.col("user_id") % 5 - 2) / F.lit(100.0)),
-            9,
-        )
-        chans = inf.withColumn("declared_rate_hz", declared)
-        return validate_rates(chans).select(
-            "user_id",
-            "declared_rate_hz",
-            "inferred_rate_hz",
-            F.round("rate_error", 9).alias("rate_error"),
-            "rate_valid",
-        )
+    )
+    # samples/day keeps the double in the plain-decimal print range
+    # ([1e-3, 1e7)): Spark's Jackson and DuckDB's formatter agree there
+    # but diverge on scientific notation (2.2E-5 vs 0.000022).
+    # GREATEST(span,1): a single-sample channel would otherwise divide
+    # by zero -> NULL rate, and the engines serialize a null field
+    # differently (Spark omits it, json_object emits "rate":null)
+    rate = F.round(
+        F.col("n")
+        * 86400000000.0
+        / F.greatest(F.col("end_us") - F.col("start_us"), F.lit(1)),
+        6,
+    )
+    props = F.array(
+        F.struct(F.lit("src").alias("key"), F.lit("events").alias("value")),
+        F.struct(
+            F.lit("uid").alias("key"), F.col("user_id").cast("string").alias("value")
+        ),
+    )
+    cid = F.when(
+        F.col("user_id") % 2 == 0,
+        F.concat(F.lit("N:channel:"), F.col("user_id").cast("string")),
+    )
+    j = legacy.channel_metadata_json(
+        name=F.concat(F.lit(" ch-"), F.col("user_id").cast("string"), F.lit(" ")),
+        start_us=F.col("start_us"),
+        end_us=F.col("end_us"),
+        rate=rate,
+        group=F.lit("default"),
+        channel_type=F.lit("continuous"),
+        properties=props,
+        id=cid,
+    )
+    with_json = ext.select(
+        "user_id",
+        legacy.legacy_metadata_key(F.col("user_id")).alias("meta_key"),
+        j.alias("channel_json"),
+    )
+    p = legacy.channel_from_json(F.col("channel_json"))
+    return with_json.select(
+        "user_id",
+        "meta_key",
+        "channel_json",
+        p["name"].alias("rt_name"),
+        p["type"].alias("rt_type"),
+        p["type_valid"].alias("rt_type_valid"),
+        p["rate"].alias("rt_rate"),
+        p["last_annotation"].alias("rt_last_annotation"),
+        p["id"].alias("rt_id"),
+        F.size(p["properties"]).alias("rt_n_props"),
+        p["index"].alias("rt_index"),
+    )
 
-    return run, """
+
+@_query("a2_rate_validation", """
 WITH first10 AS (
   SELECT user_id, ts_us FROM (
     SELECT user_id, epoch_us(ts) AS ts_us, event_id,
@@ -1212,10 +1095,30 @@ SELECT user_id, declared_rate_hz, inferred_rate_hz,
             ELSE NOT (abs(inferred_rate_hz - declared_rate_hz) * (1.0 / declared_rate_hz) > 0.02)
        END AS rate_valid
 FROM chans
-"""
-
-
-_REGISTRY["a2_rate_validation"] = _q_a2_rate_validation()
+""")
+def _a2_rate_validation(spark, sf_dir):
+    """Rate-vs-timestamps cross-validation (reference reader.py:82-106):
+    inferred rate (A2 median-delta) against a declared rate synthesized
+    at -2/-1/0/+1/+2 % of inferred per user-id bucket — so the strict
+    ``error > 0.02`` boundary is exercised both ways: declared 2% HIGH
+    gives error 0.0196 (valid), declared 2% LOW gives 0.0204 (invalid)."""
+    ev = spark.table("events").select(
+        "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
+    )
+    inf = segments.infer_rate_hz(ev, "user_id", "ts_us", tiebreak=["event_id"])
+    declared = F.round(
+        F.col("inferred_rate_hz")
+        * (F.lit(1.0) + (F.col("user_id") % 5 - 2) / F.lit(100.0)),
+        9,
+    )
+    chans = inf.withColumn("declared_rate_hz", declared)
+    return segments.validate_rates(chans).select(
+        "user_id",
+        "declared_rate_hz",
+        "inferred_rate_hz",
+        F.round("rate_error", 9).alias("rate_error"),
+        "rate_valid",
+    )
 
 
 def _scratch_dir(name: str, sf_dir: str) -> str:
@@ -1224,24 +1127,29 @@ def _scratch_dir(name: str, sf_dir: str) -> str:
     tempfile.mkdtemp would leak a full artifact set per driver run. The
     returned DataFrame reads from it lazily, so deletion can only happen
     at the START of the next run, never at the end of this one."""
-    import hashlib
-    import shutil
-
-    import os as _os
-
     # tmpfs when available (same rationale as bench.py's PTS_BENCH_OUT
     # default: measure the compute path, not the single VM disk)
-    root = "/dev/shm" if _os.path.isdir("/dev/shm") else "/tmp"
-    p = _os.path.join(
+    root = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    p = os.path.join(
         f"{root}/pts_contract_scratch",
         f"{name}-{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
     )
     shutil.rmtree(p, ignore_errors=True)
-    _os.makedirs(p, exist_ok=True)
+    os.makedirs(p, exist_ok=True)
     return p
 
 
-def _q_s8_lineage_certify():
+_S8_BLOCK = 64
+
+
+@_query("s8_lineage_certify", f"""
+SELECT source,
+       CAST(SUM((length(text) + {_S8_BLOCK - 1}) // {_S8_BLOCK}) AS BIGINT) AS blocks_rows,
+       true AS lineage_ok
+FROM documents WHERE length(text) > 0
+GROUP BY source
+""")
+def _s8_lineage_certify(spark, sf_dir):
     """S8/A5 driver-visible certification: run the resumable blocks
     pipeline on the char-token corpus, then prove the checkpoint table's
     lineage rows describe the durable bytes — per-partition row_count and
@@ -1249,98 +1157,29 @@ def _q_s8_lineage_certify():
     equal the checkpoint's, and the per-source row totals must equal the
     doc-derived expectation sum(ceil(n_tok/block_size)) (which DuckDB
     recomputes independently from documents)."""
-    BLOCK = 64
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .plans import lineage
-        from .plans.pipeline import PipelineConfig, run_pipeline
-
-        seq = _char_tokens_df(spark, sf_dir)
-        out_dir = _scratch_dir("lineage_certify", sf_dir)
-        cfg = PipelineConfig(
-            out_dir=out_dir, block_size=BLOCK, n_buckets=8,
-            tiers=(("1s", 16), ("1m", 4)), resume=False,
-        )
-        run_pipeline(spark, seq, cfg)
-
-        ck = (
-            lineage.read_checkpoint(spark, out_dir)
-            .filter(F.col("stage") == "blocks")
-            .select("partition_key", "row_count", "checksum")
-        )
-        written = spark.read.parquet(f"{out_dir}/blocks")
-        recomputed = (
-            written.withColumn(
-                "_h", F.xxhash64(*[F.col(c) for c in written.columns])
-            )
-            .groupBy("source", "bucket")
-            .agg(
-                F.count("*").alias("rc_rows"),
-                F.expr("bit_xor(_h)").alias("rc_checksum"),
-            )
-            .withColumn(
-                "partition_key",
-                F.concat_ws("/", F.col("source"), F.col("bucket").cast("string")),
-            )
-        )
-        per_part = ck.join(recomputed, "partition_key")
-        return (
-            per_part.groupBy("source")
-            .agg(
-                F.sum("row_count").cast("bigint").alias("blocks_rows"),
-                F.min(
-                    (F.col("row_count") == F.col("rc_rows"))
-                    & (F.col("checksum") == F.col("rc_checksum"))
-                ).alias("lineage_ok"),
-            )
-            .select("source", "blocks_rows", "lineage_ok")
-        )
-
-    return run, f"""
-SELECT source,
-       CAST(SUM((length(text) + {BLOCK - 1}) // {BLOCK}) AS BIGINT) AS blocks_rows,
-       true AS lineage_ok
-FROM documents WHERE length(text) > 0
-GROUP BY source
-"""
+    seq = _char_tokens_df(spark)
+    out_dir = _scratch_dir("lineage_certify", sf_dir)
+    cfg = pipeline.PipelineConfig(
+        out_dir=out_dir, block_size=_S8_BLOCK, n_buckets=8,
+        tiers=(("1s", 16), ("1m", 4)), resume=False,
+    )
+    pipeline.run_pipeline(spark, seq, cfg)
+    audit = lineage.verify_lineage(
+        spark, out_dir, "blocks", f"{out_dir}/blocks", ["source", "bucket"]
+    )
+    # partition_key is "<source>/<bucket>"
+    return audit.groupBy(
+        F.regexp_extract("partition_key", "^(.*)/[^/]*$", 1).alias("source")
+    ).agg(
+        F.sum("ck_rows").cast("bigint").alias("blocks_rows"),
+        F.min("ok").alias("lineage_ok"),
+    )
 
 
-def _q_a4_manifest_batches():
-    """A4 + L2 (import side): manifest batch sizing from the sampled mean
-    entry size with 80% margin (reference import_client.py:161-190), and
-    batch assignment that preserves global insertion order across batches
-    (their test_import_client.py:279). The oracle recomputes the batch
-    size and the order-preserving first/last key per batch from scratch;
-    max_size is shrunk so the test corpus spans multiple batches."""
-    MAX_SIZE = 16_000  # bytes; ~0.8*16000/avg_entry docs per batch
+_A4_MAX_SIZE = 16_000  # bytes; ~0.8*16000/avg_entry docs per batch
 
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
 
-        from .plans.lineage import assign_manifest_batches, calculate_batch_size
-
-        load_views(spark, sf_dir)
-        entries = spark.table("documents").select(
-            F.col("doc_id"),
-            F.format_string("up/%05d.bin.gz", F.col("doc_id")).alias("upload_key"),
-            F.concat_ws("/", F.col("source"), F.col("doc_id").cast("string")).alias(
-                "file_path"
-            ),
-        )
-        bs = calculate_batch_size(entries, "doc_id", max_size_bytes=MAX_SIZE)
-        batched = assign_manifest_batches(entries, bs, "doc_id")
-        return batched.groupBy("batch_no").agg(
-            F.count("*").alias("n_entries"),
-            F.min("global_pos").alias("first_pos"),
-            F.max("global_pos").alias("last_pos"),
-            F.min("upload_key").alias("first_key"),
-            F.max("upload_key").alias("last_key"),
-            F.lit(bs).cast("bigint").alias("batch_size"),
-        )
-
-    return run, f"""
+@_query("a4_manifest_batches", f"""
 WITH entries AS (
   SELECT doc_id,
          printf('up/%05d.bin.gz', doc_id) AS upload_key,
@@ -1351,7 +1190,7 @@ WITH entries AS (
   FROM (SELECT * FROM entries ORDER BY doc_id LIMIT 100)
 ), bs AS (
   -- FLOOR before the cast: Python int() truncates, DuckDB CAST rounds
-  SELECT GREATEST(1, CAST(FLOOR({MAX_SIZE} * 0.8 / (s / n)) AS BIGINT)) AS batch_size FROM sample
+  SELECT GREATEST(1, CAST(FLOOR({_A4_MAX_SIZE} * 0.8 / (s / n)) AS BIGINT)) AS batch_size FROM sample
 ), pos AS (
   SELECT doc_id, upload_key,
          CAST(ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS BIGINT) AS global_pos
@@ -1364,111 +1203,76 @@ SELECT global_pos // batch_size AS batch_no,
        batch_size
 FROM pos, bs
 GROUP BY global_pos // batch_size, batch_size
-"""
+""")
+def _a4_manifest_batches(spark, sf_dir):
+    """A4 + L2 (import side): manifest batch sizing from the sampled mean
+    entry size with 80% margin (reference import_client.py:161-190), and
+    batch assignment that preserves global insertion order across batches
+    (their test_import_client.py:279). The oracle recomputes the batch
+    size and the order-preserving first/last key per batch from scratch;
+    max_size is shrunk so the test corpus spans multiple batches."""
+    entries = spark.table("documents").select(
+        F.col("doc_id"),
+        F.format_string("up/%05d.bin.gz", F.col("doc_id")).alias("upload_key"),
+        F.concat_ws("/", F.col("source"), F.col("doc_id").cast("string")).alias(
+            "file_path"
+        ),
+    )
+    bs = lineage.calculate_batch_size(entries, "doc_id", max_size_bytes=_A4_MAX_SIZE)
+    batched = lineage.assign_manifest_batches(entries, bs, "doc_id")
+    return batched.groupBy("batch_no").agg(
+        F.count("*").alias("n_entries"),
+        F.min("global_pos").alias("first_pos"),
+        F.max("global_pos").alias("last_pos"),
+        F.min("upload_key").alias("first_key"),
+        F.max("upload_key").alias("last_key"),
+        F.lit(bs).cast("bigint").alias("batch_size"),
+    )
 
 
-_REGISTRY["s8_lineage_certify"] = _q_s8_lineage_certify()
-_REGISTRY["a4_manifest_batches"] = _q_a4_manifest_batches()
-
-
-def _q_p5_legacy_blocks():
-    """P5 driver-visible certification: encode each channel's ordered
-    values to the reference's legacy payload (big-endian float64, gzip
-    level 0, mtime=0 — reference writer.py:73-99) and certify (a) decode
-    round-trips bit-exactly and (b) the payload byte length equals the
-    closed-form gzip-stored-block size 18 + 8n + 5*ceil(8n/65535), which
-    DuckDB computes independently from the row counts."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.legacy import legacy_decode, legacy_encode
-
-        load_views(spark, sf_dir)
-        vals = (
-            spark.table("events")
-            .groupBy("user_id")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct(
-                                F.unix_micros("ts").alias("ts_us"),
-                                F.col("event_id"),
-                                F.col("value"),
-                            )
-                        )
-                    ),
-                    lambda s: s["value"],
-                ).alias("values")
-            )
-        )
-        enc = vals.withColumn("payload", legacy_encode("values"))
-        return enc.select(
-            "user_id",
-            F.size("values").cast("bigint").alias("n_samples"),
-            F.length("payload").cast("bigint").alias("payload_bytes"),
-            (legacy_decode(F.col("payload")) == F.col("values")).alias("ok"),
-        )
-
-    return run, """
+@_query("p5_legacy_blocks", """
 SELECT user_id,
        COUNT(*) AS n_samples,
        CAST(18 + 8 * COUNT(*)
             + 5 * GREATEST(1, (8 * COUNT(*) + 65534) // 65535) AS BIGINT) AS payload_bytes,
        true AS ok
 FROM events GROUP BY user_id
-"""
-
-
-_REGISTRY["p5_legacy_blocks"] = _q_p5_legacy_blocks()
-
-
-def _q_p14_size_parsing():
-    """P14 — human-readable size parsing + samples-for-size math
-    (reference scripts/generate_test_nwb.py:27-61): size strings are
-    synthesized from part.p_size with a per-row unit (and an invalid
-    shape every 7th key, which parses to NULL — the declarative analog of
-    the reference's ValueError), then bytes -> sample count with the 5%
-    container-overhead rule and 1000-sample floor."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .sources.synth import parse_size_col
-
-        load_views(spark, sf_dir)
-        unit = (
-            F.when(F.col("p_partkey") % 5 == 0, "B")
-            .when(F.col("p_partkey") % 5 == 1, "KB")
-            .when(F.col("p_partkey") % 5 == 2, "MB")
-            .when(F.col("p_partkey") % 5 == 3, "GB")
-            .otherwise("TB")
+""")
+def _p5_legacy_blocks(spark, sf_dir):
+    """P5 driver-visible certification: encode each channel's ordered
+    values to the reference's legacy payload (big-endian float64, gzip
+    level 0, mtime=0 — reference writer.py:73-99) and certify (a) decode
+    round-trips bit-exactly and (b) the payload byte length equals the
+    closed-form gzip-stored-block size 18 + 8n + 5*ceil(8n/65535), which
+    DuckDB computes independently from the row counts."""
+    vals = (
+        spark.table("events")
+        .groupBy("user_id")
+        .agg(
+            F.transform(
+                F.sort_array(
+                    F.collect_list(
+                        F.struct(
+                            F.unix_micros("ts").alias("ts_us"),
+                            F.col("event_id"),
+                            F.col("value"),
+                        )
+                    )
+                ),
+                lambda s: s["value"],
+            ).alias("values")
         )
-        size_str = F.when(
-            F.col("p_partkey") % 7 == 0, F.lit("not-a-size")
-        ).otherwise(
-            F.concat(
-                F.col("p_size").cast("string"),
-                F.when(F.col("p_partkey") % 2 == 0, ".5").otherwise(""),
-                F.lit(" "),
-                unit,
-            )
-        )
-        parsed = spark.table("part").select(
-            "p_partkey", size_str.alias("size_str")
-        ).withColumn("n_bytes", parse_size_col(F.col("size_str")))
-        # explicit NULL gate: Spark's greatest() skips NULLs while other
-        # engines may propagate them — don't rely on either behavior
-        return parsed.withColumn(
-            "n_samples",
-            F.when(
-                F.col("n_bytes").isNotNull(),
-                F.greatest(F.floor(F.col("n_bytes") * 0.95 / 16), F.lit(1000)),
-            ).cast("bigint"),
-        )
+    )
+    enc = vals.withColumn("payload", legacy.legacy_encode("values"))
+    return enc.select(
+        "user_id",
+        F.size("values").cast("bigint").alias("n_samples"),
+        F.length("payload").cast("bigint").alias("payload_bytes"),
+        (legacy.legacy_decode(F.col("payload")) == F.col("values")).alias("ok"),
+    )
 
-    return run, """
+
+@_query("p14_size_parsing", """
 WITH sized AS (
   SELECT p_partkey,
          CASE WHEN p_partkey % 7 = 0 THEN 'not-a-size'
@@ -1498,65 +1302,100 @@ SELECT p_partkey, size_str, n_bytes,
             THEN CAST(GREATEST(FLOOR(n_bytes * 0.95 / 16), 1000) AS BIGINT)
        END AS n_samples
 FROM parsed
-"""
-
-
-_REGISTRY["p14_size_parsing"] = _q_p14_size_parsing()
-
-
-def _q_text_winnow():
-    """Winnowing rolling-hash fingerprints (Schleimer et al. SIGMOD'03):
-    md5-prefix k-gram hashes + rightmost-min-per-window selection are
-    both engine-portable, so DuckDB replays the exact fingerprint set."""
-    k, w = 4, 5
-
-    def run(spark, sf_dir):
-        from .functions.text import winnow_fingerprints
-
-        load_views(spark, sf_dir)
-        return winnow_fingerprints(spark.table("documents"), k=k, w=w)
-
-    hex_digit = "(strpos('0123456789abcdef', substr(md5(gram), {p}, 1)) - 1)"
-    h24 = " + ".join(
-        f"{hex_digit.format(p=p + 1)} * {16 ** (5 - p)}" for p in range(6)
+""")
+def _p14_size_parsing(spark, sf_dir):
+    """P14 — human-readable size parsing + samples-for-size math
+    (reference scripts/generate_test_nwb.py:27-61): size strings are
+    synthesized from part.p_size with a per-row unit (and an invalid
+    shape every 7th key, which parses to NULL — the declarative analog of
+    the reference's ValueError), then bytes -> sample count with the 5%
+    container-overhead rule and 1000-sample floor."""
+    unit = (
+        F.when(F.col("p_partkey") % 5 == 0, "B")
+        .when(F.col("p_partkey") % 5 == 1, "KB")
+        .when(F.col("p_partkey") % 5 == 2, "MB")
+        .when(F.col("p_partkey") % 5 == 3, "GB")
+        .otherwise("TB")
     )
-    M = 1 << 24
-    return run, f"""
+    size_str = F.when(
+        F.col("p_partkey") % 7 == 0, F.lit("not-a-size")
+    ).otherwise(
+        F.concat(
+            F.col("p_size").cast("string"),
+            F.when(F.col("p_partkey") % 2 == 0, ".5").otherwise(""),
+            F.lit(" "),
+            unit,
+        )
+    )
+    parsed = spark.table("part").select(
+        "p_partkey", size_str.alias("size_str")
+    ).withColumn("n_bytes", synth.parse_size_col(F.col("size_str")))
+    # explicit NULL gate: Spark's greatest() skips NULLs while other
+    # engines may propagate them — don't rely on either behavior
+    return parsed.withColumn(
+        "n_samples",
+        F.when(
+            F.col("n_bytes").isNotNull(),
+            F.greatest(F.floor(F.col("n_bytes") * 0.95 / 16), F.lit(1000)),
+        ).cast("bigint"),
+    )
+
+
+_WINNOW_K, _WINNOW_W = 4, 5
+_WINNOW_M = 1 << 24
+# 24-bit hash: the first 6 hex digits of md5(gram)
+_WINNOW_H24 = " + ".join(
+    f"(strpos('0123456789abcdef', substr(md5(gram), {p + 1}, 1)) - 1) * {16 ** (5 - p)}"
+    for p in range(6)
+)
+
+
+@_query("text_winnow_fingerprints", f"""
 WITH canon AS (
   SELECT doc_id,
          trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS c
   FROM documents
 ), grams AS (
   SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos,
-         substr(c, CAST(i AS INTEGER), {k}) AS gram
+         substr(c, CAST(i AS INTEGER), {_WINNOW_K}) AS gram
   FROM canon,
        (SELECT unnest(range(1, (SELECT COALESCE(MAX(len(c)), 0) FROM canon) + 1)) AS i) g
-  WHERE i <= len(c) - {k - 1}
+  WHERE i <= len(c) - {_WINNOW_K - 1}
 ), hashed AS (
-  SELECT doc_id, pos, CAST({h24} AS BIGINT) AS h
+  SELECT doc_id, pos, CAST({_WINNOW_H24} AS BIGINT) AS h
   FROM grams
 ), keyed AS (
-  SELECT doc_id, pos, h * {M} + ({M - 1} - pos) AS key
+  SELECT doc_id, pos, h * {_WINNOW_M} + ({_WINNOW_M - 1} - pos) AS key
   FROM hashed
 ), winmin AS (
   SELECT doc_id,
          MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW) AS kmin,
+                        ROWS BETWEEN {_WINNOW_W - 1} PRECEDING AND CURRENT ROW) AS kmin,
          COUNT(*) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW) AS wsz
+                        ROWS BETWEEN {_WINNOW_W - 1} PRECEDING AND CURRENT ROW) AS wsz
   FROM keyed
 )
 SELECT DISTINCT doc_id,
-       CAST({M - 1} - kmin % {M} AS INTEGER) AS pos,
-       kmin // {M} AS fp
-FROM winmin WHERE wsz >= {w}
-"""
+       CAST({_WINNOW_M - 1} - kmin % {_WINNOW_M} AS INTEGER) AS pos,
+       kmin // {_WINNOW_M} AS fp
+FROM winmin WHERE wsz >= {_WINNOW_W}
+""")
+def _text_winnow_fingerprints(spark, sf_dir):
+    """Winnowing rolling-hash fingerprints (Schleimer et al. SIGMOD'03):
+    md5-prefix k-gram hashes + rightmost-min-per-window selection are
+    both engine-portable, so DuckDB replays the exact fingerprint set."""
+    return text.winnow_fingerprints(spark.table("documents"), k=_WINNOW_K, w=_WINNOW_W)
 
 
-_REGISTRY["text_winnow_fingerprints"] = _q_text_winnow()
-
-
-def _q_s5_legacy_roundtrip():
+@_query("s5_legacy_roundtrip", """
+SELECT user_id,
+       COUNT(*) AS n_samples,
+       CAST(ROUND(SUM(CAST(value AS DECIMAL(28,6))), 6) AS DOUBLE) AS value_sum,
+       MIN(epoch_us(ts)) AS start_us,
+       MAX(epoch_us(ts)) AS end_us
+FROM events GROUP BY user_id
+""")
+def _s5_legacy_roundtrip(spark, sf_dir):
     """S5/S7/S9 driver-visible certification: export the events table to
     the reference's loose-file artifact set (chunked .bin.gz + metadata
     sidecars), scan it back with the binaryFile source, decode, and
@@ -1564,40 +1403,28 @@ def _q_s5_legacy_roundtrip():
     the decimal value sum must equal what DuckDB computes from the
     original table. Proves the legacy byte format, the key regex, and
     the index/rate timestamp rule survive a full disk round trip."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .plans.legacy_export import export_legacy_channels
-        from .plans.legacy_import import legacy_samples, read_legacy_blocks
-
-        load_views(spark, sf_dir)
-        out = _scratch_dir("legacy_rt", sf_dir)
-        export_legacy_channels(spark, spark.table("events"), out, chunk_size=50)
-        back = legacy_samples(read_legacy_blocks(spark, out))
-        return back.groupBy(F.col("channel_index").alias("user_id")).agg(
-            F.count("*").alias("n_samples"),
-            F.round(F.sum(F.col("value").cast("decimal(28,6)")), 6)
-            .cast("double")
-            .alias("value_sum"),
-            F.min("ts_us").alias("start_us"),
-            F.max("ts_us").alias("end_us"),
-        )
-
-    return run, """
-SELECT user_id,
-       COUNT(*) AS n_samples,
-       CAST(ROUND(SUM(CAST(value AS DECIMAL(28,6))), 6) AS DOUBLE) AS value_sum,
-       MIN(epoch_us(ts)) AS start_us,
-       MAX(epoch_us(ts)) AS end_us
-FROM events GROUP BY user_id
-"""
+    out = _scratch_dir("legacy_rt", sf_dir)
+    legacy_export.export_legacy_channels(spark, spark.table("events"), out, chunk_size=50)
+    back = legacy_import.legacy_samples(legacy_import.read_legacy_blocks(spark, out))
+    return back.groupBy(F.col("channel_index").alias("user_id")).agg(
+        F.count("*").alias("n_samples"),
+        F.round(F.sum(F.col("value").cast("decimal(28,6)")), 6)
+        .cast("double")
+        .alias("value_sum"),
+        F.min("ts_us").alias("start_us"),
+        F.max("ts_us").alias("end_us"),
+    )
 
 
-_REGISTRY["s5_legacy_roundtrip"] = _q_s5_legacy_roundtrip()
-
-
-def _q_agg_sketches():
+@_query("agg_sketches", """
+SELECT event_type,
+       COUNT(DISTINCT user_id) AS exact_distinct,
+       true AS hll_within_bound,
+       true AS p50_within_bound,
+       CAST(ROUND(CAST(median(value) AS DECIMAL(28,6)), 6) AS DOUBLE) AS p50_exact
+FROM events GROUP BY event_type
+""")
+def _agg_sketches(spark, sf_dir):
     """Sketch aggregates with CERTIFIED error bounds: HyperLogLog++
     distinct counts (rsd 2%) and approx percentile must land within
     their documented error of the exact values — the exact values and
@@ -1605,55 +1432,38 @@ def _q_agg_sketches():
     engine-specific; their GUARANTEES are not). At 100 TB the sketches
     are the only affordable form of these aggregates: HLL++ is O(1)
     memory per group vs a full distinct shuffle."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events")
-        agg = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_distinct"),
-            F.approx_count_distinct("user_id", rsd=0.02).alias("hll"),
-            F.expr("percentile_approx(value, 0.5, 10000)").alias("p50_approx"),
-            F.expr("percentile(value, 0.5)").alias("p50_exact"),
-            F.min("value").alias("min_v"),
-            F.max("value").alias("max_v"),
-        )
-        return agg.select(
-            "event_type",
-            "exact_distinct",
-            # 5 sigma of the 2% rsd — deterministic pass at these scales
-            (
-                F.abs(F.col("hll") - F.col("exact_distinct"))
-                <= F.greatest(F.col("exact_distinct") * 0.1, F.lit(2.0))
-            ).alias("hll_within_bound"),
-            # percentile_approx with accuracy 10000 on these group sizes
-            # must sit between the true min/max and within the exact
-            # p50's neighborhood (10% of the value range)
-            (
-                (F.col("p50_approx") >= F.col("min_v"))
-                & (F.col("p50_approx") <= F.col("max_v"))
-                & (
-                    F.abs(F.col("p50_approx") - F.col("p50_exact"))
-                    <= (F.col("max_v") - F.col("min_v")) * 0.1
-                )
-            ).alias("p50_within_bound"),
-            F.round(F.col("p50_exact").cast("decimal(28,6)"), 6)
-            .cast("double")
-            .alias("p50_exact"),
-        )
-
-    return run, """
-SELECT event_type,
-       COUNT(DISTINCT user_id) AS exact_distinct,
-       true AS hll_within_bound,
-       true AS p50_within_bound,
-       CAST(ROUND(CAST(median(value) AS DECIMAL(28,6)), 6) AS DOUBLE) AS p50_exact
-FROM events GROUP BY event_type
-"""
-
-
-_REGISTRY["agg_sketches"] = _q_agg_sketches()
+    ev = spark.table("events")
+    agg = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_distinct"),
+        F.approx_count_distinct("user_id", rsd=0.02).alias("hll"),
+        F.expr("percentile_approx(value, 0.5, 10000)").alias("p50_approx"),
+        F.expr("percentile(value, 0.5)").alias("p50_exact"),
+        F.min("value").alias("min_v"),
+        F.max("value").alias("max_v"),
+    )
+    return agg.select(
+        "event_type",
+        "exact_distinct",
+        # 5 sigma of the 2% rsd — deterministic pass at these scales
+        (
+            F.abs(F.col("hll") - F.col("exact_distinct"))
+            <= F.greatest(F.col("exact_distinct") * 0.1, F.lit(2.0))
+        ).alias("hll_within_bound"),
+        # percentile_approx with accuracy 10000 on these group sizes
+        # must sit between the true min/max and within the exact
+        # p50's neighborhood (10% of the value range)
+        (
+            (F.col("p50_approx") >= F.col("min_v"))
+            & (F.col("p50_approx") <= F.col("max_v"))
+            & (
+                F.abs(F.col("p50_approx") - F.col("p50_exact"))
+                <= (F.col("max_v") - F.col("min_v")) * 0.1
+            )
+        ).alias("p50_within_bound"),
+        F.round(F.col("p50_exact").cast("decimal(28,6)"), 6)
+        .cast("double")
+        .alias("p50_exact"),
+    )
 
 
 # ==========================================================================
@@ -1661,16 +1471,16 @@ _REGISTRY["agg_sketches"] = _q_agg_sketches()
 # distinct aggregation. All shared-text (dialects agree on these).
 # ==========================================================================
 
-_CUBE_ROLLUP = """
+_query("agg_grouping_sets", sql="""
 SELECT COALESCE(l_returnflag, '<all>') AS returnflag,
        COALESCE(l_linestatus, '<all>') AS linestatus,
        COUNT(*) AS n,
        CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 4) AS DOUBLE) AS qty
 FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-"""
+""")
 
-_PIVOT_STATUS = """
+_query("agg_pivot_status", sql="""
 SELECT l_returnflag,
        CAST(SUM(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
        CAST(SUM(CASE WHEN l_linestatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
@@ -1678,9 +1488,9 @@ SELECT l_returnflag,
                            THEN CAST(l_extendedprice AS DECIMAL(18,4))
                            ELSE CAST(0 AS DECIMAL(18,4)) END), 4) AS DOUBLE) AS open_price
 FROM lineitem GROUP BY l_returnflag
-"""
+""")
 
-_RUNNING_WINDOW = """
+_query("w6_running_frames", sql="""
 SELECT user_id, event_id,
        CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (
          PARTITION BY user_id ORDER BY ts, event_id
@@ -1692,60 +1502,38 @@ SELECT user_id, event_id,
               PARTITION BY user_id ORDER BY ts, event_id
               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS DOUBLE) AS moving_avg_5
 FROM events WHERE user_id < 10
-"""
+""")
 
-_DISTINCT_AGG = """
+_query("agg_count_distinct", sql="""
 SELECT s.s_nationkey AS nationkey,
        COUNT(DISTINCT l.l_partkey) AS n_distinct_parts,
        COUNT(DISTINCT l.l_orderkey) AS n_distinct_orders
 FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
 GROUP BY s.s_nationkey
-"""
+""")
 
-_SET_OPS = """
+_query("set_ops_union_except", sql="""
 SELECT c_nationkey AS nationkey FROM customer WHERE c_acctbal > 9000
 UNION
 SELECT s_nationkey AS nationkey FROM supplier WHERE s_acctbal > 9000
 EXCEPT
 SELECT n_nationkey AS nationkey FROM nation WHERE n_name = 'CHINA'
-"""
+""")
 
-_EXISTS_SEMI = """
+_query("j_semi_exists", sql="""
 SELECT p.p_brand, COUNT(*) AS n_parts
 FROM part p
 WHERE EXISTS (SELECT 1 FROM lineitem l
               WHERE l.l_partkey = p.p_partkey AND l.l_quantity > 45)
 GROUP BY p.p_brand
-"""
-
-_REGISTRY.update(
-    {
-        "agg_grouping_sets": _shared(_CUBE_ROLLUP),
-        "agg_pivot_status": _shared(_PIVOT_STATUS),
-        "w6_running_frames": _shared(_RUNNING_WINDOW),
-        "agg_count_distinct": _shared(_DISTINCT_AGG),
-        "set_ops_union_except": _shared(_SET_OPS),
-        "j_semi_exists": _shared(_EXISTS_SEMI),
-    }
-)
+""")
 
 
-def _q_ann_ivf():
-    """IVF-ANN with a FULL DuckDB oracle: the index build is deterministic
-    (md5-ordered seeds, Lloyd iterations with centroids quantized to 6 dp
-    after every update), so the oracle replays the entire pipeline —
-    seed -> 3×(assign, mean) -> nprobe probe -> in-cluster exact cosine —
-    in SQL. Quantized centroids make the replay robust: cross-engine
-    float sum-order drift (~1e-13) is far below the rounding quantum."""
-    n_clusters, nprobe, iters, topk, dec = 8, 2, 3, 5, 6
+_IVF_CLUSTERS, _IVF_NPROBE, _IVF_ITERS, _IVF_TOPK, _IVF_DEC = 8, 2, 3, 5, 6
 
-    def run(spark, sf_dir):
-        from .operators.similarity import ann_ivf_topk
 
-        load_views(spark, sf_dir)
-        return ann_ivf_topk(
-            spark.table("embeddings"), k=topk, n_clusters=n_clusters, nprobe=nprobe
-        )
+def _ivf_oracle() -> str:
+    """DuckDB replay of the whole IVF pipeline of ``ann_ivf_topk``."""
 
     def dot(a, b):
         return (
@@ -1766,13 +1554,13 @@ def _q_ann_ivf():
         f"""c0 AS (
   SELECT cid, c FROM (
     SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid,
-           list_transform(e, x -> round(x, {dec})) AS c
+           list_transform(e, x -> round(x, {_IVF_DEC})) AS c
     FROM v
-  ) WHERE cid < {n_clusters}
+  ) WHERE cid < {_IVF_CLUSTERS}
 )""",
         "g AS (SELECT unnest(range(1, (SELECT max(len(e)) FROM v) + 1)) AS i)",
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, _IVF_ITERS + 1):
         prev = f"c{t - 1}"
         ctes.append(
             f"""a{t} AS (
@@ -1791,7 +1579,7 @@ def _q_ann_ivf():
   SELECT p.cid, COALESCE(m.c, p.c) AS c
   FROM {prev} p LEFT JOIN (
     SELECT cid, list(cv ORDER BY i) AS c FROM (
-      SELECT a.cid, g.i, round(SUM(a.e[g.i]) / COUNT(*), {dec}) AS cv
+      SELECT a.cid, g.i, round(SUM(a.e[g.i]) / COUNT(*), {_IVF_DEC}) AS cv
       FROM a{t} a, g WHERE g.i <= len(a.e)
       GROUP BY a.cid, g.i
     ) GROUP BY cid
@@ -1806,7 +1594,7 @@ def _q_ann_ivf():
     SELECT v.vec_id, v.e, c.cid,
            row_number() OVER (PARTITION BY v.vec_id
                               ORDER BY {d2("v.e", "c.c")}, c.cid) AS rnk
-    FROM v, c{iters} c
+    FROM v, c{_IVF_ITERS} c
   ) WHERE rnk = 1
 )"""
     )
@@ -1816,8 +1604,8 @@ def _q_ann_ivf():
     SELECT v.vec_id, c.cid,
            row_number() OVER (PARTITION BY v.vec_id
                               ORDER BY {d2("v.e", "c.c")}, c.cid) AS rnk
-    FROM v, c{iters} c
-  ) WHERE rnk <= {nprobe}
+    FROM v, c{_IVF_ITERS} c
+  ) WHERE rnk <= {_IVF_NPROBE}
 )"""
     )
     ctes.append(
@@ -1831,7 +1619,7 @@ def _q_ann_ivf():
   WHERE p.query_id <> a.vec_id
 )"""
     )
-    sql = (
+    return (
         "WITH "
         + ",\n".join(ctes)
         + f"""
@@ -1839,13 +1627,22 @@ SELECT query_id, neighbor_id, rank, cos_sim FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id
                                ORDER BY cos_sim DESC, neighbor_id) AS rank
   FROM pairs
-) WHERE rank <= {topk}
+) WHERE rank <= {_IVF_TOPK}
 """
     )
-    return run, sql
 
 
-_REGISTRY["ann_ivf_topk"] = _q_ann_ivf()
+@_query("ann_ivf_topk", _ivf_oracle())
+def _ann_ivf_topk(spark, sf_dir):
+    """IVF-ANN with a FULL DuckDB oracle: the index build is deterministic
+    (md5-ordered seeds, Lloyd iterations with centroids quantized to 6 dp
+    after every update), so the oracle replays the entire pipeline —
+    seed -> 3×(assign, mean) -> nprobe probe -> in-cluster exact cosine —
+    in SQL. Quantized centroids make the replay robust: cross-engine
+    float sum-order drift (~1e-13) is far below the rounding quantum."""
+    return similarity.ann_ivf_topk(
+        spark.table("embeddings"), k=_IVF_TOPK, n_clusters=_IVF_CLUSTERS, nprobe=_IVF_NPROBE
+    )
 
 
 # ==========================================================================
@@ -1854,43 +1651,10 @@ _REGISTRY["ann_ivf_topk"] = _q_ann_ivf()
 # ==========================================================================
 
 
-def _q_j3_asof_align():
-    """J3+ — backward as-of join (align purchases to the most recent view
-    per user, 2 h tolerance). The engine runs the union-marker
-    single-window plan (operators/asof.py); the oracle replays the same
-    semantics with the portable cumulative-count idiom (the matching view
-    is the vcnt-th view), so IGNORE-NULLS dialect drift never enters."""
-    TOL = 7_200_000_000  # 2 h in µs
+_J3_TOL = 7_200_000_000  # 2 h in µs
 
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
 
-        from .operators.asof import asof_join
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events").select(
-            "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "event_type", "value"
-        )
-        left = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "event_id", "ts_us"
-        )
-        right = ev.filter(F.col("event_type") == "view").select(
-            "user_id", "ts_us", "event_id", "value"
-        )
-        out = asof_join(
-            left,
-            right,
-            by="user_id",
-            ts="ts_us",
-            right_cols={"event_id": "view_event_id", "value": "view_value"},
-            tolerance_us=TOL,
-            left_ts_alias="purchase_ts_us",
-            right_ts_alias="view_ts_us",
-            right_tiebreak="event_id",
-        )
-        return out.withColumn("lag_us", out["purchase_ts_us"] - out["view_ts_us"])
-
-    return run, f"""
+@_query("j3_asof_align", f"""
 WITH v AS (
   SELECT user_id, {{EPOCH_US}}(ts) AS ts_us, event_id, value,
          ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1911,65 +1675,50 @@ WITH v AS (
   FROM u
 )
 SELECT c.user_id, c.event_id, c.ts_us AS purchase_ts_us,
-       CASE WHEN c.ts_us - v.ts_us <= {TOL} THEN v.event_id END AS view_event_id,
-       CASE WHEN c.ts_us - v.ts_us <= {TOL} THEN v.value END AS view_value,
-       CASE WHEN c.ts_us - v.ts_us <= {TOL} THEN v.ts_us END AS view_ts_us,
-       CASE WHEN c.ts_us - v.ts_us <= {TOL} THEN c.ts_us - v.ts_us END AS lag_us
+       CASE WHEN c.ts_us - v.ts_us <= {_J3_TOL} THEN v.event_id END AS view_event_id,
+       CASE WHEN c.ts_us - v.ts_us <= {_J3_TOL} THEN v.value END AS view_value,
+       CASE WHEN c.ts_us - v.ts_us <= {_J3_TOL} THEN v.ts_us END AS view_ts_us,
+       CASE WHEN c.ts_us - v.ts_us <= {_J3_TOL} THEN c.ts_us - v.ts_us END AS lag_us
 FROM c LEFT JOIN v ON v.user_id = c.user_id AND v.v_idx = c.vcnt
 WHERE c.side = 1
-"""
+""")
+def _j3_asof_align(spark, sf_dir):
+    """J3+ — backward as-of join (align purchases to the most recent view
+    per user, 2 h tolerance). The engine runs the union-marker
+    single-window plan (operators/asof.py); the oracle replays the same
+    semantics with the portable cumulative-count idiom (the matching view
+    is the vcnt-th view), so IGNORE-NULLS dialect drift never enters."""
+    ev = spark.table("events").select(
+        "user_id", "event_id", F.unix_micros("ts").alias("ts_us"), "event_type", "value"
+    )
+    left = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "event_id", "ts_us"
+    )
+    right = ev.filter(F.col("event_type") == "view").select(
+        "user_id", "ts_us", "event_id", "value"
+    )
+    out = asof.asof_join(
+        left,
+        right,
+        by="user_id",
+        ts="ts_us",
+        right_cols={"event_id": "view_event_id", "value": "view_value"},
+        tolerance_us=_J3_TOL,
+        left_ts_alias="purchase_ts_us",
+        right_ts_alias="view_ts_us",
+        right_tiebreak="event_id",
+    )
+    return out.withColumn("lag_us", out["purchase_ts_us"] - out["view_ts_us"])
 
 
-def _render_oracle(template: str) -> str:
-    return _render(template, _DUCK_DIALECT)
+_J4_WIDTH = 21_600_000_000  # 6 h
 
 
-_j3 = _q_j3_asof_align()
-_REGISTRY["j3_asof_align"] = (_j3[0], _render_oracle(_j3[1]))
-
-
-def _q_j4_interval_join():
-    """J4+ — grid-bucketed range join (operators/interval.py): every
-    event landing in one of the first-20 signup-anchored 6 h windows,
-    aggregated per window. The oracle replays the containment predicate
-    as a plain inequality join — same half-open [start, end) semantics,
-    different physical plan."""
-    WIDTH = 21_600_000_000  # 6 h
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.interval import interval_join
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events").select(
-            "user_id", "event_id", "value", F.unix_micros("ts").alias("ts_us")
-        )
-        iv = (
-            ev.filter(spark.table("events")["event_type"] == "signup")
-            .orderBy("ts_us", "event_id")
-            .limit(20)
-            .select(
-                F.col("event_id").alias("interval_id"),
-                F.col("ts_us").alias("start_us"),
-                (F.col("ts_us") + WIDTH).alias("end_us"),
-            )
-        )
-        pts = ev.select("user_id", "value", "ts_us")
-        j = interval_join(pts, iv, "ts_us", "start_us", "end_us", grid_us=WIDTH)
-        return j.groupBy("interval_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 4)
-            .cast("double")
-            .alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-
-    return run, f"""
+@_query("j4_interval_join", f"""
 WITH iv AS (
   SELECT event_id AS interval_id,
          epoch_us(ts) AS start_us,
-         epoch_us(ts) + {WIDTH} AS end_us
+         epoch_us(ts) + {_J4_WIDTH} AS end_us
   FROM events WHERE event_type = 'signup'
   ORDER BY ts, event_id LIMIT 20
 )
@@ -1980,34 +1729,41 @@ SELECT iv.interval_id,
 FROM iv JOIN events e
   ON epoch_us(e.ts) >= iv.start_us AND epoch_us(e.ts) < iv.end_us
 GROUP BY iv.interval_id
-""".replace("{WIDTH}", str(WIDTH))
-
-
-_REGISTRY["j4_interval_join"] = _q_j4_interval_join()
-
-
-def _q_w7_resample_linear():
-    """W7+ — linear-interpolation resampling onto a 6 h grid per user
-    (operators/resample.py, single-window-pass plan). The oracle resolves
-    the same brackets with the portable cumulative-count idiom and
-    identical arithmetic/rounding, so values match bit-for-bit."""
-    STEP = 21_600_000_000  # 6 h
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.resample import resample_linear
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events").select(
-            "user_id", "event_id", "value", F.unix_micros("ts").alias("ts_us")
+""")
+def _j4_interval_join(spark, sf_dir):
+    """J4+ — grid-bucketed range join (operators/interval.py): every
+    event landing in one of the first-20 signup-anchored 6 h windows,
+    aggregated per window. The oracle replays the containment predicate
+    as a plain inequality join — same half-open [start, end) semantics,
+    different physical plan."""
+    ev = spark.table("events").select(
+        "user_id", "event_id", "value", F.unix_micros("ts").alias("ts_us")
+    )
+    iv = (
+        ev.filter(spark.table("events")["event_type"] == "signup")
+        .orderBy("ts_us", "event_id")
+        .limit(20)
+        .select(
+            F.col("event_id").alias("interval_id"),
+            F.col("ts_us").alias("start_us"),
+            (F.col("ts_us") + _J4_WIDTH).alias("end_us"),
         )
-        return resample_linear(
-            ev, by="user_id", ts_col="ts_us", val_col="value",
-            step_us=STEP, tiebreak="event_id",
-        )
+    )
+    pts = ev.select("user_id", "value", "ts_us")
+    j = interval.interval_join(pts, iv, "ts_us", "start_us", "end_us", grid_us=_J4_WIDTH)
+    return j.groupBy("interval_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum(F.col("value").cast("decimal(18,4)")), 4)
+        .cast("double")
+        .alias("sum_value"),
+        F.countDistinct("user_id").alias("n_users"),
+    )
 
-    return run, f"""
+
+_W7_STEP = 21_600_000_000  # 6 h
+
+
+@_query("w7_resample_linear", f"""
 WITH e AS (
   SELECT user_id, epoch_us(ts) AS ts_us, value,
          ROW_NUMBER() OVER (PARTITION BY user_id
@@ -2017,7 +1773,7 @@ WITH e AS (
   SELECT user_id, MIN(ts_us) AS mn, MAX(ts_us) AS mx FROM e GROUP BY user_id
 ), grid AS (
   SELECT user_id,
-         unnest(generate_series((mn + {STEP} - 1) // {STEP} * {STEP}, mx, {STEP})) AS gts
+         unnest(generate_series((mn + {_W7_STEP} - 1) // {_W7_STEP} * {_W7_STEP}, mx, {_W7_STEP})) AS gts
   FROM ext
 ), u AS (
   SELECT user_id, ts_us AS ts, 0 AS side FROM e
@@ -2041,50 +1797,29 @@ FROM c
 JOIN e p ON p.user_id = c.user_id AND p.idx = c.prev_idx
 LEFT JOIN e n ON n.user_id = c.user_id AND n.idx = c.prev_idx + 1
 WHERE c.side = 1
-""".replace("{STEP}", str(STEP))
-
-
-_REGISTRY["w7_resample_linear"] = _q_w7_resample_linear()
-
-
-def _q_dedup_components():
-    """Dedup cluster formation — connected components over the MinHash-LSH
-    candidate pairs (operators/dedup.py duplicate_components, hash-min
-    label propagation). The oracle computes the same components with a
-    recursive transitive-closure CTE over identically-derived pairs, so
-    cluster ids (min reachable doc_id) and sizes match exactly."""
-
-    def run(spark, sf_dir):
-        from .operators.dedup import duplicate_components, lsh_candidate_pairs
-
-        load_views(spark, sf_dir)
-        pairs = lsh_candidate_pairs(
-            spark.table("documents"),
-            n_hashes=16,
-            n_bands=4,
-            max_bucket_size=None,
-            hash_fn="md5",  # DuckDB-replayable family for the oracle
-        )
-        return duplicate_components(pairs)
-
-    mins = ",\n         ".join(
-        f"MIN(md5('{k}' || ':' || shingle)) AS h{k:02d}" for k in range(16)
+""")
+def _w7_resample_linear(spark, sf_dir):
+    """W7+ — linear-interpolation resampling onto a 6 h grid per user
+    (operators/resample.py, single-window-pass plan). The oracle resolves
+    the same brackets with the portable cumulative-count idiom and
+    identical arithmetic/rounding, so values match bit-for-bit."""
+    ev = spark.table("events").select(
+        "user_id", "event_id", "value", F.unix_micros("ts").alias("ts_us")
     )
-    band_selects = []
-    for bb in range(4):
-        cols = " || '|' || ".join(f"h{bb * 4 + i:02d}" for i in range(4))
-        band_selects.append(
-            f"SELECT doc_id, {bb} AS band_no, md5({cols}) AS band_hash FROM sig"
-        )
-    bands = " UNION ALL ".join(band_selects)
-    return run, f"""
+    return resample.resample_linear(
+        ev, by="user_id", ts_col="ts_us", val_col="value",
+        step_us=_W7_STEP, tiebreak="event_id",
+    )
+
+
+@_query("dedup_components", f"""
 WITH RECURSIVE {_DUCK_SHINGLES_CTE},
 sig AS (
   SELECT doc_id,
-         {mins}
+         {_DUCK_MINHASH_MINS}
   FROM sh GROUP BY doc_id
 ),
-bands AS ({bands}),
+bands AS ({_DUCK_MINHASH_BANDS}),
 prs AS (
   SELECT a.doc_id AS u, b.doc_id AS v
   FROM bands a JOIN bands b USING (band_no, band_hash)
@@ -2101,27 +1836,24 @@ comp AS (SELECT u, MIN(lbl) AS comp_id FROM reach GROUP BY u),
 sz AS (SELECT comp_id, COUNT(*) AS comp_size FROM comp GROUP BY comp_id)
 SELECT comp.u AS doc_id, comp.comp_id, sz.comp_size
 FROM comp JOIN sz USING (comp_id)
-"""
+""")
+def _dedup_components(spark, sf_dir):
+    """Dedup cluster formation — connected components over the MinHash-LSH
+    candidate pairs (operators/dedup.py duplicate_components, hash-min
+    label propagation). The oracle computes the same components with a
+    recursive transitive-closure CTE over identically-derived pairs, so
+    cluster ids (min reachable doc_id) and sizes match exactly."""
+    pairs = dedup.lsh_candidate_pairs(
+        spark.table("documents"),
+        n_hashes=16,
+        n_bands=4,
+        max_bucket_size=None,
+        hash_fn="md5",  # DuckDB-replayable family for the oracle
+    )
+    return dedup.duplicate_components(pairs)
 
 
-_REGISTRY["dedup_components"] = _q_dedup_components()
-
-
-def _q_l2_stratified_sample():
-    """L2+ — deterministic exact-quota stratified sample (operators/
-    sampling.py): ceil(n/10) docs per language, picked by smallest
-    md5(doc_id). Hash-rank sampling is partition-invariant, unlike
-    df.sample(); the oracle replays the same rank and integer quota."""
-
-    def run(spark, sf_dir):
-        from .operators.sampling import stratified_sample
-
-        load_views(spark, sf_dir)
-        return stratified_sample(
-            spark.table("documents"), strata_col="lang", id_col="doc_id", num=1, den=10
-        )
-
-    return run, """
+@_query("l2_stratified_sample", """
 WITH s AS (
   SELECT lang, doc_id,
          ROW_NUMBER() OVER (PARTITION BY lang
@@ -2130,68 +1862,33 @@ WITH s AS (
   FROM documents
 )
 SELECT lang, doc_id, sample_rank FROM s WHERE sample_rank <= (n + 9) // 10
-"""
+""")
+def _l2_stratified_sample(spark, sf_dir):
+    """L2+ — deterministic exact-quota stratified sample (operators/
+    sampling.py): ceil(n/10) docs per language, picked by smallest
+    md5(doc_id). Hash-rank sampling is partition-invariant, unlike
+    df.sample(); the oracle replays the same rank and integer quota."""
+    return sampling.stratified_sample(
+        spark.table("documents"), strata_col="lang", id_col="doc_id", num=1, den=10
+    )
 
 
-_REGISTRY["l2_stratified_sample"] = _q_l2_stratified_sample()
-
-
-def _q_l3_hash_sample():
+@_query("l3_hash_sample", """
+SELECT doc_id, lang, source, n_chars FROM documents
+WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '20000000'
+""")
+def _l3_hash_sample(spark, sf_dir):
     """L3+ — stateless content-hash Bernoulli sample at rate 1/8
     (operators/sampling.py hash_sample): a pure pushed-down filter, no
     shuffle, membership stable under corpus growth. 1/8 divides the
     32-bit space exactly, so the oracle is a lexicographic hex-prefix
     compare (fixed-width lowercase hex orders like the integer)."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.sampling import hash_sample
-
-        load_views(spark, sf_dir)
-        return hash_sample(
-            spark.table("documents"), id_col="doc_id", num=1, den=8
-        ).select("doc_id", "lang", "source", "n_chars")
-
-    return run, """
-SELECT doc_id, lang, source, n_chars FROM documents
-WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '20000000'
-"""
+    return sampling.hash_sample(
+        spark.table("documents"), id_col="doc_id", num=1, den=8
+    ).select("doc_id", "lang", "source", "n_chars")
 
 
-_REGISTRY["l3_hash_sample"] = _q_l3_hash_sample()
-
-
-def _q_w8_sliding_windows():
-    """W8+ — sliding (hopping) window aggregates, 2 h windows every 1 h:
-    Spark's native F.window(slideDuration=...) vs an oracle that derives
-    each row's two covering epoch-aligned window starts arithmetically.
-    Covers the overlap semantics tumbling (w5) can't express."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events")
-        win = F.window(F.col("ts"), "2 hours", "1 hour")
-        return (
-            ev.groupBy(win.alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum(F.col("value").cast("decimal(18,4)")), 4)
-                .cast("double")
-                .alias("sum_value"),
-            )
-            .select(
-                F.unix_micros("w.start").alias("win_start_us"),
-                F.unix_micros("w.end").alias("win_end_us"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            )
-        )
-
-    return run, """
+@_query("w8_sliding_windows", """
 WITH e AS (
   SELECT event_type, value,
          epoch_us(ts) // 3600000000 * 3600000000 AS hr_us
@@ -2204,24 +1901,33 @@ SELECT win_start_us, win_start_us + 7200000000 AS win_end_us, event_type,
        COUNT(*) AS n_events,
        CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))), 4) AS DOUBLE) AS sum_value
 FROM x GROUP BY win_start_us, event_type
-"""
+""")
+def _w8_sliding_windows(spark, sf_dir):
+    """W8+ — sliding (hopping) window aggregates, 2 h windows every 1 h:
+    Spark's native F.window(slideDuration=...) vs an oracle that derives
+    each row's two covering epoch-aligned window starts arithmetically.
+    Covers the overlap semantics tumbling (w5) can't express."""
+    ev = spark.table("events")
+    win = F.window(F.col("ts"), "2 hours", "1 hour")
+    return (
+        ev.groupBy(win.alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 4)
+            .cast("double")
+            .alias("sum_value"),
+        )
+        .select(
+            F.unix_micros("w.start").alias("win_start_us"),
+            F.unix_micros("w.end").alias("win_end_us"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
 
 
-_REGISTRY["w8_sliding_windows"] = _q_w8_sliding_windows()
-
-
-def _q_text_ngram_topk():
-    """Text+ — corpus bigram frequency top-20 per source (functions/
-    text.py ngram_freq_topk). Non-distinct occurrence counts (frequency,
-    not shingle membership); deterministic (count desc, gram asc) rank."""
-
-    def run(spark, sf_dir):
-        from .functions.text import ngram_freq_topk
-
-        load_views(spark, sf_dir)
-        return ngram_freq_topk(spark.table("documents"), n=2, k=20, by="source")
-
-    return run, """
+@_query("text_ngram_topk", """
 WITH w AS (
   SELECT source, string_split(text, ' ') AS w FROM documents
 ), g AS (
@@ -2236,40 +1942,18 @@ SELECT source, gram, n_occ, rank FROM (
          ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_occ DESC, gram) AS rank
   FROM c
 ) WHERE rank <= 20
-"""
+""")
+def _text_ngram_topk(spark, sf_dir):
+    """Text+ — corpus bigram frequency top-20 per source (functions/
+    text.py ngram_freq_topk). Non-distinct occurrence counts (frequency,
+    not shingle membership); deterministic (count desc, gram asc) rank."""
+    return text.ngram_freq_topk(spark.table("documents"), n=2, k=20, by="source")
 
 
-_REGISTRY["text_ngram_topk"] = _q_text_ngram_topk()
+_HH_K, _HH_CAP = 5, 30
 
 
-def _q_agg_heavy_hitters():
-    """Agg+ — certified-exact heavy hitters (operators/heavy_hitters.py,
-    Misra-Gries candidates -> exact recount -> certify-or-fallback). The
-    oracle computes the true top-k AND the same certificate arithmetic
-    from exact counts; the operator's output equals it whether the
-    certificate held (sketch path) or not (exact fallback) — that
-    equivalence is the contract."""
-    K, CAP = 5, 30
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.heavy_hitters import heavy_hitters
-
-        load_views(spark, sf_dir)
-        # read the scan directly, NOT the (possibly spread) documents
-        # view: Misra-Gries' candidate pass is itself a map-side partial
-        # aggregation, so a round-robin pre-exchange of the input buys
-        # nothing at any scale and only adds a shuffle + stage (guide
-        # §2.3 "aggregate before you shuffle" — here: don't shuffle
-        # before an aggregation that never needed it; measured +0.6 s
-        # from the spread at sf0.1). Order-insensitive by construction.
-        words = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            F.explode(F.split(F.col("text"), " ")).alias("word")
-        )
-        return heavy_hitters(words, "word", k=K, capacity=CAP)
-
-    return run, f"""
+@_query("agg_heavy_hitters", f"""
 WITH w AS (
   SELECT unnest(string_split(text, ' ')) AS item FROM documents
 ), c AS (
@@ -2280,40 +1964,31 @@ WITH w AS (
   SELECT CAST(SUM(n_occ) AS BIGINT) AS n_total, COUNT(*) AS vocab FROM c
 )
 SELECT t.item, t.n_occ, t.rank,
-       ((SELECT MIN(n_occ) FROM t WHERE rank <= {K}) > s.n_total / {CAP + 1}.0
-        OR s.vocab <= {CAP}) AS certified
-FROM t, s WHERE t.rank <= {K}
-"""
+       ((SELECT MIN(n_occ) FROM t WHERE rank <= {_HH_K}) > s.n_total / {_HH_CAP + 1}.0
+        OR s.vocab <= {_HH_CAP}) AS certified
+FROM t, s WHERE t.rank <= {_HH_K}
+""")
+def _agg_heavy_hitters(spark, sf_dir):
+    """Agg+ — certified-exact heavy hitters (operators/heavy_hitters.py,
+    Misra-Gries candidates -> exact recount -> certify-or-fallback). The
+    oracle computes the true top-k AND the same certificate arithmetic
+    from exact counts; the operator's output equals it whether the
+    certificate held (sketch path) or not (exact fallback) — that
+    equivalence is the contract."""
+    # read the scan directly, NOT the (possibly spread) documents
+    # view: Misra-Gries' candidate pass is itself a map-side partial
+    # aggregation, so a round-robin pre-exchange of the input buys
+    # nothing at any scale and only adds a shuffle + stage (guide
+    # §2.3 "aggregate before you shuffle" — here: don't shuffle
+    # before an aggregation that never needed it; measured +0.6 s
+    # from the spread at sf0.1). Order-insensitive by construction.
+    words = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.explode(F.split(F.col("text"), " ")).alias("word")
+    )
+    return heavy_hitters.heavy_hitters(words, "word", k=_HH_K, capacity=_HH_CAP)
 
 
-_REGISTRY["agg_heavy_hitters"] = _q_agg_heavy_hitters()
-
-
-def _q_retention_policy():
-    """Retention+ — the keep/drop decision function the destructive
-    partition-drop path executes (plans/retention.py). Inventory =
-    (tier, day) grid derived from events; policy raw=7d, t1m=21d
-    relative to the newest day. The oracle replays the half-open cutoff
-    arithmetic exactly."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .plans.retention import RetentionPolicy, retention_decisions
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events")
-        days = ev.select(
-            F.expr("unix_micros(ts) div 86400000000").alias("day")
-        ).distinct()
-        tiers = spark.createDataFrame([("raw",), ("t1m",)], "tier string")
-        parts = days.crossJoin(tiers)
-        now_day = days.agg(F.max("day")).collect()[0][0]
-        return retention_decisions(
-            parts, RetentionPolicy({"raw": 7, "t1m": 21}), int(now_day)
-        )
-
-    return run, """
+@_query("retention_policy", """
 WITH d AS (
   SELECT DISTINCT epoch_us(ts) // 86400000000 AS day FROM events
 ), t AS (
@@ -2323,31 +1998,29 @@ WITH d AS (
 )
 SELECT t.tier, d.day, (d.day > m.now_day - t.keep) AS kept
 FROM d, t, m
-"""
+""")
+def _retention_policy(spark, sf_dir):
+    """Retention+ — the keep/drop decision function the destructive
+    partition-drop path executes (plans/retention.py). Inventory =
+    (tier, day) grid derived from events; policy raw=7d, t1m=21d
+    relative to the newest day. The oracle replays the half-open cutoff
+    arithmetic exactly."""
+    ev = spark.table("events")
+    days = ev.select(
+        F.expr("unix_micros(ts) div 86400000000").alias("day")
+    ).distinct()
+    tiers = spark.createDataFrame([("raw",), ("t1m",)], "tier string")
+    parts = days.crossJoin(tiers)
+    now_day = days.agg(F.max("day")).collect()[0][0]
+    return retention.retention_decisions(
+        parts, retention.RetentionPolicy({"raw": 7, "t1m": 21}), int(now_day)
+    )
 
 
-_REGISTRY["retention_policy"] = _q_retention_policy()
+_DECONTAM_N = 5
 
 
-def _q_decontaminate():
-    """Decontam+ — benchmark n-gram overlap (operators/decontam.py):
-    docs with doc_id % 50 == 0 play the benchmark set, the rest are the
-    corpus; 5-gram overlap, broadcast benchmark side. The oracle replays
-    the distinct-shingle sets and the hit join in SQL."""
-    N = 5
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.decontam import contamination_report
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        bench = docs.filter(F.col("doc_id") % 50 == 0)
-        corpus = docs.filter(F.col("doc_id") % 50 != 0)
-        return contamination_report(corpus, bench, n=N)
-
-    return run, """
+@_query("decontaminate", """
 WITH words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
 ), sh AS (
@@ -2368,16 +2041,22 @@ SELECT s.doc_id, s.n_grams,
        ROUND(COALESCE(h.n_hits, 0) / s.n_grams, 6) AS contamination_ratio,
        (COALESCE(h.n_hits, 0) >= 1) AS contaminated
 FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id
-"""
-
-
-_REGISTRY["decontaminate"] = _q_decontaminate()
+""")
+def _decontaminate(spark, sf_dir):
+    """Decontam+ — benchmark n-gram overlap (operators/decontam.py):
+    docs with doc_id % 50 == 0 play the benchmark set, the rest are the
+    corpus; 5-gram overlap, broadcast benchmark side. The oracle replays
+    the distinct-shingle sets and the hit join in SQL."""
+    docs = spark.table("documents")
+    bench = docs.filter(F.col("doc_id") % 50 == 0)
+    corpus = docs.filter(F.col("doc_id") % 50 != 0)
+    return decontam.contamination_report(corpus, bench, n=_DECONTAM_N)
 
 
 # W9+ — min/max downsampling (the M4 rendering reduction: per time
 # bucket keep the extreme points, deterministic tie-break by ts then
 # event id). One shared SQL text runs on both engines.
-_W9_MINMAX = """
+_query("w9_minmax_downsample", sql="""
 WITH e AS (
   SELECT user_id, event_id, value, {EPOCH_US}(ts) AS ts_us,
          {EPOCH_US}(ts) {IDIV} 21600000000 AS bucket
@@ -2399,51 +2078,10 @@ SELECT a.user_id, a.bucket,
 FROM rmin a JOIN rmax b
   ON a.user_id = b.user_id AND a.bucket = b.bucket
 WHERE a.rn = 1 AND b.rn = 1
-"""
-
-_REGISTRY["w9_minmax_downsample"] = _shared(_W9_MINMAX)
+""")
 
 
-def _q_w10_incremental_append():
-    """W10+ — incremental tier maintenance (operators/incremental.py):
-    ingest the first half of every doc's token stream, then APPEND the
-    second half through append_tokens_to_tiers (boundary-window merge of
-    the stored partial aggregates). The oracle computes the one-shot
-    windows over the FULL stream — end-state equality certifies that the
-    merge is lossless, including the phase-misaligned boundary window."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.incremental import append_tokens_to_tiers
-        from .operators.rollup import tier1_from_tokens, tier_points
-
-        seq = _char_tokens_df(spark, sf_dir)
-        first = seq.select(
-            "doc_id",
-            F.expr("slice(tokens, 1, n_tok div 2)").alias("tokens"),
-            (F.expr("n_tok div 2")).cast("int").alias("n_tok"),
-            "source",
-        )
-        delta = seq.select(
-            "doc_id",
-            F.expr("slice(tokens, n_tok div 2 + 1, n_tok - n_tok div 2)").alias("tokens"),
-            "source",
-            F.expr("n_tok div 2").cast("long").alias("offset"),
-        )
-        existing = tier1_from_tokens(first, window=16)
-        merged = append_tokens_to_tiers(existing, delta, window=16)
-        return tier_points(merged).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            "win_no",
-            "min_v",
-            "max_v",
-            "sum_v",
-            "cnt",
-            "mean_v",
-        )
-
-    return run, """
+@_query("w10_incremental_append", """
 WITH chars AS (
   SELECT doc_id, i, ascii(substr(text, CAST(i AS INTEGER), 1)) AS v
   FROM documents, (SELECT unnest(range(1, 100001)) AS i) g
@@ -2455,65 +2093,82 @@ SELECT doc_id,
        CAST(SUM(v) AS BIGINT) AS sum_v, COUNT(*) AS cnt,
        ROUND(CAST(SUM(v) AS DOUBLE) / COUNT(*), 6) AS mean_v
 FROM chars GROUP BY doc_id, (i - 1) // 16
-"""
+""")
+def _w10_incremental_append(spark, sf_dir):
+    """W10+ — incremental tier maintenance (operators/incremental.py):
+    ingest the first half of every doc's token stream, then APPEND the
+    second half through append_tokens_to_tiers (boundary-window merge of
+    the stored partial aggregates). The oracle computes the one-shot
+    windows over the FULL stream — end-state equality certifies that the
+    merge is lossless, including the phase-misaligned boundary window."""
+    seq = _char_tokens_df(spark)
+    first = seq.select(
+        "doc_id",
+        F.expr("slice(tokens, 1, n_tok div 2)").alias("tokens"),
+        (F.expr("n_tok div 2")).cast("int").alias("n_tok"),
+        "source",
+    )
+    delta = seq.select(
+        "doc_id",
+        F.expr("slice(tokens, n_tok div 2 + 1, n_tok - n_tok div 2)").alias("tokens"),
+        "source",
+        F.expr("n_tok div 2").cast("long").alias("offset"),
+    )
+    existing = rollup.tier1_from_tokens(first, window=16)
+    merged = incremental.append_tokens_to_tiers(existing, delta, window=16)
+    return rollup.tier_points(merged).select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        "win_no",
+        "min_v",
+        "max_v",
+        "sum_v",
+        "cnt",
+        "mean_v",
+    )
 
 
-_REGISTRY["w10_incremental_append"] = _q_w10_incremental_append()
+_PII_EMAIL, _PII_PHONE, _PII_IP = (pattern for pattern, _tag in text.PII_PATTERNS)
 
 
-def _q_text_pii_scrub():
-    """Text+ — PII redaction (functions/text.py scrub_pii / pii_hits).
-    The synthetic corpus has no organic PII, so each doc gets a
-    deterministic doc_id-derived email, phone and IP appended BEFORE
-    scrubbing — the oracle injects identically and replays the same
-    portable regex chain (DuckDB needs the explicit 'g' flag; Spark is
-    global by default). Output is the scrubbed-text md5 + span count."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.text import pii_hits, scrub_pii
-
-        load_views(spark, sf_dir)
-        t = F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.com or 555-123-4567 at 10.0.0."),
-            (F.col("doc_id") % 255).cast("string"),
-        )
-        return spark.table("documents").select(
-            "doc_id",
-            F.md5(scrub_pii(t)).alias("scrub_md5"),
-            pii_hits(t).cast("long").alias("n_pii"),
-        )
-
-    email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
-    phone = "[+]?1?[-. ]?[(]?[0-9]{3}[)]?[-. ][0-9]{3}[-. ][0-9]{4}"
-    ip = "[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}"
-    return run, f"""
+@_query("text_pii_scrub", f"""
 WITH t AS (
   SELECT doc_id,
          text || ' contact user' || doc_id ||
          '@mail.example.com or 555-123-4567 at 10.0.0.' || (doc_id % 255) AS t
   FROM documents
 ), s1 AS (
-  SELECT doc_id, t, regexp_replace(t, '{email}', '<EMAIL>', 'g') AS t1 FROM t
+  SELECT doc_id, t, regexp_replace(t, '{_PII_EMAIL}', '<EMAIL>', 'g') AS t1 FROM t
 ), s2 AS (
-  SELECT doc_id, t, t1, regexp_replace(t1, '{phone}', '<PHONE>', 'g') AS t2 FROM s1
+  SELECT doc_id, t, t1, regexp_replace(t1, '{_PII_PHONE}', '<PHONE>', 'g') AS t2 FROM s1
 )
 SELECT doc_id,
-       md5(regexp_replace(t2, '{ip}', '<IP>', 'g')) AS scrub_md5,
+       md5(regexp_replace(t2, '{_PII_IP}', '<IP>', 'g')) AS scrub_md5,
        -- sequential counting, matching scrub_pii's actual substitutions:
        -- each pattern counts against the PREVIOUS pattern's output
-       CAST(len(regexp_extract_all(t, '{email}'))
-          + len(regexp_extract_all(t1, '{phone}'))
-          + len(regexp_extract_all(t2, '{ip}')) AS BIGINT) AS n_pii
+       CAST(len(regexp_extract_all(t, '{_PII_EMAIL}'))
+          + len(regexp_extract_all(t1, '{_PII_PHONE}'))
+          + len(regexp_extract_all(t2, '{_PII_IP}')) AS BIGINT) AS n_pii
 FROM s2
-"""
-
-
-_REGISTRY["text_pii_scrub"] = _q_text_pii_scrub()
+""")
+def _text_pii_scrub(spark, sf_dir):
+    """Text+ — PII redaction (functions/text.py scrub_pii / pii_hits).
+    The synthetic corpus has no organic PII, so each doc gets a
+    deterministic doc_id-derived email, phone and IP appended BEFORE
+    scrubbing — the oracle injects identically and replays the same
+    portable regex chain (DuckDB needs the explicit 'g' flag; Spark is
+    global by default). Output is the scrubbed-text md5 + span count."""
+    t = F.concat(
+        F.col("text"),
+        F.lit(" contact user"),
+        F.col("doc_id").cast("string"),
+        F.lit("@mail.example.com or 555-123-4567 at 10.0.0."),
+        (F.col("doc_id") % 255).cast("string"),
+    )
+    return spark.table("documents").select(
+        "doc_id",
+        F.md5(text.scrub_pii(t)).alias("scrub_md5"),
+        text.pii_hits(t).cast("long").alias("n_pii"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2522,7 +2177,7 @@ _REGISTRY["text_pii_scrub"] = _q_text_pii_scrub()
 # templates — one text, both engines.
 # --------------------------------------------------------------------------
 
-_W11_RANKS = """
+_query("w11_rank_functions", sql="""
 WITH e AS (
   SELECT user_id, event_id, value, {EPOCH_US}(ts) AS ts_us FROM events
 )
@@ -2534,9 +2189,9 @@ SELECT user_id, event_id,
                           ORDER BY CAST(FLOOR(value) AS INT)) AS dense_val_rank
 FROM e
 WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-"""
+""")
 
-_P17_DATE_PARTS = """
+_query("p17_date_parts", sql="""
 SELECT event_id,
        CAST(EXTRACT(YEAR FROM ts) AS INTEGER) AS y,
        CAST(EXTRACT(MONTH FROM ts) AS INTEGER) AS m,
@@ -2545,9 +2200,9 @@ SELECT event_id,
        CAST({DOW} AS INTEGER) AS dow_sun0,
        CAST(EXTRACT(QUARTER FROM ts) AS INTEGER) AS q
 FROM events
-"""
+""")
 
-_J5_FULL_OUTER = """
+_query("j5_full_outer", sql="""
 WITH buyers AS (
   SELECT user_id, COUNT(*) AS n_buy FROM events
   WHERE event_type = 'purchase' GROUP BY user_id
@@ -2559,17 +2214,20 @@ SELECT COALESCE(b.user_id, e.user_id) AS user_id,
        COALESCE(b.n_buy, 0) AS n_buy,
        COALESCE(e.n_err, 0) AS n_err
 FROM buyers b FULL OUTER JOIN err e ON b.user_id = e.user_id
-"""
-
-_SPARK_DIALECT["{DOW}"] = "(extract(DAYOFWEEK FROM ts) - 1)"  # 1-7 Sun-start -> 0-6
-_DUCK_DIALECT["{DOW}"] = "extract(dow FROM ts)"               # already 0-6 Sun-start
-
-_REGISTRY["w11_rank_functions"] = _shared(_W11_RANKS)
-_REGISTRY["p17_date_parts"] = _shared(_P17_DATE_PARTS)
-_REGISTRY["j5_full_outer"] = _shared(_J5_FULL_OUTER)
+""")
 
 
-def _q_tok_subsequence_search():
+_SUBSEQ_PAT = "scan"
+
+
+@_query("tok_subsequence_search", f"""
+SELECT doc_id,
+       CAST((length(text) - length(replace(text, '{_SUBSEQ_PAT}', ''))) // {len(_SUBSEQ_PAT)} AS BIGINT) AS n_occ,
+       CAST(strpos(text, '{_SUBSEQ_PAT}') AS BIGINT) AS first_pos
+FROM documents
+WHERE strpos(text, '{_SUBSEQ_PAT}') > 0
+""")
+def _tok_subsequence_search(spark, sf_dir):
     """Tokens+ — contiguous token-subsequence search over the
     ``array<int>`` token streams (the token-level analog of
     ``decontaminate``: find exact token-pattern occurrences, e.g. a
@@ -2580,82 +2238,44 @@ def _q_tok_subsequence_search():
     codes, so occurrences equal substring occurrences of 'scan'
     (pattern chosen with no self-overlap, so replace-based counting in
     the oracle equals sliding-window counting in the engine)."""
-    PAT = "scan"
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        seq = _char_tokens_df(spark, sf_dir)
-        k = len(PAT)
-        # r6: the index rides INSIDE the zipped array (slice+zip idiom,
-        # see functions/text.py word_ngram_array). The former
-        # filter(sequence, i -> slice(tokens, i, k) == pat) re-evaluated
-        # the tokens expression — itself transform(split(text)) after
-        # projection collapse — once PER POSITION: O(n^2) per doc,
-        # measured 60 s for this one query at sf0.1. Here tokens is
-        # evaluated k+1 times per ROW and the filter lambda only
-        # compares zipped struct fields. Output-identical: zipped
-        # element i is (tokens[i..i+k-1], i), so the kept "i"s are
-        # exactly the former 1-based match positions.
-        t = F.col("tokens")
-        m = F.size(t) - (k - 1)
-        z = F.arrays_zip(
-            *[F.slice(t, j + 1, m).alias(f"c{j}") for j in range(k)],
-            F.sequence(F.lit(1), m).alias("i"),
+    seq = _char_tokens_df(spark)
+    k = len(_SUBSEQ_PAT)
+    # r6: the index rides INSIDE the zipped array (slice+zip idiom,
+    # see functions/text.py word_ngram_array). The former
+    # filter(sequence, i -> slice(tokens, i, k) == pat) re-evaluated
+    # the tokens expression — itself transform(split(text)) after
+    # projection collapse — once PER POSITION: O(n^2) per doc,
+    # measured 60 s for this one query at sf0.1. Here tokens is
+    # evaluated k+1 times per ROW and the filter lambda only
+    # compares zipped struct fields. Output-identical: zipped
+    # element i is (tokens[i..i+k-1], i), so the kept "i"s are
+    # exactly the former 1-based match positions.
+    t = F.col("tokens")
+    m = F.size(t) - (k - 1)
+    z = F.arrays_zip(
+        *[F.slice(t, j + 1, m).alias(f"c{j}") for j in range(k)],
+        F.sequence(F.lit(1), m).alias("i"),
+    )
+    match = lambda s: functools.reduce(  # noqa: E731
+        lambda a, b: a & b,
+        [s[f"c{j}"] == F.lit(ord(_SUBSEQ_PAT[j])) for j in range(k)],
+    )
+    positions = F.when(
+        m > 0,
+        F.transform(F.filter(z, match), lambda s: s["i"]),
+    ).otherwise(F.array().cast("array<int>"))
+    return (
+        seq.withColumn("_pos", positions)
+        .filter(F.size("_pos") > 0)
+        .select(
+            F.col("doc_id").cast("bigint").alias("doc_id"),
+            F.size("_pos").cast("bigint").alias("n_occ"),
+            F.array_min("_pos").cast("bigint").alias("first_pos"),
         )
-        import functools
-
-        match = lambda s: functools.reduce(  # noqa: E731
-            lambda a, b: a & b,
-            [s[f"c{j}"] == F.lit(ord(PAT[j])) for j in range(k)],
-        )
-        positions = F.when(
-            m > 0,
-            F.transform(F.filter(z, match), lambda s: s["i"]),
-        ).otherwise(F.array().cast("array<int>"))
-        return (
-            seq.withColumn("_pos", positions)
-            .filter(F.size("_pos") > 0)
-            .select(
-                F.col("doc_id").cast("bigint").alias("doc_id"),
-                F.size("_pos").cast("bigint").alias("n_occ"),
-                F.array_min("_pos").cast("bigint").alias("first_pos"),
-            )
-        )
-
-    return run, f"""
-SELECT doc_id,
-       CAST((length(text) - length(replace(text, '{PAT}', ''))) // {len(PAT)} AS BIGINT) AS n_occ,
-       CAST(strpos(text, '{PAT}') AS BIGINT) AS first_pos
-FROM documents
-WHERE strpos(text, '{PAT}') > 0
-"""
+    )
 
 
-_REGISTRY["tok_subsequence_search"] = _q_tok_subsequence_search()
-
-
-def _q_decontaminate_normalized():
-    """Decontam+ — normalized-text contamination (contamination_report
-    with ``normalize=True``): lowercase + punctuation-strip + whitespace
-    collapse applied to BOTH sides before 5-gramming, the standard eval
-    decontamination convention (cosmetic edits can't hide an overlap).
-    The oracle replays the identical regexp chain (DuckDB needs the
-    explicit 'g' flag; Spark replaces globally by default)."""
-    N = 5
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.decontam import contamination_report
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        bench = docs.filter(F.col("doc_id") % 50 == 0)
-        corpus = docs.filter(F.col("doc_id") % 50 != 0)
-        return contamination_report(corpus, bench, n=N, normalize=True)
-
-    return run, """
+@_query("decontaminate_normalized", """
 WITH norm AS (
   SELECT doc_id,
          trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
@@ -2681,13 +2301,22 @@ SELECT s.doc_id, s.n_grams,
        ROUND(COALESCE(h.n_hits, 0) / s.n_grams, 6) AS contamination_ratio,
        (COALESCE(h.n_hits, 0) >= 1) AS contaminated
 FROM sizes s LEFT JOIN hits h ON h.doc_id = s.doc_id
-"""
+""")
+def _decontaminate_normalized(spark, sf_dir):
+    """Decontam+ — normalized-text contamination (contamination_report
+    with ``normalize=True``): lowercase + punctuation-strip + whitespace
+    collapse applied to BOTH sides before 5-gramming, the standard eval
+    decontamination convention (cosmetic edits can't hide an overlap).
+    The oracle replays the identical regexp chain (DuckDB needs the
+    explicit 'g' flag; Spark replaces globally by default)."""
+    docs = spark.table("documents")
+    bench = docs.filter(F.col("doc_id") % 50 == 0)
+    corpus = docs.filter(F.col("doc_id") % 50 != 0)
+    return decontam.contamination_report(corpus, bench, n=_DECONTAM_N, normalize=True)
 
 
-_REGISTRY["decontaminate_normalized"] = _q_decontaminate_normalized()
-
-
-def _q_minhash_lsh64_parity():
+@_query("dedup_minhash_lsh64_parity", None)
+def _dedup_minhash_lsh64_parity(spark, sf_dir):
     """Dedup+ — certify the xxh64 production MinHash family against the
     md5 oracle family ON THE SF CORPUS: both bandings' candidate-pair
     sets are full-outer joined and reduced to one summary row
@@ -2700,44 +2329,32 @@ def _q_minhash_lsh64_parity():
     property of the DATA — docs sharing a band must share all r minhash
     values, i.e. be near-identical in shingle space — not a coincidence
     of seeds; pytest pins it on adversarial fixtures too.)"""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.dedup import lsh_candidate_pairs
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        pm = lsh_candidate_pairs(
-            docs, n_hashes=16, n_bands=4, max_bucket_size=None, hash_fn="md5"
-        ).select("doc_a", "doc_b", F.lit(1).alias("in_md5"))
-        px = lsh_candidate_pairs(
-            docs, n_hashes=16, n_bands=4, max_bucket_size=None, hash_fn="xxh64"
-        ).select("doc_a", "doc_b", F.lit(1).alias("in_x64"))
-        j = pm.join(px, ["doc_a", "doc_b"], "full_outer")
-        return j.agg(
-            F.sum(F.coalesce("in_md5", F.lit(0))).alias("n_pairs_md5"),
-            F.sum(F.coalesce("in_x64", F.lit(0))).alias("n_pairs_xxh64"),
-            F.sum(
-                (F.col("in_md5").isNotNull() & F.col("in_x64").isNotNull()).cast("long")
-            ).alias("n_pairs_common"),
-        ).select(
-            "n_pairs_md5",
-            "n_pairs_xxh64",
-            "n_pairs_common",
-            (
-                (F.col("n_pairs_md5") == F.col("n_pairs_common"))
-                & (F.col("n_pairs_xxh64") == F.col("n_pairs_common"))
-            ).alias("families_agree"),
-        )
-
-    return run, None
+    docs = spark.table("documents")
+    pm = dedup.lsh_candidate_pairs(
+        docs, n_hashes=16, n_bands=4, max_bucket_size=None, hash_fn="md5"
+    ).select("doc_a", "doc_b", F.lit(1).alias("in_md5"))
+    px = dedup.lsh_candidate_pairs(
+        docs, n_hashes=16, n_bands=4, max_bucket_size=None, hash_fn="xxh64"
+    ).select("doc_a", "doc_b", F.lit(1).alias("in_x64"))
+    j = pm.join(px, ["doc_a", "doc_b"], "full_outer")
+    return j.agg(
+        F.sum(F.coalesce("in_md5", F.lit(0))).alias("n_pairs_md5"),
+        F.sum(F.coalesce("in_x64", F.lit(0))).alias("n_pairs_xxh64"),
+        F.sum(
+            (F.col("in_md5").isNotNull() & F.col("in_x64").isNotNull()).cast("long")
+        ).alias("n_pairs_common"),
+    ).select(
+        "n_pairs_md5",
+        "n_pairs_xxh64",
+        "n_pairs_common",
+        (
+            (F.col("n_pairs_md5") == F.col("n_pairs_common"))
+            & (F.col("n_pairs_xxh64") == F.col("n_pairs_common"))
+        ).alias("families_agree"),
+    )
 
 
-_REGISTRY["dedup_minhash_lsh64_parity"] = _q_minhash_lsh64_parity()
-
-
-def _irregular_ts_seq(spark, sf_dir):
+def _irregular_ts_seq(spark):
     """input_hint sequences + a deterministic irregular ``ts:array<long>``
     column (epoch-µs): ts[0]=0 and each later sample arrives after
     d(v) = 40000 µs when its token v is divisible by 11 (a GAP — beyond
@@ -2751,10 +2368,7 @@ def _irregular_ts_seq(spark, sf_dir):
     collapse re-inline the construction per reference — the earlier
     in-row F.aggregate prefix sum was quadratic AND re-evaluated ~5x
     interpreted, which put the a2 oracle gate into the 15-minute range."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    seq = _char_tokens_df(spark, sf_dir)
+    seq = _char_tokens_df(spark)
     e = seq.select("doc_id", F.posexplode("tokens").alias("pos", "v"))
     delta = (
         F.when(F.col("pos") == 0, F.lit(0))
@@ -2809,60 +2423,27 @@ chars AS (
 """
 
 
-def _q_w12_irregular_segments():
-    """W12+ — explicit-timestamp sessionization (operators/irregular.py
-    segments_from_ts_arrays): gap threshold 4000 µs = 2×(1/500 Hz), the
-    reference's 2-period rule (reader.py:199); half-open [start, end) =
-    last_ts+1 (reader.py:222-225). The engine segments INSIDE the array
-    (zero-shuffle narrow map); the oracle replays it row-per-sample with
-    lag/running-sum windows."""
-
-    def run(spark, sf_dir):
-        from .operators.irregular import segments_from_ts_arrays
-
-        seq = _irregular_ts_seq(spark, sf_dir)
-        out = segments_from_ts_arrays(seq, ts_col="ts", gap_us=4000)
-        return out.select("doc_id", "seg_id", "seg_start_us", "seg_end_us", "n_samples")
-
-    return run, f"""
+@_query("w12_irregular_segments", f"""
 WITH {_DUCK_IRREGULAR_SEG_CTE}
 SELECT CAST(doc_id AS VARCHAR) AS doc_id, seg_id,
        MIN(ts_us) AS seg_start_us,
        MAX(ts_us) + 1 AS seg_end_us,
        COUNT(*) AS n_samples
 FROM seg GROUP BY doc_id, seg_id
-"""
+""")
+def _w12_irregular_segments(spark, sf_dir):
+    """W12+ — explicit-timestamp sessionization (operators/irregular.py
+    segments_from_ts_arrays): gap threshold 4000 µs = 2×(1/500 Hz), the
+    reference's 2-period rule (reader.py:199); half-open [start, end) =
+    last_ts+1 (reader.py:222-225). The engine segments INSIDE the array
+    (zero-shuffle narrow map); the oracle replays it row-per-sample with
+    lag/running-sum windows."""
+    seq = _irregular_ts_seq(spark)
+    out = irregular.segments_from_ts_arrays(seq, ts_col="ts", gap_us=4000)
+    return out.select("doc_id", "seg_id", "seg_start_us", "seg_end_us", "n_samples")
 
 
-_REGISTRY["w12_irregular_segments"] = _q_w12_irregular_segments()
-
-
-def _q_w13_irregular_block_keys():
-    """W13+ — fixed-size blocks cut WITHIN explicit-ts segments, keyed
-    by each chunk's real µs extents (operators/irregular.py
-    block_bounds_from_ts_arrays; reference writer.py:46-51,90-95 with
-    stored-timestamp bounds). block_size=64 so multi-block segments
-    exist at certification scale."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.irregular import block_bounds_from_ts_arrays
-
-        seq = _irregular_ts_seq(spark, sf_dir)
-        out = block_bounds_from_ts_arrays(seq, ts_col="ts", gap_us=4000, block_size=64)
-        return out.select(
-            "doc_id",
-            "seg_id",
-            "block_no",
-            "start_us",
-            "end_us",
-            "start_pos",
-            F.col("n").cast("bigint").alias("n"),
-            "key",
-        )
-
-    return run, f"""
+@_query("w13_irregular_block_keys", f"""
 WITH {_DUCK_IRREGULAR_SEG_CTE},
 pos AS (
   SELECT doc_id, seg_id, i, ts_us,
@@ -2878,59 +2459,49 @@ SELECT CAST(doc_id AS VARCHAR) AS doc_id, seg_id, block_no,
        start_us, end_us, start_pos, n,
        printf('%s_%012d_%012d.bin', CAST(doc_id AS VARCHAR), start_us, end_us) AS key
 FROM blk
-"""
+""")
+def _w13_irregular_block_keys(spark, sf_dir):
+    """W13+ — fixed-size blocks cut WITHIN explicit-ts segments, keyed
+    by each chunk's real µs extents (operators/irregular.py
+    block_bounds_from_ts_arrays; reference writer.py:46-51,90-95 with
+    stored-timestamp bounds). block_size=64 so multi-block segments
+    exist at certification scale."""
+    seq = _irregular_ts_seq(spark)
+    out = irregular.block_bounds_from_ts_arrays(seq, ts_col="ts", gap_us=4000, block_size=64)
+    return out.select(
+        "doc_id",
+        "seg_id",
+        "block_no",
+        "start_us",
+        "end_us",
+        "start_pos",
+        F.col("n").cast("bigint").alias("n"),
+        "key",
+    )
 
 
-_REGISTRY["w13_irregular_block_keys"] = _q_w13_irregular_block_keys()
-
-
-def _q_a2_irregular_rate():
-    """A2+ for the array model — rate inference from stored timestamp
-    arrays (operators/irregular.py rate_from_ts_arrays): median delta of
-    the first 10 samples, rate = 1e6/median (reference utils.py:6-13),
-    computed zero-shuffle inside the row. The oracle replays with
-    MEDIAN() over the first nine deltas (i = 2..10) per doc."""
-
-    def run(spark, sf_dir):
-        from .operators.irregular import rate_from_ts_arrays
-
-        seq = _irregular_ts_seq(spark, sf_dir)
-        return rate_from_ts_arrays(seq, ts_col="ts", first_k=10)
-
-    return run, f"""
+@_query("a2_irregular_rate", f"""
 WITH {_DUCK_IRREGULAR_SEG_CTE}
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
        CAST(MEDIAN(dlt) AS DOUBLE) AS median_delta_us,
        CAST(ROUND(1e6 / NULLIF(MEDIAN(dlt), 0), 9) AS DOUBLE) AS inferred_rate_hz
 FROM d WHERE i BETWEEN 2 AND 10
 GROUP BY doc_id
-"""
+""")
+def _a2_irregular_rate(spark, sf_dir):
+    """A2+ for the array model — rate inference from stored timestamp
+    arrays (operators/irregular.py rate_from_ts_arrays): median delta of
+    the first 10 samples, rate = 1e6/median (reference utils.py:6-13),
+    computed zero-shuffle inside the row. The oracle replays with
+    MEDIAN() over the first nine deltas (i = 2..10) per doc."""
+    seq = _irregular_ts_seq(spark)
+    return irregular.rate_from_ts_arrays(seq, ts_col="ts", first_k=10)
 
 
-_REGISTRY["a2_irregular_rate"] = _q_a2_irregular_rate()
+_W14_STEP = 100_000
 
 
-def _q_w14_irregular_resample():
-    """W14+ — the explicit-ts stream resampled onto a 0.1 s grid:
-    explode_ts_samples bridges the array model into resample_linear
-    (single-window-pass plan, see w7). Timestamps are strictly
-    increasing within a doc (deltas >= 800 µs), so position is a
-    formality tiebreak. The oracle uses the same cumulative-count
-    bracket idiom as w7 over the replayed timestamp prefix sums."""
-    STEP = 100_000
-
-    def run(spark, sf_dir):
-        from .operators.irregular import explode_ts_samples
-        from .operators.resample import resample_linear
-
-        seq = _irregular_ts_seq(spark, sf_dir)
-        flat = explode_ts_samples(seq)
-        return resample_linear(
-            flat, by="doc_id", ts_col="ts_us", val_col="v",
-            step_us=STEP, tiebreak="pos",
-        )
-
-    return run, f"""
+@_query("w14_irregular_resample", f"""
 WITH {_DUCK_IRREGULAR_SEG_CTE},
 e AS (
   SELECT doc_id, ts_us, v,
@@ -2940,7 +2511,7 @@ e AS (
   SELECT doc_id, MIN(ts_us) AS mn, MAX(ts_us) AS mx FROM e GROUP BY doc_id
 ), grid AS (
   SELECT doc_id,
-         unnest(generate_series((mn + {STEP} - 1) // {STEP} * {STEP}, mx, {STEP})) AS gts
+         unnest(generate_series((mn + {_W14_STEP} - 1) // {_W14_STEP} * {_W14_STEP}, mx, {_W14_STEP})) AS gts
   FROM ext
 ), u AS (
   SELECT doc_id, ts_us AS ts, 0 AS side FROM e
@@ -2964,68 +2535,58 @@ FROM c
 JOIN e p ON p.doc_id = c.doc_id AND p.idx = c.prev_idx
 LEFT JOIN e n ON n.doc_id = c.doc_id AND n.idx = c.prev_idx + 1
 WHERE c.side = 1
-"""
+""")
+def _w14_irregular_resample(spark, sf_dir):
+    """W14+ — the explicit-ts stream resampled onto a 0.1 s grid:
+    explode_ts_samples bridges the array model into resample_linear
+    (single-window-pass plan, see w7). Timestamps are strictly
+    increasing within a doc (deltas >= 800 µs), so position is a
+    formality tiebreak. The oracle uses the same cumulative-count
+    bracket idiom as w7 over the replayed timestamp prefix sums."""
+    seq = _irregular_ts_seq(spark)
+    flat = irregular.explode_ts_samples(seq)
+    return resample.resample_linear(
+        flat, by="doc_id", ts_col="ts_us", val_col="v",
+        step_us=_W14_STEP, tiebreak="pos",
+    )
 
 
-_REGISTRY["w14_irregular_resample"] = _q_w14_irregular_resample()
+_W15_WIN = 250_000
 
 
-def _q_w15_irregular_tier():
-    """W15+ — REAL-TIME-window tier aggregates over explicit-ts streams
-    (operators/irregular.py tier_from_ts_arrays): per (doc, 0.25 s
-    window) min/max/sum/count/mean, computed with one batch-vectorized
-    reduceat kernel over the concatenated Arrow batch (the rollup.py
-    discipline: no per-doc Python). The oracle groups the replayed
-    samples by ts_us // window."""
-    WIN = 250_000
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.irregular import tier_from_ts_arrays
-
-        seq = _irregular_ts_seq(spark, sf_dir)
-        return tier_from_ts_arrays(seq, window_us=WIN, ts_col="ts").select(
-            "doc_id", "win_us", "min_v", "max_v", "sum_v", "cnt", "mean_v"
-        )
-
-    return run, f"""
+@_query("w15_irregular_tier", f"""
 WITH {_DUCK_IRREGULAR_SEG_CTE}
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-       CAST((ts_us // {WIN}) * {WIN} AS BIGINT) AS win_us,
+       CAST((ts_us // {_W15_WIN}) * {_W15_WIN} AS BIGINT) AS win_us,
        CAST(MIN(v) AS INTEGER) AS min_v,
        CAST(MAX(v) AS INTEGER) AS max_v,
        CAST(SUM(v) AS BIGINT) AS sum_v,
        COUNT(*) AS cnt,
        ROUND(CAST(SUM(v) AS DOUBLE) / COUNT(*), 6) AS mean_v
 FROM tsv
-GROUP BY doc_id, ts_us // {WIN}
-"""
+GROUP BY doc_id, ts_us // {_W15_WIN}
+""")
+def _w15_irregular_tier(spark, sf_dir):
+    """W15+ — REAL-TIME-window tier aggregates over explicit-ts streams
+    (operators/irregular.py tier_from_ts_arrays): per (doc, 0.25 s
+    window) min/max/sum/count/mean, computed with one batch-vectorized
+    reduceat kernel over the concatenated Arrow batch (the rollup.py
+    discipline: no per-doc Python). The oracle groups the replayed
+    samples by ts_us // window."""
+    seq = _irregular_ts_seq(spark)
+    return irregular.tier_from_ts_arrays(seq, window_us=_W15_WIN, ts_col="ts").select(
+        "doc_id", "win_us", "min_v", "max_v", "sum_v", "cnt", "mean_v"
+    )
 
 
-_REGISTRY["w15_irregular_tier"] = _q_w15_irregular_tier()
+_SPAN_W, _SPAN_S = 32, 8
 
 
-def _q_dedup_span_report():
-    """Dedup+ — span-level (sub-document) duplication
-    (operators/spans.py): strided 32-char window hashing, windows whose
-    content appears in >1 doc flagged, per-doc dup fraction. The Spark
-    shape replaces the single-machine suffix array of exact-substring
-    dedup with a linear scan + one hash shuffle. The oracle replays the
-    identical strided md5 windows in SQL."""
-    W, S = 32, 8
-
-    def run(spark, sf_dir):
-        from .operators.spans import span_dup_report
-
-        load_views(spark, sf_dir)
-        return span_dup_report(spark.table("documents"), window=W, stride=S)
-
-    return run, f"""
+@_query("dedup_span_report", f"""
 WITH w AS (
-  SELECT doc_id, pos, md5(substr(text, CAST(pos AS INTEGER), {W})) AS whash
-  FROM documents, (SELECT unnest(range(1, 100001, {S})) AS pos) g
-  WHERE pos <= length(text) - {W - 1}
+  SELECT doc_id, pos, md5(substr(text, CAST(pos AS INTEGER), {_SPAN_W})) AS whash
+  FROM documents, (SELECT unnest(range(1, 100001, {_SPAN_S})) AS pos) g
+  WHERE pos <= length(text) - {_SPAN_W - 1}
 ), shared AS (
   SELECT whash FROM (SELECT DISTINCT whash, doc_id FROM w) dw
   GROUP BY whash HAVING COUNT(*) > 1
@@ -3039,33 +2600,25 @@ SELECT s.doc_id, s.n_windows,
        COALESCE(f.n_dup_windows, 0) AS n_dup_windows,
        ROUND(COALESCE(f.n_dup_windows, 0) / s.n_windows, 6) AS dup_fraction
 FROM sizes s LEFT JOIN flagged f ON f.doc_id = s.doc_id
-"""
+""")
+def _dedup_span_report(spark, sf_dir):
+    """Dedup+ — span-level (sub-document) duplication
+    (operators/spans.py): strided 32-char window hashing, windows whose
+    content appears in >1 doc flagged, per-doc dup fraction. The Spark
+    shape replaces the single-machine suffix array of exact-substring
+    dedup with a linear scan + one hash shuffle. The oracle replays the
+    identical strided md5 windows in SQL."""
+    return spans.span_dup_report(spark.table("documents"), window=_SPAN_W, stride=_SPAN_S)
 
 
-_REGISTRY["dedup_span_report"] = _q_dedup_span_report()
+_RUNS_MIN_LEN = 24
 
 
-def _q_dedup_exact_runs():
-    """Dedup+ — EXACT shared-run extraction (operators/spans.py
-    exact_duplicate_runs): the stride-1 verification pass that gives
-    the suffix-array guarantee (Lee et al. ACL'22) — one row per
-    maximal run (>= 24 chars) every window of which appears in more
-    than one document, with precise 1-based start and length. The
-    oracle replays the stride-1 md5 windows and the gaps-and-islands
-    merge in SQL."""
-    L = 24
-
-    def run(spark, sf_dir):
-        from .operators.spans import exact_duplicate_runs
-
-        load_views(spark, sf_dir)
-        return exact_duplicate_runs(spark.table("documents"), min_len=L)
-
-    return run, f"""
+@_query("dedup_exact_runs", f"""
 WITH w AS (
-  SELECT doc_id, pos, md5(substr(text, CAST(pos AS INTEGER), {L})) AS whash
+  SELECT doc_id, pos, md5(substr(text, CAST(pos AS INTEGER), {_RUNS_MIN_LEN})) AS whash
   FROM documents, (SELECT unnest(range(1, 100001)) AS pos) g
-  WHERE pos <= length(text) - {L - 1}
+  WHERE pos <= length(text) - {_RUNS_MIN_LEN - 1}
 ), shared AS (
   SELECT whash FROM (SELECT DISTINCT whash, doc_id FROM w) dw
   GROUP BY whash HAVING COUNT(*) > 1
@@ -3078,29 +2631,30 @@ WITH w AS (
 )
 SELECT doc_id,
        CAST(MIN(pos) AS BIGINT) AS run_start,
-       CAST(MAX(pos) - MIN(pos) + {L} AS BIGINT) AS run_len
+       CAST(MAX(pos) - MIN(pos) + {_RUNS_MIN_LEN} AS BIGINT) AS run_len
 FROM g2 GROUP BY doc_id, isl
-"""
+""")
+def _dedup_exact_runs(spark, sf_dir):
+    """Dedup+ — EXACT shared-run extraction (operators/spans.py
+    exact_duplicate_runs): the stride-1 verification pass that gives
+    the suffix-array guarantee (Lee et al. ACL'22) — one row per
+    maximal run (>= 24 chars) every window of which appears in more
+    than one document, with precise 1-based start and length. The
+    oracle replays the stride-1 md5 windows and the gaps-and-islands
+    merge in SQL."""
+    return spans.exact_duplicate_runs(spark.table("documents"), min_len=_RUNS_MIN_LEN)
 
 
-_REGISTRY["dedup_exact_runs"] = _q_dedup_exact_runs()
+_CURATION_Q = 0.55
+_CURATION_TGT = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
+_CURATION_TGT_ROWS = ", ".join(f"('{s}', {p})" for s, p in _CURATION_TGT.items())
 
 
-def _curation_oracle_sql(Q: float, tgt_rows: str, stop_list: str, neardup: bool) -> str:
+def _curation_oracle_sql(neardup: bool) -> str:
     """One generator for both curation oracles — the non-near-dup form
     and the full-DAG form with the LSH + recursive-components replay —
     so the shared stages cannot drift between them."""
     if neardup:
-        mins = ",\n         ".join(
-            f"MIN(md5('{k}' || ':' || shingle)) AS h{k:02d}" for k in range(16)
-        )
-        band_selects = []
-        for bb in range(4):
-            cols = " || '|' || ".join(f"h{bb * 4 + i:02d}" for i in range(4))
-            band_selects.append(
-                f"SELECT doc_id, {bb} AS band_no, md5({cols}) AS band_hash FROM sig"
-            )
-        bands = " UNION ALL ".join(band_selects)
         nd_ctes = f""", sh3 AS (
   SELECT doc_id, unnest(list_distinct(
            list_transform(range(1, len(w) - 1),
@@ -3108,11 +2662,11 @@ def _curation_oracle_sql(Q: float, tgt_rows: str, stop_list: str, neardup: bool)
   FROM words WHERE len(w) >= 3
 ), sig AS (
   SELECT doc_id,
-         {mins}
+         {_DUCK_MINHASH_MINS}
   FROM sh3
   WHERE doc_id IN (SELECT doc_id FROM f1 WHERE NOT exact_dup)
   GROUP BY doc_id
-), bands AS ({bands}), prs AS (
+), bands AS ({_DUCK_MINHASH_BANDS}), prs AS (
   SELECT a.doc_id AS u, b.doc_id AS v
   FROM bands a JOIN bands b USING (band_no, band_hash)
   WHERE a.doc_id < b.doc_id
@@ -3159,7 +2713,7 @@ WITH {recursive}corpus AS (
            CASE WHEN len(trim(text)) = 0 THEN 0
                 ELSE len(string_split_regex(trim(text), ' +')) END AS n_ws,
            ROUND(len(list_filter(string_split_regex(lower(text), ' +'),
-                 x -> x IN ('{stop_list}')))
+                 x -> x IN ('{_STOP_LIST}')))
                  / greatest(len(string_split_regex(lower(text), ' +')), 1), 6) AS swr,
            ROUND((len(text) - len(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')))
                  / greatest(len(text), 1), 6) AS pr
@@ -3168,14 +2722,14 @@ WITH {recursive}corpus AS (
   SELECT f1.source, f1.n_tok FROM f1 JOIN q USING (doc_id)
   WHERE NOT f1.exact_dup
     {nd_s3}AND f1.doc_id NOT IN (SELECT doc_id FROM contam)
-    AND q.quality >= {Q}
+    AND q.quality >= {_CURATION_Q}
 ), avail AS (
   SELECT source, CAST(SUM(n_tok) AS BIGINT) AS n_tok_avail FROM s3 GROUP BY source
 ), j AS (
   SELECT COALESCE(a.source, tt.source) AS source,
          COALESCE(a.n_tok_avail, 0) AS n_tok_avail,
          CAST(COALESCE(tt.share, 0.0) AS DOUBLE) AS target_share
-  FROM avail a FULL OUTER JOIN (VALUES {tgt_rows}) tt(source, share)
+  FROM avail a FULL OUTER JOIN (VALUES {_CURATION_TGT_ROWS}) tt(source, share)
     ON tt.source = a.source
 ), t AS (
   SELECT MIN(n_tok_avail / target_share) AS T FROM j WHERE target_share > 0
@@ -3193,7 +2747,7 @@ WITH {recursive}corpus AS (
 SELECT f1.doc_id, f1.source, f1.n_tok,
        CASE WHEN f1.exact_dup THEN 'exact_dup'
             {nd_case}WHEN f1.doc_id IN (SELECT doc_id FROM contam) THEN 'contaminated'
-            WHEN q.quality < {Q} THEN 'low_quality'
+            WHEN q.quality < {_CURATION_Q} THEN 'low_quality'
             WHEN NOT (substring(md5(CAST(f1.doc_id AS VARCHAR)), 1, 8)
                       < COALESCE(thr.thresh, '0')) THEN 'mixture_out'
             ELSE 'kept' END AS stage
@@ -3201,15 +2755,31 @@ FROM f1 JOIN q USING (doc_id) LEFT JOIN thr ON thr.source = f1.source
 """
 
 
-_CURATION_Q = 0.55
-_CURATION_TGT = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
-_CURATION_TGT_ROWS = ", ".join(f"('{s}', {p})" for s, p in _CURATION_TGT.items())
-_CURATION_STOPS = "', '".join(
-    ("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
-)
+@_query("curation_keepset_neardup", _curation_oracle_sql(neardup=True))
+def _curation_keepset_neardup(spark, sf_dir):
+    """Curation+ FULL DAG — curation_keepset with the near-dup stage ON:
+    MinHash-LSH candidate pairs (md5 family, uncapped like the
+    dedup_minhash_lsh oracle) + connected components over the
+    exact-dedup survivors; non-representative members (doc_id !=
+    comp_id) drop at the near_dup stage, and the mixture availability is
+    computed over the post-near-dup-post-quality survivors. The oracle
+    replays the LSH banding AND the recursive transitive closure inside
+    the same composed query — all five stages certified end to end."""
+    docs = spark.table("documents")
+    return curation.curate(
+        docs.filter(F.col("doc_id") % 50 != 0),
+        docs.filter(F.col("doc_id") % 50 == 0),
+        contam_n=5,
+        min_quality=_CURATION_Q,
+        targets=_CURATION_TGT,
+        near_dup=True,
+        hash_fn="md5",
+        lsh_max_bucket_size=None,
+    )
 
 
-def _q_curation_keepset():
+@_query("curation_keepset", _curation_oracle_sql(neardup=False))
+def _curation_keepset(spark, sf_dir):
     """Curation+ — the END-TO-END corpus-curation DAG
     (plans/curation.py::curate): exact dedup -> benchmark
     decontamination -> quality floor -> domain-mixture draw, audited as
@@ -3221,89 +2791,20 @@ def _q_curation_keepset():
     the COMPOSITION (stage ordering, survivor-dependent mixture
     availability) is certified, not just each operator alone. The
     near-dup variant is curation_keepset_neardup."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .plans.curation import curate
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        return curate(
-            docs.filter(F.col("doc_id") % 50 != 0),
-            docs.filter(F.col("doc_id") % 50 == 0),
-            contam_n=5,
-            min_quality=_CURATION_Q,
-            targets=_CURATION_TGT,
-        )
-
-    return run, _curation_oracle_sql(
-        _CURATION_Q, _CURATION_TGT_ROWS, _CURATION_STOPS, neardup=False
+    docs = spark.table("documents")
+    return curation.curate(
+        docs.filter(F.col("doc_id") % 50 != 0),
+        docs.filter(F.col("doc_id") % 50 == 0),
+        contam_n=5,
+        min_quality=_CURATION_Q,
+        targets=_CURATION_TGT,
     )
 
 
-def _q_curation_keepset_neardup():
-    """Curation+ FULL DAG — curation_keepset with the near-dup stage ON:
-    MinHash-LSH candidate pairs (md5 family, uncapped like the
-    dedup_minhash_lsh oracle) + connected components over the
-    exact-dedup survivors; non-representative members (doc_id !=
-    comp_id) drop at the near_dup stage, and the mixture availability is
-    computed over the post-near-dup-post-quality survivors. The oracle
-    replays the LSH banding AND the recursive transitive closure inside
-    the same composed query — all five stages certified end to end."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .plans.curation import curate
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        return curate(
-            docs.filter(F.col("doc_id") % 50 != 0),
-            docs.filter(F.col("doc_id") % 50 == 0),
-            contam_n=5,
-            min_quality=_CURATION_Q,
-            targets=_CURATION_TGT,
-            near_dup=True,
-            hash_fn="md5",
-            lsh_max_bucket_size=None,
-        )
-
-    return run, _curation_oracle_sql(
-        _CURATION_Q, _CURATION_TGT_ROWS, _CURATION_STOPS, neardup=True
-    )
+_PACK_CTX = 512
 
 
-_REGISTRY["curation_keepset_neardup"] = _q_curation_keepset_neardup()
-
-
-
-_REGISTRY["curation_keepset"] = _q_curation_keepset()
-
-
-def _q_tok_pack_incremental():
-    """Tokens+ — INCREMENTAL packing (operators/packing.py
-    pack_offsets_incremental): extend a packed corpus from only the
-    per-source (total, max_doc_id) checkpoint, no history re-scan.
-    Docs whose VARCHAR doc_id sorts below '3' play the already-packed
-    corpus; the rest arrive as the append batch (a valid append:
-    lexicographic split respects the packing order). The oracle replays
-    the FULL-corpus cumsum and restricts to the batch — certifying
-    incremental placement is bit-identical to re-packing everything."""
-    CTX = 512
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.packing import pack_offsets_incremental, pack_totals
-
-        seq = _char_tokens_df(spark, sf_dir)
-        existing = seq.filter(F.col("doc_id") < "3")
-        batch = seq.filter(F.col("doc_id") >= "3")
-        return pack_offsets_incremental(batch, pack_totals(existing), ctx_len=CTX)
-
-    return run, f"""
+@_query("tok_pack_incremental", f"""
 WITH seq AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, source,
          CAST(length(text) AS BIGINT) AS n_tok
@@ -3316,13 +2817,25 @@ WITH seq AS (
   FROM seq
 )
 SELECT source, doc_id, n_tok, "offset",
-       "offset" // {CTX} AS first_block,
-       ("offset" + n_tok - 1) // {CTX} AS last_block
+       "offset" // {_PACK_CTX} AS first_block,
+       ("offset" + n_tok - 1) // {_PACK_CTX} AS last_block
 FROM o WHERE doc_id >= '3'
-"""
-
-
-_REGISTRY["tok_pack_incremental"] = _q_tok_pack_incremental()
+""")
+def _tok_pack_incremental(spark, sf_dir):
+    """Tokens+ — INCREMENTAL packing (operators/packing.py
+    pack_offsets_incremental): extend a packed corpus from only the
+    per-source (total, max_doc_id) checkpoint, no history re-scan.
+    Docs whose VARCHAR doc_id sorts below '3' play the already-packed
+    corpus; the rest arrive as the append batch (a valid append:
+    lexicographic split respects the packing order). The oracle replays
+    the FULL-corpus cumsum and restricts to the batch — certifying
+    incremental placement is bit-identical to re-packing everything."""
+    seq = _char_tokens_df(spark)
+    existing = seq.filter(F.col("doc_id") < "3")
+    batch = seq.filter(F.col("doc_id") >= "3")
+    return packing.pack_offsets_incremental(
+        batch, packing.pack_totals(existing), ctx_len=_PACK_CTX
+    )
 
 
 _DUCK_Q8_CTE = """
@@ -3342,46 +2855,7 @@ xb AS (
 )"""
 
 
-def _q_ann_quantize_roundtrip():
-    """ANN+ — int8 embedding quantization + dequantization error
-    (operators/similarity.py quantize_embeddings/dequantize_embeddings):
-    per-vector (scale, L1 mass of q, max reconstruction error). The
-    oracle replays the away-from-zero rounding and the q·scale/127
-    inverse in SQL — certifying the exact quantized representation, not
-    just its shape."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.similarity import quantize_embeddings
-
-        load_views(spark, sf_dir)
-        q8 = quantize_embeddings(spark.table("embeddings"))
-        orig = spark.table("embeddings").select(
-            "vec_id", F.col("embedding").alias("_x")
-        )
-        return q8.join(orig, "vec_id").select(
-            "vec_id",
-            F.round("scale", 9).alias("scale"),
-            F.aggregate(
-                "q", F.lit(0).cast("long"), lambda acc, v: acc + F.abs(v)
-            ).alias("q_l1"),
-            F.round(
-                F.array_max(
-                    F.zip_with(
-                        "q",
-                        "_x",
-                        lambda a, b: F.abs(
-                            a.cast("double") * F.col("scale") / F.lit(127.0)
-                            - b.cast("double")
-                        ),
-                    )
-                ),
-                6,
-            ).alias("max_abs_err"),
-        )
-
-    return run, f"""
+@_query("ann_quantize_roundtrip", f"""
 WITH {_DUCK_Q8_CTE}
 SELECT q8.vec_id,
        ROUND(q8.s, 9) AS scale,
@@ -3389,27 +2863,41 @@ SELECT q8.vec_id,
        ROUND(list_max(list_transform(range(1, len(q) + 1),
              i -> abs(q[i] * q8.s / 127.0 - x[i]))), 6) AS max_abs_err
 FROM q8 JOIN sc ON sc.vec_id = q8.vec_id
-"""
+""")
+def _ann_quantize_roundtrip(spark, sf_dir):
+    """ANN+ — int8 embedding quantization + dequantization error
+    (operators/similarity.py quantize_embeddings/dequantize_embeddings):
+    per-vector (scale, L1 mass of q, max reconstruction error). The
+    oracle replays the away-from-zero rounding and the q·scale/127
+    inverse in SQL — certifying the exact quantized representation, not
+    just its shape."""
+    q8 = similarity.quantize_embeddings(spark.table("embeddings"))
+    orig = spark.table("embeddings").select(
+        "vec_id", F.col("embedding").alias("_x")
+    )
+    return q8.join(orig, "vec_id").select(
+        "vec_id",
+        F.round("scale", 9).alias("scale"),
+        F.aggregate(
+            "q", F.lit(0).cast("long"), lambda acc, v: acc + F.abs(v)
+        ).alias("q_l1"),
+        F.round(
+            F.array_max(
+                F.zip_with(
+                    "q",
+                    "_x",
+                    lambda a, b: F.abs(
+                        a.cast("double") * F.col("scale") / F.lit(127.0)
+                        - b.cast("double")
+                    ),
+                )
+            ),
+            6,
+        ).alias("max_abs_err"),
+    )
 
 
-_REGISTRY["ann_quantize_roundtrip"] = _q_ann_quantize_roundtrip()
-
-
-def _q_ann_cosine_topk_q8():
-    """ANN+ — brute-force cosine top-k on the int8-QUANTIZED vectors
-    (operators/similarity.py cosine_topk_q8): integer dot products, one
-    double division, same rank/tiebreak contract as the float path. The
-    per-vector scales cancel in the cosine ratio, so this is the 4×-
-    smaller-shuffle production variant of ann_cosine_topk; the oracle
-    replays quantization AND search."""
-
-    def run(spark, sf_dir):
-        from .operators.similarity import cosine_topk_q8
-
-        load_views(spark, sf_dir)
-        return cosine_topk_q8(spark.table("embeddings"), k=5, n_queries=20)
-
-    return run, f"""
+@_query("ann_cosine_topk_q8", f"""
 WITH {_DUCK_Q8_CTE}, v AS (
   SELECT vec_id, q, sqrt(list_sum(list_transform(q, y -> CAST(y AS DOUBLE) * y))) AS qnorm
   FROM q8
@@ -3426,26 +2914,18 @@ SELECT query_id, neighbor_id, rank, cos_sim_q8 FROM (
                                ORDER BY cos_sim_q8 DESC, neighbor_id) AS rank
   FROM pairs
 ) x WHERE rank <= 5
-"""
+""")
+def _ann_cosine_topk_q8(spark, sf_dir):
+    """ANN+ — brute-force cosine top-k on the int8-QUANTIZED vectors
+    (operators/similarity.py cosine_topk_q8): integer dot products, one
+    double division, same rank/tiebreak contract as the float path. The
+    per-vector scales cancel in the cosine ratio, so this is the 4×-
+    smaller-shuffle production variant of ann_cosine_topk; the oracle
+    replays quantization AND search."""
+    return similarity.cosine_topk_q8(spark.table("embeddings"), k=5, n_queries=20)
 
 
-_REGISTRY["ann_cosine_topk_q8"] = _q_ann_cosine_topk_q8()
-
-
-def _q_text_repetition():
-    """Text+ — within-doc repetition metrics (functions/text.py
-    repetition_metrics): duplicate-bigram fraction and top-gram share,
-    the MassiveText/Gopher repetition quality family. Computed entirely
-    inside the row (zero shuffle); the oracle aggregates the exploded
-    grams."""
-
-    def run(spark, sf_dir):
-        from .functions.text import repetition_metrics
-
-        load_views(spark, sf_dir)
-        return repetition_metrics(spark.table("documents"), n=2)
-
-    return run, """
+@_query("text_repetition", """
 WITH words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
 ), g AS (
@@ -3461,29 +2941,17 @@ SELECT doc_id,
        ROUND(1.0 - COUNT(*) / SUM(c), 6) AS dup_fraction,
        ROUND(MAX(c) / SUM(c), 6) AS top_share
 FROM per GROUP BY doc_id
-"""
+""")
+def _text_repetition(spark, sf_dir):
+    """Text+ — within-doc repetition metrics (functions/text.py
+    repetition_metrics): duplicate-bigram fraction and top-gram share,
+    the MassiveText/Gopher repetition quality family. Computed entirely
+    inside the row (zero shuffle); the oracle aggregates the exploded
+    grams."""
+    return text.repetition_metrics(spark.table("documents"), n=2)
 
 
-_REGISTRY["text_repetition"] = _q_text_repetition()
-
-
-def _q_tok_pack_manifest():
-    """Tokens+ — sequence-packing manifest (operators/packing.py):
-    concat-and-chunk each source's documents (doc_id order) into 512-
-    token training blocks; one row per (block, contributing doc slice).
-    The oracle replays the exclusive running sum and the block-range
-    unnest in SQL. ONE wide op per side (the per-source cumsum window)."""
-    CTX = 512
-
-    def run(spark, sf_dir):
-        from .operators.packing import pack_manifest
-
-        seq = _char_tokens_df(spark, sf_dir)
-        return pack_manifest(seq, ctx_len=CTX).select(
-            "source", "block_id", "doc_id", "doc_start", "block_off", "n_in_block"
-        )
-
-    return run, f"""
+@_query("tok_pack_manifest", f"""
 WITH seq AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, source,
          CAST(length(text) AS BIGINT) AS n_tok
@@ -3496,46 +2964,39 @@ WITH seq AS (
   FROM seq
 ), b AS (
   SELECT source, doc_id, n_tok, off,
-         unnest(range(off // {CTX}, (off + n_tok - 1) // {CTX} + 1)) AS block_id
+         unnest(range(off // {_PACK_CTX}, (off + n_tok - 1) // {_PACK_CTX} + 1)) AS block_id
   FROM o
 )
 SELECT source, block_id, doc_id,
-       GREATEST(block_id * {CTX}, off) - off AS doc_start,
-       GREATEST(block_id * {CTX}, off) - block_id * {CTX} AS block_off,
-       LEAST((block_id + 1) * {CTX}, off + n_tok)
-         - GREATEST(block_id * {CTX}, off) AS n_in_block
+       GREATEST(block_id * {_PACK_CTX}, off) - off AS doc_start,
+       GREATEST(block_id * {_PACK_CTX}, off) - block_id * {_PACK_CTX} AS block_off,
+       LEAST((block_id + 1) * {_PACK_CTX}, off + n_tok)
+         - GREATEST(block_id * {_PACK_CTX}, off) AS n_in_block
 FROM b
-"""
-
-
-_REGISTRY["tok_pack_manifest"] = _q_tok_pack_manifest()
-
-
-def _q_l4_mixture_rates():
-    """L4+ — domain-mixture planning (operators/sampling.py
-    mixture_rates): the largest corpus achievable at a fixed target
-    source distribution without upsampling, and the per-source keep
-    rates realizing it. Targets pin a skewed mix over three of the
-    synthetic sources (the rest drop to rate 0); the oracle replays the
-    min-ratio arithmetic in SQL."""
-    TGT = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
-
-    def run(spark, sf_dir):
-        from .operators.sampling import mixture_rates
-
-        seq = _char_tokens_df(spark, sf_dir)
-        return mixture_rates(seq, TGT)
-
-    cases_share = " ".join(
-        f"WHEN source = '{s}' THEN {p}" for s, p in TGT.items()
+""")
+def _tok_pack_manifest(spark, sf_dir):
+    """Tokens+ — sequence-packing manifest (operators/packing.py):
+    concat-and-chunk each source's documents (doc_id order) into 512-
+    token training blocks; one row per (block, contributing doc slice).
+    The oracle replays the exclusive running sum and the block-range
+    unnest in SQL. ONE wide op per side (the per-source cumsum window)."""
+    seq = _char_tokens_df(spark)
+    return packing.pack_manifest(seq, ctx_len=_PACK_CTX).select(
+        "source", "block_id", "doc_id", "doc_start", "block_off", "n_in_block"
     )
-    return run, f"""
+
+
+_MIX_TGT = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
+_MIX_CASES = " ".join(f"WHEN source = '{s}' THEN {p}" for s, p in _MIX_TGT.items())
+
+
+@_query("l4_mixture_rates", f"""
 WITH avail AS (
   SELECT source, CAST(SUM(length(text)) AS BIGINT) AS n_tok_avail
   FROM documents GROUP BY source
 ), j AS (
   SELECT source, n_tok_avail,
-         CAST(CASE {cases_share} ELSE 0.0 END AS DOUBLE) AS target_share
+         CAST(CASE {_MIX_CASES} ELSE 0.0 END AS DOUBLE) AS target_share
   FROM avail
 ), t AS (
   SELECT MIN(n_tok_avail / target_share) AS T FROM j WHERE target_share > 0
@@ -3546,29 +3007,19 @@ SELECT source, n_tok_avail, target_share,
                        THEN LEAST(1.0, target_share * T / n_tok_avail)
                        ELSE 0.0 END, 9) AS DOUBLE) AS rate
 FROM j, t
-"""
+""")
+def _l4_mixture_rates(spark, sf_dir):
+    """L4+ — domain-mixture planning (operators/sampling.py
+    mixture_rates): the largest corpus achievable at a fixed target
+    source distribution without upsampling, and the per-source keep
+    rates realizing it. Targets pin a skewed mix over three of the
+    synthetic sources (the rest drop to rate 0); the oracle replays the
+    min-ratio arithmetic in SQL."""
+    seq = _char_tokens_df(spark)
+    return sampling.mixture_rates(seq, _MIX_TGT)
 
 
-_REGISTRY["l4_mixture_rates"] = _q_l4_mixture_rates()
-
-
-def _q_l5_mixture_sample():
-    """L5+ — mixture plan EXECUTION (operators/sampling.py
-    apply_mixture): the l4 rates realized as a deterministic md5-prefix
-    draw per source. The oracle replays planning + threshold + hash
-    filter end-to-end; fixed-width lowercase hex compares like the
-    32-bit integer, so both engines keep identical doc sets."""
-    TGT = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
-
-    def run(spark, sf_dir):
-        from .operators.sampling import apply_mixture, mixture_rates
-
-        seq = _char_tokens_df(spark, sf_dir)
-        rates = mixture_rates(seq, TGT)
-        return apply_mixture(seq.select("doc_id", "source", "n_tok"), rates)
-
-    cases_share = " ".join(f"WHEN source = '{s}' THEN {p}" for s, p in TGT.items())
-    return run, f"""
+@_query("l5_mixture_sample", f"""
 WITH seq AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, source,
          CAST(length(text) AS BIGINT) AS n_tok
@@ -3577,7 +3028,7 @@ WITH seq AS (
   SELECT source, SUM(n_tok) AS n_tok_avail FROM seq GROUP BY source
 ), j AS (
   SELECT source, n_tok_avail,
-         CAST(CASE {cases_share} ELSE 0.0 END AS DOUBLE) AS target_share
+         CAST(CASE {_MIX_CASES} ELSE 0.0 END AS DOUBLE) AS target_share
   FROM avail
 ), t AS (
   SELECT MIN(n_tok_avail / target_share) AS T FROM j WHERE target_share > 0
@@ -3597,33 +3048,19 @@ WITH seq AS (
 SELECT seq.source, seq.doc_id, seq.n_tok
 FROM seq JOIN thr ON thr.source = seq.source
 WHERE substring(md5(seq.doc_id), 1, 8) < thr.thresh
-"""
+""")
+def _l5_mixture_sample(spark, sf_dir):
+    """L5+ — mixture plan EXECUTION (operators/sampling.py
+    apply_mixture): the l4 rates realized as a deterministic md5-prefix
+    draw per source. The oracle replays planning + threshold + hash
+    filter end-to-end; fixed-width lowercase hex compares like the
+    32-bit integer, so both engines keep identical doc sets."""
+    seq = _char_tokens_df(spark)
+    rates = sampling.mixture_rates(seq, _MIX_TGT)
+    return sampling.apply_mixture(seq.select("doc_id", "source", "n_tok"), rates)
 
 
-_REGISTRY["l5_mixture_sample"] = _q_l5_mixture_sample()
-
-
-def _q_tok_pack_blocks():
-    """Tokens+ — packed-block MATERIALIZATION (operators/packing.py
-    materialize_blocks): the l-manifest executed into real fixed-ctx
-    token blocks. The char-token trick certifies content exactly: each
-    block's tokens render back to text and the md5 must equal the
-    oracle's ordered string_agg of the same substring slices."""
-    CTX = 512
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.packing import materialize_blocks
-
-        seq = _char_tokens_df(spark, sf_dir)
-        out = materialize_blocks(seq, ctx_len=CTX)
-        text = F.array_join(F.transform("tokens", lambda t: F.char(t)), "")
-        return out.select(
-            "source", "block_id", "n_tokens", F.md5(text).alias("block_md5")
-        )
-
-    return run, f"""
+@_query("tok_pack_blocks", f"""
 WITH seq AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id, source, text,
          CAST(length(text) AS BIGINT) AS n_tok
@@ -3636,25 +3073,34 @@ WITH seq AS (
   FROM seq
 ), b AS (
   SELECT source, doc_id, text, n_tok, off,
-         unnest(range(off // {CTX}, (off + n_tok - 1) // {CTX} + 1)) AS block_id
+         unnest(range(off // {_PACK_CTX}, (off + n_tok - 1) // {_PACK_CTX} + 1)) AS block_id
   FROM o
 ), sl AS (
   SELECT source, block_id,
-         GREATEST(block_id * {CTX}, off) - block_id * {CTX} AS block_off,
+         GREATEST(block_id * {_PACK_CTX}, off) - block_id * {_PACK_CTX} AS block_off,
          substr(text,
-                CAST(GREATEST(block_id * {CTX}, off) - off + 1 AS INTEGER),
-                CAST(LEAST((block_id + 1) * {CTX}, off + n_tok)
-                     - GREATEST(block_id * {CTX}, off) AS INTEGER)) AS piece
+                CAST(GREATEST(block_id * {_PACK_CTX}, off) - off + 1 AS INTEGER),
+                CAST(LEAST((block_id + 1) * {_PACK_CTX}, off + n_tok)
+                     - GREATEST(block_id * {_PACK_CTX}, off) AS INTEGER)) AS piece
   FROM b
 )
 SELECT source, block_id,
        CAST(SUM(length(piece)) AS BIGINT) AS n_tokens,
        md5(string_agg(piece, '' ORDER BY block_off)) AS block_md5
 FROM sl GROUP BY source, block_id
-"""
-
-
-_REGISTRY["tok_pack_blocks"] = _q_tok_pack_blocks()
+""")
+def _tok_pack_blocks(spark, sf_dir):
+    """Tokens+ — packed-block MATERIALIZATION (operators/packing.py
+    materialize_blocks): the l-manifest executed into real fixed-ctx
+    token blocks. The char-token trick certifies content exactly: each
+    block's tokens render back to text and the md5 must equal the
+    oracle's ordered string_agg of the same substring slices."""
+    seq = _char_tokens_df(spark)
+    out = packing.materialize_blocks(seq, ctx_len=_PACK_CTX)
+    rendered = F.array_join(F.transform("tokens", lambda t: F.char(t)), "")
+    return out.select(
+        "source", "block_id", "n_tokens", F.md5(rendered).alias("block_md5")
+    )
 
 
 # ==========================================================================
@@ -3668,7 +3114,20 @@ _REGISTRY["tok_pack_blocks"] = _q_tok_pack_blocks()
 _MM_DOCS = 3000  # doc_id bound: ~1000 payloads per modality at any sf
 
 
-def _q_multimodal_features():
+@_query("multimodal_features", f"""
+WITH d AS (
+  SELECT doc_id FROM documents WHERE doc_id % 3 = 0 AND doc_id < {_MM_DOCS}
+), px AS (
+  SELECT d.doc_id,
+         (y.y // 4) * 4 + (x.x // 4) AS cell_no,
+         (3 * y.y + 7 * x.x + d.doc_id) % 256 AS v
+  FROM d, range(16) y(y), range(16) x(x)
+)
+SELECT doc_id, CAST(cell_no AS INTEGER) AS cell_no,
+       CAST(SUM(v) AS BIGINT) AS gray_sum
+FROM px GROUP BY doc_id, cell_no
+""")
+def _multimodal_features(spark, sf_dir):
     """Media+ — REAL image decode through the distributed seam: 16x16
     24-bit BMP payloads synthesized per doc (gray ramp
     v(y,x) = (3y + 7x + doc_id) % 256, R=G=B), decoded back by
@@ -3681,140 +3140,45 @@ def _q_multimodal_features():
     the reference treats attachments as opaque bytes
     (processor/importer.py); this certifies the byte->feature path a
     training pipeline adds on top."""
+    docs = (
+        spark.table("documents")
+        .filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") < _MM_DOCS))
+        .select("doc_id")
+    )
 
-    def run(spark, sf_dir):
-        import hashlib as _hl
-
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from .functions.multimodal import MEDIA_SCHEMA, encode_bmp, extract_features
-
-        load_views(spark, sf_dir)
-        docs = (
-            spark.table("documents")
-            .filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") < _MM_DOCS))
-            .select("doc_id")
-        )
-
-        def synth(batches):
-            y, x = np.mgrid[0:16, 0:16]
-            base = 3 * y + 7 * x
-            for pdf in batches:
-                rows = []
-                for d in pdf["doc_id"]:
-                    v = ((base + int(d)) % 256).astype(np.uint8)
-                    payload = encode_bmp(np.repeat(v[:, :, None], 3, axis=2))
-                    rows.append(
-                        (
-                            f"m-{int(d)}",
-                            "image",
-                            payload,
-                            len(payload),
-                            _hl.sha256(payload).hexdigest(),
-                        )
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in MEDIA_SCHEMA.fields]
-                )
-
-        feats = extract_features(docs.mapInPandas(synth, MEDIA_SCHEMA))
-        return feats.select(
-            F.regexp_replace("media_id", "^m-", "").cast("bigint").alias("doc_id"),
-            F.posexplode("features").alias("cell_no", "f"),
-        ).select(
-            "doc_id",
-            "cell_no",
-            F.round(F.col("f") * F.lit(4080.0)).cast("bigint").alias("gray_sum"),
-        )
-
-    return run, f"""
-WITH d AS (
-  SELECT doc_id FROM documents WHERE doc_id % 3 = 0 AND doc_id < {_MM_DOCS}
-), px AS (
-  SELECT d.doc_id,
-         (y.y // 4) * 4 + (x.x // 4) AS cell_no,
-         (3 * y.y + 7 * x.x + d.doc_id) % 256 AS v
-  FROM d, range(16) y(y), range(16) x(x)
-)
-SELECT doc_id, CAST(cell_no AS INTEGER) AS cell_no,
-       CAST(SUM(v) AS BIGINT) AS gray_sum
-FROM px GROUP BY doc_id, cell_no
-"""
-
-
-_REGISTRY["multimodal_features"] = _q_multimodal_features()
-
-
-def _q_multimodal_audio_energy():
-    """Media+ — REAL audio decode through the distributed seam:
-    RIFF/WAVE PCM-16 payloads (1600 mono samples per doc,
-    s[i] = ((7i + doc_id) % 201) - 100), decoded back by
-    ``decode_wav_pcm16`` (the PyAV-free numpy parser) in a second
-    mapInPandas stage, then 16 equal-chunk int64 energies — integer
-    arithmetic end to end, so the oracle replays the sample formula
-    exactly. (The normalized-RMS feature tail over the same decoder is
-    pinned by pytest; energies are the SQL-replayable projection.)"""
-
-    def run(spark, sf_dir):
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        from .functions.multimodal import decode_wav_pcm16, encode_wav_pcm16
-
-        load_views(spark, sf_dir)
-        docs = (
-            spark.table("documents")
-            .filter((F.col("doc_id") % 3 == 1) & (F.col("doc_id") < _MM_DOCS))
-            .select("doc_id")
-        )
-        wav_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), False),
-            ]
-        )
-
-        def synth(batches):
-            i = np.arange(1600, dtype=np.int64)
-            for pdf in batches:
-                rows = [
+    def payloads(batches):
+        y, x = np.mgrid[0:16, 0:16]
+        base = 3 * y + 7 * x
+        for pdf in batches:
+            rows = []
+            for d in pdf["doc_id"]:
+                v = ((base + int(d)) % 256).astype(np.uint8)
+                payload = multimodal.encode_bmp(np.repeat(v[:, :, None], 3, axis=2))
+                rows.append(
                     (
-                        int(d),
-                        encode_wav_pcm16(
-                            (((7 * i + int(d)) % 201) - 100).astype(np.int16)
-                        ),
+                        f"m-{int(d)}",
+                        "image",
+                        payload,
+                        len(payload),
+                        hashlib.sha256(payload).hexdigest(),
                     )
-                    for d in pdf["doc_id"]
-                ]
-                yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+                )
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in multimodal.MEDIA_SCHEMA.fields]
+            )
 
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("chunk_no", T.IntegerType(), False),
-                T.StructField("energy", T.LongType(), False),
-            ]
-        )
+    feats = multimodal.extract_features(docs.mapInPandas(payloads, multimodal.MEDIA_SCHEMA))
+    return feats.select(
+        F.regexp_replace("media_id", "^m-", "").cast("bigint").alias("doc_id"),
+        F.posexplode("features").alias("cell_no", "f"),
+    ).select(
+        "doc_id",
+        "cell_no",
+        F.round(F.col("f") * F.lit(4080.0)).cast("bigint").alias("gray_sum"),
+    )
 
-        def energies(batches):
-            for pdf in batches:
-                rows = []
-                for d, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    planar, _rate = decode_wav_pcm16(payload)
-                    v = planar[0].astype(np.int64)
-                    e = (v * v).reshape(16, -1).sum(axis=1)
-                    rows.extend((int(d), c, int(e[c])) for c in range(16))
-                yield pd.DataFrame(rows, columns=["doc_id", "chunk_no", "energy"])
 
-        return docs.mapInPandas(synth, wav_schema).mapInPandas(
-            energies, out_schema
-        )
-
-    return run, f"""
+@_query("multimodal_audio_energy", f"""
 WITH d AS (
   SELECT doc_id FROM documents WHERE doc_id % 3 = 1 AND doc_id < {_MM_DOCS}
 ), s AS (
@@ -3824,13 +3188,76 @@ WITH d AS (
 SELECT doc_id, CAST(i // 100 AS INTEGER) AS chunk_no,
        CAST(SUM(v * v) AS BIGINT) AS energy
 FROM s GROUP BY doc_id, i // 100
-"""
+""")
+def _multimodal_audio_energy(spark, sf_dir):
+    """Media+ — REAL audio decode through the distributed seam:
+    RIFF/WAVE PCM-16 payloads (1600 mono samples per doc,
+    s[i] = ((7i + doc_id) % 201) - 100), decoded back by
+    ``decode_wav_pcm16`` (the PyAV-free numpy parser) in a second
+    mapInPandas stage, then 16 equal-chunk int64 energies — integer
+    arithmetic end to end, so the oracle replays the sample formula
+    exactly. (The normalized-RMS feature tail over the same decoder is
+    pinned by pytest; energies are the SQL-replayable projection.)"""
+    docs = (
+        spark.table("documents")
+        .filter((F.col("doc_id") % 3 == 1) & (F.col("doc_id") < _MM_DOCS))
+        .select("doc_id")
+    )
+    wav_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), False),
+            T.StructField("payload", T.BinaryType(), False),
+        ]
+    )
+
+    def payloads(batches):
+        i = np.arange(1600, dtype=np.int64)
+        for pdf in batches:
+            rows = [
+                (
+                    int(d),
+                    multimodal.encode_wav_pcm16(
+                        (((7 * i + int(d)) % 201) - 100).astype(np.int16)
+                    ),
+                )
+                for d in pdf["doc_id"]
+            ]
+            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+
+    out_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), False),
+            T.StructField("chunk_no", T.IntegerType(), False),
+            T.StructField("energy", T.LongType(), False),
+        ]
+    )
+
+    def energies(batches):
+        for pdf in batches:
+            rows = []
+            for d, payload in zip(pdf["doc_id"], pdf["payload"]):
+                planar, _rate = multimodal.decode_wav_pcm16(payload)
+                v = planar[0].astype(np.int64)
+                e = (v * v).reshape(16, -1).sum(axis=1)
+                rows.extend((int(d), c, int(e[c])) for c in range(16))
+            yield pd.DataFrame(rows, columns=["doc_id", "chunk_no", "energy"])
+
+    return docs.mapInPandas(payloads, wav_schema).mapInPandas(
+        energies, out_schema
+    )
 
 
-_REGISTRY["multimodal_audio_energy"] = _q_multimodal_audio_energy()
-
-
-def _q_multimodal_resize():
+@_query("multimodal_resize", f"""
+WITH d AS (
+  SELECT doc_id FROM documents WHERE doc_id % 3 = 2 AND doc_id < {_MM_DOCS}
+), px AS (
+  SELECT d.doc_id, 6 * k.k + 10 * l.l + 4 + (d.doc_id % 40) AS v
+  FROM d, range(1, 7) k(k), range(1, 7) l(l)
+)
+SELECT doc_id, CAST(SUM(3 * v) AS BIGINT) AS gray_total
+FROM px GROUP BY doc_id
+""")
+def _multimodal_resize(spark, sf_dir):
     """Media+ — decode + bilinear resize certified: 16x16 BMPs whose
     gray is LINEAR in (y, x) (v = 3y + 5x + doc_id % 40, max 159 — no
     mod wrap), resized to 8x8 through ``resize_images``. On an affine
@@ -3843,89 +3270,63 @@ def _q_multimodal_resize():
     the interior 6x6 region only — exact under either codec path.
     One row per image; interior byte sum via an Arrow-batched
     mapInPandas over the raw RGB binary."""
+    docs = (
+        spark.table("documents")
+        .filter((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < _MM_DOCS))
+        .select("doc_id")
+    )
 
-    def run(spark, sf_dir):
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        from .functions.multimodal import MEDIA_SCHEMA, encode_bmp, resize_images
-
-        load_views(spark, sf_dir)
-        docs = (
-            spark.table("documents")
-            .filter((F.col("doc_id") % 3 == 2) & (F.col("doc_id") < _MM_DOCS))
-            .select("doc_id")
-        )
-
-        def synth(batches):
-            import hashlib as _hl
-
-            y, x = np.mgrid[0:16, 0:16]
-            base = 3 * y + 5 * x
-            for pdf in batches:
-                rows = []
-                for d in pdf["doc_id"]:
-                    v = (base + int(d) % 40).astype(np.uint8)
-                    payload = encode_bmp(np.repeat(v[:, :, None], 3, axis=2))
-                    rows.append(
-                        (
-                            f"m-{int(d)}",
-                            "image",
-                            payload,
-                            len(payload),
-                            _hl.sha256(payload).hexdigest(),
-                        )
+    def payloads(batches):
+        y, x = np.mgrid[0:16, 0:16]
+        base = 3 * y + 5 * x
+        for pdf in batches:
+            rows = []
+            for d in pdf["doc_id"]:
+                v = (base + int(d) % 40).astype(np.uint8)
+                payload = multimodal.encode_bmp(np.repeat(v[:, :, None], 3, axis=2))
+                rows.append(
+                    (
+                        f"m-{int(d)}",
+                        "image",
+                        payload,
+                        len(payload),
+                        hashlib.sha256(payload).hexdigest(),
                     )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in MEDIA_SCHEMA.fields]
                 )
+            yield pd.DataFrame(
+                rows, columns=[f.name for f in multimodal.MEDIA_SCHEMA.fields]
+            )
 
-        small = resize_images(docs.mapInPandas(synth, MEDIA_SCHEMA), 8, 8)
+    small = multimodal.resize_images(docs.mapInPandas(payloads, multimodal.MEDIA_SCHEMA), 8, 8)
 
-        sum_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("gray_total", T.LongType(), False),
-            ]
-        )
+    sum_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), False),
+            T.StructField("gray_total", T.LongType(), False),
+        ]
+    )
 
-        def interior_sums(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [
-                            int(m[2:]) for m in pdf["media_id"]
-                        ],
-                        "gray_total": [
-                            int(
-                                np.frombuffer(b, np.uint8)
-                                .reshape(8, 8, 3)[1:7, 1:7]
-                                .sum()
-                            )
-                            for b in pdf["rgb"]
-                        ],
-                    }
-                )
+    def interior_sums(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": [
+                        int(m[2:]) for m in pdf["media_id"]
+                    ],
+                    "gray_total": [
+                        int(
+                            np.frombuffer(b, np.uint8)
+                            .reshape(8, 8, 3)[1:7, 1:7]
+                            .sum()
+                        )
+                        for b in pdf["rgb"]
+                    ],
+                }
+            )
 
-        return small.select("media_id", "rgb").mapInPandas(
-            interior_sums, sum_schema
-        )
-
-    return run, f"""
-WITH d AS (
-  SELECT doc_id FROM documents WHERE doc_id % 3 = 2 AND doc_id < {_MM_DOCS}
-), px AS (
-  SELECT d.doc_id, 6 * k.k + 10 * l.l + 4 + (d.doc_id % 40) AS v
-  FROM d, range(1, 7) k(k), range(1, 7) l(l)
-)
-SELECT doc_id, CAST(SUM(3 * v) AS BIGINT) AS gray_total
-FROM px GROUP BY doc_id
-"""
-
-
-_REGISTRY["multimodal_resize"] = _q_multimodal_resize()
+    return small.select("media_id", "rgb").mapInPandas(
+        interior_sums, sum_schema
+    )
 
 
 # ==========================================================================
@@ -3935,7 +3336,14 @@ _REGISTRY["multimodal_resize"] = _q_multimodal_resize()
 # ==========================================================================
 
 
-def _q_train_order_manifest():
+@_query("train_order_manifest", """
+SELECT doc_id,
+       CAST(ROW_NUMBER() OVER (
+         ORDER BY md5('e0' || CAST(doc_id AS VARCHAR)), doc_id
+       ) AS BIGINT) AS position
+FROM documents
+""")
+def _train_order_manifest(spark, sf_dir):
     """Order+ — deterministic global training-order manifest
     (operators/ordering.py shuffle_manifest): every doc's 1-based rank
     under ORDER BY (md5(epoch_salt || doc_id), doc_id) — the
@@ -3943,48 +3351,24 @@ def _q_train_order_manifest():
     md5-prefix-bucketed rank (the sampling.py machinery), so no global
     corpus-sized window; the oracle IS the single global window,
     certifying the two-phase decomposition equals it exactly."""
-
-    def run(spark, sf_dir):
-        from .operators.ordering import shuffle_manifest
-
-        load_views(spark, sf_dir)
-        return shuffle_manifest(spark.table("documents"), salt="e0")
-
-    return run, """
-SELECT doc_id,
-       CAST(ROW_NUMBER() OVER (
-         ORDER BY md5('e0' || CAST(doc_id AS VARCHAR)), doc_id
-       ) AS BIGINT) AS position
-FROM documents
-"""
+    return ordering.shuffle_manifest(spark.table("documents"), salt="e0")
 
 
-_REGISTRY["train_order_manifest"] = _q_train_order_manifest()
-
-
-def _q_bpe_pair_counts():
-    """BPE+ — adjacent-token-pair frequencies (operators/bpe.py
-    pair_counts), the statistic every BPE training round maximizes.
-    Char-token corpus, so the oracle counts 2-char windows of the raw
-    text. One map-side-combined shuffle of |distinct pairs| rows."""
-
-    def run(spark, sf_dir):
-        from .operators.bpe import pair_counts
-
-        seq = _char_tokens_df(spark, sf_dir)
-        return pair_counts(seq)
-
-    return run, """
+@_query("bpe_pair_counts", """
 SELECT ascii(substr(text, CAST(i AS INTEGER), 1)) AS left,
        ascii(substr(text, CAST(i AS INTEGER) + 1, 1)) AS right,
        COUNT(*) AS n_pairs
 FROM documents, (SELECT unnest(range(1, 100001)) AS i) g
 WHERE i < length(text)
 GROUP BY 1, 2
-"""
-
-
-_REGISTRY["bpe_pair_counts"] = _q_bpe_pair_counts()
+""")
+def _bpe_pair_counts(spark, sf_dir):
+    """BPE+ — adjacent-token-pair frequencies (operators/bpe.py
+    pair_counts), the statistic every BPE training round maximizes.
+    Char-token corpus, so the oracle counts 2-char windows of the raw
+    text. One map-side-combined shuffle of |distinct pairs| rows."""
+    seq = _char_tokens_df(spark)
+    return bpe.pair_counts(seq)
 
 
 def _bpe_oracle_sql(n_merges: int) -> str:
@@ -4081,7 +3465,11 @@ GROUP BY doc_id, length(s)
     )
 
 
-def _q_bpe_train_merges():
+_BPE_MERGES = 4
+
+
+@_query("bpe_train_merges", _bpe_oracle_sql(_BPE_MERGES))
+def _bpe_train_merges(spark, sf_dir):
     """BPE+ — the full distributed BPE TRAINING loop (operators/bpe.py
     bpe_train): 4 rounds of count -> argmax (count DESC, pair ASC) ->
     greedy merge, certified end to end. The oracle replays every round
@@ -4089,21 +3477,12 @@ def _q_bpe_train_merges():
     reserved control chars), so identical merge tables mean the
     distributed pair counts, the tie-break, AND the greedy overlap
     semantics all match."""
-    N_MERGES = 4
-
-    def run(spark, sf_dir):
-        from .operators.bpe import bpe_train
-
-        seq = _char_tokens_df(spark, sf_dir)
-        return bpe_train(seq, n_merges=N_MERGES)
-
-    return run, _bpe_oracle_sql(N_MERGES)
+    seq = _char_tokens_df(spark)
+    return bpe.bpe_train(seq, n_merges=_BPE_MERGES)
 
 
-_REGISTRY["bpe_train_merges"] = _q_bpe_train_merges()
-
-
-def _q_bpe_encode_stats():
+@_query("bpe_encode_stats", _bpe_encode_oracle_sql(_BPE_MERGES))
+def _bpe_encode_stats(spark, sf_dir):
     """BPE+ — TOKENIZE the corpus with a trained merge table
     (operators/bpe.py bpe_encode): the merge table from 4 training
     rounds is applied in rank order in ONE Arrow pass (plan depth O(1)
@@ -4111,61 +3490,28 @@ def _q_bpe_encode_stats():
     (n_tok, sum_tok) of the encoded stream; the oracle replays training
     AND encoding round by round on the text rendering, so matching
     sums certify every merged token id and position."""
-    N_MERGES = 4
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.bpe import bpe_encode, bpe_train
-
-        seq = _char_tokens_df(spark, sf_dir)
-        enc = bpe_encode(seq, bpe_train(seq, n_merges=N_MERGES))
-        return enc.select(
-            "doc_id",
-            F.size("tokens").cast("long").alias("n_tok"),
-            F.aggregate(
-                "tokens", F.lit(0).cast("long"), lambda a, x: a + x.cast("long")
-            ).alias("sum_tok"),
-        )
-
-    return run, _bpe_encode_oracle_sql(N_MERGES)
-
-
-_REGISTRY["bpe_encode_stats"] = _q_bpe_encode_stats()
-
-
-def _q_decontaminate_bloom():
-    """Decontam+ — BLOOM-FILTER decontamination (operators/decontam.py
-    bloom_decontaminate): the benchmark gram set compressed to a
-    2^20-bit bitmap (k=3 md5-derived positions per gram), corpus tested
-    in ONE narrow Arrow pass — zero joins/shuffles, vs the exact path's
-    broadcast of full gram strings. Deterministic false positives: both
-    engines compute the identical md5 positions, so the oracle replays
-    the bitmap AND the FP set bit-for-bit. Same corpus/benchmark split
-    as `decontaminate` (doc_id % 50)."""
-    N = 5
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.decontam import bloom_decontaminate
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        return bloom_decontaminate(
-            docs.filter(F.col("doc_id") % 50 != 0),
-            docs.filter(F.col("doc_id") % 50 == 0),
-            n=N,
-        )
-
-    hexpos = (
-        "((((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16"
-        " + strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 16"
-        " + strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16"
-        " + strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * 16"
-        " + strpos('0123456789abcdef', substr(h, 5, 1)) - 1"
+    seq = _char_tokens_df(spark)
+    enc = bpe.bpe_encode(seq, bpe.bpe_train(seq, n_merges=_BPE_MERGES))
+    return enc.select(
+        "doc_id",
+        F.size("tokens").cast("long").alias("n_tok"),
+        F.aggregate(
+            "tokens", F.lit(0).cast("long"), lambda a, x: a + x.cast("long")
+        ).alias("sum_tok"),
     )
-    return run, f"""
+
+
+# 20-bit bitmap position: the first 5 hex digits of md5 h
+_BLOOM_HEXPOS = (
+    "((((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16"
+    " + strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 16"
+    " + strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16"
+    " + strpos('0123456789abcdef', substr(h, 4, 1)) - 1) * 16"
+    " + strpos('0123456789abcdef', substr(h, 5, 1)) - 1"
+)
+
+
+@_query("decontaminate_bloom", f"""
 WITH words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
 ), sh AS (
@@ -4174,7 +3520,7 @@ WITH words AS (
   FROM words WHERE len(w) >= 5
 ), bench_pos AS (
   SELECT DISTINCT pos FROM (
-    SELECT {hexpos} AS pos FROM (
+    SELECT {_BLOOM_HEXPOS} AS pos FROM (
       SELECT md5(CAST(j AS VARCHAR) || ':' || shingle) AS h
       FROM (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0),
            (SELECT unnest(range(3)) AS j)
@@ -4184,7 +3530,7 @@ WITH words AS (
   SELECT doc_id, shingle FROM sh WHERE doc_id % 50 <> 0
 ), gram_hits AS (
   SELECT doc_id, shingle FROM (
-    SELECT cg.doc_id, cg.shingle, {hexpos} AS pos FROM (
+    SELECT cg.doc_id, cg.shingle, {_BLOOM_HEXPOS} AS pos FROM (
       SELECT doc_id, shingle, md5(CAST(j AS VARCHAR) || ':' || shingle) AS h
       FROM cg, (SELECT unnest(range(3)) AS j)
     ) cg
@@ -4203,50 +3549,40 @@ FROM documents d
 LEFT JOIN sizes s ON s.doc_id = d.doc_id
 LEFT JOIN per_doc p ON p.doc_id = d.doc_id
 WHERE d.doc_id % 50 <> 0
-"""
+""")
+def _decontaminate_bloom(spark, sf_dir):
+    """Decontam+ — BLOOM-FILTER decontamination (operators/decontam.py
+    bloom_decontaminate): the benchmark gram set compressed to a
+    2^20-bit bitmap (k=3 md5-derived positions per gram), corpus tested
+    in ONE narrow Arrow pass — zero joins/shuffles, vs the exact path's
+    broadcast of full gram strings. Deterministic false positives: both
+    engines compute the identical md5 positions, so the oracle replays
+    the bitmap AND the FP set bit-for-bit. Same corpus/benchmark split
+    as `decontaminate` (doc_id % 50)."""
+    docs = spark.table("documents")
+    return decontam.bloom_decontaminate(
+        docs.filter(F.col("doc_id") % 50 != 0),
+        docs.filter(F.col("doc_id") % 50 == 0),
+        n=_DECONTAM_N,
+    )
 
 
-_REGISTRY["decontaminate_bloom"] = _q_decontaminate_bloom()
-
-
-def _q_emb_label_centroids():
-    """Embedding+ — per-label centroid components
-    (operators/similarity.py label_centroids): the SemDeDup-style
-    cluster summary. Exact decimal sums (order-independent) divided as
-    double, rounded 6 — the engine's oracle float rule."""
-
-    def run(spark, sf_dir):
-        from .operators.similarity import label_centroids
-
-        load_views(spark, sf_dir)
-        return label_centroids(spark.table("embeddings"))
-
-    return run, """
+@_query("emb_label_centroids", """
 SELECT label AS group, CAST(i.i AS INTEGER) AS dim,
        ROUND(CAST(SUM(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DECIMAL(28,12))) AS DOUBLE)
              / COUNT(*), 6) AS c
 FROM embeddings, (SELECT unnest(range(64)) AS i) i
 GROUP BY label, i.i
-"""
+""")
+def _emb_label_centroids(spark, sf_dir):
+    """Embedding+ — per-label centroid components
+    (operators/similarity.py label_centroids): the SemDeDup-style
+    cluster summary. Exact decimal sums (order-independent) divided as
+    double, rounded 6 — the engine's oracle float rule."""
+    return similarity.label_centroids(spark.table("embeddings"))
 
 
-_REGISTRY["emb_label_centroids"] = _q_emb_label_centroids()
-
-
-def _q_emb_centroid_outliers():
-    """Embedding+ — cosine of every vector to its own label's centroid
-    (operators/similarity.py centroid_outliers): the outlier score for
-    embedding-space quality filtering. Centroids are the rounded
-    label_centroids contract (broadcast back as arrays); the corpus
-    side never shuffles."""
-
-    def run(spark, sf_dir):
-        from .operators.similarity import centroid_outliers
-
-        load_views(spark, sf_dir)
-        return centroid_outliers(spark.table("embeddings"))
-
-    return run, """
+@_query("emb_centroid_outliers", """
 WITH cent AS (
   SELECT label, CAST(i.i AS INTEGER) AS dim,
          ROUND(CAST(SUM(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DECIMAL(28,12))) AS DOUBLE)
@@ -4265,27 +3601,20 @@ SELECT e.vec_id, e.label AS group,
                      * sqrt(list_sum(list_transform(c.cent, x -> x * x))))
              ELSE 0.0 END, 6) AS cos_centroid
 FROM embeddings e JOIN carr c ON c.label = e.label
-"""
+""")
+def _emb_centroid_outliers(spark, sf_dir):
+    """Embedding+ — cosine of every vector to its own label's centroid
+    (operators/similarity.py centroid_outliers): the outlier score for
+    embedding-space quality filtering. Centroids are the rounded
+    label_centroids contract (broadcast back as arrays); the corpus
+    side never shuffles."""
+    return similarity.centroid_outliers(spark.table("embeddings"))
 
 
-_REGISTRY["emb_centroid_outliers"] = _q_emb_centroid_outliers()
+_M4_BUCKETS = 16
 
 
-def _q_m4_downsample():
-    """TS+ — M4 visualization downsample (operators/downsample.py):
-    min/max/first/last per (doc, pixel bucket) over the char-token
-    stream — the width-aware render aggregation (Jugel et al. VLDB'14).
-    One map-side-combined groupBy, no window/sort; the oracle replays
-    bucket = floor(i·B/n) and arg_min/arg_max."""
-    B = 16
-
-    def run(spark, sf_dir):
-        from .operators.downsample import m4_downsample
-
-        seq = _char_tokens_df(spark, sf_dir)
-        return m4_downsample(seq, n_buckets=B)
-
-    return run, f"""
+@_query("m4_downsample", f"""
 WITH chars AS (
   SELECT doc_id, CAST(i - 1 AS BIGINT) AS i, length(text) AS n,
          ascii(substr(text, CAST(i AS INTEGER), 1)) AS v
@@ -4293,39 +3622,23 @@ WITH chars AS (
   WHERE i <= length(text)
 )
 SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-       CAST(i * {B} // n AS INTEGER) AS bucket,
+       CAST(i * {_M4_BUCKETS} // n AS INTEGER) AS bucket,
        MIN(v) AS min_v, MAX(v) AS max_v,
        arg_min(v, i) AS first_v, arg_max(v, i) AS last_v,
        COUNT(*) AS n
-FROM chars GROUP BY doc_id, i * {B} // n
-"""
+FROM chars GROUP BY doc_id, i * {_M4_BUCKETS} // n
+""")
+def _m4_downsample(spark, sf_dir):
+    """TS+ — M4 visualization downsample (operators/downsample.py):
+    min/max/first/last per (doc, pixel bucket) over the char-token
+    stream — the width-aware render aggregation (Jugel et al. VLDB'14).
+    One map-side-combined groupBy, no window/sort; the oracle replays
+    bucket = floor(i·B/n) and arg_min/arg_max."""
+    seq = _char_tokens_df(spark)
+    return downsample.m4_downsample(seq, n_buckets=_M4_BUCKETS)
 
 
-_REGISTRY["m4_downsample"] = _q_m4_downsample()
-
-
-def _q_lm_avg_prob():
-    """Text+ — char-bigram LM quality score (functions/text.py
-    lm_avg_prob): mean add-one-smoothed bigram probability of each
-    corpus doc under a model trained on the doc_id % 10 == 0 slice —
-    the CCNet-style "LM-likes-it" quality signal in its engine-portable
-    mean-probability form (each p is one correctly-rounded IEEE integer
-    division; decimal-sum rule for the mean — see the operator
-    docstring for why not log-perplexity)."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .functions.text import lm_avg_prob
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        return lm_avg_prob(
-            docs.filter(F.col("doc_id") % 10 != 0),
-            docs.filter(F.col("doc_id") % 10 == 0),
-        )
-
-    return run, """
+@_query("lm_avg_prob", """
 WITH pairs AS (
   SELECT doc_id, substr(text, CAST(i AS INTEGER), 1) AS a,
          substr(text, CAST(i AS INTEGER) + 1, 1) AS b
@@ -4354,52 +3667,23 @@ LEFT JOIN cab USING (a, b)
 LEFT JOIN ca USING (a)
 CROSS JOIN v
 GROUP BY doc_id
-"""
+""")
+def _lm_avg_prob(spark, sf_dir):
+    """Text+ — char-bigram LM quality score (functions/text.py
+    lm_avg_prob): mean add-one-smoothed bigram probability of each
+    corpus doc under a model trained on the doc_id % 10 == 0 slice —
+    the CCNet-style "LM-likes-it" quality signal in its engine-portable
+    mean-probability form (each p is one correctly-rounded IEEE integer
+    division; decimal-sum rule for the mean — see the operator
+    docstring for why not log-perplexity)."""
+    docs = spark.table("documents")
+    return text.lm_avg_prob(
+        docs.filter(F.col("doc_id") % 10 != 0),
+        docs.filter(F.col("doc_id") % 10 == 0),
+    )
 
 
-_REGISTRY["lm_avg_prob"] = _q_lm_avg_prob()
-
-
-def _q_rollup_tier_upsert():
-    """TS+ — incremental continuous-aggregate maintenance
-    (operators/rollup.py rollup_upsert): a corpus whose doc_id % 7 == 0
-    docs were first ingested STALE (text reversed) is repaired by
-    re-rolling ONLY the delta and anti-join-replacing those docs' tier
-    rows. The oracle is the plain full-corpus 1m-tier rollup of the
-    FRESH text — certifying the upsert (including dropped trailing
-    windows and untouched docs) is indistinguishable from a full
-    recompute."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.rollup import rollup_all_tiers, rollup_upsert, tier_points
-
-        load_views(spark, sf_dir)
-        docs = spark.table("documents")
-        tiers = (("1s", 16), ("1m", 4))
-        stale = docs.withColumn(
-            "text",
-            F.when(F.col("doc_id") % 7 == 0, F.reverse("text")).otherwise(
-                F.col("text")
-            ),
-        )
-        existing = tier_points(
-            rollup_all_tiers(_char_tokens_of(stale), tiers)["1m"]
-        )
-        delta = _char_tokens_of(docs.filter(F.col("doc_id") % 7 == 0))
-        out = rollup_upsert(existing, delta, tiers, "1m")
-        return out.select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            "win_no",
-            "min_v",
-            "max_v",
-            "sum_v",
-            "cnt",
-            "mean_v",
-        )
-
-    return run, """
+@_query("rollup_tier_upsert", """
 WITH chars AS (
   SELECT doc_id, i, ascii(substr(text, CAST(i AS INTEGER), 1)) AS v
   FROM documents, (SELECT unnest(range(1, 100001)) AS i) g
@@ -4411,28 +3695,44 @@ SELECT doc_id,
        CAST(SUM(v) AS BIGINT) AS sum_v, COUNT(*) AS cnt,
        ROUND(CAST(SUM(v) AS DOUBLE) / COUNT(*), 6) AS mean_v
 FROM chars GROUP BY doc_id, (i - 1) // 64
-"""
+""")
+def _rollup_tier_upsert(spark, sf_dir):
+    """TS+ — incremental continuous-aggregate maintenance
+    (operators/rollup.py rollup_upsert): a corpus whose doc_id % 7 == 0
+    docs were first ingested STALE (text reversed) is repaired by
+    re-rolling ONLY the delta and anti-join-replacing those docs' tier
+    rows. The oracle is the plain full-corpus 1m-tier rollup of the
+    FRESH text — certifying the upsert (including dropped trailing
+    windows and untouched docs) is indistinguishable from a full
+    recompute."""
+    docs = spark.table("documents")
+    tiers = (("1s", 16), ("1m", 4))
+    stale = docs.withColumn(
+        "text",
+        F.when(F.col("doc_id") % 7 == 0, F.reverse("text")).otherwise(
+            F.col("text")
+        ),
+    )
+    existing = rollup.tier_points(
+        rollup.rollup_all_tiers(_char_tokens_of(stale), tiers)["1m"]
+    )
+    delta = _char_tokens_of(docs.filter(F.col("doc_id") % 7 == 0))
+    out = rollup.rollup_upsert(existing, delta, tiers, "1m")
+    return out.select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        "win_no",
+        "min_v",
+        "max_v",
+        "sum_v",
+        "cnt",
+        "mean_v",
+    )
 
 
-_REGISTRY["rollup_tier_upsert"] = _q_rollup_tier_upsert()
+_ORDER_BATCH = 64
 
 
-def _q_train_order_batches():
-    """Order+ — global batch assignment over the deterministic epoch
-    permutation (operators/ordering.py epoch_batches): the manifest a
-    data loader consumes for reproducible, resumable training. Pure
-    projection on shuffle_manifest (same two-phase rank plan, no extra
-    exchange); the oracle replays the single global window + integer
-    batch arithmetic."""
-    B = 64
-
-    def run(spark, sf_dir):
-        from .operators.ordering import epoch_batches
-
-        load_views(spark, sf_dir)
-        return epoch_batches(spark.table("documents"), batch_size=B, salt="e1")
-
-    return run, f"""
+@_query("train_order_batches", f"""
 WITH m AS (
   SELECT doc_id,
          CAST(ROW_NUMBER() OVER (
@@ -4441,28 +3741,21 @@ WITH m AS (
   FROM documents
 )
 SELECT doc_id, position,
-       CAST((position - 1) // {B} AS BIGINT) AS batch_no,
-       CAST((position - 1) % {B} AS INTEGER) AS pos_in_batch
+       CAST((position - 1) // {_ORDER_BATCH} AS BIGINT) AS batch_no,
+       CAST((position - 1) % {_ORDER_BATCH} AS INTEGER) AS pos_in_batch
 FROM m
-"""
+""")
+def _train_order_batches(spark, sf_dir):
+    """Order+ — global batch assignment over the deterministic epoch
+    permutation (operators/ordering.py epoch_batches): the manifest a
+    data loader consumes for reproducible, resumable training. Pure
+    projection on shuffle_manifest (same two-phase rank plan, no extra
+    exchange); the oracle replays the single global window + integer
+    batch arithmetic."""
+    return ordering.epoch_batches(spark.table("documents"), batch_size=_ORDER_BATCH, salt="e1")
 
 
-_REGISTRY["train_order_batches"] = _q_train_order_batches()
-
-
-def _q_tok_unigram_zipf():
-    """Vocab+ — corpus token frequencies with Zipf rank
-    (operators/bpe.py unigram_stats): the vocabulary report tokenizer
-    training starts from. One |vocab|-row shuffle; the rank window runs
-    on the bounded |vocab|-row aggregate (waived global window)."""
-
-    def run(spark, sf_dir):
-        from .operators.bpe import unigram_stats
-
-        seq = _char_tokens_df(spark, sf_dir)
-        return unigram_stats(seq)
-
-    return run, """
+@_query("tok_unigram_zipf", """
 WITH c AS (
   SELECT ascii(substr(text, CAST(i AS INTEGER), 1)) AS token, COUNT(*) AS n
   FROM documents, (SELECT unnest(range(1, 100001)) AS i) g
@@ -4471,26 +3764,17 @@ WITH c AS (
 SELECT token, CAST(n AS BIGINT) AS n,
        CAST(ROW_NUMBER() OVER (ORDER BY n DESC, token ASC) AS BIGINT) AS rank
 FROM c
-"""
+""")
+def _tok_unigram_zipf(spark, sf_dir):
+    """Vocab+ — corpus token frequencies with Zipf rank
+    (operators/bpe.py unigram_stats): the vocabulary report tokenizer
+    training starts from. One |vocab|-row shuffle; the rank window runs
+    on the bounded |vocab|-row aggregate (waived global window)."""
+    seq = _char_tokens_df(spark)
+    return bpe.unigram_stats(seq)
 
 
-_REGISTRY["tok_unigram_zipf"] = _q_tok_unigram_zipf()
-
-
-def _q_src_char_drift():
-    """Quality+ — per-source total-variation drift of the char
-    distribution vs the whole corpus (functions/text.py
-    char_distribution_drift): the feed-health monitor. TV, not KL, so
-    every term is correctly-rounded IEEE arithmetic (no libm log);
-    decimal-sum float rule for the Σ."""
-
-    def run(spark, sf_dir):
-        from .functions.text import char_distribution_drift
-
-        load_views(spark, sf_dir)
-        return char_distribution_drift(spark.table("documents"))
-
-    return run, """
+@_query("src_char_drift", """
 WITH chars AS (
   SELECT source AS grp, substr(text, CAST(i AS INTEGER), 1) AS ch
   FROM documents, (SELECT unnest(range(1, 100001)) AS i) g
@@ -4514,26 +3798,17 @@ CROSS JOIN vocab
 LEFT JOIN per ON per.grp = per_g.grp AND per.ch = vocab.ch
 CROSS JOIN total
 GROUP BY per_g.grp, per_g.n_g
-"""
+""")
+def _src_char_drift(spark, sf_dir):
+    """Quality+ — per-source total-variation drift of the char
+    distribution vs the whole corpus (functions/text.py
+    char_distribution_drift): the feed-health monitor. TV, not KL, so
+    every term is correctly-rounded IEEE arithmetic (no libm log);
+    decimal-sum float rule for the Σ."""
+    return text.char_distribution_drift(spark.table("documents"))
 
 
-_REGISTRY["src_char_drift"] = _q_src_char_drift()
-
-
-def _q_gopher_quality_flags():
-    """Quality+ — Gopher-rule document filter flags (functions/text.py
-    gopher_quality_flags): word count / mean word length / symbol and
-    ellipsis ratios / alpha-word share / stopword presence, every
-    threshold in integer cross-multiplied form so the booleans are
-    bit-portable with no float division. Zero-shuffle projection."""
-
-    def run(spark, sf_dir):
-        from .functions.text import gopher_quality_flags
-
-        load_views(spark, sf_dir)
-        return gopher_quality_flags(spark.table("documents"))
-
-    return run, """
+@_query("gopher_quality_flags", """
 WITH w AS (
   SELECT doc_id, text,
          list_filter(string_split(text, ' '), x -> x <> '') AS words,
@@ -4563,10 +3838,14 @@ SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
         AND (n_alpha * 5 >= n_words * 4)
         AND (n_stop >= 2)) AS kept
 FROM s
-"""
-
-
-_REGISTRY["gopher_quality_flags"] = _q_gopher_quality_flags()
+""")
+def _gopher_quality_flags(spark, sf_dir):
+    """Quality+ — Gopher-rule document filter flags (functions/text.py
+    gopher_quality_flags): word count / mean word length / symbol and
+    ellipsis ratios / alpha-word share / stopword presence, every
+    threshold in integer cross-multiplied form so the booleans are
+    bit-portable with no float division. Zero-shuffle projection."""
+    return text.gopher_quality_flags(spark.table("documents"))
 
 
 # ==========================================================================
@@ -4575,23 +3854,7 @@ _REGISTRY["gopher_quality_flags"] = _q_gopher_quality_flags()
 # ==========================================================================
 
 
-def _q_agg_exact_quantiles():
-    """A2+ — exact distributed quantiles, counting-sort form (operators/
-    quantiles.py): the reference's np.median rate inference
-    (/root/reference/processor/reader.py:85-96) generalized to a
-    scalable exact per-group quantile over an integral domain. Oracle
-    replays the same cross-multiplied integer rank thresholds — no
-    float quantile math in either engine."""
-
-    def run(spark, sf_dir):
-        from .operators.quantiles import exact_group_quantiles
-
-        load_views(spark, sf_dir)
-        return exact_group_quantiles(
-            spark.table("documents"), "source", "n_chars", (0.5, 0.9, 0.99)
-        )
-
-    return run, """
+@_query("agg_exact_quantiles", """
 WITH h AS (
   SELECT source AS grp, n_chars AS v, COUNT(*) AS c FROM documents GROUP BY 1, 2
 ), cum AS (
@@ -4605,52 +3868,20 @@ SELECT grp, CAST(MAX(n) AS BIGINT) AS n,
        MIN(CASE WHEN cum * 10 >= n * 9 THEN v END) AS p90,
        MIN(CASE WHEN cum * 100 >= n * 99 THEN v END) AS p99
 FROM cum GROUP BY grp
-"""
+""")
+def _agg_exact_quantiles(spark, sf_dir):
+    """A2+ — exact distributed quantiles, counting-sort form (operators/
+    quantiles.py): the reference's np.median rate inference
+    (reference processor/reader.py:85-96) generalized to a
+    scalable exact per-group quantile over an integral domain. Oracle
+    replays the same cross-multiplied integer rank thresholds — no
+    float quantile math in either engine."""
+    return quantiles.exact_group_quantiles(
+        spark.table("documents"), "source", "n_chars", (0.5, 0.9, 0.99)
+    )
 
 
-_REGISTRY["agg_exact_quantiles"] = _q_agg_exact_quantiles()
-
-
-def _q_w2_gapfill_interp():
-    """W2 policy #2 — LINEAR interpolation gap-fill (operators/
-    gapfill.py::interp_fill) over the same minute-grid fixture as
-    w2_gapfill_grid (which forward-fills). Interior gaps get the
-    straight line between nearest observed neighbors; edges clamp.
-    The measure is fixed-pointed to integer cents and the quotient is
-    exact portable floor division (pmod form) — no floats anywhere, so
-    both engines hash identically (a per-row ROUND(double,6) variant
-    measurably disagreed in the last ulp ~1/10^4 rows)."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.gapfill import interp_fill
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events").filter(F.col("user_id") < 30)
-        obs = ev.groupBy(
-            "user_id",
-            F.expr("unix_micros(ts) div 60000000").alias("win"),
-        ).agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("v")
-        )
-        b = obs.groupBy("user_id").agg(
-            F.min("win").alias("w0"), F.max("win").alias("w1")
-        )
-        grid = b.select(
-            "user_id", F.explode(F.sequence("w0", "w1")).alias("win")
-        )
-        joined = grid.join(obs, ["user_id", "win"], "left")
-        filled = interp_fill(joined, "user_id", "win", "v")
-        return filled.groupBy("user_id").agg(
-            F.count("*").alias("n_grid"),
-            F.sum(F.when(F.col("v").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_interp"),
-            F.sum("v_interp").cast("bigint").alias("sum_interp_cents"),
-        )
-
-    return run, """
+@_query("w2_gapfill_interp", """
 WITH obs AS (
   SELECT user_id, epoch_us(ts) // 60000000 AS win,
          SUM(CAST(ROUND(value * 100) AS BIGINT)) AS v
@@ -4693,29 +3924,41 @@ SELECT user_id, COUNT(*) AS n_grid,
        CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_interp,
        CAST(SUM(v_interp) AS BIGINT) AS sum_interp_cents
 FROM filled GROUP BY user_id
-"""
+""")
+def _w2_gapfill_interp(spark, sf_dir):
+    """W2 policy #2 — LINEAR interpolation gap-fill (operators/
+    gapfill.py::interp_fill) over the same minute-grid fixture as
+    w2_gapfill_grid (which forward-fills). Interior gaps get the
+    straight line between nearest observed neighbors; edges clamp.
+    The measure is fixed-pointed to integer cents and the quotient is
+    exact portable floor division (pmod form) — no floats anywhere, so
+    both engines hash identically (a per-row ROUND(double,6) variant
+    measurably disagreed in the last ulp ~1/10^4 rows)."""
+    ev = spark.table("events").filter(F.col("user_id") < 30)
+    obs = ev.groupBy(
+        "user_id",
+        F.expr("unix_micros(ts) div 60000000").alias("win"),
+    ).agg(
+        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("v")
+    )
+    b = obs.groupBy("user_id").agg(
+        F.min("win").alias("w0"), F.max("win").alias("w1")
+    )
+    grid = b.select(
+        "user_id", F.explode(F.sequence("w0", "w1")).alias("win")
+    )
+    joined = grid.join(obs, ["user_id", "win"], "left")
+    filled = gapfill.interp_fill(joined, "user_id", "win", "v")
+    return filled.groupBy("user_id").agg(
+        F.count("*").alias("n_grid"),
+        F.sum(F.when(F.col("v").isNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_interp"),
+        F.sum("v_interp").cast("bigint").alias("sum_interp_cents"),
+    )
 
 
-_REGISTRY["w2_gapfill_interp"] = _q_w2_gapfill_interp()
-
-
-def _q_w_anomaly_zscore():
-    """F4+ — per-group sigma anomaly flags, integer-exact (operators/
-    anomaly.py): the reference's rate-tolerance consistency predicate
-    (/root/reference/processor/reader.py:98-106) generalized to a
-    cross-multiplied z^2 > k^2 test over integer cents; ONE bounded agg
-    + broadcast + zero-shuffle flag projection. Oracle replays the
-    identical integer inequality in HUGEINT."""
-
-    def run(spark, sf_dir):
-        from .operators.anomaly import zscore_flags
-
-        load_views(spark, sf_dir)
-        return zscore_flags(
-            spark.table("events"), "event_type", "value", "event_id", k=2
-        )
-
-    return run, """
+@_query("w_anomaly_zscore", """
 WITH c AS (
   SELECT event_id AS id, event_type AS grp,
          CAST(ROUND(value * 100) AS BIGINT) AS v_c
@@ -4735,28 +3978,20 @@ SELECT id, grp, v_c AS value_cents,
        CASE WHEN n > 1 AND dev * dev * (n - 1) > 4 * CAST(n AS HUGEINT) * var_num
             THEN CAST(SIGN(dev) AS INTEGER) ELSE 0 END AS side
 FROM j
-"""
+""")
+def _w_anomaly_zscore(spark, sf_dir):
+    """F4+ — per-group sigma anomaly flags, integer-exact (operators/
+    anomaly.py): the reference's rate-tolerance consistency predicate
+    (reference processor/reader.py:98-106) generalized to a
+    cross-multiplied z^2 > k^2 test over integer cents; ONE bounded agg
+    + broadcast + zero-shuffle flag projection. Oracle replays the
+    identical integer inequality in HUGEINT."""
+    return anomaly.zscore_flags(
+        spark.table("events"), "event_type", "value", "event_id", k=2
+    )
 
 
-_REGISTRY["w_anomaly_zscore"] = _q_w_anomaly_zscore()
-
-
-def _q_dedup_containment():
-    """Dedup+ — directional n-gram containment (operators/dedup.py::
-    ngram_containment_pairs): |A∩B|/|A| — the asymmetric near-dup
-    measure that catches a short doc wholly embedded in a long one
-    (Jaccard misses it). Same inverted-index shape as the Jaccard
-    verifier; oracle shares the shingle CTE."""
-
-    def run(spark, sf_dir):
-        from .operators.dedup import ngram_containment_pairs
-
-        load_views(spark, sf_dir)
-        return ngram_containment_pairs(
-            spark.table("documents"), n=3, threshold=0.5
-        )
-
-    return run, f"""
+@_query("dedup_containment", f"""
 WITH {_DUCK_SHINGLES_CTE},
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
@@ -4767,26 +4002,19 @@ inter AS (
 SELECT doc_a, doc_b, ROUND(n_common / sa.n_sh, 6) AS containment
 FROM inter JOIN sizes sa ON sa.doc_id = doc_a
 WHERE n_common >= 0.5 * sa.n_sh
-"""
+""")
+def _dedup_containment(spark, sf_dir):
+    """Dedup+ — directional n-gram containment (operators/dedup.py::
+    ngram_containment_pairs): |A∩B|/|A| — the asymmetric near-dup
+    measure that catches a short doc wholly embedded in a long one
+    (Jaccard misses it). Same inverted-index shape as the Jaccard
+    verifier; oracle shares the shingle CTE."""
+    return dedup.ngram_containment_pairs(
+        spark.table("documents"), n=3, threshold=0.5
+    )
 
 
-_REGISTRY["dedup_containment"] = _q_dedup_containment()
-
-
-def _q_src_overlap_matrix():
-    """Mixture+ — cross-source shingle overlap matrix (operators/
-    dedup.py::source_overlap_matrix): which corpus slices share content
-    (mirrored crawls / syndication), so mixture rates don't
-    double-count. Shingles dedup'd to the source grain first; the
-    per-shingle pair walk is bounded by |sources|."""
-
-    def run(spark, sf_dir):
-        from .operators.dedup import source_overlap_matrix
-
-        load_views(spark, sf_dir)
-        return source_overlap_matrix(spark.table("documents"), n=3)
-
-    return run, """
+@_query("src_overlap_matrix", """
 WITH words AS (
   SELECT source, string_split(text, ' ') AS w FROM documents
 ), sh0 AS (
@@ -4808,41 +4036,17 @@ SELECT source_a, source_b, CAST(n_common AS BIGINT) AS n_common,
 FROM inter
 JOIN sizes sa ON sa.src = source_a
 JOIN sizes sb ON sb.src = source_b
-"""
+""")
+def _src_overlap_matrix(spark, sf_dir):
+    """Mixture+ — cross-source shingle overlap matrix (operators/
+    dedup.py::source_overlap_matrix): which corpus slices share content
+    (mirrored crawls / syndication), so mixture rates don't
+    double-count. Shingles dedup'd to the source grain first; the
+    per-shingle pair walk is bounded by |sources|."""
+    return dedup.source_overlap_matrix(spark.table("documents"), n=3)
 
 
-_REGISTRY["src_overlap_matrix"] = _q_src_overlap_matrix()
-
-
-def _q_lttb_downsample():
-    """Viz+ — largest-triangle downsample, bucket-mean-anchor LTTB
-    variant (operators/downsample.py::lttb_downsample): the
-    perceptually-weighted one-point-per-pixel companion to
-    m4_downsample. Integer-exact: x is the per-user minute offset, y is
-    cents, the doubled triangle area is compared after scaling by
-    n_l^2*n_r — pure int64, so the argmax is bit-portable. Oracle
-    replays the identical scaled-area argmax."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.downsample import lttb_downsample
-
-        load_views(spark, sf_dir)
-        ev = spark.table("events").filter(F.col("user_id") < 30)
-        obs = ev.groupBy(
-            "user_id",
-            F.expr("unix_micros(ts) div 60000000").alias("win"),
-        ).agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("v"))
-        b = obs.groupBy("user_id").agg(F.min("win").alias("w0"))
-        pts = obs.join(b, "user_id").select(
-            F.col("user_id").alias("part"),
-            (F.col("win") - F.col("w0")).alias("x"),
-            F.col("v").alias("y"),
-        )
-        return lttb_downsample(pts, 60, part_col="part", x_col="x", y_col="y")
-
-    return run, """
+@_query("lttb_downsample", """
 WITH obs AS (
   SELECT user_id, epoch_us(ts) // 60000000 AS win,
          SUM(CAST(ROUND(value * 100) AS BIGINT)) AS v
@@ -4876,10 +4080,27 @@ WITH obs AS (
 )
 SELECT part, bucket, x, y, CAST(COALESCE(area2, -1) AS BIGINT) AS area2
 FROM rk WHERE rn = 1
-"""
-
-
-_REGISTRY["lttb_downsample"] = _q_lttb_downsample()
+""")
+def _lttb_downsample(spark, sf_dir):
+    """Viz+ — largest-triangle downsample, bucket-mean-anchor LTTB
+    variant (operators/downsample.py::lttb_downsample): the
+    perceptually-weighted one-point-per-pixel companion to
+    m4_downsample. Integer-exact: x is the per-user minute offset, y is
+    cents, the doubled triangle area is compared after scaling by
+    n_l^2*n_r — pure int64, so the argmax is bit-portable. Oracle
+    replays the identical scaled-area argmax."""
+    ev = spark.table("events").filter(F.col("user_id") < 30)
+    obs = ev.groupBy(
+        "user_id",
+        F.expr("unix_micros(ts) div 60000000").alias("win"),
+    ).agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("v"))
+    b = obs.groupBy("user_id").agg(F.min("win").alias("w0"))
+    pts = obs.join(b, "user_id").select(
+        F.col("user_id").alias("part"),
+        (F.col("win") - F.col("w0")).alias("x"),
+        F.col("v").alias("y"),
+    )
+    return downsample.lttb_downsample(pts, 60, part_col="part", x_col="x", y_col="y")
 
 
 _OBS_CENTS_CTE = """
@@ -4892,8 +4113,6 @@ obs AS (
 
 
 def _obs_cents(spark):
-    from pyspark.sql import functions as F
-
     return (
         spark.table("events")
         .groupBy(
@@ -4903,20 +4122,7 @@ def _obs_cents(spark):
     )
 
 
-def _q_ts_cusum_changepoint():
-    """Trend+ — per-channel CUSUM mean-shift changepoint (operators/
-    trend.py::cusum_changepoint): argmax_k |n*prefix_k - k*total| over
-    the minute-grid cents series — the n^2-scaled classic CUSUM, pure
-    integers so the winning position is bit-portable; ties break to the
-    earliest position. One running window + one bounded agg per channel."""
-
-    def run(spark, sf_dir):
-        from .operators.trend import cusum_changepoint
-
-        load_views(spark, sf_dir)
-        return cusum_changepoint(_obs_cents(spark), "user_id", "win", "v")
-
-    return run, f"""
+@_query("ts_cusum_changepoint", f"""
 WITH {_OBS_CENTS_CTE},
 pre AS (
   SELECT user_id AS part, win AS pos,
@@ -4938,32 +4144,17 @@ pre AS (
 SELECT part, pos AS cp_ord, CAST(c_k AS BIGINT) AS cusum_scaled,
        CAST(n AS BIGINT) AS n
 FROM rk WHERE rn = 1
-"""
+""")
+def _ts_cusum_changepoint(spark, sf_dir):
+    """Trend+ — per-channel CUSUM mean-shift changepoint (operators/
+    trend.py::cusum_changepoint): argmax_k |n*prefix_k - k*total| over
+    the minute-grid cents series — the n^2-scaled classic CUSUM, pure
+    integers so the winning position is bit-portable; ties break to the
+    earliest position. One running window + one bounded agg per channel."""
+    return trend.cusum_changepoint(_obs_cents(spark), "user_id", "win", "v")
 
 
-_REGISTRY["ts_cusum_changepoint"] = _q_ts_cusum_changepoint()
-
-
-def _q_ts_trend_slope():
-    """Trend+ — per-channel OLS slope as an exact fraction (operators/
-    trend.py::trend_slope): (n*Sxy - Sx*Sy, n*Sxx - Sx^2) over
-    (minute-offset, cents) — the division never happens, so the
-    statistic is bit-portable. One map-side-combined agg per channel."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.trend import trend_slope
-
-        load_views(spark, sf_dir)
-        obs = _obs_cents(spark)
-        b = obs.groupBy("user_id").agg(F.min("win").alias("w0"))
-        pts = obs.join(b, "user_id").select(
-            "user_id", (F.col("win") - F.col("w0")).alias("x"), "v"
-        )
-        return trend_slope(pts, "user_id", "x", "v")
-
-    return run, f"""
+@_query("ts_trend_slope", f"""
 WITH {_OBS_CENTS_CTE},
 b AS (SELECT user_id, MIN(win) AS w0 FROM obs GROUP BY user_id),
 p AS (
@@ -4978,26 +4169,21 @@ SELECT part, CAST(n AS BIGINT) AS n,
        CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
        CAST(n * sxx - sx * sx AS BIGINT) AS slope_den
 FROM agg
-"""
+""")
+def _ts_trend_slope(spark, sf_dir):
+    """Trend+ — per-channel OLS slope as an exact fraction (operators/
+    trend.py::trend_slope): (n*Sxy - Sx*Sy, n*Sxx - Sx^2) over
+    (minute-offset, cents) — the division never happens, so the
+    statistic is bit-portable. One map-side-combined agg per channel."""
+    obs = _obs_cents(spark)
+    b = obs.groupBy("user_id").agg(F.min("win").alias("w0"))
+    pts = obs.join(b, "user_id").select(
+        "user_id", (F.col("win") - F.col("w0")).alias("x"), "v"
+    )
+    return trend.trend_slope(pts, "user_id", "x", "v")
 
 
-_REGISTRY["ts_trend_slope"] = _q_ts_trend_slope()
-
-
-def _q_ts_diff2_spike():
-    """Trend+ — sharpest second-difference kink per channel (operators/
-    trend.py::diff2_extrema): d2 = v_k - 2*v_{k-1} + v_{k-2} over the
-    minute-grid cents series, integer lag arithmetic in one ordered
-    window; earliest-position tie-break. The glitch complement to the
-    CUSUM's sustained mean shift."""
-
-    def run(spark, sf_dir):
-        from .operators.trend import diff2_extrema
-
-        load_views(spark, sf_dir)
-        return diff2_extrema(_obs_cents(spark), "user_id", "win", "v")
-
-    return run, f"""
+@_query("ts_diff2_spike", f"""
 WITH {_OBS_CENTS_CTE},
 d AS (
   SELECT user_id AS part, win AS pos,
@@ -5012,32 +4198,17 @@ d AS (
 )
 SELECT part, pos, CAST(d2 AS BIGINT) AS d2, CAST(n AS BIGINT) AS n
 FROM rk WHERE rn = 1
-"""
+""")
+def _ts_diff2_spike(spark, sf_dir):
+    """Trend+ — sharpest second-difference kink per channel (operators/
+    trend.py::diff2_extrema): d2 = v_k - 2*v_{k-1} + v_{k-2} over the
+    minute-grid cents series, integer lag arithmetic in one ordered
+    window; earliest-position tie-break. The glitch complement to the
+    CUSUM's sustained mean shift."""
+    return trend.diff2_extrema(_obs_cents(spark), "user_id", "win", "v")
 
 
-_REGISTRY["ts_diff2_spike"] = _q_ts_diff2_spike()
-
-
-def _q_ts_value_histogram():
-    """Monitor+ — per-group equi-width value histogram (operators/
-    trend.py::value_histogram): 20 bins over cents between each
-    event_type's own min/max; bin assignment and inclusive lower edges
-    via non-negative integer division (floor == truncate everywhere),
-    so counts and edges are bit-portable."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.trend import value_histogram
-
-        load_views(spark, sf_dir)
-        cents = spark.table("events").select(
-            "event_type",
-            F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
-        )
-        return value_histogram(cents, "event_type", "v_c", n_bins=20)
-
-    return run, """
+@_query("ts_value_histogram", """
 WITH c AS (
   SELECT event_type AS part, CAST(ROUND(value * 100) AS BIGINT) AS v
   FROM events
@@ -5052,37 +4223,21 @@ SELECT part, bin, COUNT(*) AS n,
             + (CASE WHEN (bin * (MIN(mx) - MIN(mn) + 1)) % 20 > 0
                     THEN 1 ELSE 0 END) AS BIGINT) AS lo
 FROM j GROUP BY part, bin
-"""
+""")
+def _ts_value_histogram(spark, sf_dir):
+    """Monitor+ — per-group equi-width value histogram (operators/
+    trend.py::value_histogram): 20 bins over cents between each
+    event_type's own min/max; bin assignment and inclusive lower edges
+    via non-negative integer division (floor == truncate everywhere),
+    so counts and edges are bit-portable."""
+    cents = spark.table("events").select(
+        "event_type",
+        F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
+    )
+    return trend.value_histogram(cents, "event_type", "v_c", n_bins=20)
 
 
-_REGISTRY["ts_value_histogram"] = _q_ts_value_histogram()
-
-
-def _q_w5_time_weighted():
-    """W5+ — time-weighted hourly mean over the irregular event series
-    (operators/irregular.py::time_weighted_mean): the hypertable
-    time_weight('locf') aggregate as an exact integer fraction
-    (twa_num, covered_us) — each observation weighted by how long it
-    was current, holding intervals clipped per window, a channel's
-    final point holding to the end of its own window. Consumers divide
-    at display time; nothing floats."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from .operators.irregular import time_weighted_mean
-
-        load_views(spark, sf_dir)
-        c = spark.table("events").select(
-            F.col("user_id").alias("part"),
-            F.expr("unix_micros(ts)").alias("t"),
-            F.round(F.col("value") * 100).cast("bigint").alias("v"),
-        )
-        return time_weighted_mean(
-            c, 3_600_000_000, part_col="part", ts_col="t", val_col="v"
-        )
-
-    return run, """
+@_query("w5_time_weighted", """
 WITH c AS (
   SELECT user_id AS part, epoch_us(ts) AS t,
          CAST(ROUND(value * 100) AS BIGINT) AS v
@@ -5103,7 +4258,22 @@ SELECT part, win,
        CAST(SUM(LEAST(t1, (win + 1) * 3600000000)
                 - GREATEST(t0, win * 3600000000)) AS BIGINT) AS covered_us
 FROM e GROUP BY part, win
-"""
+""")
+def _w5_time_weighted(spark, sf_dir):
+    """W5+ — time-weighted hourly mean over the irregular event series
+    (operators/irregular.py::time_weighted_mean): the hypertable
+    time_weight('locf') aggregate as an exact integer fraction
+    (twa_num, covered_us) — each observation weighted by how long it
+    was current, holding intervals clipped per window, a channel's
+    final point holding to the end of its own window. Consumers divide
+    at display time; nothing floats."""
+    c = spark.table("events").select(
+        F.col("user_id").alias("part"),
+        F.expr("unix_micros(ts)").alias("t"),
+        F.round(F.col("value") * 100).cast("bigint").alias("v"),
+    )
+    return irregular.time_weighted_mean(
+        c, 3_600_000_000, part_col="part", ts_col="t", val_col="v"
+    )
 
 
-_REGISTRY["w5_time_weighted"] = _q_w5_time_weighted()

@@ -12,7 +12,7 @@ The engine's flagship plan (reference lifecycle §3.1 re-expressed):
       -> checkpoint rows per (source, bucket) per stage (lineage.py)
 
 There is one ingest path: the blocks and tiers stages each scan the raw
-sequences once, and run as concurrent Spark jobs by default.
+sequences once, and always run as concurrent Spark jobs.
 
 Every stage is independently resumable: inputs are filtered through the
 checkpoint anti-join, outputs land with dynamic partition overwrite
@@ -55,15 +55,6 @@ class PipelineConfig:
     # /root/reference/processor/importer.py:117-127, re-expressed with
     # zero extra jobs)
     metrics: dict = field(default_factory=dict)
-    # run the blocks stage as a concurrent Spark job alongside the tier
-    # cascade (fills idle cores during tail tasks). r3 same-window A/B:
-    # under FIFO this was BIMODAL (15-42 s on identical input — whichever
-    # job submitted first starved the other); with per-stage FAIR pools
-    # (session.py scheduler.mode=FAIR + setLocalProperty below) it is
-    # both the fastest and the most stable mode measured: {24.4, 19.6,
-    # 20.9, 20.5} s vs serial {43.1, 50.1, 26.7, 23.0} s alternating in
-    # the same windows, and beats the r1 pin (21.6-28.6 s).
-    concurrent_stages: bool = True
 
 
 def _write_stage(
@@ -132,14 +123,15 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     {stage: output_path}.
 
     The blocks stage and the tier cascade are independent DAGs over the
-    same input, so by default they run as CONCURRENT Spark jobs (tiers
-    on the caller thread, blocks on a helper), each tagged with its own
-    FAIR scheduler pool: when one stage's task count drops below the
-    core count (tail tasks, small cascade tiers), the other fills the
-    idle slots. The pools matter — r3's same-window A/B showed plain
-    FIFO concurrency is bimodal (15-42 s on identical input: first-
-    submitted job starves the other), while FAIR-pooled concurrency is
-    the fastest AND most stable mode measured (~20 s vs serial 23-50 s).
+    same input, so they run as CONCURRENT Spark jobs (tiers on the
+    caller thread, blocks on a helper), each tagged with its own FAIR
+    scheduler pool: when one stage's task count drops below the core
+    count (tail tasks, small cascade tiers), the other fills the idle
+    slots. The pools matter — r3's same-window A/B showed plain FIFO
+    concurrency is bimodal (15-42 s on identical input: first-submitted
+    job starves the other), while FAIR-pooled concurrency is the fastest
+    AND most stable mode measured: {24.4, 19.6, 20.9, 20.5} s vs serial
+    {43.1, 50.1, 26.7, 23.0} s alternating in the same windows.
     """
     import threading
 
@@ -151,11 +143,10 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     # -- stage: blocks (concurrent job) -----------------------------------
     def _blocks_stage() -> None:
         try:
-            if cfg.concurrent_stages:
-                # FAIR pool per stage (session.py sets scheduler.mode=FAIR):
-                # without this, FIFO lets whichever job submits first hog
-                # every slot and the other stage stalls behind it
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", "blocks")
+            # FAIR pool per stage (session.py sets scheduler.mode=FAIR):
+            # without this, FIFO lets whichever job submits first hog
+            # every slot and the other stage stalls behind it
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "blocks")
             stage = "blocks"
             pending = (
                 lineage.pending_only(seq, spark, cfg.out_dir, stage, ["source", "bucket"])
@@ -173,15 +164,9 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
         except BaseException as e:  # surface on the caller thread
             blocks_err.append(e)
 
-    blocks_thread = None
-    if cfg.concurrent_stages:
-        blocks_thread = threading.Thread(target=_blocks_stage, name="blocks-stage")
-        blocks_thread.start()
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "tiers")
-    else:
-        _blocks_stage()
-        if blocks_err:
-            raise blocks_err[0]
+    blocks_thread = threading.Thread(target=_blocks_stage, name="blocks-stage")
+    blocks_thread.start()
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", "tiers")
     out["blocks"] = f"{cfg.out_dir}/blocks"
 
     # -- stage: tiers (every tier from one kernel pass over raw) ----------
@@ -225,9 +210,8 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     for name in tier_names:
         out[f"tier_{name}"] = f"{cfg.out_dir}/{stage}/tier={name}"
 
-    if blocks_thread is not None:
-        blocks_thread.join()
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+    blocks_thread.join()
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
     for t in record_threads:
         t.join()
     if blocks_err:

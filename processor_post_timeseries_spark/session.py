@@ -88,10 +88,11 @@ def get_spark(
         # job-commit over hundreds of (source,bucket) dirs is pure driver
         # time that caps scaling efficiency
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # FAIR scheduling between named pools: concurrent pipeline stages
-        # (plans/pipeline.py concurrent_stages) each tag their thread with
-        # a pool so neither job starves the other under FIFO; single-job
-        # workloads land in the default pool and are unaffected
+        # FAIR scheduling between named pools: the pipeline's blocks and
+        # tiers stages (plans/pipeline.py run_pipeline) run concurrently
+        # and each tag their thread with a pool so neither job starves the
+        # other under FIFO; single-job workloads land in the default pool
+        # and are unaffected
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
     )

@@ -44,3 +44,26 @@ def test_cached_views_stay_utc_after_session_tz_change(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     assert len(first) == 6 and first == second
     assert first[0]["h"] == 22 and str(first[1]["d"]) == "2024-03-10"
+
+
+def test_views_reload_after_files_rewritten_in_place(spark, tmp_path):
+    sf_dir = _sf_dir(tmp_path)
+    load_views(spark, sf_dir)
+    assert spark.table("events").count() == 6
+    # regenerate events under the same sf_dir, bigger and in many row
+    # groups: a view still planned over the old file's listing would
+    # split it by the old length and silently drop the row groups past it
+    ts = dt.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(100, 300), pa.int64()),
+                "ts": pa.array([ts] * 200, pa.timestamp("us")),
+            }
+        ),
+        tmp_path / "events.parquet",
+        row_group_size=10,
+    )
+    load_views(spark, sf_dir)
+    rows = spark.sql("SELECT event_id FROM events ORDER BY 1").collect()
+    assert [r[0] for r in rows] == list(range(100, 300))

@@ -23,7 +23,11 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb  # noqa: E402
 
-from processor_post_timeseries_spark.contract import TABLES, _REGISTRY  # noqa: E402
+from processor_post_timeseries_spark.contract import (  # noqa: E402
+    TABLES,
+    oracle_sql,
+    queries,
+)
 from processor_post_timeseries_spark.session import get_spark  # noqa: E402
 
 
@@ -75,7 +79,9 @@ def main() -> int:
             "oracle_rows": oracle_rows, "err": err, "rows_only": rows_only,
         }
 
-    for name, (fn, osql) in _REGISTRY.items():
+    oracles = oracle_sql()
+    for name, fn in queries().items():
+        osql = oracles.get(name)
         if name_filter and not any(p in name for p in name_filter.split("|")):
             continue
         try:

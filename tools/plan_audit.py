@@ -16,7 +16,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from processor_post_timeseries_spark.contract import _REGISTRY  # noqa: E402
+from processor_post_timeseries_spark.contract import queries  # noqa: E402
 from processor_post_timeseries_spark.session import get_spark  # noqa: E402
 
 # Reviewed flags: anti-pattern operators whose small side is BOUNDED BY
@@ -122,7 +122,7 @@ def main() -> int:
     spark = get_spark("plan-audit", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     bad = 0
-    for name, (fn, _sql) in sorted(_REGISTRY.items()):
+    for name, fn in sorted(queries().items()):
         if name_filter and name_filter not in name:
             continue
         try:
