@@ -109,6 +109,7 @@ def main(argv: list[str] | None = None) -> int:
     # absolute imports: spark-submit executes this file as a plain script
     # (no parent package), resolving the package from the --py-files zip
     from processor_post_timeseries_spark.plans.pipeline import (
+        STAGE_KEYS,
         PipelineConfig,
         run_pipeline,
     )
@@ -164,8 +165,7 @@ def main(argv: list[str] | None = None) -> int:
 
         stage = args.verify_lineage
         data_path = f"{args.out}/{stage}"
-        keys = ["source", "bucket"] if stage == "blocks" else ["tier", "source", "bucket"]
-        rows = verify_lineage(spark, args.out, stage, data_path, keys).collect()
+        rows = verify_lineage(spark, args.out, stage, data_path, STAGE_KEYS[stage]).collect()
         bad = sorted(r["partition_key"] for r in rows if not r["ok"])
         print(
             json.dumps(

@@ -42,6 +42,7 @@ import functools
 import hashlib
 import os
 import shutil
+import tempfile
 from collections.abc import Callable
 
 import numpy as np
@@ -1121,17 +1122,33 @@ def _a2_rate_validation(spark, sf_dir):
     )
 
 
+# free space /dev/shm must have before the scratch artifacts go there: the
+# artifact sets (legacy round trip + lineage_certify) take ~25 MB at sf0.1
+# and grow with sf, while a container's /dev/shm is often 64 MiB (Docker's
+# default) — a full tmpfs fails the query's write midway
+_MIN_SHM_FREE_BYTES = 1 << 30
+
+
+def _scratch_root() -> str:
+    """tmpfs when it exists and has room (same rationale as bench.py's
+    PTS_BENCH_OUT default: measure the compute path, not the single VM
+    disk), else the platform temp dir."""
+    try:
+        if shutil.disk_usage("/dev/shm").free >= _MIN_SHM_FREE_BYTES:
+            return "/dev/shm"
+    except OSError:  # no /dev/shm
+        pass
+    return tempfile.gettempdir()
+
+
 def _scratch_dir(name: str, sf_dir: str) -> str:
     """Bounded scratch space for contract queries that materialize files:
     one fixed directory per (query, sf) that each run wipes and reuses —
     tempfile.mkdtemp would leak a full artifact set per driver run. The
     returned DataFrame reads from it lazily, so deletion can only happen
     at the START of the next run, never at the end of this one."""
-    # tmpfs when available (same rationale as bench.py's PTS_BENCH_OUT
-    # default: measure the compute path, not the single VM disk)
-    root = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
     p = os.path.join(
-        f"{root}/pts_contract_scratch",
+        f"{_scratch_root()}/pts_contract_scratch",
         f"{name}-{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
     )
     shutil.rmtree(p, ignore_errors=True)
@@ -1165,7 +1182,7 @@ def _s8_lineage_certify(spark, sf_dir):
     )
     pipeline.run_pipeline(spark, seq, cfg)
     audit = lineage.verify_lineage(
-        spark, out_dir, "blocks", f"{out_dir}/blocks", ["source", "bucket"]
+        spark, out_dir, "blocks", f"{out_dir}/blocks", pipeline.STAGE_KEYS["blocks"]
     )
     # partition_key is "<source>/<bucket>"
     return audit.groupBy(

@@ -24,9 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.legacy import channel_from_json, decode_legacy_block
+from ..functions.legacy import channel_from_json, legacy_decode
 
 _KEY_RE = r"channel-([0-9]{5,})_([0-9]+)_([0-9]+)\.bin\.gz$"
 
@@ -34,25 +33,21 @@ _KEY_RE = r"channel-([0-9]{5,})_([0-9]+)_([0-9]+)\.bin\.gz$"
 def read_legacy_blocks(spark: SparkSession, in_dir: str) -> DataFrame:
     """Block files -> (channel_index, start_us, end_us, values).
 
-    ``binaryFile`` streams each object once; the decode is a vectorized
-    pandas UDF. Column pruning works normally — a metadata-only query
-    on this frame never decodes payloads (laziness is per-column)."""
+    ``binaryFile`` streams each object once; the decode is the pandas
+    UDF ``functions.legacy.legacy_decode``. Column pruning works
+    normally — a metadata-only query on this frame never decodes
+    payloads (laziness is per-column)."""
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "channel-*.bin.gz")
         .load(in_dir)
     )
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def decode(payload):  # type: ignore[no-untyped-def]
-        return payload.apply(lambda b: decode_legacy_block(b).tolist())
-
     name = F.element_at(F.split(F.col("path"), "/"), -1)
     return raw.select(
         F.regexp_extract(name, _KEY_RE, 1).cast("bigint").alias("channel_index"),
         F.regexp_extract(name, _KEY_RE, 2).cast("bigint").alias("start_us"),
         F.regexp_extract(name, _KEY_RE, 3).cast("bigint").alias("end_us"),
-        decode(F.col("content")).alias("values"),
+        legacy_decode(F.col("content")).alias("values"),
     )
 
 

@@ -14,8 +14,9 @@ Protocol
   stats (row_count, xor-of-xxhash64 checksum, n_bytes via input files) —
   so a checkpoint row certifies bytes on disk, not an in-memory plan.
 * Resume = anti-join the stage's work units against checkpoint rows with
-  ``status='done'``; completed partitions are never recomputed, and
-  re-writing a partition is idempotent (dynamic overwrite).
+  ``status='done'`` (a unit that spans one partition per tier is done
+  when all of them are); completed partitions are never recomputed,
+  and re-writing a partition is idempotent (dynamic overwrite).
 
 Sandbox note: no Iceberg runtime jar is available offline, so the
 checkpoint table is an append-only Parquet table behind the same API
@@ -82,15 +83,17 @@ def record_stage(
     ``written_df`` must be a read-back of the stage's files so lineage
     certifies durable bytes (input_files from ``input_file_name()``).
     ``only_keys`` restricts recording to the partitions this run wrote
-    (broadcast semi-join; applied after the file stamp because
-    input_file_name() must bind to a single scan).
+    (broadcast semi-join on its columns, which may be a suffix of
+    ``key_cols`` such as the (source, bucket) unit of a tiered stage;
+    applied after the file stamp because input_file_name() must bind to
+    a single scan).
     """
     data_cols = [c for c in written_df.columns]
     stamped = written_df.withColumn(
         "_h", F.xxhash64(*[F.col(c) for c in data_cols])
     ).withColumn("_file", F.input_file_name())
     if only_keys is not None:
-        stamped = stamped.join(F.broadcast(only_keys), key_cols, "left_semi")
+        stamped = stamped.join(F.broadcast(only_keys), only_keys.columns, "left_semi")
     stats = (
         stamped.groupBy(*key_cols)
         .agg(
@@ -121,16 +124,31 @@ def record_stage(
 _CKPT_WRITE_LOCK = threading.Lock()
 
 
-def pending_only(df: DataFrame, spark: SparkSession, root: str, stage: str, key_cols: list[str]) -> DataFrame:
-    """Filter a stage input down to partitions without a done checkpoint
-    row — the resume anti-join. Checkpoint side is tiny -> broadcast."""
-    done = completed_keys(spark, root, stage)
+def pending_only(
+    df: DataFrame, spark: SparkSession, root: str, stage: str, key_cols: list[str],
+    n_parts: int = 1,
+) -> DataFrame:
+    """Filter a stage input down to work units without a done checkpoint
+    — the resume anti-join. The unit (``key_cols``) is the last
+    ``len(key_cols)`` fields of a partition_key, and it is done once
+    ``n_parts`` distinct keys of it are (a unit whose stage writes one
+    partition per tier is done when every tier is). Checkpoint side is
+    tiny -> broadcast."""
+    unit = F.substring_index("partition_key", "/", -len(key_cols))
+    # collect_set, not a distinct-count: one aggregation (one exchange)
+    # over the checkpoint, which may hold a key twice after a re-record
+    done = (
+        read_checkpoint(spark, root)
+        .filter((F.col("stage") == stage) & (F.col("status") == "done"))
+        .groupBy(unit.alias("_pk"))
+        .agg(F.size(F.collect_set("partition_key")).alias("n"))
+        .filter(F.col("n") >= n_parts)
+        .select("_pk")
+    )
     keyed = df.withColumn(
         "_pk", F.concat_ws("/", *[F.col(c).cast("string") for c in key_cols])
     )
-    return keyed.join(
-        F.broadcast(done.withColumnRenamed("partition_key", "_pk")), "_pk", "left_anti"
-    ).drop("_pk")
+    return keyed.join(F.broadcast(done), "_pk", "left_anti").drop("_pk")
 
 
 def new_run_id() -> str:

@@ -9,33 +9,45 @@ The engine's flagship plan (reference lifecycle §3.1 re-expressed):
       -> [stage tiers]   cascading continuous aggregates raw->1s->1m->1h,
          all tiers from one tier-kernel pass (rollup.fused_tiers),
          written partitionBy(tier, source, bucket)      (narrow map)
-      -> checkpoint rows per (source, bucket) per stage (lineage.py)
+      -> checkpoint rows per stage partition (lineage.py)
 
-There is one ingest path: the blocks and tiers stages each scan the raw
-sequences once, and always run as concurrent Spark jobs.
-
-Every stage is independently resumable: inputs are filtered through the
-checkpoint anti-join, outputs land with dynamic partition overwrite
-(idempotent re-write), lineage is computed from read-back files.
+One stage runner, ``_run_stage``, serves both stages: it scans the raw
+sequences once, drops the (source, bucket) units the checkpoint marks
+done, writes them with dynamic partition overwrite (an idempotent
+re-write), then certifies lineage from the read-back files of the units
+it wrote. The stages run on a two-worker thread pool whose threads start
+with the caller's local properties (job group, pool); the caller's
+thread is not touched.
 
 Shuffle census at 100 TB: ZERO wide dependencies in the whole pipeline —
-blocks and every tier are per-row maps after the one optional
-``repartition(source, bucket)`` used to shape output files. The only
-shuffles in the system are (a) that explicit repartition, (b) cross-doc
-summary stats (tiny), (c) lineage groupBys over already-reduced outputs.
+blocks and every tier are per-row maps before the one
+``repartition(*partition cols)`` every stage write runs to shape output
+files. The only shuffles in the system are (a) that repartition, (b)
+cross-doc summary stats (tiny), (c) lineage groupBys over
+already-reduced outputs.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.blocks import to_blocks
 from ..operators.partitioning import DEFAULT_BUCKETS, with_bucket
 from ..operators.rollup import DEFAULT_TIERS, fused_tiers
 from . import lineage
+
+# partition columns of each stage's output, which are also the fields of
+# its checkpoint partition_key ("source/bucket", "tier/source/bucket")
+STAGE_KEYS = {"blocks": ["source", "bucket"], "tiers": ["tier", "source", "bucket"]}
+# the work unit both stages resume and record by
+_UNIT = ["source", "bucket"]
+_POOL = "spark.scheduler.pool"
 
 
 @dataclass
@@ -57,35 +69,30 @@ class PipelineConfig:
     metrics: dict = field(default_factory=dict)
 
 
-def _write_stage(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    stage: str,
-    df: DataFrame,
-    key_cols: list[str],
-    record_threads: list,
-    keys_from: DataFrame,
-) -> None:
-    """Write one stage partition-first + record lineage from read-back.
+def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFrame,
+               build: Callable[[DataFrame], DataFrame], n_parts: int) -> None:
+    """Resume, write and certify one stage. A work unit is done when all
+    ``n_parts`` of its checkpoint rows are (one per tier for tiers).
 
-    Lineage rows cover only the partitions THIS run wrote (a resumed run
-    must not re-attribute earlier runs' partitions), so the read-back is
-    semi-joined on the just-written keys — a broadcast of a tiny key set,
-    and the parquet scan prunes to those partitions.
-
-    The lineage job (a scan+groupBy of the just-written, already-reduced
-    files) runs on a helper thread appended to ``record_threads`` as a
-    concurrent Spark job instead of a barrier — the next stage starts
-    immediately; the pipeline joins all lineage jobs before returning, so
-    a checkpoint row still never precedes its data.
+    The stage's jobs run in its own FAIR pool (session.py sets
+    scheduler.mode=FAIR): under FIFO whichever stage submits first hogs
+    every slot and the other stalls behind it. Lineage then runs in the
+    inherited pool, keeping its jobs out of the stage pools; a checkpoint
+    row never precedes its data.
     """
-    import threading
-
-    from pyspark.sql import Observation
-
-    path = f"{cfg.out_dir}/{stage}"
-    key_cols = list(key_cols)
+    sc = spark.sparkContext
+    inherited = sc.getLocalProperty(_POOL)
+    sc.setLocalProperty(_POOL, stage)
+    pending = (lineage.pending_only(seq, spark, cfg.out_dir, stage, _UNIT, n_parts=n_parts)
+               if cfg.resume else seq)
+    # the isEmpty probe is only needed on resume (a fresh run's input is
+    # known non-empty by the caller); it costs a serial job that hurts
+    # scaling efficiency
+    if cfg.resume and pending.isEmpty():
+        return
+    path, key_cols = f"{cfg.out_dir}/{stage}", STAGE_KEYS[stage]
     obs = Observation()
+    df = with_bucket(build(pending.drop("bucket")), cfg.n_buckets)
     df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
     # align task partitioning with the sink layout: without this every
     # task writes a file into every (source, bucket) dir it touches ->
@@ -97,25 +104,21 @@ def _write_stage(
         # a zero-row write never materializes its observation row (Spark
         # asserts in toPyRow); an empty stage is a valid no-op
         cfg.metrics[stage] = {"rows_written": 0}
-    # partition keys this run wrote, WITHOUT re-executing the stage plan:
-    # derived from the (column-pruned) stage input, whose key set equals
-    # the output's (bucket is a pure function of doc_id)
-    keys = keys_from.select(*key_cols).distinct()
     try:
         written = spark.read.parquet(path)
     except Exception:
         # a zero-row stage leaves no data files to read back — nothing to
         # certify, so no lineage rows (resume will re-attempt the keys)
         return
-
-    def _record() -> None:
-        lineage.record_stage(
-            spark, cfg.out_dir, stage, written, key_cols, cfg.run_id, only_keys=keys
-        )
-
-    t = threading.Thread(target=_record, name=f"lineage-{stage}")
-    t.start()
-    record_threads.append(t)
+    sc.setLocalProperty(_POOL, inherited)
+    # lineage covers only the units THIS run wrote (a resumed run must
+    # not re-attribute earlier runs' partitions): a semi-join on the
+    # pending units, taken from the (column-pruned) stage input whose
+    # unit set equals the output's (bucket is a pure function of doc_id)
+    lineage.record_stage(
+        spark, cfg.out_dir, stage, written, key_cols, cfg.run_id,
+        only_keys=pending.select(*_UNIT).distinct(),
+    )
 
 
 def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) -> dict[str, str]:
@@ -123,98 +126,34 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     {stage: output_path}.
 
     The blocks stage and the tier cascade are independent DAGs over the
-    same input, so they run as CONCURRENT Spark jobs (tiers on the
-    caller thread, blocks on a helper), each tagged with its own FAIR
-    scheduler pool: when one stage's task count drops below the core
-    count (tail tasks, small cascade tiers), the other fills the idle
-    slots. The pools matter — r3's same-window A/B showed plain FIFO
+    same input, so they run as CONCURRENT Spark jobs, each tagged with
+    its own FAIR scheduler pool: when one stage's task count drops below
+    the core count (tail tasks, small cascade tiers), the other fills the
+    idle slots. The pools matter — r3's same-window A/B showed plain FIFO
     concurrency is bimodal (15-42 s on identical input: first-submitted
     job starves the other), while FAIR-pooled concurrency is the fastest
     AND most stable mode measured: {24.4, 19.6, 20.9, 20.5} s vs serial
     {43.1, 50.1, 26.7, 23.0} s alternating in the same windows.
+
+    Both stages finish (or fail) before this returns; the first stage
+    error is raised after the other stage has stopped.
     """
-    import threading
-
     seq = with_bucket(seq_df, cfg.n_buckets)
-    out: dict[str, str] = {}
-    blocks_err: list[BaseException] = []
-    record_threads: list = []
-
-    # -- stage: blocks (concurrent job) -----------------------------------
-    def _blocks_stage() -> None:
-        try:
-            # FAIR pool per stage (session.py sets scheduler.mode=FAIR):
-            # without this, FIFO lets whichever job submits first hog
-            # every slot and the other stage stalls behind it
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "blocks")
-            stage = "blocks"
-            pending = (
-                lineage.pending_only(seq, spark, cfg.out_dir, stage, ["source", "bucket"])
-                if cfg.resume
-                else seq
-            )
-            # the isEmpty probe is only needed on resume (a fresh run's
-            # input is known non-empty by the caller); it costs a serial
-            # job that hurts scaling efficiency
-            if not cfg.resume or not pending.isEmpty():
-                blocks = to_blocks(pending.drop("bucket"), cfg.block_size)
-                blocks = with_bucket(blocks, cfg.n_buckets)
-                _write_stage(spark, cfg, stage, blocks, ["source", "bucket"],
-                             record_threads=record_threads, keys_from=pending)
-        except BaseException as e:  # surface on the caller thread
-            blocks_err.append(e)
-
-    blocks_thread = threading.Thread(target=_blocks_stage, name="blocks-stage")
-    blocks_thread.start()
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", "tiers")
-    out["blocks"] = f"{cfg.out_dir}/blocks"
-
-    # -- stage: tiers (every tier from one kernel pass over raw) ----------
-    stage = "tiers"
-    tier_names = [name for name, _f in cfg.tiers]
-    if cfg.resume:
-        # lineage keys are (tier, source, bucket); a work unit (source,
-        # bucket) is done only when EVERY tier's row is checkpointed
-        ck = lineage.read_checkpoint(spark, cfg.out_dir).filter(
-            (F.col("stage") == stage) & (F.col("status") == "done")
-        )
-        parts = F.split("partition_key", "/")
-        done_sb = (
-            ck.select(parts[0].alias("tier"), parts[1].alias("source"), parts[2].alias("bucket"))
-            .groupBy("source", "bucket")
-            .agg(F.countDistinct("tier").alias("nt"))
-            .filter(F.col("nt") >= len(tier_names))
-            .select(F.concat_ws("/", "source", "bucket").alias("_pk"))
-        )
-        pending = (
-            seq.withColumn("_pk", F.concat_ws("/", F.col("source"), F.col("bucket").cast("string")))
-            .join(F.broadcast(done_sb), "_pk", "left_anti")
-            .drop("_pk")
-        )
-    else:
-        pending = seq
-    if not cfg.resume or not pending.isEmpty():
-        tiers = with_bucket(fused_tiers(pending.drop("bucket"), cfg.tiers), cfg.n_buckets)
-        tier_dim = spark.createDataFrame([(n,) for n in tier_names], "tier string")
-        keys_df = pending.select("source", "bucket").distinct().crossJoin(tier_dim)
-        _write_stage(
-            spark,
-            cfg,
-            stage,
-            tiers,
-            key_cols=["tier", "source", "bucket"],
-            record_threads=record_threads,
-            keys_from=keys_df,
-        )
-    out[stage] = f"{cfg.out_dir}/{stage}"
-    for name in tier_names:
-        out[f"tier_{name}"] = f"{cfg.out_dir}/{stage}/tier={name}"
-
-    blocks_thread.join()
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-    for t in record_threads:
-        t.join()
-    if blocks_err:
-        raise blocks_err[0]
+    stages = {
+        "blocks": (lambda p: to_blocks(p, cfg.block_size), 1),
+        "tiers": (lambda p: fused_tiers(p, cfg.tiers), len(cfg.tiers)),
+    }
+    with ThreadPoolExecutor(len(stages), thread_name_prefix="pipeline") as ex:
+        futures = [
+            # wrapping copies the caller's local properties (job group,
+            # pool) into the worker thread that runs the stage
+            ex.submit(inheritable_thread_target(spark)(_run_stage),
+                        spark, cfg, stage, seq, build, n_parts)
+            for stage, (build, n_parts) in stages.items()
+        ]
+        for f in futures:
+            f.result()
+    out = {stage: f"{cfg.out_dir}/{stage}" for stage in stages}
+    for name, _f in cfg.tiers:
+        out[f"tier_{name}"] = f"{cfg.out_dir}/tiers/tier={name}"
     return out
-

@@ -89,10 +89,10 @@ def get_spark(
         # time that caps scaling efficiency
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # FAIR scheduling between named pools: the pipeline's blocks and
-        # tiers stages (plans/pipeline.py run_pipeline) run concurrently
-        # and each tag their thread with a pool so neither job starves the
-        # other under FIFO; single-job workloads land in the default pool
-        # and are unaffected
+        # tiers stages (plans/pipeline.py _run_stage) run concurrently on
+        # pool threads, each in its own pool so neither job starves the
+        # other under FIFO; their lineage jobs, and single-job workloads,
+        # run in the caller's pool (default unless set)
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
     )

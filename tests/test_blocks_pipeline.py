@@ -1,11 +1,13 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from processor_post_timeseries_spark.operators.blocks import block_key, from_blocks, to_blocks
 from processor_post_timeseries_spark.operators.partitioning import with_bucket
 from processor_post_timeseries_spark.plans import lineage
+from processor_post_timeseries_spark.plans.backfill import invalidate_units
 from processor_post_timeseries_spark.plans.pipeline import PipelineConfig, run_pipeline
 from processor_post_timeseries_spark.sources.synth import sequences
 
@@ -134,3 +136,101 @@ def test_pipeline_empty_input(spark, tmp_path):
     run_pipeline(spark, sequences(spark, 8, seed=3), cfg2)
     done = lineage.read_checkpoint(spark, cfg2.out_dir).filter("stage = 'blocks'")
     assert done.count() > 0
+
+
+# -- the caller's thread and job properties -----------------------------------
+def _drain(spark):
+    """Wait until the listener bus has delivered every event posted so
+    far, so the status tracker reflects every job that has ended."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_pipeline_leaves_callers_pool_unchanged(spark, tmp_path):
+    sc = spark.sparkContext
+    seq = sequences(spark, 12, seed=8, min_tok=5, max_tok=80)
+    sc.setLocalProperty("spark.scheduler.pool", "mine")
+    try:
+        run_pipeline(spark, seq, PipelineConfig(out_dir=str(tmp_path / "p"), n_buckets=2,
+                                                tiers=(("1s", 10),), resume=False))
+        assert sc.getLocalProperty("spark.scheduler.pool") == "mine"
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+
+
+def test_pipeline_failure_restores_pool_and_stops_every_job(spark, tmp_path):
+    sc = spark.sparkContext
+    seq = sequences(spark, 40, seed=9, min_tok=5, max_tok=300)
+    # one NULL tokens row: both stage kernels reject it
+    bad = seq.withColumn(
+        "tokens", F.when(F.col("doc_id") != "doc-000000007", F.col("tokens"))
+    )
+    sc.setLocalProperty("spark.scheduler.pool", "mine")
+    try:
+        with pytest.raises(Exception):
+            run_pipeline(spark, bad, PipelineConfig(out_dir=str(tmp_path / "f"), n_buckets=2,
+                                                    tiers=(("1s", 10), ("1m", 6))))
+        assert sc.getLocalProperty("spark.scheduler.pool") == "mine"
+        _drain(spark)
+        assert list(sc.statusTracker().getActiveJobsIds()) == []
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+
+
+def test_pipeline_jobs_keep_callers_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+    seq = sequences(spark, 40, seed=10, min_tok=5, max_tok=300)
+    _drain(spark)
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("g1", "pipeline job-group test")
+    try:
+        run_pipeline(spark, seq, PipelineConfig(out_dir=str(tmp_path / "g"), n_buckets=2,
+                                                tiers=(("1s", 10),), resume=False))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    _drain(spark)
+    assert set(sc.statusTracker().getJobIdsForGroup("g1"))
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - before == set()
+
+
+def test_partial_tier_invalidation_resumes_every_tier_of_the_unit(spark, tmp_path):
+    """One tier's checkpoint row gone -> the unit is pending for tiers
+    only, and the resume rewrites all of its tiers (a unit is done only
+    when every tier is)."""
+    tiers = (("1s", 10), ("1m", 6), ("1h", 6))
+    seq = sequences(spark, 40, seed=12, min_tok=5, max_tok=400, vocab=500).cache()
+
+    def cfg(out, run_id):
+        return PipelineConfig(out_dir=out, block_size=64, n_buckets=4, tiers=tiers,
+                              run_id=run_id)
+
+    def rows(out):
+        return {(r["stage"], r["partition_key"], r["row_count"], r["checksum"])
+                for r in lineage.read_checkpoint(spark, out).collect()}
+
+    out = str(tmp_path / "o")
+    run_pipeline(spark, seq, cfg(out, "run-a"))
+    want = rows(out)
+    unit = sorted(k for s, k, _n, _c in want if s == "blocks")[0]
+    unit_tiers = {(k, n) for s, k, n, _c in want
+                  if s == "tiers" and k.split("/", 1)[1] == unit}
+    assert len(unit_tiers) == len(tiers)
+    assert invalidate_units(spark, out, "tiers", [f"1m/{unit}"]) == 1
+
+    resumed = cfg(out, "run-b")
+    run_pipeline(spark, seq, resumed)
+    assert "blocks" not in resumed.metrics  # no blocks work was pending
+    assert resumed.metrics["tiers"]["rows_written"] == sum(n for _k, n in unit_tiers)
+    ck = lineage.read_checkpoint(spark, out).filter("run_id = 'run-b'").collect()
+    assert {(r["partition_key"], r["row_count"]) for r in ck} == unit_tiers
+    assert all(r["stage"] == "tiers" for r in ck)
+    assert rows(out) == want
+
+    clean = str(tmp_path / "clean")
+    run_pipeline(spark, seq, cfg(clean, "run-c"))
+    a, b = spark.read.parquet(f"{out}/tiers"), spark.read.parquet(f"{clean}/tiers")
+    cols = sorted(a.columns)
+    h = lambda d: tuple(
+        d.select(F.xxhash64(*cols).alias("_h")).agg(F.expr("bit_xor(_h)"), F.count("*")).first()
+    )
+    assert h(a) == h(b)

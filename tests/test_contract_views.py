@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -67,3 +68,32 @@ def test_views_reload_after_files_rewritten_in_place(spark, tmp_path):
     load_views(spark, sf_dir)
     rows = spark.sql("SELECT event_id FROM events ORDER BY 1").collect()
     assert [r[0] for r in rows] == list(range(100, 300))
+
+
+def test_scratch_dir_falls_back_when_shm_is_small(monkeypatch, tmp_path):
+    """A /dev/shm without room for the scratch artifacts (Docker's 64 MiB
+    default) sends them to the platform temp dir instead."""
+    import shutil
+    import tempfile
+
+    from processor_post_timeseries_spark import contract
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    usage = shutil.disk_usage(str(tmp_path))
+
+    def small_shm(path):
+        return usage._replace(free=64 << 20) if str(path) == "/dev/shm" else usage
+
+    monkeypatch.setattr(shutil, "disk_usage", small_shm)
+    p = contract._scratch_dir("fallback_probe", "/some/sf")
+    assert p.startswith(str(tmp_path / "pts_contract_scratch"))
+    assert os.path.isdir(p)
+
+    def no_shm(path):
+        raise FileNotFoundError(path)
+
+    monkeypatch.setattr(shutil, "disk_usage", no_shm)
+    assert contract._scratch_root() == str(tmp_path)
+
+    monkeypatch.setattr(shutil, "disk_usage", lambda path: usage._replace(free=8 << 30))
+    assert contract._scratch_root() == "/dev/shm"
