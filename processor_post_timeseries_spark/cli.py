@@ -87,20 +87,14 @@ def main(argv: list[str] | None = None) -> int:
         "--curate",
         help="curation mode (plans/curation.py): --input is a documents "
         "table (doc_id, text, source), --curate a benchmark documents "
-        "path; writes the per-doc stage audit to --out/audit and packed "
-        "keepset blocks to --out/blocks. Tune --min-quality / "
-        "--mixture src:share,... / --near-dup / --ctx-len",
+        "path (decontamination: bloom prefilter, exact check on the "
+        "flagged docs only); writes the per-doc stage audit to "
+        "--out/audit and packed keepset blocks to --out/blocks. Tune "
+        "--min-quality / --mixture src:share,... / --near-dup / --ctx-len",
     )
     ap.add_argument("--min-quality", type=float, default=0.0)
     ap.add_argument("--mixture", help="targets, e.g. src0:0.5,src1:0.5")
     ap.add_argument("--near-dup", action="store_true")
-    ap.add_argument(
-        "--decontam-mode",
-        choices=("exact", "bloom_exact"),
-        default="exact",
-        help="bloom_exact = 128 KiB bloom prefilter + exact verify on "
-        "flagged docs only (identical audit, far cheaper at scale)",
-    )
     ap.add_argument("--ctx-len", type=int, default=2048)
     args = ap.parse_args(argv)
 
@@ -139,7 +133,6 @@ def main(argv: list[str] | None = None) -> int:
             min_quality=args.min_quality,
             targets=targets,
             near_dup=args.near_dup,
-            decontam_mode=args.decontam_mode,
         )
         drop_stats: dict = {}
         audit = curate(docs, bench, drop_stats=drop_stats, **kw)

@@ -160,8 +160,8 @@ def bloom_decontaminate(
     corpus in ONE narrow Arrow-batched pass — zero shuffles, zero joins,
     scan-speed. False positives are possible (never negatives); both
     engines compute the identical deterministic FP set, which is what
-    the oracle certifies, and flagged docs can be re-checked with the
-    exact path (the classic two-tier filter).
+    the oracle certifies, and ``contaminated_ids`` re-checks the flagged
+    docs with the exact path (the classic two-tier filter).
 
     The kernel re-derives grams with the SAME convention as
     ``dedup.shingles``/``word_ngram_array``: split on single spaces,
@@ -178,7 +178,7 @@ def bloom_decontaminate(
 
     out_schema = T.StructType(
         [
-            T.StructField("doc_id", T.LongType(), False),
+            T.StructField("doc_id", corpus.schema[id_col].dataType, False),
             T.StructField("n_grams", T.LongType(), False),
             T.StructField("n_hits_bloom", T.LongType(), False),
             T.StructField("flagged", T.BooleanType(), False),
@@ -189,7 +189,8 @@ def bloom_decontaminate(
         for pdf in batches:
             rows = []
             for d, text in zip(pdf[id_col], pdf[text_col]):
-                words = str(text).split(" ")
+                # NULL text has no grams, as in ``shingles``
+                words = text.split(" ") if isinstance(text, str) else []
                 grams = {
                     " ".join(words[i : i + n])
                     for i in range(len(words) - n + 1)
@@ -203,9 +204,47 @@ def bloom_decontaminate(
                             ok = False
                             break
                     hits += ok
-                rows.append((int(d), len(grams), hits, hits > 0))
+                rows.append((d, len(grams), hits, hits > 0))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "n_grams", "n_hits_bloom", "flagged"]
             )
 
     return corpus.select(id_col, text_col).mapInPandas(kern, out_schema)
+
+
+def contaminated_ids(
+    corpus: DataFrame,
+    benchmark: DataFrame,
+    n: int,
+    bitmap: np.ndarray | None = None,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Ids (``id_col``) of the corpus docs with at least one n-gram in
+    the benchmark — the two-tier check: the bloom prefilter
+    (``bloom_decontaminate``) flags candidates in one narrow pass, and
+    the exact ``contamination_report`` runs on the flagged docs only.
+    Bloom has no false negatives, so the result equals
+    ``contamination_report(corpus, benchmark, n).filter("contaminated")``
+    while the gram explode shrinks to the flagged sliver.
+
+    ``bitmap``: a precomputed ``build_bloom_bitmap(benchmark, n=n)`` to
+    reuse across calls (the streaming gate builds one per stream);
+    built here when None."""
+    if bitmap is None:
+        bitmap = build_bloom_bitmap(benchmark, n=n, text_col=text_col, id_col=id_col)
+    flagged = (
+        bloom_decontaminate(
+            corpus, n=n, text_col=text_col, id_col=id_col, bitmap=bitmap
+        )
+        .filter(F.col("flagged"))
+        .select(F.col("doc_id").alias(id_col))
+    )
+    rep = contamination_report(
+        corpus.join(flagged, id_col, "left_semi"),
+        benchmark,
+        n=n,
+        text_col=text_col,
+        id_col=id_col,
+    )
+    return rep.filter(F.col("contaminated")).select(id_col)

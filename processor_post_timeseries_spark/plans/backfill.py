@@ -60,16 +60,11 @@ def invalidate_where(
 
 
 def _rewrite_without(spark: SparkSession, root: str, cond) -> int:
-    ck = read_checkpoint(spark, root)
-    rows = ck.collect()  # tiny by construction (see module docstring)
-    keep_df = spark.createDataFrame(rows, CKPT_SCHEMA).filter(~cond)
-    keep = keep_df.collect()
-    removed = len(rows) - len(keep)
+    rows = read_checkpoint(spark, root).collect()  # tiny (module docstring)
+    # a local frame over the collected rows: the overwrite below never
+    # reads the files it replaces
+    keep = spark.createDataFrame(rows, CKPT_SCHEMA).filter(~cond)
+    removed = len(rows) - keep.count()
     if removed:
-        (
-            spark.createDataFrame(keep, CKPT_SCHEMA)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(_ckpt_path(root))
-        )
+        keep.coalesce(1).write.mode("overwrite").parquet(_ckpt_path(root))
     return removed

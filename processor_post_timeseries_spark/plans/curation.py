@@ -20,8 +20,9 @@ Plan shape at 100 TB (every stage reuses an audited operator):
   non-representative members (comp_id is the min id, so the keeper
   rule matches exact dedup's). Optional: pair generation is the one
   stage whose cost is super-linear in duplication rate;
-* decontamination — broadcast benchmark gram set, corpus never
-  shuffles (``decontam.contamination_report``);
+* decontamination — bloom prefilter in one narrow pass, then the
+  broadcast benchmark gram set on the flagged docs only; the corpus
+  never shuffles (``decontam.contaminated_ids``);
 * quality — pure JVM expression (``text.quality_score``), a pushed
   filter;
 * mixture — rates from one count scan over the survivors, then the
@@ -38,9 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STAGES = ("exact_dup", "near_dup", "contaminated", "low_quality", "mixture_out", "kept")
-
-
 def curate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -56,7 +54,6 @@ def curate(
     hash_fn: str = "xxh64",
     lsh_max_bucket_size: int | None = 1000,
     drop_stats: dict | None = None,
-    decontam_mode: str = "bloom_exact",
 ) -> DataFrame:
     """Audit frame (doc_id, source, n_tok, stage): pipeline-order stage
     attribution per input doc. ``n_tok`` is the char-token count
@@ -73,19 +70,12 @@ def curate(
     (``operators/dedup.py:lsh_bucket_stats``). No-op unless
     ``near_dup=True``.
 
-    ``decontam_mode``: ``"bloom_exact"`` (DEFAULT — the two-tier 100 TB
-    path, r6: promoted per the round-5 verdict) prefilters the corpus
-    with the 128 KiB bloom bitmap in one narrow pass
-    (``decontam.bloom_decontaminate``), and the exact report runs ONLY
-    on bloom-flagged docs. Bloom has no false negatives, so the
-    contaminated set (hence the whole audit) is IDENTICAL to exact
-    mode — pinned by pytest audit-equality — while the exact stage's
-    gram-explode cost shrinks to the flagged sliver. ``"exact"`` runs
-    the broadcast-gram-set report on every survivor (kept for
-    non-integral id schemas, which the bloom kernel's LongType doc_id
-    cannot carry — ``curate`` falls back automatically)."""
+    Decontamination (word ``contam_n``-grams) is the two-tier
+    ``decontam.contaminated_ids``: bloom prefilter, then the exact report
+    on the flagged docs only. Its contaminated set equals the exact
+    report's, for any id type."""
     from ..functions.text import quality_score
-    from ..operators.decontam import contamination_report
+    from ..operators.decontam import contaminated_ids
 
     d = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -151,27 +141,9 @@ def curate(
     # 3. decontamination: contaminated ids among remaining survivors
     corpus_side = surv.select("doc_id", F.col("_text").alias(text_col))
     bench_side = benchmark.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-    id_integral = dict(corpus_side.dtypes)["doc_id"] in (
-        "tinyint",
-        "smallint",
-        "int",
-        "bigint",
-    )
-    if decontam_mode == "bloom_exact" and id_integral:
-        from ..operators.decontam import bloom_decontaminate
-
-        flagged = (
-            bloom_decontaminate(corpus_side, bench_side, n=contam_n)
-            .filter(F.col("flagged"))
-            .select(F.col("doc_id").cast(dict(corpus_side.dtypes)["doc_id"]))
-        )
-        corpus_side = corpus_side.join(flagged, "doc_id", "left_semi")
-    elif decontam_mode not in ("exact", "bloom_exact"):
-        raise ValueError(f"unknown decontam_mode: {decontam_mode!r}")
-    rep = contamination_report(corpus_side, bench_side, n=contam_n)
-    contam = rep.filter(F.col("contaminated")).select(
-        "doc_id", F.lit(True).alias("_contam")
-    )
+    contam = contaminated_ids(
+        corpus_side, bench_side, n=contam_n, text_col=text_col
+    ).withColumn("_contam", F.lit(True))
     d = d.join(contam, "doc_id", "left")
     surv = surv.join(contam, "doc_id", "left_anti")
 

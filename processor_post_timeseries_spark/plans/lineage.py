@@ -88,30 +88,14 @@ def record_stage(
     applied after the file stamp because input_file_name() must bind to
     a single scan).
     """
-    data_cols = [c for c in written_df.columns]
-    stamped = written_df.withColumn(
-        "_h", F.xxhash64(*[F.col(c) for c in data_cols])
-    ).withColumn("_file", F.input_file_name())
-    if only_keys is not None:
-        stamped = stamped.join(F.broadcast(only_keys), only_keys.columns, "left_semi")
-    stats = (
-        stamped.groupBy(*key_cols)
-        .agg(
-            F.count("*").alias("row_count"),
-            F.expr("bit_xor(_h)").alias("checksum"),
-            F.array_distinct(F.collect_list("_file")).alias("input_files"),
-        )
-        .select(
-            F.lit(stage).alias("stage"),
-            F.concat_ws("/", *[F.col(c).cast("string") for c in key_cols]).alias(
-                "partition_key"
-            ),
-            F.lit(run_id).alias("run_id"),
-            "row_count",
-            "checksum",
-            "input_files",
-            F.lit("done").alias("status"),
-        )
+    stats = _partition_stats(written_df, key_cols, only_keys).select(
+        F.lit(stage).alias("stage"),
+        "partition_key",
+        F.lit(run_id).alias("run_id"),
+        "row_count",
+        "checksum",
+        "input_files",
+        F.lit("done").alias("status"),
     )
     # concurrent pipeline stages (plans/pipeline.py) may append lineage at
     # the same time; the Hadoop committer shares one _temporary dir per
@@ -122,6 +106,37 @@ def record_stage(
 
 
 _CKPT_WRITE_LOCK = threading.Lock()
+
+
+def _partition_stats(
+    df: DataFrame, key_cols: list[str], only_keys: DataFrame | None = None
+) -> DataFrame:
+    """(partition_key, row_count, checksum, input_files) per partition of
+    ``df``: row count and xor of each row's xxhash64 over all columns.
+    The one spelling of the lineage stats, so ``verify_lineage``
+    recomputes exactly what ``record_stage`` recorded (its unused
+    ``input_files`` aggregate is pruned from the plan)."""
+    stamped = df.withColumn(
+        "_h", F.xxhash64(*[F.col(c) for c in df.columns])
+    ).withColumn("_file", F.input_file_name())
+    if only_keys is not None:
+        stamped = stamped.join(F.broadcast(only_keys), only_keys.columns, "left_semi")
+    return (
+        stamped.groupBy(*key_cols)
+        .agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.expr("bit_xor(_h)").alias("checksum"),
+            F.array_distinct(F.collect_list("_file")).alias("input_files"),
+        )
+        .select(
+            F.concat_ws("/", *[F.col(c).cast("string") for c in key_cols]).alias(
+                "partition_key"
+            ),
+            "row_count",
+            "checksum",
+            "input_files",
+        )
+    )
 
 
 def pending_only(
@@ -250,21 +265,10 @@ def verify_lineage(
             F.col("checksum").alias("ck_checksum"),
         )
     )
-    written = spark.read.parquet(data_path)
-    recomputed = (
-        written.withColumn("_h", F.xxhash64(*[F.col(c) for c in written.columns]))
-        .groupBy(*key_cols)
-        .agg(
-            F.count(F.lit(1)).alias("data_rows"),
-            F.expr("bit_xor(_h)").alias("data_checksum"),
-        )
-        .select(
-            F.concat_ws("/", *[F.col(c).cast("string") for c in key_cols]).alias(
-                "partition_key"
-            ),
-            "data_rows",
-            "data_checksum",
-        )
+    recomputed = _partition_stats(spark.read.parquet(data_path), key_cols).select(
+        "partition_key",
+        F.col("row_count").alias("data_rows"),
+        F.col("checksum").alias("data_checksum"),
     )
     j = ck.join(recomputed, "partition_key", "full_outer")
     return j.select(

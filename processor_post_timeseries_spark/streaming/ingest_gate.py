@@ -1,15 +1,17 @@
 """Streaming ingest quality gate — the micro-batch admission filter a
 continuously-fed training corpus runs BEFORE documents reach the lake:
-benchmark decontamination (``operators/decontam.py``) + quality scoring
-(``functions/text.py``) applied per micro-batch, with Spark's streaming
-checkpoint giving exactly-once admission.
+two-tier benchmark decontamination (``decontam.contaminated_ids``) +
+quality scoring (``functions/text.py``) applied per micro-batch, with
+Spark's streaming checkpoint giving exactly-once admission.
 
 Why ``foreachBatch`` and not a streaming aggregation: the contamination
 join aggregates per doc_id, which as a bare streaming agg would pin
 unbounded doc state in the store. Each doc arrives WHOLE in one
 micro-batch (documents are rows, not multi-row groups), so per-batch
-batch-semantics are exact, state-free, and the benchmark gram set stays
-a broadcast — the same plan the batch gate runs, incrementally.
+batch-semantics are exact, state-free, and the benchmark side stays
+small (a bloom bitmap built once per stream, shipped in the task
+closure, plus the broadcast gram set) — the same plan the batch gate
+runs, incrementally.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import quality_score
-from ..operators.decontam import contamination_report
+from ..operators.decontam import build_bloom_bitmap, contaminated_ids
 
 DOC_SCHEMA = T.StructType(
     [
@@ -37,30 +39,18 @@ def gate_batch(
     benchmark: DataFrame,
     n: int = 5,
     min_quality: float = 0.0,
-    bloom_bitmap=None,
+    bitmap=None,
 ) -> DataFrame:
-    """Pure (testable) gate: admit docs that are NOT contaminated and
-    score at least ``min_quality``. Docs too short to have n-grams are
-    admitted (nothing to test), mirroring the batch report's domain.
+    """Pure (testable) gate: admit docs that are NOT contaminated
+    (``decontam.contaminated_ids``: bloom prefilter, exact report on the
+    flagged docs only) and score at least ``min_quality``. Docs too
+    short to have n-grams are admitted (nothing to test), mirroring the
+    batch report's domain.
 
-    ``bloom_bitmap`` (``decontam.build_bloom_bitmap``, built ONCE per
-    stream): two-tier mode — the bitmap prefilters the batch in one
-    narrow pass and the exact report runs only on bloom-flagged docs.
-    Bloom has no false negatives, so the admitted set is IDENTICAL to
-    exact mode; per-batch cost drops from a benchmark-gram join over
-    the whole batch to a closure-resident bitmap probe."""
-    exact_side = batch
-    if bloom_bitmap is not None:
-        from ..operators.decontam import bloom_decontaminate
-
-        pre = (
-            bloom_decontaminate(batch, bitmap=bloom_bitmap, n=n)
-            .filter(F.col("flagged"))
-            .select("doc_id")
-        )
-        exact_side = batch.join(pre, "doc_id", "left_semi")
-    rep = contamination_report(exact_side, benchmark, n=n)
-    flagged = rep.filter(F.col("contaminated")).select("doc_id")
+    ``bitmap``: ``build_bloom_bitmap(benchmark, n=n)``, built once and
+    reused across micro-batches so no batch re-scans the benchmark;
+    built per call when None."""
+    flagged = contaminated_ids(batch, benchmark, n=n, bitmap=bitmap)
     return (
         batch.join(flagged, "doc_id", "left_anti")
         .withColumn("quality", quality_score(F.col("text")))
@@ -287,7 +277,6 @@ def run_ingest_gate_available_now(
     n: int = 5,
     min_quality: float = 0.0,
     dedupe: bool = False,
-    decontam_mode: str = "exact",
 ):
     """readStream(documents parquet) -> per-batch gate -> per-batch
     overwrite parquet (``out_dir/batch=<id>``), trigger availableNow.
@@ -299,17 +288,9 @@ def run_ingest_gate_available_now(
     ``out_dir`` as one partitioned dataset; ``batch`` appears as a
     partition column.
 
-    ``decontam_mode="bloom_exact"``: the benchmark bloom bitmap is built
-    ONCE before the stream starts and probed per batch; the exact gram
-    join shrinks to bloom-flagged docs. Admission decisions are
-    identical to exact mode (no false negatives)."""
-    bloom_bitmap = None
-    if decontam_mode == "bloom_exact":
-        from ..operators.decontam import build_bloom_bitmap
-
-        bloom_bitmap = build_bloom_bitmap(benchmark, n=n)
-    elif decontam_mode != "exact":
-        raise ValueError(f"unknown decontam_mode: {decontam_mode!r}")
+    The benchmark bloom bitmap is built ONCE, before the stream starts,
+    and every batch's ``gate_batch`` reuses it."""
+    bitmap = build_bloom_bitmap(benchmark, n=n)
     src = spark.readStream.schema(DOC_SCHEMA).parquet(in_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -318,7 +299,7 @@ def run_ingest_gate_available_now(
             benchmark,
             n=n,
             min_quality=min_quality,
-            bloom_bitmap=bloom_bitmap,
+            bitmap=bitmap,
         )
         if dedupe:
             admitted = dedup_against_admitted(spark, admitted, out_dir, batch_id)

@@ -194,31 +194,32 @@ def test_curate_drop_stats_surfaces_lsh_cap_truncation(spark):
 
 
 def test_curate_bloom_exact_mode_identical_to_exact(spark):
-    # real corpus slice: bloom prefilter + exact-on-flagged must produce
-    # the SAME audit as exact mode (bloom has no false negatives)
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .filter(F.col("doc_id") % 50 != 0)
-        .select("doc_id", "text", "source")
+    # real corpus slice: the two-tier check (bloom prefilter + exact on
+    # the flagged docs) must equal the exact report, for long AND string
+    # ids (bloom has no false negatives; the kernel keeps the id type)
+    from processor_post_timeseries_spark.operators.decontam import (
+        contaminated_ids,
+        contamination_report,
     )
-    bench = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .filter(F.col("doc_id") % 50 == 0)
-        .select("doc_id", "text", "source")
-    )
-    a = sorted(map(tuple, curate(docs, bench, min_quality=0.0).collect()))
-    b = sorted(
-        map(
-            tuple,
-            curate(
-                docs, bench, min_quality=0.0, decontam_mode="bloom_exact"
-            ).collect(),
-        )
-    )
-    assert a == b and any(r[3] == "contaminated" for r in a)
 
+    all_docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = all_docs.filter(F.col("doc_id") % 50 != 0).select("doc_id", "text", "source")
+    bench = all_docs.filter(F.col("doc_id") % 50 == 0).select("doc_id", "text", "source")
+    as_str = lambda df: df.withColumn("doc_id", F.col("doc_id").cast("string"))
 
-def test_curate_unknown_decontam_mode_raises(spark):
-    docs = _docs(spark, [(1, GOOD, "a")])
-    with pytest.raises(ValueError, match="decontam_mode"):
-        curate(docs, docs, decontam_mode="fuzzy")
+    exact = {
+        str(r["doc_id"])
+        for r in contamination_report(docs, bench, n=5).filter("contaminated").collect()
+    }
+    assert exact
+    for c, b in ((docs, bench), (as_str(docs), as_str(bench))):
+        assert {str(r["doc_id"]) for r in contaminated_ids(c, b, n=5).collect()} == exact
+
+    audit = sorted(
+        (str(r[0]), *r[1:]) for r in curate(docs, bench, min_quality=0.0).collect()
+    )
+    audit_str = sorted(
+        map(tuple, curate(as_str(docs), as_str(bench), min_quality=0.0).collect())
+    )
+    assert audit == audit_str
+    assert sum(r[3] == "contaminated" for r in audit) == len(exact)

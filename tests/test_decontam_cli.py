@@ -7,7 +7,10 @@ import json
 
 import pytest
 
-from processor_post_timeseries_spark.operators.decontam import contamination_report
+from processor_post_timeseries_spark.operators.decontam import (
+    bloom_decontaminate,
+    contamination_report,
+)
 
 
 @pytest.fixture(scope="module")
@@ -64,6 +67,28 @@ class TestContamination:
         norm = contamination_report(corpus, bench, n=3, normalize=True).collect()[0]
         # normalized corpus = "the quick brown fox" -> hits "the quick brown"
         assert (norm["n_grams"], norm["n_hits"], norm["contaminated"]) == (2, 1, True)
+
+
+class TestBloom:
+    def test_null_text_has_no_grams(self, spark):
+        # a NULL text must not become the word "None" (which this
+        # benchmark contains): no grams, never flagged
+        corpus = spark.createDataFrame([(1, None)], "doc_id long, text string")
+        bench = spark.createDataFrame([(9, "None")], "doc_id long, text string")
+        out = bloom_decontaminate(corpus, bench, n=1).collect()
+        assert [tuple(r) for r in out] == [(1, 0, 0, False)]
+        assert contamination_report(corpus, bench, n=1).count() == 0
+
+    def test_string_ids_keep_their_type(self, spark):
+        rows = [("a1", "x q w e r t y"), ("b2", "a b c d e f")]
+        corpus = spark.createDataFrame(rows, "doc_id string, text string")
+        bench = spark.createDataFrame([("z", "q w e r t")], "doc_id string, text string")
+        out = bloom_decontaminate(corpus, bench, n=5)
+        assert {r["doc_id"]: r["flagged"] for r in out.collect()} == {
+            "a1": True,
+            "b2": False,
+        }
+        assert out.schema["doc_id"].dataType.simpleString() == "string"
 
 
 class TestCliRetention:

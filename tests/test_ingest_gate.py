@@ -65,9 +65,13 @@ def test_streaming_gate_exactly_once_across_restart(spark, tmp_path):
 
 
 def test_gate_batch_bloom_exact_identical_to_exact(spark):
-    """Two-tier mode admits EXACTLY the exact-mode set: bloom has no
-    false negatives, and flagged docs are re-verified exactly."""
-    from processor_post_timeseries_spark.operators.decontam import build_bloom_bitmap
+    """The two-tier gate admits EXACTLY the set the exact report leaves:
+    bloom has no false negatives, and flagged docs are re-verified
+    exactly — with or without a precomputed bitmap."""
+    from processor_post_timeseries_spark.operators.decontam import (
+        build_bloom_bitmap,
+        contamination_report,
+    )
 
     bench = _docs(spark, [(900, "q w e r t"), (901, "u v w x y z")])
     batch = _docs(
@@ -75,13 +79,17 @@ def test_gate_batch_bloom_exact_identical_to_exact(spark):
         [(i, f"tok{i} a b c d e{i}") for i in range(20)]
         + [(100, "x q w e r t y"), (101, "p u v w x y z q"), (102, "hi")],
     )
-    exact = {r["doc_id"] for r in gate_batch(batch, bench, n=5).collect()}
-    bm = build_bloom_bitmap(bench, n=5)
-    two_tier = {
-        r["doc_id"] for r in gate_batch(batch, bench, n=5, bloom_bitmap=bm).collect()
+    contaminated = contamination_report(batch, bench, n=5).filter("contaminated")
+    ref = {
+        r["doc_id"]
+        for r in batch.join(contaminated, "doc_id", "left_anti").collect()
     }
-    assert two_tier == exact
-    assert 100 not in exact and 101 not in exact and 102 in exact
+    assert {r["doc_id"] for r in gate_batch(batch, bench, n=5).collect()} == ref
+    bm = build_bloom_bitmap(bench, n=5)
+    assert {
+        r["doc_id"] for r in gate_batch(batch, bench, n=5, bitmap=bm).collect()
+    } == ref
+    assert 100 not in ref and 101 not in ref and 102 in ref
 
 
 def test_streaming_gate_bloom_exact_mode(spark, tmp_path):
@@ -90,15 +98,9 @@ def test_streaming_gate_bloom_exact_mode(spark, tmp_path):
     _docs(spark, [(1, "a b c d e f"), (2, "x q w e r t y")]).write.mode(
         "append"
     ).parquet(in_dir)
-    q = run_ingest_gate_available_now(
-        spark, in_dir, out_dir, ck, bench, n=5, decontam_mode="bloom_exact"
-    )
+    q = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, n=5)
     q.awaitTermination()
     assert {r["doc_id"] for r in spark.read.parquet(out_dir).collect()} == {1}
-    with pytest.raises(ValueError):
-        run_ingest_gate_available_now(
-            spark, in_dir, out_dir, ck, bench, n=5, decontam_mode="nope"
-        )
 
 
 def test_streaming_dedupe_across_waves(spark, tmp_path):
