@@ -9,17 +9,23 @@ upstream restatement) therefore reduces to DELETING its checkpoint
 rows — the parquet-seam analog of ``DELETE FROM checkpoint WHERE …``
 on an Iceberg table — and re-running the pipeline with ``resume=True``.
 Dynamic partition overwrite makes the recompute idempotent; untouched
-partitions are never read or rewritten.
+partitions are never read or rewritten: the resume plans its pending
+units on the driver, filters its input to them and reads back only the
+partitions it wrote (``plans/pipeline.py``).
 
 The checkpoint table is tiny by construction (one row per partition per
-stage), so the filter-rewrite materializes through the driver. A crash
-between delete and rewrite degrades to a MISSING checkpoint — the safe
-direction (resume recomputes more, never serves stale lineage).
+stage), so the rewrite goes through the driver: one job reads it to an
+Arrow table with the invalidation condition as a column, the kept rows
+are filtered there, and a second job (only when a row matched) writes
+them back from that table. A crash between delete and rewrite degrades
+to a MISSING checkpoint — the safe direction (resume recomputes more,
+never serves stale lineage).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .lineage import CKPT_SCHEMA, _ckpt_path, read_checkpoint
@@ -60,11 +66,14 @@ def invalidate_where(
 
 
 def _rewrite_without(spark: SparkSession, root: str, cond) -> int:
-    rows = read_checkpoint(spark, root).collect()  # tiny (module docstring)
-    # a local frame over the collected rows: the overwrite below never
-    # reads the files it replaces
-    keep = spark.createDataFrame(rows, CKPT_SCHEMA).filter(~cond)
-    removed = len(rows) - keep.count()
+    # one read of the (tiny, module docstring) checkpoint with ``cond`` as
+    # a column; rows where it is NULL go too, as under filter(~cond)
+    ck = read_checkpoint(spark, root).withColumn("_drop", cond).toArrow()
+    keep = ck.filter(pc.equal(ck["_drop"], False)).drop_columns("_drop")
+    removed = ck.num_rows - keep.num_rows
     if removed:
-        keep.coalesce(1).write.mode("overwrite").parquet(_ckpt_path(root))
+        # written from the driver's Arrow table: the overwrite never reads
+        # the files it replaces, and no Python worker starts
+        spark.createDataFrame(keep, CKPT_SCHEMA).coalesce(1).write.mode(
+            "overwrite").parquet(_ckpt_path(root))
     return removed

@@ -13,10 +13,15 @@ Protocol
   dynamic``), then reads the *written* files back to compute lineage
   stats (row_count, xor-of-xxhash64 checksum, n_bytes via input files) —
   so a checkpoint row certifies bytes on disk, not an in-memory plan.
-* Resume = anti-join the stage's work units against checkpoint rows with
-  ``status='done'`` (a unit that spans one partition per tier is done
-  when all of them are); completed partitions are never recomputed,
-  and re-writing a partition is idempotent (dynamic overwrite).
+* Resume is planned on the driver: the checkpoint's done keys are read
+  once (``done_keys``), a unit is done when every partition key the
+  current config expects of it is (one per tier for a tiered stage), and
+  ``drop_done`` filters the stage input with a literal ``NOT IN`` of the
+  done units — no join. Completed partitions are never recomputed, and
+  re-writing a partition is idempotent (dynamic overwrite).
+* The lineage read-back is pruned to the partition keys the run wrote:
+  the key predicate is over partition columns only, so the FileScan
+  prunes to those directories (PartitionFilters) and reads nothing else.
 
 Sandbox note: no Iceberg runtime jar is available offline, so the
 checkpoint table is an append-only Parquet table behind the same API
@@ -29,8 +34,9 @@ from __future__ import annotations
 import os
 import threading
 import uuid
+from collections.abc import Collection
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,6 +75,21 @@ def completed_keys(spark: SparkSession, root: str, stage: str) -> DataFrame:
     )
 
 
+def done_keys(spark: SparkSession, root: str) -> dict[str, set[str]]:
+    """{stage: done partition_keys}, read to the driver in one job (the
+    checkpoint holds one row per partition per stage)."""
+    done: dict[str, set[str]] = {}
+    for r in (read_checkpoint(spark, root).filter(F.col("status") == "done")
+              .select("stage", "partition_key").collect()):
+        done.setdefault(r.stage, set()).add(r.partition_key)
+    return done
+
+
+def key_col(cols: list[str]) -> Column:
+    """A partition key ("a/b/...") over ``cols``, as checkpoint rows spell it."""
+    return F.concat_ws("/", *[F.col(c).cast("string") for c in cols])
+
+
 def record_stage(
     spark: SparkSession,
     root: str,
@@ -76,19 +97,18 @@ def record_stage(
     written_df: DataFrame,
     key_cols: list[str],
     run_id: str,
-    only_keys: DataFrame | None = None,
+    keys: Collection[str] | None = None,
 ) -> DataFrame:
     """Append done-rows for partitions of a written stage output.
 
     ``written_df`` must be a read-back of the stage's files so lineage
     certifies durable bytes (input_files from ``input_file_name()``).
-    ``only_keys`` restricts recording to the partitions this run wrote
-    (broadcast semi-join on its columns, which may be a suffix of
-    ``key_cols`` such as the (source, bucket) unit of a tiered stage;
-    applied after the file stamp because input_file_name() must bind to
-    a single scan).
+    ``keys`` restricts recording to the partition keys this run wrote (a
+    resumed run must not re-attribute earlier runs' partitions); it is a
+    literal predicate on the partition columns, so the read-back scan is
+    pruned to those directories.
     """
-    stats = _partition_stats(written_df, key_cols, only_keys).select(
+    stats = _partition_stats(written_df, key_cols, keys).select(
         F.lit(stage).alias("stage"),
         "partition_key",
         F.lit(run_id).alias("run_id"),
@@ -109,18 +129,20 @@ _CKPT_WRITE_LOCK = threading.Lock()
 
 
 def _partition_stats(
-    df: DataFrame, key_cols: list[str], only_keys: DataFrame | None = None
+    df: DataFrame, key_cols: list[str], keys: Collection[str] | None = None
 ) -> DataFrame:
     """(partition_key, row_count, checksum, input_files) per partition of
     ``df``: row count and xor of each row's xxhash64 over all columns.
     The one spelling of the lineage stats, so ``verify_lineage``
     recomputes exactly what ``record_stage`` recorded (its unused
-    ``input_files`` aggregate is pruned from the plan)."""
+    ``input_files`` aggregate is pruned from the plan). ``keys`` filters
+    before the file stamp, so over partition columns it prunes the scan."""
+    pk = key_col(key_cols)
+    if keys is not None:
+        df = df.filter(pk.isin(sorted(keys)))
     stamped = df.withColumn(
         "_h", F.xxhash64(*[F.col(c) for c in df.columns])
     ).withColumn("_file", F.input_file_name())
-    if only_keys is not None:
-        stamped = stamped.join(F.broadcast(only_keys), only_keys.columns, "left_semi")
     return (
         stamped.groupBy(*key_cols)
         .agg(
@@ -128,42 +150,26 @@ def _partition_stats(
             F.expr("bit_xor(_h)").alias("checksum"),
             F.array_distinct(F.collect_list("_file")).alias("input_files"),
         )
-        .select(
-            F.concat_ws("/", *[F.col(c).cast("string") for c in key_cols]).alias(
-                "partition_key"
-            ),
-            "row_count",
-            "checksum",
-            "input_files",
-        )
+        .select(pk.alias("partition_key"), "row_count", "checksum", "input_files")
     )
+
+
+def drop_done(df: DataFrame, key_cols: list[str], done: Collection[str]) -> DataFrame:
+    """Drop the rows of ``df`` whose work unit (``key_cols``) is in
+    ``done``: a literal ``NOT IN`` over a driver-side set, with no join
+    and no exchange. The one resume filter, shared by the pipeline and
+    ``pending_only``; an empty ``done`` leaves ``df`` unfiltered."""
+    return df.filter(~key_col(key_cols).isin(sorted(done))) if done else df
 
 
 def pending_only(
-    df: DataFrame, spark: SparkSession, root: str, stage: str, key_cols: list[str],
-    n_parts: int = 1,
+    df: DataFrame, spark: SparkSession, root: str, stage: str, key_cols: list[str]
 ) -> DataFrame:
-    """Filter a stage input down to work units without a done checkpoint
-    — the resume anti-join. The unit (``key_cols``) is the last
-    ``len(key_cols)`` fields of a partition_key, and it is done once
-    ``n_parts`` distinct keys of it are (a unit whose stage writes one
-    partition per tier is done when every tier is). Checkpoint side is
-    tiny -> broadcast."""
-    unit = F.substring_index("partition_key", "/", -len(key_cols))
-    # collect_set, not a distinct-count: one aggregation (one exchange)
-    # over the checkpoint, which may hold a key twice after a re-record
-    done = (
-        read_checkpoint(spark, root)
-        .filter((F.col("stage") == stage) & (F.col("status") == "done"))
-        .groupBy(unit.alias("_pk"))
-        .agg(F.size(F.collect_set("partition_key")).alias("n"))
-        .filter(F.col("n") >= n_parts)
-        .select("_pk")
-    )
-    keyed = df.withColumn(
-        "_pk", F.concat_ws("/", *[F.col(c).cast("string") for c in key_cols])
-    )
-    return keyed.join(F.broadcast(done), "_pk", "left_anti").drop("_pk")
+    """Filter a stage input down to work units (``key_cols``) that have no
+    done checkpoint row: ``drop_done`` over the stage's done keys. For a
+    stage with one checkpoint key per unit; a tiered stage's unit is done
+    only when every tier's key is, which the pipeline decides itself."""
+    return drop_done(df, key_cols, done_keys(spark, root).get(stage, set()))
 
 
 def new_run_id() -> str:

@@ -11,11 +11,18 @@ The engine's flagship plan (reference lifecycle §3.1 re-expressed):
          written partitionBy(tier, source, bucket)      (narrow map)
       -> checkpoint rows per stage partition (lineage.py)
 
-One stage runner, ``_run_stage``, serves both stages: it scans the raw
-sequences once, drops the (source, bucket) units the checkpoint marks
-done, writes them with dynamic partition overwrite (an idempotent
-re-write), then certifies lineage from the read-back files of the units
-it wrote. The stages run on a two-worker thread pool whose threads start
+The work units are planned on the driver once per run: the input's
+(source, bucket) keys are collected (a column-pruned distinct, at most
+sources × buckets strings) and, on resume, the checkpoint's done keys
+are read once and shared by both stages. One stage runner,
+``_run_stage``, serves both stages: its pending units are the input
+units missing any checkpoint key the current config expects (one per
+tier for tiers). A resumed stage with nothing pending starts no job;
+otherwise it scans the raw sequences once, less the done units (a
+literal ``NOT IN``, ``lineage.drop_done``; a fresh run has none),
+writes them with dynamic partition overwrite (an idempotent re-write),
+then certifies lineage from a read-back pruned to the partitions it
+wrote. The stages run on a two-worker thread pool whose threads start
 with the caller's local properties (job group, pool); the caller's
 thread is not touched.
 
@@ -70,9 +77,13 @@ class PipelineConfig:
 
 
 def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFrame,
-               build: Callable[[DataFrame], DataFrame], n_parts: int) -> None:
-    """Resume, write and certify one stage. A work unit is done when all
-    ``n_parts`` of its checkpoint rows are (one per tier for tiers).
+               build: Callable[[DataFrame], DataFrame], prefixes: tuple[str, ...],
+               units: list[str], done: set[str]) -> None:
+    """Write and certify one stage over its pending units: the input
+    ``units`` not every expected checkpoint key ``prefix + unit`` of
+    which is in ``done``. A resume with none pending returns without a
+    job; a fresh run always writes, so an empty input still leaves its
+    (file-less) stage directory and a ``rows_written`` of 0.
 
     The stage's jobs run in its own FAIR pool (session.py sets
     scheduler.mode=FAIR): under FIFO whichever stage submits first hogs
@@ -80,19 +91,16 @@ def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFr
     inherited pool, keeping its jobs out of the stage pools; a checkpoint
     row never precedes its data.
     """
+    pending = [u for u in units if any(p + u not in done for p in prefixes)]
+    if cfg.resume and not pending:
+        return
+    seq = lineage.drop_done(seq, _UNIT, set(units).difference(pending))
     sc = spark.sparkContext
     inherited = sc.getLocalProperty(_POOL)
     sc.setLocalProperty(_POOL, stage)
-    pending = (lineage.pending_only(seq, spark, cfg.out_dir, stage, _UNIT, n_parts=n_parts)
-               if cfg.resume else seq)
-    # the isEmpty probe is only needed on resume (a fresh run's input is
-    # known non-empty by the caller); it costs a serial job that hurts
-    # scaling efficiency
-    if cfg.resume and pending.isEmpty():
-        return
     path, key_cols = f"{cfg.out_dir}/{stage}", STAGE_KEYS[stage]
     obs = Observation()
-    df = with_bucket(build(pending.drop("bucket")), cfg.n_buckets)
+    df = with_bucket(build(seq.drop("bucket")), cfg.n_buckets)
     df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
     # align task partitioning with the sink layout: without this every
     # task writes a file into every (source, bucket) dir it touches ->
@@ -111,19 +119,17 @@ def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFr
         # certify, so no lineage rows (resume will re-attempt the keys)
         return
     sc.setLocalProperty(_POOL, inherited)
-    # lineage covers only the units THIS run wrote (a resumed run must
-    # not re-attribute earlier runs' partitions): a semi-join on the
-    # pending units, taken from the (column-pruned) stage input whose
-    # unit set equals the output's (bucket is a pure function of doc_id)
-    lineage.record_stage(
-        spark, cfg.out_dir, stage, written, key_cols, cfg.run_id,
-        only_keys=pending.select(*_UNIT).distinct(),
-    )
+    # lineage covers only the partitions THIS run wrote (a resumed run
+    # must not re-attribute earlier runs' partitions)
+    lineage.record_stage(spark, cfg.out_dir, stage, written, key_cols, cfg.run_id,
+                         keys=[p + u for u in pending for p in prefixes])
 
 
 def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) -> dict[str, str]:
     """Execute all stages (skipping checkpointed partitions). Returns
-    {stage: output_path}.
+    {stage: output_path}. A path holds Parquet only once some run wrote
+    rows to it: a fresh run over an empty input leaves file-less stage
+    directories, and a resume with nothing pending leaves them as found.
 
     The blocks stage and the tier cascade are independent DAGs over the
     same input, so they run as CONCURRENT Spark jobs, each tagged with
@@ -139,17 +145,20 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     error is raised after the other stage has stopped.
     """
     seq = with_bucket(seq_df, cfg.n_buckets)
+    units = sorted(r[0] for r in seq.select(lineage.key_col(_UNIT)).distinct().collect())
+    done = lineage.done_keys(spark, cfg.out_dir) if cfg.resume else {}
+    # the checkpoint key prefixes each unit of a stage must have done
     stages = {
-        "blocks": (lambda p: to_blocks(p, cfg.block_size), 1),
-        "tiers": (lambda p: fused_tiers(p, cfg.tiers), len(cfg.tiers)),
+        "blocks": (lambda p: to_blocks(p, cfg.block_size), ("",)),
+        "tiers": (lambda p: fused_tiers(p, cfg.tiers), tuple(f"{n}/" for n, _w in cfg.tiers)),
     }
     with ThreadPoolExecutor(len(stages), thread_name_prefix="pipeline") as ex:
         futures = [
             # wrapping copies the caller's local properties (job group,
             # pool) into the worker thread that runs the stage
-            ex.submit(inheritable_thread_target(spark)(_run_stage),
-                        spark, cfg, stage, seq, build, n_parts)
-            for stage, (build, n_parts) in stages.items()
+            ex.submit(inheritable_thread_target(spark)(_run_stage), spark, cfg, stage, seq,
+                      build, prefixes, units, done.get(stage, set()))
+            for stage, (build, prefixes) in stages.items()
         ]
         for f in futures:
             f.result()

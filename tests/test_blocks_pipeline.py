@@ -234,3 +234,105 @@ def test_partial_tier_invalidation_resumes_every_tier_of_the_unit(spark, tmp_pat
         d.select(F.xxhash64(*cols).alias("_h")).agg(F.expr("bit_xor(_h)"), F.count("*")).first()
     )
     assert h(a) == h(b)
+
+
+def test_resume_with_a_changed_tier_set_writes_the_new_tiers(spark, tmp_path):
+    """A unit is done for tiers only when every tier of the CURRENT config
+    has a checkpoint row: resuming with a tier the earlier run never wrote
+    recomputes it for every unit (a count of tier rows per unit would call
+    the unit done and leave the new tier missing)."""
+    seq = sequences(spark, 30, seed=14, min_tok=5, max_tok=400, vocab=500).cache()
+
+    def cfg(out, tiers, run_id):
+        return PipelineConfig(out_dir=out, block_size=64, n_buckets=4, tiers=tiers,
+                              run_id=run_id)
+
+    out = str(tmp_path / "o")
+    run_pipeline(spark, seq, cfg(out, (("1s", 10), ("1m", 6), ("1h", 6)), "run-a"))
+    units = {r["partition_key"] for r in
+             lineage.completed_keys(spark, out, "blocks").collect()}
+    new_tiers = (("1s", 10), ("5m", 30))
+    paths = run_pipeline(spark, seq, cfg(out, new_tiers, "run-b"))
+
+    ck = lineage.read_checkpoint(spark, out).filter("run_id = 'run-b'").collect()
+    # every unit's tiers were rewritten and recorded, the blocks were not
+    assert {(r["stage"], r["partition_key"]) for r in ck} == {
+        ("tiers", f"{t}/{u}") for t in ("1s", "5m") for u in units}
+    clean = str(tmp_path / "clean")
+    run_pipeline(spark, seq, cfg(clean, new_tiers, "run-c"))
+    for name in ("1s", "5m"):
+        a = spark.read.parquet(paths[f"tier_{name}"])
+        b = spark.read.parquet(f"{clean}/tiers/tier={name}")
+        assert a.count() == b.count() > 0
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    assert all(r.ok for r in lineage.verify_lineage(
+        spark, out, "tiers", f"{out}/tiers", ["tier", "source", "bucket"]).collect())
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return how many jobs it ran."""
+    sc = spark.sparkContext
+    _drain(spark)
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    _drain(spark)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_jobs_scale_with_the_units_it_touches(spark, tmp_path):
+    """A small backfill costs what it touches: each invalidation is a
+    read and a write of the checkpoint, a resume with nothing pending
+    reads the plan inputs and stops, and a 2-unit resume runs no more
+    jobs than a fresh run plus its one checkpoint read."""
+    from processor_post_timeseries_spark.plans.backfill import invalidate_where
+
+    tiers = (("1s", 10), ("1m", 6), ("1h", 6))
+    path = str(tmp_path / "seq")
+    sequences(spark, 80, seed=16, min_tok=5, max_tok=600, vocab=500).write.parquet(path)
+    seq = spark.read.parquet(path)
+    out = str(tmp_path / "o")
+
+    def cfg(run_id, resume):
+        return PipelineConfig(out_dir=out, block_size=64, n_buckets=4, tiers=tiers,
+                              run_id=run_id, resume=resume)
+
+    fresh = _jobs(spark, "fresh", lambda: run_pipeline(spark, seq, cfg("run-a", False)))
+    units = sorted(r["partition_key"] for r in
+                   lineage.completed_keys(spark, out, "blocks").collect())[:2]
+    for i, unit in enumerate(units):
+        source, bucket = unit.rsplit("/", 1)
+        assert _jobs(spark, f"invalidate{i}",
+                     lambda: invalidate_where(spark, out, source, int(bucket))) <= 2
+
+    resumed = cfg("run-b", True)
+    assert _jobs(spark, "resume", lambda: run_pipeline(spark, seq, resumed)) <= fresh + 1
+    assert {r["partition_key"] for r in lineage.read_checkpoint(spark, out)
+            .filter("run_id = 'run-b' and stage = 'blocks'").collect()} == set(units)
+
+    idle = cfg("run-c", True)
+    assert _jobs(spark, "noop", lambda: run_pipeline(spark, seq, idle)) <= 3
+    assert idle.metrics == {}
+    assert lineage.read_checkpoint(spark, out).filter("run_id = 'run-c'").count() == 0
+
+
+def test_empty_fresh_run_still_writes_its_stages(spark, tmp_path):
+    """A fresh run over an empty input writes each (empty) stage, leaving
+    its output directory and a zero row metric; a resume over it, with no
+    unit pending, starts no stage."""
+    import os
+
+    empty = sequences(spark, 8, seed=3).filter(F.col("n_tok") < 0)
+    out = str(tmp_path / "o")
+    cfg = PipelineConfig(out_dir=out, block_size=64, n_buckets=4,
+                         tiers=(("1s", 8),), resume=False)
+    paths = run_pipeline(spark, empty, cfg)
+    assert cfg.metrics == {s: {"rows_written": 0} for s in ("blocks", "tiers")}
+    assert os.path.isdir(paths["blocks"]) and os.path.isdir(paths["tiers"])
+    resumed = PipelineConfig(out_dir=out, block_size=64, n_buckets=4,
+                             tiers=(("1s", 8),), resume=True)
+    run_pipeline(spark, empty, resumed)
+    assert resumed.metrics == {}

@@ -7,7 +7,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from processor_post_timeseries_spark import oracle
+import oracle
 from processor_post_timeseries_spark.operators.gapfill import _ffill
 
 

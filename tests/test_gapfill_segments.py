@@ -3,7 +3,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from processor_post_timeseries_spark import oracle
+import oracle
 from processor_post_timeseries_spark.operators.gapfill import (
     gapfill_samples,
     gapfill_samples_sql,

@@ -84,8 +84,10 @@ def test_ivf_plan_has_no_vector_collect(spark):
 
 
 def test_lineage_resume_antijoin_is_broadcast(spark, tmp_path):
-    """Resume filtering must broadcast the (tiny) checkpoint key set, not
-    shuffle the corpus against it."""
+    """Resume filtering must not shuffle the corpus against the (tiny)
+    checkpoint key set: the pending plan is a literal NOT IN over the
+    driver-side done set, with no join and no exchange. The lineage
+    read-back of the units a run wrote prunes partitions in its scan."""
     from processor_post_timeseries_spark.operators.partitioning import with_bucket
     from processor_post_timeseries_spark.plans import lineage
     from processor_post_timeseries_spark.plans.pipeline import PipelineConfig, run_pipeline
@@ -96,7 +98,14 @@ def test_lineage_resume_antijoin_is_broadcast(spark, tmp_path):
     run_pipeline(spark, seq, cfg)
     pending = lineage.pending_only(seq, spark, cfg.out_dir, "blocks", ["source", "bucket"])
     plan = _plan(pending)
-    assert re.search(r"BroadcastHashJoin .*LeftAnti", plan) or "BroadcastHashJoin" in plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
+    assert re.search(r"Condition : NOT concat_ws\(.* IN(SET)? ", plan), plan
+
+    keys = [r["partition_key"] for r in lineage.completed_keys(spark, cfg.out_dir, "blocks")
+            .orderBy("partition_key").limit(2).collect()]
+    written = spark.read.parquet(f"{cfg.out_dir}/blocks")
+    plan = _plan(lineage._partition_stats(written, ["source", "bucket"], keys))
+    assert re.search(r"PartitionFilters: \[.*concat_ws.*\]", plan), plan
 
 
 def test_asof_join_is_single_window_pass(spark):

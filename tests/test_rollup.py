@@ -5,7 +5,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from processor_post_timeseries_spark import oracle
+import oracle
 from processor_post_timeseries_spark.operators.rollup import (
     cascade_tier,
     rollup_all_tiers,

@@ -3,7 +3,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from processor_post_timeseries_spark import oracle
+import oracle
 from processor_post_timeseries_spark.operators.rollup import tier1_from_tokens
 from processor_post_timeseries_spark.sources.synth import sequences
 from processor_post_timeseries_spark.streaming.stream_rollup import (
