@@ -8,13 +8,17 @@ builder is used by ``spark-submit --py-files``; only ``master`` changes.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
 
+@functools.cache
 def package_zip() -> str:
     """Zip this package for ``--py-files``-style shipping to executors.
 
@@ -22,10 +26,16 @@ def package_zip() -> str:
     --py-files`` on a multi-executor cluster; for plain ``python`` drivers
     the session builder ships the same artifact itself (addPyFile), so
     pandas-UDF closures unpickle on workers regardless of launch dir.
+
+    Built once per process, in a private temp dir removed at exit: a path
+    shared between drivers on one host would let one driver truncate or
+    replace the zip while another ships it.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), f"{pkg_name}.zip")
+    tmp = tempfile.mkdtemp(prefix=f"{pkg_name}-")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    out = os.path.join(tmp, f"{pkg_name}.zip")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:

@@ -336,3 +336,32 @@ def test_empty_fresh_run_still_writes_its_stages(spark, tmp_path):
                              tiers=(("1s", 8),), resume=True)
     run_pipeline(spark, empty, resumed)
     assert resumed.metrics == {}
+
+
+def test_resume_input_is_coalesced_to_the_pending_share(spark, tmp_path):
+    """The kernels of a k-of-N-unit resume read ceil(P·k/N) partitions of
+    a P-partition input; a fresh run (every unit pending) reads all P,
+    and an input with a shuffle is left as it is, without a job."""
+    import math
+
+    from processor_post_timeseries_spark.plans.pipeline import _pending_input
+
+    path = str(tmp_path / "seq")
+    sequences(spark, 120, seed=17, min_tok=5, max_tok=50).repartition(4).write.parquet(path)
+    seq = with_bucket(spark.read.parquet(path), 2)
+    units = sorted(r[0] for r in seq.select(lineage.key_col(["source", "bucket"]))
+                   .distinct().collect())
+    assert seq.rdd.getNumPartitions() == 4 and len(units) > 2
+    want = math.ceil(4 * 2 / len(units))
+    assert want < 4
+
+    resumed = _pending_input(seq, units, units[:2])
+    assert resumed.rdd.getNumPartitions() == want
+    keys = {r[0] for r in resumed.select(lineage.key_col(["source", "bucket"])).collect()}
+    assert keys == set(units[:2])
+    assert _pending_input(seq, units, units).rdd.getNumPartitions() == 4
+
+    shuffled = seq.repartition(3)
+    assert _jobs(spark, "pending-input",
+                 lambda: _pending_input(shuffled, units, units[:2])) == 0
+

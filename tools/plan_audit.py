@@ -11,10 +11,11 @@ Prints one JSON line per query + a summary line.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from processor_post_timeseries_spark.contract import queries  # noqa: E402
 from processor_post_timeseries_spark.session import get_spark  # noqa: E402
