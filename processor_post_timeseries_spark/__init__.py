@@ -13,4 +13,9 @@ Everything here is DataFrame/Catalyst-first; Python appears only inside
 Arrow-vectorized pandas UDFs (codec bit-packing, per-row window reshapes).
 """
 
+from . import _zipcache
+
 __version__ = "0.1.0"
+
+# in a Spark Python worker, runs while the first engine kernel unpickles
+_zipcache.install()

@@ -44,16 +44,21 @@ def to_blocks(seq_df: DataFrame, block_size: int = 131_072) -> DataFrame:
 
     Default block_size mirrors the reference default chunk of
     CHUNK_SIZE_MB·2^20/8 = 131072 samples (``/root/reference/processor/main.py:18-20``).
-    Adds the reference-shaped object key via ``block_key``.
+    Adds the reference-shaped object key via ``block_key``. An empty doc
+    gets one empty block (``block_no`` 0, ``start_idx = end_idx = n = 0``)
+    so ``from_blocks`` returns it and its work unit is checkpointed; a
+    NULL ``tokens`` row raises ``ValueError`` naming the doc.
     """
 
     def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc, src, toks in zip(pdf["doc_id"], pdf["source"], pdf["tokens"]):
+                if toks is None:
+                    raise ValueError(f"NULL tokens for doc_id {doc!r}")
                 a = np.asarray(toks, dtype=np.int32)
                 n = len(a)
-                for b, start in enumerate(range(0, n, block_size)):
+                for b, start in enumerate(range(0, max(n, 1), block_size)):
                     end = min(start + block_size, n)
                     rows.append(
                         (doc, src, b, start, end, end - start, dod_encode_array(a[start:end]))

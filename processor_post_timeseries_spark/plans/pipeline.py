@@ -29,12 +29,14 @@ thread is not touched.
 A resume runs its kernels on its share of the input: with k of N units
 pending, the filtered input is coalesced from its P planned partitions
 to ceil(P·k/N) (``_pending_input``). Every Python task has a fixed
-worker cost (about 0.2 s of CPU on a 4-vCPU host, mostly re-reading the
-zip importers' directories in ``importlib.invalidate_caches``) before
-it reads a row, so a 2-unit backfill should start few tasks, not one
-per input split. A unit is a ``doc_id`` hash bucket within a source, so
-its rows are spread over every split and each coalesced task carries
-about as many rows as a fresh-run task.
+worker cost before it reads a row: about 0.04 s of CPU on a 4-vCPU host
+once the worker has run an engine task (``_zipcache`` stops
+``importlib.invalidate_caches`` re-reading the zip importers'
+directories), about 0.2 s on a worker's first engine task. So a 2-unit
+backfill should still start few tasks, not one per input split. A unit
+is a ``doc_id`` hash bucket within a source, so its rows are spread over
+every split and each coalesced task carries about as many rows as a
+fresh-run task.
 
 Shuffle census at 100 TB: ZERO wide dependencies in the whole pipeline —
 blocks and every tier are per-row maps before the one
@@ -114,8 +116,9 @@ def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFr
     (file-less) stage directory and a ``rows_written`` of 0.
 
     The kernels run on the pending share of the input's partitions
-    (``_pending_input``): each Python task costs about 0.2 s of worker
-    CPU before it reads a row, so a resume of a few units runs each
+    (``_pending_input``): each Python task has a fixed worker cost before
+    it reads a row (about 0.04 s of CPU on a warm worker, 0.2 s on a
+    worker's first engine task), so a resume of a few units runs each
     kernel in a task or two rather than one per input split, each with
     about a fresh-run task's rows. The limit: a resume whose pending
     units hold far more than their share of the rows gets fewer, larger

@@ -365,3 +365,41 @@ def test_resume_input_is_coalesced_to_the_pending_share(spark, tmp_path):
     assert _jobs(spark, "pending-input",
                  lambda: _pending_input(shuffled, units, units[:2])) == 0
 
+
+
+def _with_empty_doc(spark):
+    from processor_post_timeseries_spark.sources.synth import SEQ_SCHEMA
+
+    return spark.createDataFrame([("a", [1, 2, 3], 3, "s1"), ("b", [], 0, "s2")], SEQ_SCHEMA)
+
+
+def test_empty_doc_round_trips_through_blocks(spark):
+    seq = _with_empty_doc(spark)
+    rows = to_blocks(seq, block_size=2).filter("doc_id = 'b'").collect()
+    assert [(r["block_no"], r["start_idx"], r["end_idx"], r["n"]) for r in rows] == [(0, 0, 0, 0)]
+    back = {r["doc_id"]: (list(r["tokens"]), r["n_tok"], r["source"])
+            for r in from_blocks(to_blocks(seq, block_size=2)).collect()}
+    assert back == {"a": ([1, 2, 3], 3, "s1"), "b": ([], 0, "s2")}
+
+
+def test_unit_of_empty_docs_is_checkpointed_and_not_rerun(spark, tmp_path):
+    """A unit whose docs are all empty gets its blocks checkpoint key, so a
+    resume right after the fresh run has nothing pending in either stage."""
+    seq = _with_empty_doc(spark)
+    out = str(tmp_path / "o")
+    tiers = (("1s", 2),)
+    run_pipeline(spark, seq, PipelineConfig(out_dir=out, block_size=2, n_buckets=2, tiers=tiers,
+                                            run_id="run-a", resume=False))
+    resumed = PipelineConfig(out_dir=out, block_size=2, n_buckets=2, tiers=tiers, run_id="run-b")
+    run_pipeline(spark, seq, resumed)
+    assert resumed.metrics == {}
+    assert lineage.read_checkpoint(spark, out).filter("run_id = 'run-b'").count() == 0
+    done = {r["partition_key"] for r in lineage.completed_keys(spark, out, "blocks").collect()}
+    assert {k.split("/")[0] for k in done} == {"s1", "s2"}
+
+
+def test_null_tokens_error_names_the_doc(spark):
+    seq = _with_empty_doc(spark)
+    bad = seq.withColumn("tokens", F.when(F.col("doc_id") != "a", F.col("tokens")))
+    with pytest.raises(Exception, match="NULL tokens for doc_id 'a'"):
+        to_blocks(bad, block_size=2).collect()
