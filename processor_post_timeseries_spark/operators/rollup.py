@@ -22,7 +22,9 @@ from the reduced values and their window offsets — no per-doc Python
 objects and no pandas frame on either side of the boundary.
 ``fused_tiers`` runs the whole cascade in one crossing; the single-tier
 entry points (``tier1_from_tokens``, ``cascade_tier``) run the same kernel
-over one factor.
+over one factor. Given a doc's ``offset`` into its stream, the kernel
+starts its windows at that phase, so an append (``incremental.py``) is the
+same kernel too: one window rule (``_window_starts``) for batch and append.
 
 Determinism: sums are int64 over int32 tokens (exact, order-free); mean
 is derived at read time as ``sum/cnt`` (never accumulated in float), per
@@ -69,18 +71,35 @@ _COMPOSE = (np.minimum, np.maximum, np.add, np.add)
 _COLS = [f.name for f in TIER_SCHEMA.fields]
 
 
-def _window_starts(lengths, w: int):
+def _window_starts(lengths, w: int, phase):
     """Combined window-start boundaries for a batch of per-doc arrays laid
-    end to end: returns (starts, per-doc window counts, total windows)."""
+    end to end: returns (starts, per-doc window counts, total windows).
+
+    ``phase`` (per doc, in ``[0, w)``) is how far into its first window a
+    doc's array begins: a doc of ``n > 0`` elements has
+    ``(phase + n + w - 1) // w`` windows, window ``j`` starting
+    ``max(0, j*w - phase)`` elements in. Phase 0 is a doc's whole stream;
+    a non-zero phase is an append whose first window is partial."""
     lens = np.asarray(lengths, dtype=np.int64)
-    nws = (lens + w - 1) // w
+    phase = np.asarray(phase, dtype=np.int64)
+    nws = np.where(lens > 0, (phase + lens + w - 1) // w, 0)
     total = int(nws.sum())
     if total == 0:
         return np.empty(0, np.int64), nws, 0
     doc_off = np.concatenate([[0], np.cumsum(lens)[:-1]])
     win_off = np.concatenate([[0], np.cumsum(nws)[:-1]])
-    starts = np.repeat(doc_off, nws) + (np.arange(total) - np.repeat(win_off, nws)) * w
+    j = np.arange(total) - np.repeat(win_off, nws)
+    starts = np.repeat(doc_off, nws) + np.maximum(0, j * w - np.repeat(phase, nws))
     return starts, nws, total
+
+
+def _no_nulls(batch: pa.RecordBatch, name: str) -> None:
+    """Raise naming the first doc whose ``name`` is NULL."""
+    arr = batch.column(name)
+    if arr.null_count:
+        row = pc.index(arr.is_null(), True).as_py()
+        doc = batch.column("doc_id")[row].as_py()
+        raise ValueError(f"NULL {name} for doc_id {doc!r}")
 
 
 def _list_values(batch: pa.RecordBatch, name: str) -> tuple[np.ndarray, np.ndarray]:
@@ -88,14 +107,28 @@ def _list_values(batch: pa.RecordBatch, name: str) -> tuple[np.ndarray, np.ndarr
     offsets. A sliced batch's offsets need not start at 0. A NULL row
     raises: its offsets span no values, so it would otherwise pass as an
     empty doc."""
+    _no_nulls(batch, name)
     arr = batch.column(name)
-    if arr.null_count:
-        row = pc.index(arr.is_null(), True).as_py()
-        doc = batch.column("doc_id")[row].as_py()
-        raise ValueError(f"NULL {name} for doc_id {doc!r}")
     off = arr.offsets.to_numpy()
     vals = arr.values.slice(off[0], off[-1] - off[0]).to_numpy()
     return np.diff(off), vals.astype(np.int64, copy=False)
+
+
+def _tier_batch(doc_id, source, name: str, window, lengths, stats) -> pa.RecordBatch:
+    """A ``TIER_SCHEMA`` batch from per-doc window counts (``lengths``) and
+    the flat per-window ``stats`` laid out doc after doc."""
+    offsets = pa.array(np.concatenate([[0], np.cumsum(lengths)]).astype(np.int32))
+    return pa.RecordBatch.from_arrays(
+        [
+            doc_id,
+            source,
+            pa.array([name] * len(lengths), pa.string()),
+            pa.array(window),
+            pa.array(lengths.astype(np.int32)),
+            *(pa.ListArray.from_arrays(offsets, pa.array(v)) for v in stats),
+        ],
+        names=_COLS,
+    )
 
 
 def tier_batches(
@@ -109,6 +142,11 @@ def tier_batches(
     ``ufunc.reduceat`` per statistic over the batch's concatenated
     values; windows never straddle docs because each doc's offset is
     itself a window start.
+
+    An optional int64 ``offset`` column is each doc's position in its
+    stream, in raw tokens (0 when absent). Each tier then starts at phase
+    ``pos % factor``, carrying ``pos //= factor`` down the cascade, so the
+    windows compose at the seam with those before the offset.
     """
     n = batch.num_rows
     if "tokens" in batch.schema.names:
@@ -119,22 +157,16 @@ def tier_batches(
         cols = [_list_values(batch, c) for c in _STATS]
         lengths, stats = cols[0][0], tuple(v for _, v in cols)
         window = batch.column("window").to_numpy()
+    pos = np.zeros(n, np.int64)
+    if "offset" in batch.schema.names:
+        _no_nulls(batch, "offset")
+        pos = batch.column("offset").to_numpy().astype(np.int64) // window
     for name, factor in tiers:
-        starts, lengths, total = _window_starts(lengths, factor)
+        starts, lengths, total = _window_starts(lengths, factor, pos % factor)
+        pos //= factor
         stats = tuple(u.reduceat(v, starts) if total else v[:0] for u, v in zip(_COMPOSE, stats))
         window = window * factor
-        offsets = pa.array(np.concatenate([[0], np.cumsum(lengths)]).astype(np.int32))
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id"),
-                batch.column("source"),
-                pa.array([name] * n, pa.string()),
-                pa.array(window),
-                pa.array(lengths.astype(np.int32)),
-                *(pa.ListArray.from_arrays(offsets, pa.array(v)) for v in stats),
-            ],
-            names=_COLS,
-        )
+        yield _tier_batch(batch.column("doc_id"), batch.column("source"), name, window, lengths, stats)
 
 
 def _map_tiers(df: DataFrame, tiers, inputs: list[str]) -> DataFrame:

@@ -3,6 +3,7 @@ end-state equality statistically; these pin the branches)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -100,3 +101,56 @@ class TestIncrementalAppend:
             tier1_from_tokens(_seq(spark, [("a", list(range(16)))]), 2), 2, "t2"
         )
         assert _points(t2) == _points(full_t2)
+
+    def test_stored_row_of_another_window_or_tier_raises(self, spark):
+        existing = tier1_from_tokens(_seq(spark, [("a", [1, 2, 3, 4, 5, 6])]), 4)
+        delta = _delta(spark, [("a", [7, 8, 9], 6)])
+        with pytest.raises(Exception, match="ValueError.*doc a is stored as tier 1s window 4"):
+            append_tokens_to_tiers(existing, delta, 2).collect()
+        minute = tier1_from_tokens(_seq(spark, [("a", [1, 2])]), 4, tier="1m")
+        with pytest.raises(Exception, match="ValueError.*doc a is stored as tier 1m"):
+            append_tokens_to_tiers(minute, _delta(spark, [("a", [3], 2)]), 4).collect()
+
+    @pytest.mark.parametrize(
+        "row, column",
+        [
+            (("a", None, 3), "tokens"),  # a stored doc
+            (("z", None, 0), "tokens"),  # a new doc
+            (("z", [4], None), "offset"),
+        ],
+    )
+    def test_null_delta_column_raises_naming_the_doc(self, spark, row, column):
+        existing = tier1_from_tokens(_seq(spark, [("a", [1, 2, 3])]), 4)
+        merged = append_tokens_to_tiers(existing, _delta(spark, [row]), 4)
+        with pytest.raises(Exception, match=f"ValueError.*NULL {column} for doc_id '{row[0]}'"):
+            merged.collect()
+
+
+_I32 = np.iinfo(np.int32)
+
+
+@pytest.mark.parametrize("window", [1, 3, 4, 16])
+def test_append_equals_one_shot_sweep(spark, window):
+    # 60 docs: stored prefix + appended suffix at a random split (the
+    # suffix may be empty), new docs appended at offset 0, stored docs
+    # with no delta, empty docs; tokens reach the int32 extremes
+    rng = np.random.default_rng(window)
+    full, stored, delta = [], [], []
+    for i in range(60):
+        n = int(rng.integers(0, 3 * window + 8)) if i % 10 else 0
+        toks = rng.integers(_I32.min, _I32.max, n, endpoint=True)
+        toks[rng.random(n) < 0.1] = _I32.min
+        toks[rng.random(n) < 0.1] = _I32.max
+        doc, toks, kind = f"d{i}", toks.tolist(), i % 4
+        full.append((doc, toks))
+        k = 0 if kind == 1 else int(rng.integers(0, n + 1))  # kind 1: a new doc
+        if kind != 1:
+            stored.append((doc, toks if kind == 2 else toks[:k]))
+        if kind != 2:  # kind 2: no delta
+            delta.append((doc, toks[k:], k))
+    got = append_tokens_to_tiers(
+        tier1_from_tokens(_seq(spark, stored), window), _delta(spark, delta), window
+    )
+    exp = tier1_from_tokens(_seq(spark, full), window)
+    assert got.columns == exp.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))

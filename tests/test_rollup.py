@@ -161,3 +161,27 @@ def test_kernel_on_sliced_batch_equals_unsliced():
     got = [b.to_pylist() for b in tier_batches(t1.slice(5, 6), TIERS[1:])]
     exp = [b.to_pylist() for b in tier_batches(next(tier_batches(_token_batch(docs[5:11]), TIERS[:1])), TIERS[1:])]
     assert got == exp
+
+
+def test_kernel_from_offset_composes_with_prefix():
+    # a doc's suffix, windowed from its offset k, composes with its
+    # prefix's windows into the one-shot windows at every tier: the raw
+    # window W of a tier straddles the seam exactly when k % W != 0
+    tiers = (("a", 3), ("b", 2))
+    toks = np.random.default_rng(3).integers(-50, 50, 23).tolist()
+    one_shot = [b.to_pylist()[0] for b in tier_batches(_token_batch([("d", toks)]), tiers)]
+    for k in range(len(toks) + 1):
+        suffix = _token_batch([("d", toks[k:])]).append_column("offset", pa.array([k], pa.int64()))
+        prefix = tier_batches(_token_batch([("d", toks[:k])]), tiers)
+        # a stored tier's suffix reads the same raw offset
+        a, b = tier_batches(suffix, tiers)
+        a = a.append_column("offset", pa.array([k], pa.int64()))
+        assert next(tier_batches(a, tiers[1:])).to_pylist() == b.to_pylist()
+        for p, s, exp in zip(prefix, tier_batches(suffix, tiers), one_shot):
+            p, s = p.to_pylist()[0], s.to_pylist()[0]
+            got = {c: p[c] + s[c] for c in ("mins", "maxs", "sums", "cnts")}
+            if k % exp["window"] and s["n_windows"]:
+                for c, u in zip(("mins", "maxs", "sums", "cnts"), (min, max, int.__add__, int.__add__)):
+                    got[c][len(p[c]) - 1 : len(p[c]) + 1] = [u(p[c][-1], s[c][0])]
+            assert got == {c: exp[c] for c in got}, (k, exp["tier"])
+            assert s["window"] == exp["window"]
