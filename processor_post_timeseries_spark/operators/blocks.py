@@ -19,6 +19,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,25 +91,35 @@ def from_blocks(blocks_df: DataFrame) -> DataFrame:
     decode itself). ``sort_array`` over (block_no, payload) structs
     gives the same block_no order (block_no is unique per doc), the
     group state is bounded by one doc's payload either way, and the
-    kernel loops docs of a whole Arrow batch.
+    kernel loops docs of a whole Arrow batch. The kernel stays columnar
+    on both sides: it decodes the ``payload`` child of the flattened
+    ``_blocks`` lists and builds ``tokens`` from the decoded values and
+    per-doc offsets, with no pandas frame.
     """
     g = blocks_df.groupBy("doc_id").agg(
         F.sort_array(F.collect_list(F.struct("block_no", "payload"))).alias("_blocks"),
         F.first("source").alias("source"),
     )
 
-    def assemble(batches):
-        for pdf in batches:
-            docs, toks_out, ntoks, srcs = [], [], [], []
-            for doc, src, blocks in zip(pdf["doc_id"], pdf["source"], pdf["_blocks"]):
-                parts = [dod_decode_array(bytes(b["payload"])) for b in blocks]
-                toks = np.concatenate(parts) if parts else np.empty(0, np.int32)
-                docs.append(doc)
-                toks_out.append(toks.astype(np.int32))
-                ntoks.append(len(toks))
-                srcs.append(src)
-            yield pd.DataFrame(
-                {"doc_id": docs, "tokens": toks_out, "n_tok": ntoks, "source": srcs}
+    def assemble(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            blocks = batch.column("_blocks")
+            # list_flatten and list_value_length respect a sliced batch
+            parts = [dod_decode_array(b) for b in
+                     pc.list_flatten(blocks).field("payload").to_pylist()]
+            lens = pc.list_value_length(blocks).to_numpy()
+            # token offset of every block start, then of every doc start
+            at_block = np.concatenate([[0], np.cumsum([len(p) for p in parts], dtype=np.int64)])
+            offsets = at_block[np.concatenate([[0], np.cumsum(lens)])]
+            values = np.concatenate(parts) if parts else np.empty(0, np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id"),
+                    pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values),
+                    pa.array(np.diff(offsets), pa.int32()),
+                    batch.column("source"),
+                ],
+                names=[f.name for f in SEQ_SCHEMA.fields],
             )
 
-    return g.mapInPandas(assemble, schema=SEQ_SCHEMA)
+    return g.mapInArrow(assemble, schema=SEQ_SCHEMA)

@@ -115,6 +115,17 @@ def _append_batch(batch: pa.RecordBatch, window: int, tier: str) -> pa.RecordBat
     )
 
 
+def _mark_seen(ids: list, seen: set) -> None:
+    """Add a batch's doc ids to its task's ``seen``. A doc met twice had
+    two stored rows or two delta rows, which the join turned into two
+    rows: raise, naming it."""
+    for d in ids:
+        if d in seen:
+            raise ValueError(f"append_tokens_to_tiers: doc {d} has more than one stored "
+                             "tier row or delta row")
+        seen.add(d)
+
+
 def append_tokens_to_tiers(
     existing: DataFrame,
     delta: DataFrame,
@@ -129,7 +140,9 @@ def append_tokens_to_tiers(
       doc's already-ingested token count (0 for brand-new docs). An
       ``offset`` that disagrees with the existing row's ingested count
       raises inside the kernel — silent double-ingest corrupts sums — and
-      so does a NULL ``tokens`` or ``offset``.
+      so does a NULL ``tokens`` or ``offset``, or a doc with two delta
+      rows or two stored rows (each would pass the offset check on its
+      own and come out as its own tier row).
     * Docs without a delta pass through untouched; brand-new docs get
       fresh rows. Output is TIER_SCHEMA again, so the result can be
       written back over the touched partitions or fed to cascade_tier.
@@ -151,8 +164,11 @@ def append_tokens_to_tiers(
     )
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # the join puts every row of a doc in one task, not in one batch
+        seen: set = set()
         for batch in batches:
             if batch.num_rows:
+                _mark_seen(batch.column("doc_id").to_pylist(), seen)
                 yield _append_batch(batch, window, tier)
 
     return e.join(d, "doc_id", "full_outer").mapInArrow(kernel, TIER_SCHEMA)

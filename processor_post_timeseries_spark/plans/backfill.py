@@ -28,7 +28,7 @@ import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import CKPT_SCHEMA, _ckpt_path, read_checkpoint
+from .lineage import _CKPT_WRITE_LOCK, CKPT_SCHEMA, _ckpt_path, read_checkpoint
 
 
 def invalidate_units(
@@ -66,14 +66,17 @@ def invalidate_where(
 
 
 def _rewrite_without(spark: SparkSession, root: str, cond) -> int:
-    # one read of the (tiny, module docstring) checkpoint with ``cond`` as
-    # a column; rows where it is NULL go too, as under filter(~cond)
-    ck = read_checkpoint(spark, root).withColumn("_drop", cond).toArrow()
-    keep = ck.filter(pc.equal(ck["_drop"], False)).drop_columns("_drop")
-    removed = ck.num_rows - keep.num_rows
-    if removed:
-        # written from the driver's Arrow table: the overwrite never reads
-        # the files it replaces, and no Python worker starts
-        spark.createDataFrame(keep, CKPT_SCHEMA).coalesce(1).write.mode(
-            "overwrite").parquet(_ckpt_path(root))
+    # under the checkpoint's write lock: a pipeline stage's lineage append
+    # between this read and the overwrite would be lost
+    with _CKPT_WRITE_LOCK:
+        # one read of the (tiny, module docstring) checkpoint with ``cond``
+        # as a column; rows where it is NULL go too, as under filter(~cond)
+        ck = read_checkpoint(spark, root).withColumn("_drop", cond).toArrow()
+        keep = ck.filter(pc.equal(ck["_drop"], False)).drop_columns("_drop")
+        removed = ck.num_rows - keep.num_rows
+        if removed:
+            # written from the driver's Arrow table: the overwrite never
+            # reads the files it replaces, and no Python worker starts
+            spark.createDataFrame(keep, CKPT_SCHEMA).coalesce(1).write.mode(
+                "overwrite").parquet(_ckpt_path(root))
     return removed

@@ -19,9 +19,12 @@ Protocol
   ``drop_done`` filters the stage input with a literal ``NOT IN`` of the
   done units — no join. Completed partitions are never recomputed, and
   re-writing a partition is idempotent (dynamic overwrite).
-* The lineage read-back is pruned to the partition keys the run wrote:
-  the key predicate is over partition columns only, so the FileScan
+* The lineage read-back is pruned to the work units the run wrote: the
+  caller's unit predicate is over partition columns only, so the FileScan
   prunes to those directories (PartitionFilters) and reads nothing else.
+  A lineage key may also be a data column (``tier`` of the tiers stage):
+  the row hash takes the key columns last, in key order, so a checksum
+  does not depend on which keys are directories.
 
 Sandbox note: no Iceberg runtime jar is available offline, so the
 checkpoint table is an append-only Parquet table behind the same API
@@ -97,18 +100,15 @@ def record_stage(
     written_df: DataFrame,
     key_cols: list[str],
     run_id: str,
-    keys: Collection[str] | None = None,
 ) -> DataFrame:
     """Append done-rows for partitions of a written stage output.
 
     ``written_df`` must be a read-back of the stage's files so lineage
-    certifies durable bytes (input_files from ``input_file_name()``).
-    ``keys`` restricts recording to the partition keys this run wrote (a
-    resumed run must not re-attribute earlier runs' partitions); it is a
-    literal predicate on the partition columns, so the read-back scan is
-    pruned to those directories.
+    certifies durable bytes (input_files from ``input_file_name()``),
+    filtered by the caller to what this run wrote (a resumed run must not
+    re-attribute earlier runs' partitions).
     """
-    stats = _partition_stats(written_df, key_cols, keys).select(
+    stats = _partition_stats(written_df, key_cols).select(
         F.lit(stage).alias("stage"),
         "partition_key",
         F.lit(run_id).alias("run_id"),
@@ -128,20 +128,18 @@ def record_stage(
 _CKPT_WRITE_LOCK = threading.Lock()
 
 
-def _partition_stats(
-    df: DataFrame, key_cols: list[str], keys: Collection[str] | None = None
-) -> DataFrame:
+def _partition_stats(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """(partition_key, row_count, checksum, input_files) per partition of
-    ``df``: row count and xor of each row's xxhash64 over all columns.
-    The one spelling of the lineage stats, so ``verify_lineage``
-    recomputes exactly what ``record_stage`` recorded (its unused
-    ``input_files`` aggregate is pruned from the plan). ``keys`` filters
-    before the file stamp, so over partition columns it prunes the scan."""
-    pk = key_col(key_cols)
-    if keys is not None:
-        df = df.filter(pk.isin(sorted(keys)))
+    ``df``: row count and xor of each row's xxhash64 over all columns,
+    the non-key ones in ``df`` order and then ``key_cols``. A read-back
+    lists its partition columns last, so the order (and the checksum) is
+    the same whichever key columns are directories. The one spelling of
+    the lineage stats, so ``verify_lineage`` recomputes exactly what
+    ``record_stage`` recorded (its unused ``input_files`` aggregate is
+    pruned from the plan)."""
+    cols = [c for c in df.columns if c not in key_cols] + key_cols
     stamped = df.withColumn(
-        "_h", F.xxhash64(*[F.col(c) for c in df.columns])
+        "_h", F.xxhash64(*[F.col(c) for c in cols])
     ).withColumn("_file", F.input_file_name())
     return (
         stamped.groupBy(*key_cols)
@@ -150,7 +148,8 @@ def _partition_stats(
             F.expr("bit_xor(_h)").alias("checksum"),
             F.array_distinct(F.collect_list("_file")).alias("input_files"),
         )
-        .select(pk.alias("partition_key"), "row_count", "checksum", "input_files")
+        .select(key_col(key_cols).alias("partition_key"), "row_count", "checksum",
+                "input_files")
     )
 
 

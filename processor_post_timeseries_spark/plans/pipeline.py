@@ -8,16 +8,33 @@ The engine's flagship plan (reference lifecycle §3.1 re-expressed):
          partitionBy(source, bucket)                    (narrow map)
       -> [stage tiers]   cascading continuous aggregates raw->1s->1m->1h,
          all tiers from one tier-kernel pass (rollup.fused_tiers),
-         written partitionBy(tier, source, bucket)      (narrow map)
+         sorted by tier within each unit and written
+         partitionBy(source, bucket)                    (narrow map)
       -> checkpoint rows per stage partition (lineage.py)
+
+Each (source, bucket) unit of a stage is one Parquet file: ``tier`` is a
+data column of the tiers stage, not a directory level. Every file costs
+a few ms of executor CPU to write or read back whatever its size, and
+the 1m and 1h rows of a unit are 60x and 3600x smaller than its 1s
+rows, so a file per tier would make two thirds of the files tiny. The
+price is on the read side: a ``tier = '1m'`` or ``'1h'`` filter is no
+longer a directory prune, so it opens every unit's file. The filter is
+pushed to the Parquet reader, and a file's rows are in tier order, but
+row-group statistics only skip the 1s rows of a file that holds more
+than one row group (larger than ``parquet.block.size``, 128 MB by
+default); a smaller file is read whole. The checkpoint keeps one key
+per tier ("tier/source/bucket", ``STAGE_KEYS``).
 
 The work units are planned on the driver once per run: the input's
 (source, bucket) keys are collected (a column-pruned distinct, at most
-sources × buckets strings) and, on resume, the checkpoint's done keys
+sources × buckets strings) and, when a checkpoint exists, its done keys
 are read once and shared by both stages. One stage runner,
-``_run_stage``, serves both stages: its pending units are the input
-units missing any checkpoint key the current config expects (one per
-tier for tiers). A resumed stage with nothing pending starts no job;
+``_run_stage``, serves both stages: on a resume its pending units are
+the input units missing any checkpoint key the current config expects
+(one per tier for tiers), on a fresh run every input unit. Either way a
+rewritten unit's keys of tiers no longer configured are dropped first,
+since its new file holds no rows of them. A resumed stage with nothing
+pending starts no job;
 otherwise it scans the raw sequences once, less the done units (a
 literal ``NOT IN``, ``lineage.drop_done``; a fresh run has none),
 writes them with dynamic partition overwrite (an idempotent re-write),
@@ -61,11 +78,13 @@ from ..operators.blocks import to_blocks
 from ..operators.partitioning import DEFAULT_BUCKETS, with_bucket
 from ..operators.rollup import DEFAULT_TIERS, fused_tiers
 from . import lineage
+from .backfill import invalidate_units
 
-# partition columns of each stage's output, which are also the fields of
-# its checkpoint partition_key ("source/bucket", "tier/source/bucket")
+# the fields of each stage's checkpoint partition_key ("source/bucket",
+# "tier/source/bucket"): its lineage keys
 STAGE_KEYS = {"blocks": ["source", "bucket"], "tiers": ["tier", "source", "bucket"]}
-# the work unit both stages resume and record by
+# the work unit both stages resume and record by, and the partition
+# columns of both stages' output
 _UNIT = ["source", "bucket"]
 _POOL = "spark.scheduler.pool"
 
@@ -106,14 +125,49 @@ def _pending_input(seq: DataFrame, units: list[str], pending: list[str]) -> Data
     return seq.coalesce(math.ceil(seq.rdd.getNumPartitions() * len(pending) / len(units)))
 
 
+def _stale_keys(done: set[str], prefixes: tuple[str, ...], pending: list[str]) -> list[str]:
+    """The done checkpoint keys of ``pending`` units under a tier the
+    config no longer has: rewriting a unit replaces its one file, rows of
+    a dropped tier included, so their keys must go before the new ones
+    are recorded, on a fresh run as on a resume. An untiered stage's keys
+    are its units: none is stale."""
+    if not all(prefixes):
+        return []
+    pend = set(pending)
+    return sorted(k for k in done
+                  if (p := k.partition("/"))[2] in pend and p[0] + "/" not in prefixes)
+
+
+def _listing(spark: SparkSession, path: str) -> list[str] | None:
+    """The entry names of directory ``path``, or None when it does not
+    exist: one Hadoop FS call on the driver, no job."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    return [s.getPath().getName() for s in fs.listStatus(p)] if fs.exists(p) else None
+
+
+def _check_layout(spark: SparkSession, path: str) -> None:
+    """Refuse a tiers output that still has a directory per tier: writing
+    units of the one-file-per-unit layout next to it would mix the two,
+    and neither a read nor a resume could tell them apart."""
+    if any(n.startswith("tier=") for n in _listing(spark, path) or []):
+        raise ValueError(
+            f"{path} holds tier=<name> directories, the per-tier layout of an earlier "
+            "version; the pipeline writes one file per (source, bucket) unit with tier as "
+            "a column. Write to a new out_dir or remove the old tiers and their checkpoint."
+        )
+
+
 def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFrame,
                build: Callable[[DataFrame], DataFrame], prefixes: tuple[str, ...],
                units: list[str], done: set[str]) -> None:
-    """Write and certify one stage over its pending units: the input
-    ``units`` not every expected checkpoint key ``prefix + unit`` of
-    which is in ``done``. A resume with none pending returns without a
-    job; a fresh run always writes, so an empty input still leaves its
-    (file-less) stage directory and a ``rows_written`` of 0.
+    """Write and certify one stage over its pending units: on a resume,
+    the input ``units`` not every expected checkpoint key ``prefix +
+    unit`` of which is in ``done``; on a fresh run, every input unit. A
+    resume with none pending returns without a job; a fresh run always
+    writes, so an empty input still leaves its (file-less) stage
+    directory and a ``rows_written`` of 0.
 
     The kernels run on the pending share of the input's partitions
     (``_pending_input``): each Python task has a fixed worker cost before
@@ -130,21 +184,32 @@ def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFr
     inherited pool, keeping its jobs out of the stage pools; a checkpoint
     row never precedes its data.
     """
-    pending = [u for u in units if any(p + u not in done for p in prefixes)]
-    if cfg.resume and not pending:
-        return
+    if cfg.resume:
+        pending = [u for u in units if any(p + u not in done for p in prefixes)]
+        if not pending:
+            return
+    else:
+        pending = units
+    stale = _stale_keys(done, prefixes, pending)
+    if stale:
+        invalidate_units(spark, cfg.out_dir, stage, stale)
     seq = _pending_input(seq, units, pending)
     sc = spark.sparkContext
     inherited = sc.getLocalProperty(_POOL)
     sc.setLocalProperty(_POOL, stage)
-    path, key_cols = f"{cfg.out_dir}/{stage}", STAGE_KEYS[stage]
+    path = f"{cfg.out_dir}/{stage}"
     obs = Observation()
     df = with_bucket(build(seq.drop("bucket")), cfg.n_buckets)
     df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
     # align task partitioning with the sink layout: without this every
     # task writes a file into every (source, bucket) dir it touches ->
-    # tasks × partitions tiny files; with it, one task owns few dirs
-    df.repartition(*key_cols).write.mode("overwrite").partitionBy(*key_cols).parquet(path)
+    # tasks × partitions tiny files; with it, one task owns few dirs and
+    # writes one file to each. The unit is a prefix of the sort order, so
+    # this sort is the writer's own (no second one); the rest of it puts
+    # each tiers file in tier order
+    order = _UNIT + [c for c in STAGE_KEYS[stage] if c not in _UNIT]
+    df = df.repartition(*_UNIT).sortWithinPartitions(*order)
+    df.write.mode("overwrite").partitionBy(*_UNIT).parquet(path)
     try:
         cfg.metrics[stage] = obs.get
     except Exception:
@@ -158,17 +223,26 @@ def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFr
         # certify, so no lineage rows (resume will re-attempt the keys)
         return
     sc.setLocalProperty(_POOL, inherited)
-    # lineage covers only the partitions THIS run wrote (a resumed run
-    # must not re-attribute earlier runs' partitions)
-    lineage.record_stage(spark, cfg.out_dir, stage, written, key_cols, cfg.run_id,
-                         keys=[p + u for u in pending for p in prefixes])
+    # lineage covers only the units THIS run wrote (a resumed run must
+    # not re-attribute earlier runs' partitions); the predicate is over
+    # partition columns, so the read-back scan is pruned to their files
+    lineage.record_stage(spark, cfg.out_dir, stage, _written_units(written, pending),
+                         STAGE_KEYS[stage], cfg.run_id)
+
+
+def _written_units(written: DataFrame, units: list[str]) -> DataFrame:
+    """The rows of ``units`` in a stage's read-back."""
+    return written.filter(lineage.key_col(_UNIT).isin(units))
 
 
 def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) -> dict[str, str]:
     """Execute all stages (skipping checkpointed partitions). Returns
-    {stage: output_path}. A path holds Parquet only once some run wrote
-    rows to it: a fresh run over an empty input leaves file-less stage
-    directories, and a resume with nothing pending leaves them as found.
+    {stage: output_path} for "blocks" and "tiers"; a tier's rows are
+    ``tier = <name>`` of the tiers table. A path holds Parquet only once
+    some run wrote rows to it: a fresh run over an empty input leaves
+    file-less stage directories, and a resume with nothing pending leaves
+    them as found. A tiers output in the older per-tier directory layout
+    raises ``ValueError``.
 
     The blocks stage and the tier cascade are independent DAGs over the
     same input, so they run as CONCURRENT Spark jobs, each tagged with
@@ -183,9 +257,13 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     Both stages finish (or fail) before this returns; the first stage
     error is raised after the other stage has stopped.
     """
+    _check_layout(spark, f"{cfg.out_dir}/tiers")
     seq = with_bucket(seq_df, cfg.n_buckets)
     units = sorted(r[0] for r in seq.select(lineage.key_col(_UNIT)).distinct().collect())
-    done = lineage.done_keys(spark, cfg.out_dir) if cfg.resume else {}
+    # a fresh run needs the done keys too: the stale ones of the units it
+    # rewrites must go (_stale_keys)
+    has_ckpt = _listing(spark, lineage._ckpt_path(cfg.out_dir)) is not None
+    done = lineage.done_keys(spark, cfg.out_dir) if has_ckpt else {}
     # the checkpoint key prefixes each unit of a stage must have done
     stages = {
         "blocks": (lambda p: to_blocks(p, cfg.block_size), ("",)),
@@ -201,7 +279,4 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
         ]
         for f in futures:
             f.result()
-    out = {stage: f"{cfg.out_dir}/{stage}" for stage in stages}
-    for name, _f in cfg.tiers:
-        out[f"tier_{name}"] = f"{cfg.out_dir}/tiers/tier={name}"
-    return out
+    return {stage: f"{cfg.out_dir}/{stage}" for stage in stages}

@@ -120,3 +120,38 @@ def test_cli_verify_lineage_green_and_detects_tamper(spark, tmp_path, capsys, mo
     rc2 = main(["--out", out, "--verify-lineage", "blocks"])
     rep2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc2 == 1 and rep2["n_mismatched"] >= 1
+
+
+def test_invalidation_keeps_a_concurrent_lineage_append(spark, tmp_path):
+    """A resume's tiers stage may invalidate stale keys while the blocks
+    stage appends its lineage: the checkpoint rewrite holds the append's
+    lock from its read to its overwrite, so no appended row is lost."""
+    import threading
+
+    from pyspark import inheritable_thread_target
+
+    root = str(tmp_path / "o")
+    rows = spark.createDataFrame([("s", b, "x") for b in range(4)],
+                                 "source string, bucket int, v string")
+    errors = []
+
+    def loop(stage, invalidate):
+        try:
+            for i in range(4):
+                lineage.record_stage(spark, root, stage, rows, ["source", "bucket"],
+                                     f"{stage}{i}")
+                if invalidate:
+                    invalidate_units(spark, root, stage, [f"s/{b}" for b in range(4)])
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=inheritable_thread_target(spark)(loop), args=a)
+               for a in (("blocks", False), ("tiers", True))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    ck = lineage.read_checkpoint(spark, root)
+    assert ck.filter("stage = 'blocks'").count() == 16
+    assert ck.filter("stage = 'tiers'").count() == 0

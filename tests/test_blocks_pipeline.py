@@ -260,13 +260,111 @@ def test_resume_with_a_changed_tier_set_writes_the_new_tiers(spark, tmp_path):
         ("tiers", f"{t}/{u}") for t in ("1s", "5m") for u in units}
     clean = str(tmp_path / "clean")
     run_pipeline(spark, seq, cfg(clean, new_tiers, "run-c"))
+    got = spark.read.parquet(paths["tiers"])
+    # each unit's file was replaced: the dropped tiers' rows went with it
+    assert {r.tier for r in got.select("tier").distinct().collect()} == {"1s", "5m"}
     for name in ("1s", "5m"):
-        a = spark.read.parquet(paths[f"tier_{name}"])
-        b = spark.read.parquet(f"{clean}/tiers/tier={name}")
+        a = got.filter(F.col("tier") == name)
+        b = spark.read.parquet(f"{clean}/tiers").filter(F.col("tier") == name)
         assert a.count() == b.count() > 0
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    # and so did their checkpoint keys: every key has its data
     assert all(r.ok for r in lineage.verify_lineage(
         spark, out, "tiers", f"{out}/tiers", ["tier", "source", "bucket"]).collect())
+
+
+def test_fresh_run_with_fewer_tiers_drops_the_keys_of_the_rest(spark, tmp_path):
+    """A fresh run replaces each unit's tiers file, so the checkpoint keys
+    of a tier it no longer writes must go too: a later resume with that
+    tier back recomputes it instead of trusting keys with no rows."""
+    seq = sequences(spark, 30, seed=19, min_tok=5, max_tok=400, vocab=500).cache()
+    out = str(tmp_path / "o")
+    three, two = (("1s", 10), ("1m", 6), ("1h", 6)), (("1s", 10), ("1m", 6))
+
+    def run(tiers, run_id, resume):
+        run_pipeline(spark, seq, PipelineConfig(out_dir=out, block_size=64, n_buckets=4,
+                                                tiers=tiers, run_id=run_id, resume=resume))
+
+    def tier_counts():
+        got = spark.read.parquet(f"{out}/tiers").groupBy("tier").count().collect()
+        return {r["tier"]: r["count"] for r in got}
+
+    def lineage_ok():
+        rows = lineage.verify_lineage(spark, out, "tiers", f"{out}/tiers",
+                                      ["tier", "source", "bucket"]).collect()
+        return bool(rows) and all(r.ok for r in rows)
+
+    run(three, "run-a", False)
+    want = tier_counts()
+    run(two, "run-b", False)
+    assert set(tier_counts()) == {"1s", "1m"} and lineage_ok()
+    assert not any(k.startswith("1h/") for k in lineage.done_keys(spark, out)["tiers"])
+    run(three, "run-c", True)
+    assert tier_counts() == want and lineage_ok()
+
+
+def _unit_files(path):
+    """{unit dir: its Parquet data files} of a stage output."""
+    import glob
+    import os
+
+    return {d: sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+            for d in glob.glob(f"{path}/source=*/bucket=*")}
+
+
+def test_each_unit_is_one_file_with_its_tiers_in_order(spark, tmp_path):
+    """Both stages write one Parquet file per (source, bucket) unit, on a
+    fresh run and on a 2-unit resume; a tiers file holds every tier of
+    the unit, in tier order, and its lineage certifies."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from processor_post_timeseries_spark.plans.backfill import invalidate_where
+
+    tiers = (("1s", 10), ("1m", 6), ("1h", 6))
+    seq = sequences(spark, 60, seed=18, min_tok=5, max_tok=400, vocab=500).cache()
+    out = str(tmp_path / "o")
+
+    def run(run_id, resume):
+        run_pipeline(spark, seq, PipelineConfig(out_dir=out, block_size=64, n_buckets=4,
+                                                tiers=tiers, run_id=run_id, resume=resume))
+        for stage in ("blocks", "tiers"):
+            files = _unit_files(f"{out}/{stage}")
+            assert files and all(len(f) == 1 for f in files.values()), (stage, files)
+        for d, (f,) in _unit_files(f"{out}/tiers").items():
+            got = pq.read_table(os.path.join(d, f), columns=["tier"])["tier"].to_pylist()
+            assert got == sorted(got) and set(got) == {"1s", "1m", "1h"}, d
+        assert all(r.ok for r in lineage.verify_lineage(
+            spark, out, "tiers", f"{out}/tiers", ["tier", "source", "bucket"]).collect())
+
+    run("run-a", False)
+    units = sorted(r["partition_key"] for r in
+                   lineage.completed_keys(spark, out, "blocks").collect())[:2]
+    for unit in units:
+        source, bucket = unit.rsplit("/", 1)
+        invalidate_where(spark, out, source, int(bucket))
+    run("run-b", True)
+    assert {r["partition_key"] for r in lineage.read_checkpoint(spark, out)
+            .filter("run_id = 'run-b' and stage = 'tiers'").collect()} == {
+        f"{t}/{u}" for t, _w in tiers for u in units}
+
+
+def test_a_run_into_the_per_tier_layout_raises(spark, tmp_path):
+    """A tiers output written with a directory per tier is refused before
+    any write, not mixed with the one-file-per-unit layout."""
+    import os
+
+    from processor_post_timeseries_spark.operators.rollup import fused_tiers
+
+    tiers = (("1s", 10),)
+    seq = sequences(spark, 10, seed=19, min_tok=5, max_tok=50)
+    out = str(tmp_path / "o")
+    with_bucket(fused_tiers(seq, tiers), 2).write.partitionBy(
+        "tier", "source", "bucket").parquet(f"{out}/tiers")
+    with pytest.raises(ValueError, match="tier=<name> directories"):
+        run_pipeline(spark, seq, PipelineConfig(out_dir=out, n_buckets=2, tiers=tiers))
+    assert not os.path.exists(f"{out}/blocks")
 
 
 def _jobs(spark, group, fn):

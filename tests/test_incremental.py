@@ -111,6 +111,27 @@ class TestIncrementalAppend:
         with pytest.raises(Exception, match="ValueError.*doc a is stored as tier 1m"):
             append_tokens_to_tiers(minute, _delta(spark, [("a", [3], 2)]), 4).collect()
 
+    def test_a_doc_in_two_delta_rows_raises(self, spark):
+        # each delta passes the offset check on its own: without the check
+        # the doc came out as two tier rows, cnts [4, 4] and [4, 3]
+        existing = tier1_from_tokens(_seq(spark, [("a", [1, 2, 3, 4, 5, 6])]), 4)
+        delta = _delta(spark, [("a", [7, 8], 6), ("a", [9], 6)])
+        with pytest.raises(Exception, match="ValueError.*doc a has more than one"):
+            append_tokens_to_tiers(existing, delta, 4).collect()
+
+    def test_a_doc_in_two_stored_rows_raises_across_batches(self, spark):
+        stored = tier1_from_tokens(_seq(spark, [("a", [1, 2]), ("b", [3])]), 4)
+        existing = stored.unionByName(stored.filter(F.col("doc_id") == "a"))
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        before = spark.conf.get(conf)
+        spark.conf.set(conf, "1")  # the two rows of doc a in two batches
+        try:
+            merged = append_tokens_to_tiers(existing, _delta(spark, [("b", [4], 1)]), 4)
+            with pytest.raises(Exception, match="ValueError.*doc a has more than one"):
+                merged.collect()
+        finally:
+            spark.conf.set(conf, before)
+
     @pytest.mark.parametrize(
         "row, column",
         [

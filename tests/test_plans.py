@@ -90,7 +90,12 @@ def test_lineage_resume_antijoin_is_broadcast(spark, tmp_path):
     read-back of the units a run wrote prunes partitions in its scan."""
     from processor_post_timeseries_spark.operators.partitioning import with_bucket
     from processor_post_timeseries_spark.plans import lineage
-    from processor_post_timeseries_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from processor_post_timeseries_spark.plans.pipeline import (
+        STAGE_KEYS,
+        PipelineConfig,
+        _written_units,
+        run_pipeline,
+    )
 
     seq = with_bucket(sequences(spark, 20, seed=5), 4)
     cfg = PipelineConfig(out_dir=str(tmp_path / "o"), block_size=64, n_buckets=4,
@@ -103,9 +108,51 @@ def test_lineage_resume_antijoin_is_broadcast(spark, tmp_path):
 
     keys = [r["partition_key"] for r in lineage.completed_keys(spark, cfg.out_dir, "blocks")
             .orderBy("partition_key").limit(2).collect()]
-    written = spark.read.parquet(f"{cfg.out_dir}/blocks")
-    plan = _plan(lineage._partition_stats(written, ["source", "bucket"], keys))
-    assert re.search(r"PartitionFilters: \[.*concat_ws.*\]", plan), plan
+    for stage in ("blocks", "tiers"):
+        written = _written_units(spark.read.parquet(f"{cfg.out_dir}/{stage}"), keys)
+        plan = _plan(lineage._partition_stats(written, STAGE_KEYS[stage]))
+        assert re.search(r"PartitionFilters: \[.*concat_ws.*\]", plan), (stage, plan)
+
+
+def test_tier_filter_is_pushed_to_the_tiers_files(spark, tmp_path):
+    """``tier`` is a data column of the tiers files, sorted within each
+    unit: a tier filter reaches the Parquet reader (which can skip other
+    tiers' row groups only in a file of more than one row group)."""
+    from processor_post_timeseries_spark.plans.pipeline import PipelineConfig, run_pipeline
+
+    cfg = PipelineConfig(out_dir=str(tmp_path / "o"), block_size=64, n_buckets=2,
+                         tiers=(("1s", 8), ("1m", 4)), resume=False)
+    run_pipeline(spark, sequences(spark, 20, seed=6), cfg)
+    plan = _plan(spark.read.parquet(f"{cfg.out_dir}/tiers").filter(F.col("tier") == "1m"))
+    assert re.search(r"PushedFilters: \[.*EqualTo\(tier,1m\)", plan), plan
+
+
+def test_lineage_checksum_does_not_depend_on_column_order(spark, tmp_path):
+    """The row hash takes the non-key columns in order and the key columns
+    last, so the same rows give the same checksums with the key columns
+    anywhere: read back from one file per unit (``tier`` a data column),
+    with the keys moved first, or read back from a directory per tier
+    (the layout older checkpoints certify)."""
+    from processor_post_timeseries_spark.operators.partitioning import with_bucket
+    from processor_post_timeseries_spark.operators.rollup import fused_tiers
+    from processor_post_timeseries_spark.plans import lineage
+    from processor_post_timeseries_spark.plans.pipeline import STAGE_KEYS
+
+    keys = STAGE_KEYS["tiers"]
+    rows = with_bucket(fused_tiers(sequences(spark, 20, seed=7), (("1s", 8), ("1m", 4))), 2)
+    rows.write.partitionBy("source", "bucket").parquet(str(tmp_path / "unit"))
+    rows.write.partitionBy(*keys).parquet(str(tmp_path / "tier"))
+    back = spark.read.parquet(str(tmp_path / "unit"))
+    assert "tier" not in back.columns[-2:]
+
+    def stats(df):
+        return sorted(tuple(r) for r in lineage._partition_stats(df, keys)
+                      .select("partition_key", "row_count", "checksum").collect())
+
+    want = stats(back)
+    assert len(want) > 2
+    assert stats(back.select(*keys, *(c for c in back.columns if c not in keys))) == want
+    assert stats(spark.read.parquet(str(tmp_path / "tier"))) == want
 
 
 def test_asof_join_is_single_window_pass(spark):
