@@ -437,16 +437,3 @@ def resize_images(media: DataFrame, height: int, width: int) -> DataFrame:
     return media.filter(F.col("modality") == "image").mapInPandas(
         run, schema=RESIZED_SCHEMA
     )
-
-
-def frame_sample_plan(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """Video frame-sampling *plan* (pure metadata math, no decode): which
-    byte offsets a sampler would decode — demonstrates pushdown-friendly
-    planning before any expensive UDF runs."""
-    return media.filter(F.col("modality") == "video").select(
-        "media_id",
-        "n_bytes",
-        F.sequence(F.lit(0), F.greatest(F.col("n_bytes") - 1, F.lit(0)), F.lit(every_n_bytes)).alias(
-            "sample_offsets"
-        ),
-    ).withColumn("n_samples", F.size("sample_offsets"))

@@ -95,22 +95,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.trim(canon))
 
 
-def text_profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One-stop per-doc profile used by the contract queries."""
-    t = F.col(text_col)
-    return docs.select(
-        F.col(id_col),
-        ws_token_count(t).alias("n_ws_tokens"),
-        bpe_token_count(t).alias("n_bpe_tokens"),
-        avg_word_len(t).alias("avg_word_len"),
-        punct_ratio(t).alias("punct_ratio"),
-        stopword_ratio(t).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        lang_id(t).alias("pred_lang"),
-        fingerprint(t).alias("fingerprint"),
-    )
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     k: int = 4,

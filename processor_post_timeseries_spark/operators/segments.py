@@ -2,7 +2,8 @@
 
 Reference semantics: a stream splits where successive timestamp deltas
 exceed ``2 × (1/rate)`` (``/root/reference/processor/reader.py:181-225``,
-threshold at ``:199``); emitted as half-open ``[start, end)`` ranges.
+threshold at ``:199``) and emits half-open ``[start, end)`` ranges;
+``sessionize`` labels each row with its segment id instead.
 
 Spark-first expression: lag-diff flag + running sum over an ordered
 window — the classic sessionization idiom. Shuffles once on the key
@@ -30,29 +31,6 @@ def sessionize(df: DataFrame, key: str, ts: str, gap, tiebreak: list[str] | None
     delta = F.col(ts) - F.lag(ts).over(w)
     flag = F.when(delta > gap_col, 1).otherwise(0)
     return df.withColumn("seg_id", F.sum(flag).over(w).cast("long"))
-
-
-def segment_bounds(df_with_seg: DataFrame, key: str, ts: str) -> DataFrame:
-    """Per-segment extents: (key, seg_id, seg_start, seg_end, n_samples).
-
-    ``seg_end`` follows the reference's half-open convention: last ts + 1
-    in index units (``/root/reference/processor/reader.py:222-225`` emits
-    ``[start, end)``). For timestamp columns use ``segment_extents``.
-    """
-    return df_with_seg.groupBy(key, "seg_id").agg(
-        F.min(ts).alias("seg_start"),
-        (F.max(ts) + F.lit(1)).alias("seg_end"),
-        F.count("*").alias("n_samples"),
-    )
-
-
-def segment_extents(df_with_seg: DataFrame, key: str, ts: str) -> DataFrame:
-    """Closed-interval extents for arbitrary (e.g. timestamp) axes."""
-    return df_with_seg.groupBy(key, "seg_id").agg(
-        F.min(ts).alias("seg_start"),
-        F.max(ts).alias("seg_end"),
-        F.count("*").alias("n_samples"),
-    )
 
 
 def channel_extents(df: DataFrame, key: str, ts: str, value: str) -> DataFrame:

@@ -68,16 +68,6 @@ def read_checkpoint(spark: SparkSession, root: str) -> DataFrame:
         return spark.createDataFrame([], CKPT_SCHEMA)
 
 
-def completed_keys(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    """Distinct done partition_keys for a stage: (partition_key)."""
-    return (
-        read_checkpoint(spark, root)
-        .filter((F.col("stage") == stage) & (F.col("status") == "done"))
-        .select("partition_key")
-        .distinct()
-    )
-
-
 def done_keys(spark: SparkSession, root: str) -> dict[str, set[str]]:
     """{stage: done partition_keys}, read to the driver in one job (the
     checkpoint holds one row per partition per stage)."""

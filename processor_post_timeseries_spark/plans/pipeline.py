@@ -216,12 +216,12 @@ def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFr
         # a zero-row write never materializes its observation row (Spark
         # asserts in toPyRow); an empty stage is a valid no-op
         cfg.metrics[stage] = {"rows_written": 0}
-    try:
-        written = spark.read.parquet(path)
-    except Exception:
+    if cfg.metrics[stage]["rows_written"] == 0:
         # a zero-row stage leaves no data files to read back — nothing to
         # certify, so no lineage rows (resume will re-attempt the keys)
+        sc.setLocalProperty(_POOL, inherited)
         return
+    written = spark.read.parquet(path)
     sc.setLocalProperty(_POOL, inherited)
     # lineage covers only the units THIS run wrote (a resumed run must
     # not re-attribute earlier runs' partitions); the predicate is over

@@ -82,7 +82,10 @@ def _hadoop_fs(spark: SparkSession):
 def list_partitions(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """Enumerate (tier, day) partitions from the DIRECTORY LISTING —
     metadata-only, no file footers touched (the manifest read an Iceberg
-    catalog would do)."""
+    catalog would do). Raises ``ValueError`` when the root holds any
+    visible entry that is not a ``tier=`` directory (the pipeline's own
+    ``source=/bucket=`` output, say): a policy over a layout it cannot
+    see would drop nothing and still write its log there."""
     fs, Path = _hadoop_fs(spark)
     out: list[tuple[str, int]] = []
     root = Path(path)
@@ -90,8 +93,12 @@ def list_partitions(spark: SparkSession, path: str) -> list[tuple[str, int]]:
         return out
     for t in fs.listStatus(root):
         tname = t.getPath().getName()
-        if not (t.isDirectory() and tname.startswith("tier=")):
+        if tname.startswith(("_", ".")):
             continue
+        if not (t.isDirectory() and tname.startswith("tier=")):
+            raise ValueError(
+                f"{path} is not a tier=<name>/day=<n> layout: found {tname!r}"
+            )
         for d in fs.listStatus(t.getPath()):
             dname = d.getPath().getName()
             if d.isDirectory() and dname.startswith("day="):

@@ -86,57 +86,6 @@ def sequences(
     return base.mapInPandas(gen, schema=SEQ_SCHEMA)
 
 
-def sequences_with_gaps(
-    spark: SparkSession,
-    n_docs: int,
-    seed: int = 42,
-    drop_every: int = 10,
-    **kw,
-) -> DataFrame:
-    """Long-form observed samples with deterministically dropped indices.
-
-    Output: ``(doc_id, source, n_tok, idx:int, value:int)`` where roughly
-    ``1/drop_every`` of indices are missing — the gap-fill operator's input.
-    The drop mask is a pure function of (doc hash, idx), partition-invariant.
-    """
-    seq = sequences(spark, n_docs, seed=seed, **kw)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-            T.StructField("n_tok", T.IntegerType(), False),
-            T.StructField("idx", T.IntegerType(), False),
-            T.StructField("value", T.IntegerType(), False),
-        ]
-    )
-
-    def drop(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for _, r in pdf.iterrows():
-                toks = np.asarray(r["tokens"], dtype=np.int32)
-                n = len(toks)
-                # stable across processes (Python hash() is salted)
-                h = int(r["doc_id"].rsplit("-", 1)[1])
-                idx = np.arange(n, dtype=np.int32)
-                keep = (idx + h) % drop_every != 0
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": r["doc_id"],
-                            "source": r["source"],
-                            "n_tok": n,
-                            "idx": idx[keep],
-                            "value": toks[keep],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return seq.mapInPandas(drop, schema=out_schema)
-
-
 # ----------------------------------------------------------- P14 size math
 # Reference test-fixture generator arithmetic
 # (/root/reference/scripts/generate_test_nwb.py:27-61).

@@ -2,7 +2,7 @@
 
 The reference is strictly batch (one file in, files out —
 ``/root/reference/processor/main.py:26`` asserts a single input), so
-streaming is an engine extension, not parity work. Two wrappers:
+streaming is an engine extension, not parity work. Three wrappers:
 
 * ``stream_rollup_available_now`` — incremental batch: new sequence files
   landing in a directory are rolled up to tier-1 aggregates exactly once
@@ -12,6 +12,9 @@ streaming is an engine extension, not parity work. Two wrappers:
 * ``stream_sessionize`` — the reference's gap detection (W1) as its
   streaming twin: ``session_window(ts, gap)`` + watermark for late data.
   Needs state; Spark's session-window state store handles it.
+* ``stream_sliding_counts`` — the batch ``w8_sliding_windows`` query's
+  hopping windows, kept incrementally: append mode emits a window once
+  the watermark passes its end, so every sink row is final.
 """
 
 from __future__ import annotations
@@ -70,85 +73,6 @@ def stream_sessionize(
             F.unix_micros(F.col("seg_start").cast("timestamp")).alias("seg_start_us"),
             F.unix_micros(F.col("seg_end").cast("timestamp")).alias("seg_end_us"),
         )
-    )
-
-
-def stream_exact_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    event_time: str = "ingest_ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: emit only the FIRST document per content
-    hash, with state bounded by the watermark (a duplicate arriving later
-    than the watermark horizon is admitted again — the standard
-    bounded-state tradeoff; at 100 TB unbounded digest state is not an
-    option). Batch-mode callers get plain dropDuplicates semantics.
-    Streaming twin of ``operators.dedup.exact_dedup``."""
-    hashed = docs.withColumn("text_hash", F.md5(F.col(text_col)))
-    if docs.isStreaming:
-        # dropDuplicatesWithinWatermark, NOT dropDuplicates: plain
-        # dropDuplicates on a key subset without the event-time column
-        # never evicts its state (unbounded growth); the WithinWatermark
-        # variant expires each hash once the watermark passes it — the
-        # bounded-state semantics documented above
-        return hashed.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
-            ["text_hash"]
-        )
-    return hashed.dropDuplicates(["text_hash"])
-
-
-def stream_rate_validate(
-    events: DataFrame,
-    declared: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    tolerance: float = 0.02,
-) -> DataFrame:
-    """Streaming twin of ``segments.validate_rates``: per (key, tumbling
-    window) the observed event count implies a rate; join the (static,
-    broadcastable) declared-rate dimension and flag windows whose
-    implied rate drifts more than ``tolerance`` from declared — the
-    online version of the reference's reader.py:82-106 check, for
-    catching a channel whose clock drifts MID-stream."""
-    win = F.window(F.col(ts_col), window)
-    # rate from the ACTUAL observed span ((n-1) intervals over max-min),
-    # not the nominal window duration — otherwise every partial window
-    # (stream start, channel onset/offset mid-window) is a false positive
-    agg = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key), win.alias("win"))
-        .agg(
-            F.count("*").alias("n"),
-            F.min(F.unix_micros(F.col(ts_col))).alias("first_us"),
-            F.max(F.unix_micros(F.col(ts_col))).alias("last_us"),
-        )
-        .withColumn(
-            "observed_rate_hz",
-            F.when(
-                (F.col("n") > 1) & (F.col("last_us") > F.col("first_us")),
-                (F.col("n") - 1)
-                * 1_000_000.0
-                / (F.col("last_us") - F.col("first_us")),
-            ),
-        )
-    )
-    joined = agg.join(F.broadcast(declared), key)
-    # declared <= 0 guard also keeps ANSI mode (Spark 4 default) from
-    # raising on the division
-    err = F.when(
-        F.col("declared_rate_hz") > 0,
-        F.abs(F.col("observed_rate_hz") - F.col("declared_rate_hz"))
-        * (F.lit(1.0) / F.col("declared_rate_hz")),
-    )
-    return joined.withColumn("rate_error", err).withColumn(
-        "rate_valid",
-        # too few samples or an unusable declared rate -> cannot
-        # validate -> flag
-        F.when(err.isNull(), F.lit(False)).otherwise(~(err > F.lit(tolerance))),
     )
 
 

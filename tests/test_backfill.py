@@ -68,8 +68,8 @@ def test_invalidate_units_exact_keys_only(spark, tmp_path):
     keys = [r["partition_key"] for r in ck.filter(F.col("stage") == "blocks").limit(2).collect()]
     removed = invalidate_units(spark, out, "blocks", keys)
     assert removed == 2
-    left = lineage.completed_keys(spark, out, "blocks").collect()
-    assert not {r["partition_key"] for r in left} & set(keys)
+    left = lineage.done_keys(spark, out)["blocks"]
+    assert not left & set(keys)
 
 
 def test_invalidate_missing_unit_is_noop(spark, tmp_path):
@@ -90,7 +90,7 @@ def test_cli_backfill_mode(spark, tmp_path, capsys, monkeypatch):
     seq = sequences(spark, 15, seed=14, min_tok=5, max_tok=60, vocab=100)
     out = str(tmp_path / "o4")
     run_pipeline(spark, seq, _cfg(out, "run-z"))
-    unit = lineage.completed_keys(spark, out, "blocks").first()["partition_key"]
+    unit = min(lineage.done_keys(spark, out)["blocks"])
     src, bkt = unit.rsplit("/", 1)
     rc = main(["--out", out, "--backfill", f"{src}:{bkt}"])
     assert rc == 0

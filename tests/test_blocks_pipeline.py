@@ -249,8 +249,7 @@ def test_resume_with_a_changed_tier_set_writes_the_new_tiers(spark, tmp_path):
 
     out = str(tmp_path / "o")
     run_pipeline(spark, seq, cfg(out, (("1s", 10), ("1m", 6), ("1h", 6)), "run-a"))
-    units = {r["partition_key"] for r in
-             lineage.completed_keys(spark, out, "blocks").collect()}
+    units = lineage.done_keys(spark, out)["blocks"]
     new_tiers = (("1s", 10), ("5m", 30))
     paths = run_pipeline(spark, seq, cfg(out, new_tiers, "run-b"))
 
@@ -339,8 +338,7 @@ def test_each_unit_is_one_file_with_its_tiers_in_order(spark, tmp_path):
             spark, out, "tiers", f"{out}/tiers", ["tier", "source", "bucket"]).collect())
 
     run("run-a", False)
-    units = sorted(r["partition_key"] for r in
-                   lineage.completed_keys(spark, out, "blocks").collect())[:2]
+    units = sorted(lineage.done_keys(spark, out)["blocks"])[:2]
     for unit in units:
         source, bucket = unit.rsplit("/", 1)
         invalidate_where(spark, out, source, int(bucket))
@@ -399,8 +397,7 @@ def test_resume_jobs_scale_with_the_units_it_touches(spark, tmp_path):
                               run_id=run_id, resume=resume)
 
     fresh = _jobs(spark, "fresh", lambda: run_pipeline(spark, seq, cfg("run-a", False)))
-    units = sorted(r["partition_key"] for r in
-                   lineage.completed_keys(spark, out, "blocks").collect())[:2]
+    units = sorted(lineage.done_keys(spark, out)["blocks"])[:2]
     for i, unit in enumerate(units):
         source, bucket = unit.rsplit("/", 1)
         assert _jobs(spark, f"invalidate{i}",
@@ -434,6 +431,29 @@ def test_empty_fresh_run_still_writes_its_stages(spark, tmp_path):
                              tiers=(("1s", 8),), resume=True)
     run_pipeline(spark, empty, resumed)
     assert resumed.metrics == {}
+
+
+def test_failed_read_back_fails_the_run(spark, tmp_path, monkeypatch):
+    """A non-empty stage whose read-back raises fails the run and is not
+    checkpointed as done."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    out = str(tmp_path / "o")
+    parquet = DataFrameReader.parquet
+
+    def failing(self, *paths, **options):
+        if f"{out}/tiers" in paths:
+            raise OSError("tiers read-back failed")
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing)
+    seq = sequences(spark, 10, seed=4, min_tok=5, max_tok=60, vocab=100)
+    cfg = PipelineConfig(out_dir=out, block_size=64, n_buckets=2, tiers=(("1s", 8),))
+    with pytest.raises(OSError, match="tiers read-back failed"):
+        run_pipeline(spark, seq, cfg)
+    monkeypatch.undo()
+    assert cfg.metrics["tiers"]["rows_written"] > 0
+    assert "tiers" not in lineage.done_keys(spark, out)
 
 
 def test_resume_input_is_coalesced_to_the_pending_share(spark, tmp_path):
@@ -492,7 +512,7 @@ def test_unit_of_empty_docs_is_checkpointed_and_not_rerun(spark, tmp_path):
     run_pipeline(spark, seq, resumed)
     assert resumed.metrics == {}
     assert lineage.read_checkpoint(spark, out).filter("run_id = 'run-b'").count() == 0
-    done = {r["partition_key"] for r in lineage.completed_keys(spark, out, "blocks").collect()}
+    done = lineage.done_keys(spark, out)["blocks"]
     assert {k.split("/")[0] for k in done} == {"s1", "s2"}
 
 

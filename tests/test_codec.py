@@ -56,17 +56,17 @@ def test_dod_compresses_smooth_streams():
     assert dod_decode_array(enc).tolist() == v.tolist()
 
 
-@pytest.mark.parametrize(
-    "arr",
-    [
-        [],
-        [0.0],
-        [3.14],
-        [1.0, 1.0, 1.0],  # xor == 0 path
-        [0.0, -0.0, np.nan, np.inf, -np.inf, 1e-308, 1e308],
-        list(np.linspace(0, 1, 999)),
-    ],
-)
+XOR_CASES = [
+    [],
+    [0.0],
+    [3.14],
+    [1.0, 1.0, 1.0],  # xor == 0 path
+    [0.0, -0.0, np.nan, np.inf, -np.inf, 1e-308, 1e308],
+    list(np.linspace(0, 1, 999)),
+]
+
+
+@pytest.mark.parametrize("arr", XOR_CASES)
 def test_xor_roundtrip_cases(arr):
     a = np.array(arr, np.float64)
     out = xor_decode_array(xor_encode_array(a))
@@ -113,3 +113,16 @@ def test_spark_roundtrip_udf(spark):
         F.sum(F.col("n_tok") * 4).alias("raw"),
     ).collect()[0]
     assert sizes["enc"] < sizes["raw"]
+
+
+def test_spark_xor_roundtrip_udf(spark):
+    """The Spark UDFs give back the same bits. Compared in numpy: Spark's
+    ``==`` takes -0.0 for 0.0."""
+    from processor_post_timeseries_spark.functions.codec import xor_decode, xor_encode
+
+    df = spark.createDataFrame([(i, [float(x) for x in c]) for i, c in enumerate(XOR_CASES)],
+                               "i int, values array<double>")
+    rt = df.select("i", xor_decode(xor_encode("values")).alias("decoded")).collect()
+    got = {r["i"]: np.array(r["decoded"], np.float64) for r in rt}
+    for i, c in enumerate(XOR_CASES):
+        assert got[i].view(np.uint64).tolist() == np.array(c, np.float64).view(np.uint64).tolist(), i

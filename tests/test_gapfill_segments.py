@@ -11,14 +11,25 @@ from processor_post_timeseries_spark.operators.gapfill import (
 )
 from processor_post_timeseries_spark.operators.segments import (
     channel_extents,
-    segment_bounds,
     sessionize,
 )
-from processor_post_timeseries_spark.sources.synth import sequences_with_gaps
+from processor_post_timeseries_spark.sources.synth import sequences
+
+
+def _observed(spark, n_docs, seed, drop_every, **kw):
+    """Long-form samples ``(doc_id, source, n_tok, idx, value)`` with
+    every index where ``(idx + doc number) % drop_every == 0`` missing:
+    the gap-fill operators' input, a pure function of the doc."""
+    doc_no = F.element_at(F.split("doc_id", "-"), -1).cast("int")
+    return (
+        sequences(spark, n_docs, seed=seed, **kw)
+        .select("doc_id", "source", "n_tok", F.posexplode("tokens").alias("idx", "value"))
+        .filter((F.col("idx") + doc_no) % drop_every != 0)
+    )
 
 
 def test_gapfill_samples_matches_numpy(spark):
-    obs = sequences_with_gaps(spark, 25, seed=5, drop_every=7, min_tok=5, max_tok=300, vocab=500)
+    obs = _observed(spark, 25, seed=5, drop_every=7, min_tok=5, max_tok=300, vocab=500)
     obs_pd = obs.toPandas()
     dense = {r["doc_id"]: np.array(r["tokens"]) for r in gapfill_samples(obs).collect()}
     for doc, g in obs_pd.groupby("doc_id"):
@@ -28,7 +39,7 @@ def test_gapfill_samples_matches_numpy(spark):
 
 
 def test_gapfill_sql_equals_vectorized(spark):
-    obs = sequences_with_gaps(spark, 12, seed=9, drop_every=4, min_tok=5, max_tok=120, vocab=100)
+    obs = _observed(spark, 12, seed=9, drop_every=4, min_tok=5, max_tok=120, vocab=100)
     vec = (
         gapfill_samples(obs)
         .select("doc_id", F.posexplode("tokens").alias("idx", "value"))
@@ -63,7 +74,13 @@ def test_sessionize_matches_reference_semantics(spark):
     idx = [0, 1, 2, 5, 6, 20, 21, 22]
     df = spark.createDataFrame([("c", i) for i in idx], "ch string, idx long")
     segs = sessionize(df, "ch", "idx", gap=2)
-    bounds = segment_bounds(segs, "ch", "idx").orderBy("seg_id").collect()
+    # half-open [start, end): the reference's convention
+    bounds = (
+        segs.groupBy("seg_id")
+        .agg(F.min("idx").alias("seg_start"), (F.max("idx") + 1).alias("seg_end"))
+        .orderBy("seg_id")
+        .collect()
+    )
     exp = oracle.contiguous_segments(np.array(idx), gap=2)
     assert [(r["seg_start"], r["seg_end"]) for r in bounds] == exp
     assert exp == [(0, 3), (5, 7), (20, 23)]

@@ -134,6 +134,21 @@ class TestRetention:
         assert len(list_partitions(spark, path)) == 8
         assert not os.path.exists(f"{path}/_retention_log")
 
+    def test_pipeline_output_is_refused_before_any_write(self, spark, tmp_path):
+        """The pipeline's source=/bucket= tiers are not a layout retention
+        can read: it raises, and leaves the directory as it found it."""
+        from processor_post_timeseries_spark.plans.pipeline import PipelineConfig, run_pipeline
+        from processor_post_timeseries_spark.sources.synth import sequences
+
+        out = str(tmp_path / "o")
+        seq = sequences(spark, 20, seed=2, min_tok=5, max_tok=60, vocab=100)
+        run_pipeline(spark, seq, PipelineConfig(out_dir=out, n_buckets=2, tiers=(("1s", 8),)))
+        tiers = f"{out}/tiers"
+        before = sorted(os.listdir(tiers))
+        with pytest.raises(ValueError, match="tier=<name>/day=<n>"):
+            apply_retention(spark, tiers, RetentionPolicy({"1s": 0}), now_day=10**6)
+        assert sorted(os.listdir(tiers)) == before
+
     def test_empty_dir(self, spark, tmp_path):
         dec = apply_retention(
             spark, str(tmp_path / "nope"), RetentionPolicy({"raw": 1}), now_day=10

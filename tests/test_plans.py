@@ -106,8 +106,7 @@ def test_lineage_resume_antijoin_is_broadcast(spark, tmp_path):
     assert "Exchange" not in plan and "Join" not in plan, plan
     assert re.search(r"Condition : NOT concat_ws\(.* IN(SET)? ", plan), plan
 
-    keys = [r["partition_key"] for r in lineage.completed_keys(spark, cfg.out_dir, "blocks")
-            .orderBy("partition_key").limit(2).collect()]
+    keys = sorted(lineage.done_keys(spark, cfg.out_dir)["blocks"])[:2]
     for stage in ("blocks", "tiers"):
         written = _written_units(spark.read.parquet(f"{cfg.out_dir}/{stage}"), keys)
         plan = _plan(lineage._partition_stats(written, STAGE_KEYS[stage]))

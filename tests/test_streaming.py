@@ -59,89 +59,6 @@ def test_stream_sessionize_batch_twin(spark):
     }
 
 
-def test_stream_exact_dedup_first_wins(spark, tmp_path):
-    """Streaming exact dedup admits exactly one doc per content hash
-    across triggers (state carried in the streaming checkpoint)."""
-    import datetime as dt
-
-    from processor_post_timeseries_spark.streaming.stream_rollup import stream_exact_dedup
-
-    in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    base = dt.datetime(2024, 1, 1)
-    schema = "doc_id string, text string, ingest_ts timestamp"
-    batch1 = [("d1", "alpha", base), ("d2", "alpha", base), ("d3", "beta", base)]
-    spark.createDataFrame(batch1, schema).write.mode("overwrite").parquet(in_dir)
-
-    def run_once():
-        src = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            stream_exact_dedup(src)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 2  # alpha once, beta once
-    # a later file re-sending 'alpha' within the watermark is suppressed
-    batch2 = [("d4", "alpha", base + dt.timedelta(minutes=1)),
-              ("d5", "gamma", base + dt.timedelta(minutes=1))]
-    spark.createDataFrame(batch2, schema).write.mode("append").parquet(in_dir)
-    run_once()
-    texts = sorted(r["text"] for r in spark.read.parquet(out_dir).collect())
-    assert texts == ["alpha", "beta", "gamma"]
-    # batch mode: plain dropDuplicates semantics
-    bdf = spark.createDataFrame(batch1 + batch2, schema)
-    assert stream_exact_dedup(bdf).count() == 3
-
-
-def test_stream_rate_validate_batch_twin(spark):
-    """Per-window implied rate vs declared dimension: a channel declared
-    at 1 Hz emitting at 2 Hz must flag, at 1 Hz must pass."""
-    import datetime as dt
-
-    from processor_post_timeseries_spark.streaming.stream_rollup import stream_rate_validate
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    for s in range(60):
-        rows.append((1, base + dt.timedelta(seconds=s)))          # 1 Hz
-        rows.append((2, base + dt.timedelta(seconds=s)))          # 2 Hz
-        rows.append((2, base + dt.timedelta(seconds=s, milliseconds=500)))
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    declared = spark.createDataFrame(
-        [(1, 1.0), (2, 1.0)], "user_id long, declared_rate_hz double"
-    )
-    got = stream_rate_validate(ev, declared, window="1 minute")
-    rows = {r["user_id"]: r for r in got.collect()}
-    assert rows[1]["rate_valid"] and not rows[2]["rate_valid"]
-    assert abs(rows[2]["observed_rate_hz"] - 2.0) < 1e-9
-
-
-def test_stream_rate_validate_partial_window_no_false_positive(spark):
-    """A healthy 1 Hz channel that starts mid-window must NOT flag: the
-    rate comes from the observed span, not the nominal window length."""
-    import datetime as dt
-
-    from processor_post_timeseries_spark.streaming.stream_rollup import stream_rate_validate
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [(7, base + dt.timedelta(seconds=30 + s)) for s in range(30)]
-    rows += [(8, base + dt.timedelta(seconds=10))]  # single event: can't infer
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    declared = spark.createDataFrame(
-        [(7, 1.0), (8, 1.0)], "user_id long, declared_rate_hz double"
-    )
-    got = {r["user_id"]: r for r in stream_rate_validate(ev, declared, window="1 minute").collect()}
-    assert got[7]["rate_valid"] and abs(got[7]["observed_rate_hz"] - 1.0) < 1e-9
-    assert got[8]["observed_rate_hz"] is None and not got[8]["rate_valid"]
-
-
 def test_stream_sliding_counts_finalized_windows_match_batch(spark, tmp_path):
     """Append-mode sliding windows: every emitted (finalized) row must
     equal the batch-computed truth, and the watermark must have
