@@ -20,6 +20,12 @@ Semantics mirror the reference reader exactly:
 * blocks are cut WITHIN segments into fixed sample-count chunks
   (``writer.py:46-48``), each keyed by its first/last sample's REAL
   µs bounds (``writer.py:90-95``) — not synthetic indices.
+
+Segments, block bounds and payload blocks all come from one gap-rule
+pass (``_segment_frame``). Every emitter requires timestamps sorted
+within each doc and raises ``timestamps not sorted within doc …``
+otherwise; without the check, unsorted input gives wrong segments,
+negative-span keys and negative rates with no error.
 """
 
 from __future__ import annotations
@@ -50,48 +56,85 @@ def _boundary_positions(ts: Column, gap_us: Column) -> Column:
     return F.concat(F.array(F.lit(1)), gaps, F.array(n + 1))
 
 
+def _sorted_nonempty(seq: DataFrame, ts_col: str) -> DataFrame:
+    """The docs of ``seq`` with at least one sample, behind the check
+    every emitter here shares: timestamps sorted within a doc. A filter,
+    not a projected column, so column pruning can never drop it."""
+    ts = F.col(ts_col)
+    return seq.filter(
+        F.when(
+            F.sort_array(ts) != ts,
+            F.raise_error(
+                F.format_string("timestamps not sorted within doc '%s'", "doc_id")
+            ),
+        ).otherwise(F.size(ts) > 0)
+    )
+
+
+def _segment_frame(seq: DataFrame, ts_col: str, gap_us: int | Column) -> DataFrame:
+    """``seq``'s columns plus one row per gap-delimited segment:
+    ``seg_id`` (0-based) and the segment's 1-based half-open positions
+    ``[p0, p1)`` into ``ts``. The one place the gap rule is applied."""
+    gap = gap_us if isinstance(gap_us, Column) else F.lit(gap_us)
+    nb = F.size("_b") - 1
+    pairs = F.arrays_zip(F.slice("_b", 1, nb).alias("p0"), F.slice("_b", 2, nb).alias("p1"))
+    return (
+        _sorted_nonempty(seq, ts_col)
+        .withColumn("_b", _boundary_positions(F.col(ts_col), gap))
+        .select(*seq.columns, F.posexplode(pairs).alias("seg_id", "_s"))
+        .select(*seq.columns, F.col("seg_id").cast("long"), "_s.p0", "_s.p1")
+    )
+
+
 def segments_from_ts_arrays(
     seq: DataFrame,
     ts_col: str = "ts",
     gap_us: int | Column = 4000,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-segment extents from array-typed timestamps: one output row
     per (doc, segment) with ``seg_id`` (0-based), half-open µs bounds
     and the sample count. Zero shuffles — pure array expressions +
     one explode."""
-    gap = gap_us if isinstance(gap_us, Column) else F.lit(gap_us)
     ts = F.col(ts_col)
-    bounds = _boundary_positions(ts, gap)
-    # slice+zip, not transform-over-sequence with element_at: the lambda
-    # would re-evaluate the computed ``bounds`` (an O(n) filter) once
-    # PER SEGMENT — O(segments * n) per row (see word_ngram_array for
-    # the same trap). Zipping bounds with its own 1-shifted slice gives
-    # the identical (p0, p1) pairs with bounds evaluated ~3x per row.
-    nb = F.size(bounds) - 1
-    zb = F.arrays_zip(
-        F.slice(bounds, 1, nb).alias("p0"),
-        F.slice(bounds, 2, nb).alias("p1"),
-        F.sequence(F.lit(1), nb).alias("j"),
-    )
-    segs = F.transform(
-        zb,
-        lambda s: F.struct(
-            (s["j"] - 1).cast("long").alias("seg_id"),
-            s["p0"].alias("p0"),
-            s["p1"].alias("p1"),
-        ),
-    )
     keep = [c for c in seq.columns if c not in (ts_col, "tokens")]
+    return _segment_frame(seq, ts_col, gap_us).select(
+        *keep,
+        "seg_id",
+        F.element_at(ts, F.col("p0")).alias("seg_start_us"),
+        (F.element_at(ts, F.col("p1") - 1) + F.lit(1)).alias("seg_end_us"),
+        (F.col("p1") - F.col("p0")).cast("long").alias("n_samples"),
+    )
+
+
+def _block_frame(
+    seq: DataFrame, ts_col: str, gap_us: int | Column, block_size: int
+) -> DataFrame:
+    """``seq``'s columns plus one row per ``block_size`` chunk of each
+    segment: (seg_id, block_no, start_us, end_us, start_pos, n, key)."""
+    ts = F.col(ts_col)
+    b0 = F.col("b0")
+    b1 = F.least(b0 + block_size, F.col("p1"))
     return (
-        seq.filter(F.size(ts) > 0)
-        .select(*keep, ts.alias("_ts"), F.explode(segs).alias("_s"))
+        _segment_frame(seq, ts_col, gap_us)
         .select(
-            *keep,
-            F.col("_s.seg_id").alias("seg_id"),
-            F.element_at("_ts", F.col("_s.p0")).alias("seg_start_us"),
-            (F.element_at("_ts", F.col("_s.p1") - 1) + F.lit(1)).alias("seg_end_us"),
-            (F.col("_s.p1") - F.col("_s.p0")).cast("long").alias("n_samples"),
+            "*",
+            F.posexplode(F.sequence("p0", F.col("p1") - 1, F.lit(block_size))).alias(
+                "block_no", "b0"
+            ),
+        )
+        .select(
+            *seq.columns,
+            "seg_id",
+            "block_no",
+            F.element_at(ts, b0).alias("start_us"),
+            (F.element_at(ts, b1 - 1) + F.lit(1)).alias("end_us"),
+            # 0-based, numpy-slice convention — the same base as
+            # NWB_CHUNK_SCHEMA: tokens[start_pos : start_pos+n]
+            (b0 - 1).cast("long").alias("start_pos"),
+            (b1 - b0).cast("int").alias("n"),
+        )
+        .withColumn(
+            "key", F.format_string("%s_%012d_%012d.bin", "doc_id", "start_us", "end_us")
         )
     )
 
@@ -101,7 +144,6 @@ def block_bounds_from_ts_arrays(
     ts_col: str = "ts",
     gap_us: int | Column = 4000,
     block_size: int = 131_072,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Fixed-size block bounds cut WITHIN gap-delimited segments, keyed
     with the real µs extents of each chunk's first/last sample —
@@ -114,56 +156,8 @@ def block_bounds_from_ts_arrays(
     for lexicographic listing order) for consistency with every other
     bound it emits. Returns one row per (doc, seg_id, block_no) with
     (start_us, end_us half-open, start_pos 0-based, n, key). Narrow map
-    + one explode; payload encoding is orthogonal
-    (``operators/blocks.py`` codecs apply per slice)."""
-    gap = gap_us if isinstance(gap_us, Column) else F.lit(gap_us)
-    ts = F.col(ts_col)
-    bounds = _boundary_positions(ts, gap)
-    # same slice+zip shape as segments_from_ts_arrays: keep the computed
-    # ``bounds`` out of lambda bodies so it is not re-evaluated per
-    # segment (the inner lambda now only touches its own struct fields)
-    nb = F.size(bounds) - 1
-    zb = F.arrays_zip(
-        F.slice(bounds, 1, nb).alias("p0"),
-        F.slice(bounds, 2, nb).alias("p1"),
-        F.sequence(F.lit(1), nb).alias("j"),
-    )
-    blocks = F.flatten(
-        F.transform(
-            zb,
-            lambda s: F.transform(
-                F.sequence(s["p0"], s["p1"] - 1, F.lit(block_size)),
-                lambda b, k: F.struct(
-                    (s["j"] - 1).cast("long").alias("seg_id"),
-                    k.cast("int").alias("block_no"),
-                    b.alias("p0"),
-                    F.least(b + block_size, s["p1"]).alias("p1"),
-                ),
-            ),
-        )
-    )
-    keep = [c for c in seq.columns if c not in (ts_col, "tokens")]
-    out = (
-        seq.filter(F.size(ts) > 0)
-        .select(*keep, ts.alias("_ts"), F.explode(blocks).alias("_b"))
-        .select(
-            *keep,
-            F.col("_b.seg_id").alias("seg_id"),
-            F.col("_b.block_no").alias("block_no"),
-            F.element_at("_ts", F.col("_b.p0")).alias("start_us"),
-            (F.element_at("_ts", F.col("_b.p1") - 1) + F.lit(1)).alias("end_us"),
-            # 0-based, numpy-slice convention — the SAME base as
-            # irregular_to_blocks and NWB_CHUNK_SCHEMA (a consumer doing
-            # tokens[start_pos : start_pos+n] must get the same slice
-            # from every emitter)
-            (F.col("_b.p0") - 1).cast("long").alias("start_pos"),
-            (F.col("_b.p1") - F.col("_b.p0")).cast("int").alias("n"),
-        )
-    )
-    return out.withColumn(
-        "key",
-        F.format_string("%s_%012d_%012d.bin", id_col, "start_us", "end_us"),
-    )
+    + two explodes; payload encoding is ``irregular_to_blocks``."""
+    return _block_frame(seq, ts_col, gap_us, block_size).drop(ts_col, "tokens")
 
 
 def explode_ts_samples(
@@ -190,137 +184,74 @@ def irregular_to_blocks(
     gap_us: int = 4000,
     block_size: int = 131_072,
 ) -> DataFrame:
-    """The full explicit-ts write path: segment on the gap rule, cut
-    fixed-size chunks within segments, DoD-compress each chunk's tokens
-    AND its timestamp array (delta-of-delta is the natural codec for
-    near-regular timestamps — gaps land as single large deltas), key by
-    real µs bounds. One Arrow-batched kernel, no shuffle; the numpy
-    boundary math (``np.diff > gap``) is vectorized per doc.
+    """The full explicit-ts write path: the block bounds of
+    ``block_bounds_from_ts_arrays`` plus each chunk's tokens AND its
+    timestamps, rebased to the block start, DoD-compressed
+    (delta-of-delta is the natural codec for near-regular timestamps —
+    gaps land as single large deltas). No shuffle; Python runs only the
+    codec.
 
     Output: (doc_id, source, seg_id, block_no, start_us, end_us,
     start_pos, n, payload, ts_payload, key). Round-trip via
-    ``irregular_from_blocks``. Keys use the engine's half-open
-    zero-padded convention, NOT the reference's inclusive-end unpadded
-    naming — see ``block_bounds_from_ts_arrays``.
+    ``irregular_from_blocks``. A block whose rebased timestamps do not
+    fit the codec's int32 raises instead of wrapping."""
+    from ..functions.codec import dod_encode
 
-    Precondition (asserted, matching ``tier_from_ts_arrays``):
-    timestamps sorted within each doc — unsorted input would silently
-    yield wrong segment boundaries and negative-span keys.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..functions.codec import dod_encode_array
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-            T.StructField("seg_id", T.LongType(), False),
-            T.StructField("block_no", T.IntegerType(), False),
-            T.StructField("start_us", T.LongType(), False),
-            T.StructField("end_us", T.LongType(), False),  # half-open
-            T.StructField("start_pos", T.LongType(), False),  # 0-based
-            T.StructField("n", T.IntegerType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-            T.StructField("ts_payload", T.BinaryType(), False),
-        ]
+    start = (F.col("start_pos") + 1).cast("int")
+    span = F.col("end_us") - 1 - F.col("start_us")
+    rebased = F.when(
+        span > F.lit(2**31 - 1),
+        F.raise_error(
+            F.format_string(
+                "block span %d µs exceeds int32 ts-delta encoding (doc %s); "
+                f"reduce block_size (= {block_size})",
+                span,
+                "doc_id",
+            )
+        ),
+    ).otherwise(
+        F.transform(
+            F.slice(ts_col, start, "n"), lambda t: (t - F.col("start_us")).cast("int")
+        )
     )
-
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc, src, toks, tss in zip(
-                pdf["doc_id"], pdf["source"], pdf["tokens"], pdf[ts_col]
-            ):
-                t = np.asarray(toks, dtype=np.int32)
-                ts = np.asarray(tss, dtype=np.int64)
-                if len(ts) == 0:
-                    continue
-                deltas = np.diff(ts)
-                if (deltas < 0).any():
-                    raise ValueError(
-                        f"timestamps not sorted within doc {doc!r}"
-                    )
-                # segment boundaries: positions AFTER a gap (0-based)
-                brk = np.flatnonzero(deltas > gap_us) + 1
-                bounds = np.concatenate(([0], brk, [len(ts)]))
-                for sid in range(len(bounds) - 1):
-                    s0, s1 = int(bounds[sid]), int(bounds[sid + 1])
-                    for bno, b0 in enumerate(range(s0, s1, block_size)):
-                        b1 = min(b0 + block_size, s1)
-                        if int(ts[b1 - 1]) - int(ts[b0]) > np.iinfo(np.int32).max:
-                            # rebased deltas are stored int32; a slower
-                            # stream with a huge block span would WRAP
-                            # silently — refuse instead (shrink
-                            # block_size or raise gap granularity)
-                            raise ValueError(
-                                f"block span {int(ts[b1-1]) - int(ts[b0])} µs "
-                                f"exceeds int32 ts-delta encoding (doc {doc}); "
-                                f"reduce block_size (= {block_size})"
-                            )
-                        rows.append(
-                            (
-                                doc,
-                                src,
-                                sid,
-                                bno,
-                                int(ts[b0]),
-                                int(ts[b1 - 1]) + 1,
-                                b0,
-                                b1 - b0,
-                                dod_encode_array(t[b0:b1]),
-                                dod_encode_array(
-                                    # ts deltas fit int32 after subtracting
-                                    # the block start (bounded by block span)
-                                    (ts[b0:b1] - ts[b0]).astype(np.int32)
-                                ),
-                            )
-                        )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    out = seq.mapInPandas(cut, schema=schema)
-    return out.withColumn(
+    return _block_frame(seq, ts_col, gap_us, block_size).select(
+        "doc_id",
+        "source",
+        "seg_id",
+        "block_no",
+        "start_us",
+        "end_us",
+        "start_pos",
+        "n",
+        dod_encode(F.slice("tokens", start, "n")).alias("payload"),
+        dod_encode(rebased).alias("ts_payload"),
         "key",
-        F.format_string("%s_%012d_%012d.bin", "doc_id", "start_us", "end_us"),
     )
 
 
 def irregular_from_blocks(blocks: DataFrame) -> DataFrame:
     """Inverse of ``irregular_to_blocks``: decode + reassemble per doc in
     (seg_id, block_no) order -> (doc_id, tokens, ts, n_tok, source).
-    One shuffle (regroup a doc's blocks), deterministic in-group sort —
-    the same ordered-assembly contract as ``blocks.from_blocks``."""
-    import numpy as np
-    import pandas as pd
+    One shuffle (regroup a doc's blocks) and a sorted in-group
+    ``collect_list`` — the ordered-assembly contract of
+    ``blocks.from_blocks``."""
+    from ..functions.codec import dod_decode
 
-    from ..functions.codec import dod_decode_array
-
-    def assemble(key, pdf):
-        pdf = pdf.sort_values(["seg_id", "block_no"])
-        toks = [dod_decode_array(bytes(p)) for p in pdf["payload"]]
-        tss = [
-            dod_decode_array(bytes(p)).astype(np.int64) + int(s)
-            for p, s in zip(pdf["ts_payload"], pdf["start_us"])
-        ]
-        t = np.concatenate(toks) if toks else np.empty(0, np.int32)
-        ts = np.concatenate(tss) if tss else np.empty(0, np.int64)
-        return pd.DataFrame(
-            {
-                "doc_id": [key[0]],
-                "tokens": [t.astype(np.int32)],
-                "ts": [ts],
-                "n_tok": [len(t)],
-                "source": [pdf["source"].iloc[0]],
-            }
+    ts = F.transform(dod_decode("ts_payload"), lambda d: d.cast("long") + F.col("start_us"))
+    block = F.struct("seg_id", "block_no", dod_decode("payload").alias("tokens"), ts.alias("ts"))
+    return (
+        blocks.groupBy("doc_id")
+        .agg(
+            F.sort_array(F.collect_list(block)).alias("_b"),
+            F.first("source").alias("source"),
         )
-
-    return blocks.groupBy("doc_id").applyInPandas(
-        assemble,
-        schema="doc_id string, tokens array<int>, ts array<long>, n_tok int, source string",
+        .select(
+            "doc_id",
+            F.flatten("_b.tokens").alias("tokens"),
+            F.flatten("_b.ts").alias("ts"),
+            "source",
+        )
+        .select("doc_id", "tokens", "ts", F.size("tokens").alias("n_tok"), "source")
     )
 
 
@@ -328,7 +259,6 @@ def rate_from_ts_arrays(
     seq: DataFrame,
     ts_col: str = "ts",
     first_k: int = 10,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Operator A2 for the array model — sampling-rate inference from
     stored timestamps: median delta of the first ``first_k`` samples,
@@ -340,34 +270,20 @@ def rate_from_ts_arrays(
     Median of an even count is the mean of the middle two — matching
     both ``F.median`` and DuckDB ``MEDIAN`` interpolation."""
     ts = F.col(ts_col)
-    n = F.size(ts)
-    k = F.least(n, F.lit(first_k))
-    deltas = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(2), k),
-            lambda i: F.element_at(ts, i) - F.element_at(ts, i - 1),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    d = F.array_sort(deltas)
+    k = F.least(F.size(ts), F.lit(first_k)) - 1  # deltas among the first first_k
+    d = F.sort_array(F.zip_with(F.slice(ts, 2, k), F.slice(ts, 1, k), lambda a, b: a - b))
     m = F.size(d)
-    median = F.when(
-        m == 0, F.lit(None).cast("double")  # guard BEFORE element_at: ANSI
-        # mode raises on index 0, and branch order is the only protection
-    ).when(
-        m % 2 == 1, F.element_at(d, ((m + 1) / 2).cast("int")).cast("double")
-    ).otherwise(
-        (
-            F.element_at(d, (m / 2).cast("int"))
-            + F.element_at(d, (m / 2).cast("int") + 1)
-        )
-        / F.lit(2.0)
-    )
+    # 1-based middle pair: equal for an odd count. m == 0 goes first:
+    # ANSI mode raises on element_at index 0, and branch order guards it
+    median = F.when(m > 0, (
+        F.element_at(d, ((m + 1) / 2).cast("int")) + F.element_at(d, (m / 2).cast("int") + 1)
+    ) / F.lit(2.0))
     return (
-        seq.select(F.col(id_col), median.alias("median_delta_us"))
+        _sorted_nonempty(seq, ts_col)
+        .select("doc_id", median.alias("median_delta_us"))
         .filter(F.col("median_delta_us").isNotNull())
         .select(
-            id_col,
+            "doc_id",
             "median_delta_us",
             F.round(F.lit(1e6) / F.nullif(F.col("median_delta_us"), F.lit(0.0)), 9)
             .cast("double")
@@ -392,46 +308,26 @@ def tier_from_ts_arrays(
     are concatenated once, window boundaries found with one ``np.diff``
     over (doc, window) keys, and every aggregate is one ``ufunc.reduceat``
     over the combined array — no per-doc Python loop (the rollup.py
-    discipline). Timestamps are sorted within a doc by construction
-    (stored streams are time-ordered), which the kernel asserts."""
+    discipline). Unsorted timestamps raise before the kernel runs."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("source", T.StringType(), False),
-            T.StructField("win_us", T.LongType(), False),  # window start
-            T.StructField("min_v", T.IntegerType(), False),
-            T.StructField("max_v", T.IntegerType(), False),
-            T.StructField("sum_v", T.LongType(), False),
-            T.StructField("cnt", T.LongType(), False),
-            T.StructField("mean_v", T.DoubleType(), False),
-        ]
+    schema = (
+        "doc_id string not null, source string not null, "
+        "win_us long not null, min_v int not null, max_v int not null, "  # win_us: window start
+        "sum_v long not null, cnt long not null, mean_v double not null"
     )
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            toks = [np.asarray(x, dtype=np.int32) for x in pdf["tokens"]]
-            tss = [np.asarray(x, dtype=np.int64) for x in pdf[ts_col]]
-            lens = np.array([len(x) for x in toks], dtype=np.int64)
-            if lens.sum() == 0:
-                yield pd.DataFrame({f.name: [] for f in schema.fields})
+            if pdf.empty:
                 continue
-            t = np.concatenate([x for x in toks if len(x)])
-            ts = np.concatenate([x for x in tss if len(x)])
-            nz = lens > 0
-            doc_idx = np.repeat(np.flatnonzero(nz), lens[nz])
-            # enforce the documented precondition: timestamps sorted
-            # within each doc (boundary detection silently fragments
-            # windows otherwise)
-            unsorted = (np.diff(ts) < 0) & (np.diff(doc_idx) == 0)
-            if unsorted.any():
-                bad = pdf["doc_id"].to_numpy()[doc_idx[np.flatnonzero(unsorted)[0]]]
-                raise ValueError(f"timestamps not sorted within doc {bad!r}")
+            t = np.concatenate([np.asarray(x, dtype=np.int32) for x in pdf["tokens"]])
+            ts = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf[ts_col]])
+            lens = pdf[ts_col].map(len).to_numpy()
+            doc_idx = np.repeat(np.arange(len(pdf)), lens)
             w = ts // window_us
             change = (np.diff(doc_idx) != 0) | (np.diff(w) != 0)
             starts = np.concatenate(([0], np.flatnonzero(change) + 1))
@@ -452,7 +348,7 @@ def tier_from_ts_arrays(
                 }
             )
 
-    return seq.mapInPandas(kern, schema=schema)
+    return _sorted_nonempty(seq, ts_col).mapInPandas(kern, schema=schema)
 
 
 def time_weighted_mean(

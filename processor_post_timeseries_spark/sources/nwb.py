@@ -20,8 +20,9 @@ available the reader is fully distributed:
   ``(raw·conversion·channel_conversion+offset)·unit->µV``
   (``reader.py:246-271``) — and explicit ``timestamps`` (NWB seconds)
   ride along per-slice with ``session_start_time`` added before the µs
-  conversion (``reader.py:39,118,136``), feeding
-  ``operators/irregular.py``; implicit-rate series synthesize nothing —
+  conversion (``reader.py:39,118,136``), and ``nwb_chunks_to_sequences``
+  carries them as the ``ts`` column ``operators/irregular.py`` reads;
+  implicit-rate series synthesize nothing (``ts`` is NULL) —
   downstream operators use the implicit-index model (SURVEY §1.3).
 
 The emitted chunk schema is the engine's sequence shape with
@@ -231,38 +232,32 @@ def read_nwb_chunks(
 
 def nwb_chunks_to_sequences(chunks: DataFrame, scale: float = 1.0) -> DataFrame:
     """Chunk rows -> input_hint sequences (doc_id, tokens:array<int>,
-    n_tok, source). ``scale`` is purely the TOKENIZATION quantization
-    (µV -> int32 token grid) — the reference's physical scaling
-    (conversion/channel_conversion/offset/unit) is already applied by
-    the scan kernel, per channel. Chunks reassemble in ``start_pos``
-    order — the same ordered-assembly contract as
-    ``operators/blocks.from_blocks``. One shuffle on doc_id."""
+    ts:array<long>, n_tok, source). ``scale`` is purely the TOKENIZATION
+    quantization (µV -> int32 token grid) — the reference's physical
+    scaling (conversion/channel_conversion/offset/unit) is already
+    applied by the scan kernel, per channel. Chunks reassemble in
+    ``start_pos`` order — the same ordered-assembly contract as
+    ``operators/blocks.from_blocks``; ``ts`` is the explicit µs
+    timestamps in the same order (the input of ``operators/irregular.py``),
+    NULL for an implicit-rate series. One shuffle on doc_id."""
     from pyspark.sql import functions as F
 
     toks = F.transform(
         F.col("values"), lambda v: F.round(v * F.lit(scale)).cast("int")
     )
-    per_chunk = chunks.select(
-        "doc_id", "source", "start_pos", toks.alias("toks")
-    )
-    assembled = (
-        per_chunk.groupBy("doc_id")
+    chunk = F.struct("start_pos", toks.alias("tokens"), "ts_us")
+    return (
+        chunks.groupBy("doc_id")
         .agg(
             F.first("source").alias("source"),
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("start_pos", "toks"))
-                    ),
-                    lambda s: s["toks"],
-                )
-            ).alias("tokens"),
+            F.sort_array(F.collect_list(chunk)).alias("_c"),
         )
+        # flatten is NULL when any chunk's ts_us is NULL
         .select(
             "doc_id",
-            "tokens",
-            F.size("tokens").alias("n_tok"),
+            F.flatten("_c.tokens").alias("tokens"),
+            F.flatten("_c.ts_us").alias("ts"),
             "source",
         )
+        .select("doc_id", "tokens", "ts", F.size("tokens").alias("n_tok"), "source")
     )
-    return assembled

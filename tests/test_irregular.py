@@ -82,7 +82,7 @@ def test_blocks_cut_within_segments_with_real_us_keys(spark):
     ]
 
 
-def test_payload_blocks_roundtrip_and_kernel_agrees_with_sql_bounds(spark):
+def test_payload_blocks_roundtrip(spark):
     import random
 
     rng = random.Random(3)
@@ -94,21 +94,13 @@ def test_payload_blocks_roundtrip_and_kernel_agrees_with_sql_bounds(spark):
             cur += 40000 if rng.random() < 0.08 and i else rng.randrange(500, 1500)
             ts.append(cur)
         rows.append((f"d{d}", [rng.randrange(0, 255) for _ in range(n)], ts, "s"))
-    df = _seq(spark, rows)
-    blocks = irregular_to_blocks(df, gap_us=4000, block_size=7)
-    # the numpy kernel's (seg, block, bounds) must equal the JVM-exprs path
-    cols = ("doc_id", "seg_id", "block_no", "start_us", "end_us", "start_pos", "n", "key")
-    a = sorted(tuple(r[c] for c in cols) for r in blocks.collect())
-    b = sorted(
-        tuple(r[c] for c in cols)
-        for r in block_bounds_from_ts_arrays(df, gap_us=4000, block_size=7).collect()
-    )
-    assert a == b  # including start_pos: both emitters are 0-based
+    blocks = irregular_to_blocks(_seq(spark, rows), gap_us=4000, block_size=7)
     # decode + reassemble: tokens AND timestamps byte-identical
     back = {r["doc_id"]: r for r in irregular_from_blocks(blocks).collect()}
     for doc_id, toks, ts, _src in rows:
         assert list(back[doc_id]["tokens"]) == toks
         assert list(back[doc_id]["ts"]) == ts
+        assert back[doc_id]["n_tok"] == len(toks)
 
 
 def test_payload_blocks_refuse_int32_span_overflow(spark):
@@ -119,18 +111,24 @@ def test_payload_blocks_refuse_int32_span_overflow(spark):
         irregular_to_blocks(df, gap_us=big + 1, block_size=2).collect()
 
 
-def test_tier_kernel_rejects_unsorted_ts(spark):
-    df = _seq(spark, [("d1", [1, 2, 3], [100, 50, 200], "s")])
-    with pytest.raises(Exception, match="not sorted"):
-        tier_from_ts_arrays(df, window_us=1000).collect()
-
-
-def test_blocks_kernel_rejects_unsorted_ts(spark):
-    # same documented precondition as tier_from_ts_arrays: unsorted ts
-    # would silently mis-segment and emit negative-span keys
-    df = _seq(spark, [("d1", [1, 2, 3], [100, 50, 200], "s")])
-    with pytest.raises(Exception, match="not sorted"):
-        irregular_to_blocks(df, gap_us=1000, block_size=2).collect()
+@pytest.mark.parametrize(
+    "emit",
+    [
+        lambda df: segments_from_ts_arrays(df, gap_us=4000),
+        lambda df: block_bounds_from_ts_arrays(df, gap_us=4000, block_size=2),
+        lambda df: irregular_to_blocks(df, gap_us=4000, block_size=2),
+        lambda df: rate_from_ts_arrays(df),
+        lambda df: tier_from_ts_arrays(df, window_us=1000),
+    ],
+    ids=["segments", "block_bounds", "to_blocks", "rate", "tier"],
+)
+def test_emitters_reject_unsorted_ts(spark, emit):
+    # sorted timestamps within a doc are every emitter's precondition:
+    # unsorted input would give a segment [300, 61), a key ending before
+    # it starts, or a negative rate — it must raise instead
+    df = _seq(spark, [("ok", [1, 2], [0, 10], "s"), ("d1", [1, 2, 3], [300, 50, 60], "s")])
+    with pytest.raises(Exception, match="timestamps not sorted within doc 'd1'"):
+        emit(df).collect()
 
 
 def test_rate_inference_median_semantics(spark):
@@ -210,6 +208,7 @@ def test_array_model_plans_have_zero_exchanges(spark):
     for out in (
         segments_from_ts_arrays(df, gap_us=4000),
         block_bounds_from_ts_arrays(df, gap_us=4000, block_size=2),
+        irregular_to_blocks(df, gap_us=4000, block_size=2),
         rate_from_ts_arrays(df),
         tier_from_ts_arrays(df, window_us=1000),
     ):

@@ -121,3 +121,21 @@ def test_chunks_reassemble_to_sequences(spark, nwb_file):
     # HALF_EVEN; sine samples land on exact .5 essentially never, but
     # compare with tolerance 1 at the rare boundary to stay robust
     assert int(np.abs(got - expect).max()) <= 1
+
+
+def test_chunks_to_sequences_carries_ts_in_start_pos_order(spark):
+    # hand-built chunk rows, shuffled: ch-00000 has explicit timestamps,
+    # ch-00001 is an implicit-rate series (ts_us NULL in every chunk)
+    rows = [
+        ("ch-00000", "f.nwb", 3, [3.0, 4.0], [3000, 4000]),
+        ("ch-00001", "f.nwb", 2, [1.2], None),
+        ("ch-00000", "f.nwb", 0, [0.0, 1.0, 2.0], [0, 1000, 2000]),
+        ("ch-00001", "f.nwb", 0, [0.6, 0.8], None),
+    ]
+    chunks = spark.createDataFrame(rows, nwb.NWB_CHUNK_SCHEMA)
+    seqs = {r["doc_id"]: r for r in nwb.nwb_chunks_to_sequences(chunks, scale=10.0).collect()}
+    assert list(seqs["ch-00000"]["tokens"]) == [0, 10, 20, 30, 40]
+    assert list(seqs["ch-00000"]["ts"]) == [0, 1000, 2000, 3000, 4000]
+    assert seqs["ch-00000"]["n_tok"] == 5
+    assert list(seqs["ch-00001"]["tokens"]) == [6, 8, 12]
+    assert seqs["ch-00001"]["ts"] is None
