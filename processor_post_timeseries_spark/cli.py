@@ -64,9 +64,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--retention",
         action="store_true",
-        help="maintenance mode: --input is a tier=/day= partitioned dir "
-        "(plans/retention.py layout); drops partitions older than "
-        "--policy, appends the audit log",
+        help="maintenance mode: --input is a tier=/day= partitioned dir, "
+        "as plans/retention.py::write_time_partitioned writes it; drops "
+        "partitions older than --policy, appends the audit log. The "
+        "pipeline's own tiers output has no time column and is not a "
+        "retention input",
     )
     ap.add_argument("--policy", help="retention policy, e.g. raw:7,1m:30 (days per tier)")
     ap.add_argument("--now-day", type=int, default=None,

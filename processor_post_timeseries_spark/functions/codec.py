@@ -1,4 +1,4 @@
-"""Gorilla-style timeseries codecs as Arrow-vectorized pandas UDFs.
+"""Gorilla-style timeseries codecs as Arrow-vectorized UDFs.
 
 North-rule operator P6: "Gorilla XOR / delta-of-delta compression of token
 values into binary block columns via vectorized Arrow UDFs".
@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -213,9 +214,16 @@ def dod_encode(tokens: pd.Series) -> pd.Series:
     return tokens.apply(lambda a: dod_encode_array(np.asarray(a, np.int32)))
 
 
-@F.pandas_udf(T.ArrayType(T.IntegerType()))
-def dod_decode(payload: pd.Series) -> pd.Series:
-    return payload.apply(lambda b: dod_decode_array(bytes(b)))
+# A scalar Arrow UDF: the decoded lists leave as one values buffer plus
+# offsets. Returning a pandas Series of per-row arrays instead costs more
+# in the Arrow conversion than the decode itself.
+@F.arrow_udf(T.ArrayType(T.IntegerType()))
+def dod_decode(payload: pa.Array) -> pa.Array:
+    parts = [dod_decode_array(b) for b in payload.to_pylist()]
+    offsets = np.zeros(len(parts) + 1, np.int32)
+    np.cumsum([len(p) for p in parts], out=offsets[1:])
+    values = np.concatenate(parts) if parts else np.empty(0, np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
 
 
 @F.pandas_udf(T.BinaryType())

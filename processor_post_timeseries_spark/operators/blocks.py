@@ -7,26 +7,26 @@ binary object keyed ``channel-NNNNN_{start}_{end}`` (``:90-95``).
 
 Here a "channel" is a doc's token stream; a block is ``block_size``
 consecutive samples, compressed with the delta-of-delta codec
-(functions/codec.py) into a ``BinaryType`` column. Block assembly is a
-**narrow map** (slices within one row's array) — no shuffle; blocks of a
-doc never span rows. The sink partitions by ``(source, bucket)`` so scans
-prune by source and the bucket count bounds task skew.
+(functions/codec.py) into a ``BinaryType`` column. The sink partitions
+by ``(source, bucket)`` so scans prune by source and the bucket count
+bounds task skew.
+
+Both directions have the shape of the explicit-timestamp path
+(``operators/irregular.py``): the block bounds and slices are array
+expressions, and Python runs only the codec UDFs. Cutting is a narrow
+map (no shuffle; blocks of a doc never span rows). Reassembly
+(``_reassemble``, shared with ``irregular_from_blocks``) is one shuffle
+on ``doc_id`` and a sorted ``collect_list``/``flatten`` per doc, the one
+place the ordered-assembly rule (L2) lives.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codec import dod_decode_array, dod_encode_array
-from ..sources.synth import SEQ_SCHEMA
+from ..functions.codec import dod_decode, dod_encode
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -42,32 +42,48 @@ BLOCK_SCHEMA = T.StructType(
 
 
 def to_blocks(seq_df: DataFrame, block_size: int = 131_072) -> DataFrame:
-    """Sequences -> one row per (doc, block), payload = DoD-compressed.
+    """Sequences -> one row per (doc, block), payload = DoD-compressed,
+    columns as ``BLOCK_SCHEMA``.
 
     Default block_size mirrors the reference default chunk of
     CHUNK_SIZE_MB·2^20/8 = 131072 samples (``/root/reference/processor/main.py:18-20``).
     Adds the reference-shaped object key via ``block_key``. An empty doc
     gets one empty block (``block_no`` 0, ``start_idx = end_idx = n = 0``)
     so ``from_blocks`` returns it and its work unit is checkpointed; a
-    NULL ``tokens`` row raises ``ValueError`` naming the doc.
+    NULL ``tokens`` row raises naming the doc.
+
+    The bounds come from one ``posexplode(sequence(...))``, in bigint so
+    no offset overflows int32 under ANSI mode; Python runs only
+    ``codec.dod_encode``. ``_chunk`` is projected once and read three
+    times, so the optimizer keeps the slice next to the explode instead
+    of inlining it into the UDF's input: the rows queued for the UDF
+    carry their block, not the doc's whole array, and a doc of k blocks
+    is copied once, not k times.
     """
-
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc, src, toks in zip(pdf["doc_id"], pdf["source"], pdf["tokens"]):
-                if toks is None:
-                    raise ValueError(f"NULL tokens for doc_id {doc!r}")
-                a = np.asarray(toks, dtype=np.int32)
-                n = len(a)
-                for b, start in enumerate(range(0, max(n, 1), block_size)):
-                    end = min(start + block_size, n)
-                    rows.append(
-                        (doc, src, b, start, end, end - start, dod_encode_array(a[start:end]))
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
-
-    return seq_df.mapInPandas(cut, schema=BLOCK_SCHEMA)
+    n = F.size("tokens").cast("long")
+    start = F.col("start_idx")
+    bounds = F.sequence(F.lit(0).cast("long"), F.greatest(n, F.lit(1).cast("long")) - 1,
+                        F.lit(block_size).cast("long"))
+    return (
+        seq_df.filter(
+            F.when(
+                F.col("tokens").isNull(),
+                F.raise_error(F.format_string("NULL tokens for doc_id '%s'", "doc_id")),
+            ).otherwise(F.lit(True))
+        )
+        .select("doc_id", "source", "tokens", F.posexplode(bounds).alias("block_no", "start_idx"))
+        .select("doc_id", "source", "block_no", "start_idx",
+                F.slice("tokens", (start + 1).cast("int"), block_size).alias("_chunk"))
+        .select(
+            "doc_id",
+            "source",
+            "block_no",
+            "start_idx",
+            (start + F.size("_chunk")).alias("end_idx"),
+            F.size("_chunk").alias("n"),
+            dod_encode("_chunk").alias("payload"),
+        )
+    )
 
 
 def block_key(blocks_df: DataFrame) -> DataFrame:
@@ -79,47 +95,24 @@ def block_key(blocks_df: DataFrame) -> DataFrame:
     )
 
 
-def from_blocks(blocks_df: DataFrame) -> DataFrame:
-    """Decode + reassemble blocks -> sequences (round-trip/read path).
-
-    One shuffle (regroup blocks of a doc), deterministic in-group order by
-    block_no before concatenation (SURVEY §7 determinism rule).
-
-    r6 shape: collect_list + ONE batched decode kernel instead of
-    per-group ``applyInPandas`` — the grouped form built a pandas frame
-    per doc (~1 ms of pure overhead each; 5000 docs cost more than the
-    decode itself). ``sort_array`` over (block_no, payload) structs
-    gives the same block_no order (block_no is unique per doc), the
-    group state is bounded by one doc's payload either way, and the
-    kernel loops docs of a whole Arrow batch. The kernel stays columnar
-    on both sides: it decodes the ``payload`` child of the flattened
-    ``_blocks`` lists and builds ``tokens`` from the decoded values and
-    per-doc offsets, with no pandas frame.
-    """
-    g = blocks_df.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("block_no", "payload"))).alias("_blocks"),
-        F.first("source").alias("source"),
+def _reassemble(blocks_df: DataFrame, order: list[str], **arrays: Column) -> DataFrame:
+    """(doc_id, <each of ``arrays``>, source): every block's ``arrays``
+    concatenated per doc in ``order`` (unique within a doc). One shuffle
+    on ``doc_id``; ``sort_array`` over ``(order..., arrays...)`` structs
+    fixes the in-group order whatever order the blocks arrive in (SURVEY
+    §7 determinism rule), and the group state is one doc's blocks."""
+    block = F.struct(*order, *(c.alias(name) for name, c in arrays.items()))
+    return (
+        blocks_df.groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list(block)).alias("_b"), F.first("source").alias("source"))
+        .select("doc_id", *(F.flatten(f"_b.{name}").alias(name) for name in arrays), "source")
     )
 
-    def assemble(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            blocks = batch.column("_blocks")
-            # list_flatten and list_value_length respect a sliced batch
-            parts = [dod_decode_array(b) for b in
-                     pc.list_flatten(blocks).field("payload").to_pylist()]
-            lens = pc.list_value_length(blocks).to_numpy()
-            # token offset of every block start, then of every doc start
-            at_block = np.concatenate([[0], np.cumsum([len(p) for p in parts], dtype=np.int64)])
-            offsets = at_block[np.concatenate([[0], np.cumsum(lens)])]
-            values = np.concatenate(parts) if parts else np.empty(0, np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values),
-                    pa.array(np.diff(offsets), pa.int32()),
-                    batch.column("source"),
-                ],
-                names=[f.name for f in SEQ_SCHEMA.fields],
-            )
 
-    return g.mapInArrow(assemble, schema=SEQ_SCHEMA)
+def from_blocks(blocks_df: DataFrame) -> DataFrame:
+    """Decode + reassemble blocks -> sequences (doc_id, tokens, n_tok,
+    source), the names and types of ``SEQ_SCHEMA``: ``codec.dod_decode``
+    per block, then ``_reassemble`` in ``block_no`` order."""
+    return _reassemble(blocks_df, ["block_no"], tokens=dod_decode("payload")).select(
+        "doc_id", "tokens", F.size("tokens").alias("n_tok"), "source"
+    )

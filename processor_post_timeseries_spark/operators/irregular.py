@@ -25,13 +25,21 @@ Segments, block bounds and payload blocks all come from one gap-rule
 pass (``_segment_frame``). Every emitter requires timestamps sorted
 within each doc and raises ``timestamps not sorted within doc …``
 otherwise; without the check, unsorted input gives wrong segments,
-negative-span keys and negative rates with no error.
+negative-span keys and negative rates with no error. A frame with
+``tokens`` must also hold one timestamp per token, or the emitter
+raises ``tokens and timestamps differ in length within doc …`` instead
+of cutting short payloads or NULL-padded samples. Payload blocks are
+read back through ``blocks._reassemble``, the reassembly
+``blocks.from_blocks`` uses.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.codec import dod_decode, dod_encode
+from .blocks import _reassemble
 
 
 def gap_threshold_us(rate_hz: float) -> int:
@@ -57,18 +65,23 @@ def _boundary_positions(ts: Column, gap_us: Column) -> Column:
 
 
 def _sorted_nonempty(seq: DataFrame, ts_col: str) -> DataFrame:
-    """The docs of ``seq`` with at least one sample, behind the check
-    every emitter here shares: timestamps sorted within a doc. A filter,
-    not a projected column, so column pruning can never drop it."""
+    """The docs of ``seq`` with at least one sample, behind the checks
+    every emitter here shares: timestamps sorted within a doc and, when
+    ``seq`` has ``tokens``, one timestamp per token. A filter, not a
+    projected column, so column pruning can never drop it."""
     ts = F.col(ts_col)
-    return seq.filter(
-        F.when(
-            F.sort_array(ts) != ts,
-            F.raise_error(
-                F.format_string("timestamps not sorted within doc '%s'", "doc_id")
-            ),
-        ).otherwise(F.size(ts) > 0)
+    check = F.when(
+        F.sort_array(ts) != ts,
+        F.raise_error(F.format_string("timestamps not sorted within doc '%s'", "doc_id")),
     )
+    if "tokens" in seq.columns:
+        check = check.when(
+            F.size("tokens") != F.size(ts),
+            F.raise_error(
+                F.format_string("tokens and timestamps differ in length within doc '%s'", "doc_id")
+            ),
+        )
+    return seq.filter(check.otherwise(F.size(ts) > 0))
 
 
 def _segment_frame(seq: DataFrame, ts_col: str, gap_us: int | Column) -> DataFrame:
@@ -160,18 +173,18 @@ def block_bounds_from_ts_arrays(
     return _block_frame(seq, ts_col, gap_us, block_size).drop(ts_col, "tokens")
 
 
-def explode_ts_samples(
-    seq: DataFrame, ts_col: str = "ts", id_col: str = "doc_id"
-) -> DataFrame:
+def explode_ts_samples(seq: DataFrame, ts_col: str = "ts") -> DataFrame:
     """(doc_id, pos, ts_us, v) row-per-sample view of an explicit-ts
     sequence — the bridge into the row-oriented operators (resample,
     asof, interval joins). ``arrays_zip`` + ``posexplode`` keep it a
-    narrow map; positions are 0-based."""
-    return seq.select(
-        F.col(id_col),
+    narrow map; positions are 0-based. Behind the emitters' shared
+    check, so unsorted timestamps or a ``tokens``/``ts`` length mismatch
+    raise instead of exploding into NULL-padded rows."""
+    return _sorted_nonempty(seq, ts_col).select(
+        "doc_id",
         F.posexplode(F.arrays_zip(F.col(ts_col).alias("ts_us"), F.col("tokens").alias("v"))),
     ).select(
-        id_col,
+        "doc_id",
         F.col("pos").cast("long").alias("pos"),
         F.col("col.ts_us").alias("ts_us"),
         F.col("col.v").alias("v"),
@@ -195,8 +208,6 @@ def irregular_to_blocks(
     start_pos, n, payload, ts_payload, key). Round-trip via
     ``irregular_from_blocks``. A block whose rebased timestamps do not
     fit the codec's int32 raises instead of wrapping."""
-    from ..functions.codec import dod_encode
-
     start = (F.col("start_pos") + 1).cast("int")
     span = F.col("end_us") - 1 - F.col("start_us")
     rebased = F.when(
@@ -232,27 +243,12 @@ def irregular_to_blocks(
 def irregular_from_blocks(blocks: DataFrame) -> DataFrame:
     """Inverse of ``irregular_to_blocks``: decode + reassemble per doc in
     (seg_id, block_no) order -> (doc_id, tokens, ts, n_tok, source).
-    One shuffle (regroup a doc's blocks) and a sorted in-group
-    ``collect_list`` — the ordered-assembly contract of
-    ``blocks.from_blocks``."""
-    from ..functions.codec import dod_decode
-
+    The reassembly is ``blocks.from_blocks``'s: one shuffle on
+    ``doc_id`` and a sorted in-group ``collect_list``."""
     ts = F.transform(dod_decode("ts_payload"), lambda d: d.cast("long") + F.col("start_us"))
-    block = F.struct("seg_id", "block_no", dod_decode("payload").alias("tokens"), ts.alias("ts"))
-    return (
-        blocks.groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(block)).alias("_b"),
-            F.first("source").alias("source"),
-        )
-        .select(
-            "doc_id",
-            F.flatten("_b.tokens").alias("tokens"),
-            F.flatten("_b.ts").alias("ts"),
-            "source",
-        )
-        .select("doc_id", "tokens", "ts", F.size("tokens").alias("n_tok"), "source")
-    )
+    return _reassemble(
+        blocks, ["seg_id", "block_no"], tokens=dod_decode("payload"), ts=ts
+    ).select("doc_id", "tokens", "ts", F.size("tokens").alias("n_tok"), "source")
 
 
 def rate_from_ts_arrays(

@@ -242,7 +242,11 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     some run wrote rows to it: a fresh run over an empty input leaves
     file-less stage directories, and a resume with nothing pending leaves
     them as found. A tiers output in the older per-tier directory layout
-    raises ``ValueError``.
+    raises ``ValueError``. A doc with a non-NULL ``ts`` column raises
+    when the run reads it: blocks and tiers are keyed by sample index,
+    so stored timestamps would be dropped (``operators/irregular.py``
+    cuts and aggregates explicit-timestamp series). An all-NULL ``ts``,
+    an implicit-rate series, runs.
 
     The blocks stage and the tier cascade are independent DAGs over the
     same input, so they run as CONCURRENT Spark jobs, each tagged with
@@ -258,6 +262,12 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     error is raised after the other stage has stopped.
     """
     _check_layout(spark, f"{cfg.out_dir}/tiers")
+    if "ts" in seq_df.columns:
+        # a filter on the input both stages share, so pruning cannot drop it
+        seq_df = seq_df.filter(F.when(F.col("ts").isNotNull(), F.raise_error(F.format_string(
+            "doc '%s' has stored timestamps (ts), which run_pipeline would drop: it keys "
+            "blocks and tiers by sample index; see operators/irregular.py", "doc_id",
+        ))).otherwise(F.lit(True)))
     seq = with_bucket(seq_df, cfg.n_buckets)
     units = sorted(r[0] for r in seq.select(lineage.key_col(_UNIT)).distinct().collect())
     # a fresh run needs the done keys too: the stale ones of the units it

@@ -97,7 +97,9 @@ def list_partitions(spark: SparkSession, path: str) -> list[tuple[str, int]]:
             continue
         if not (t.isDirectory() and tname.startswith("tier=")):
             raise ValueError(
-                f"{path} is not a tier=<name>/day=<n> layout: found {tname!r}"
+                f"{path} is not a tier=<name>/day=<n> layout: found {tname!r}. Only "
+                "write_time_partitioned output is a retention input; the pipeline's "
+                "own tiers output has no time column to expire by"
             )
         for d in fs.listStatus(t.getPath()):
             dname = d.getPath().getName()

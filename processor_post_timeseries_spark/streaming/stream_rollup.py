@@ -2,13 +2,8 @@
 
 The reference is strictly batch (one file in, files out —
 ``/root/reference/processor/main.py:26`` asserts a single input), so
-streaming is an engine extension, not parity work. Three wrappers:
+streaming is an engine extension, not parity work. Two wrappers:
 
-* ``stream_rollup_available_now`` — incremental batch: new sequence files
-  landing in a directory are rolled up to tier-1 aggregates exactly once
-  per trigger (``availableNow``), checkpointed by Spark's own streaming
-  checkpoint. This is how the 100 TB pipeline ingests continuously: the
-  rollup is a narrow map, so the stream never needs state.
 * ``stream_sessionize`` — the reference's gap detection (W1) as its
   streaming twin: ``session_window(ts, gap)`` + watermark for late data.
   Needs state; Spark's session-window state store handles it.
@@ -19,34 +14,8 @@ streaming is an engine extension, not parity work. Three wrappers:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.rollup import tier1_from_tokens
-from ..sources.synth import SEQ_SCHEMA
-
-
-def stream_rollup_available_now(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: int = 100,
-    tier: str = "1s",
-):
-    """readStream(sequences parquet) -> tier1 -> writeStream(parquet),
-    trigger availableNow (process the backlog, then stop). Returns the
-    started StreamingQuery; caller awaits termination."""
-    src = spark.readStream.schema(SEQ_SCHEMA).parquet(in_dir)
-    tiers = tier1_from_tokens(src, window, tier)
-    return (
-        tiers.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_sessionize(

@@ -521,3 +521,19 @@ def test_null_tokens_error_names_the_doc(spark):
     bad = seq.withColumn("tokens", F.when(F.col("doc_id") != "a", F.col("tokens")))
     with pytest.raises(Exception, match="NULL tokens for doc_id 'a'"):
         to_blocks(bad, block_size=2).collect()
+
+
+def test_stored_timestamps_raise_and_an_all_null_ts_runs(spark, tmp_path):
+    """Blocks and tiers are keyed by sample index: a doc with stored
+    timestamps raises instead of losing them, while an implicit-rate
+    series (``ts`` NULL, as nwb_chunks_to_sequences emits it) runs."""
+    schema = "doc_id string, tokens array<int>, n_tok int, source string, ts array<long>"
+    cfg = dict(block_size=2, n_buckets=2, tiers=(("1s", 2),))
+    implicit = spark.createDataFrame([("a", [1, 2, 3], 3, "s1", None)], schema)
+    out = str(tmp_path / "implicit")
+    run_pipeline(spark, implicit, PipelineConfig(out_dir=out, **cfg))
+    assert spark.read.parquet(f"{out}/blocks").count() == 2
+    stored = spark.createDataFrame(
+        [("a", [1, 2, 3], 3, "s1", None), ("b", [4, 5], 2, "s1", [0, 10])], schema)
+    with pytest.raises(Exception, match="doc 'b' has stored timestamps"):
+        run_pipeline(spark, stored, PipelineConfig(out_dir=str(tmp_path / "stored"), **cfg))

@@ -145,8 +145,9 @@ class TestRetention:
         run_pipeline(spark, seq, PipelineConfig(out_dir=out, n_buckets=2, tiers=(("1s", 8),)))
         tiers = f"{out}/tiers"
         before = sorted(os.listdir(tiers))
-        with pytest.raises(ValueError, match="tier=<name>/day=<n>"):
+        with pytest.raises(ValueError, match="tier=<name>/day=<n>") as err:
             apply_retention(spark, tiers, RetentionPolicy({"1s": 0}), now_day=10**6)
+        assert "Only write_time_partitioned output is a retention input" in str(err.value)
         assert sorted(os.listdir(tiers)) == before
 
     def test_empty_dir(self, spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from processor_post_timeseries_spark.operators.blocks import from_blocks, to_blocks
 from processor_post_timeseries_spark.operators.irregular import (
     block_bounds_from_ts_arrays,
     explode_ts_samples,
@@ -119,8 +120,9 @@ def test_payload_blocks_refuse_int32_span_overflow(spark):
         lambda df: irregular_to_blocks(df, gap_us=4000, block_size=2),
         lambda df: rate_from_ts_arrays(df),
         lambda df: tier_from_ts_arrays(df, window_us=1000),
+        lambda df: explode_ts_samples(df),
     ],
-    ids=["segments", "block_bounds", "to_blocks", "rate", "tier"],
+    ids=["segments", "block_bounds", "to_blocks", "rate", "tier", "explode"],
 )
 def test_emitters_reject_unsorted_ts(spark, emit):
     # sorted timestamps within a doc are every emitter's precondition:
@@ -128,6 +130,11 @@ def test_emitters_reject_unsorted_ts(spark, emit):
     # it starts, or a negative rate — it must raise instead
     df = _seq(spark, [("ok", [1, 2], [0, 10], "s"), ("d1", [1, 2, 3], [300, 50, 60], "s")])
     with pytest.raises(Exception, match="timestamps not sorted within doc 'd1'"):
+        emit(df).collect()
+    # and one timestamp per token: a short tokens array would give a
+    # payload with fewer tokens than its block's n, or NULL-padded samples
+    df = _seq(spark, [("ok", [1, 2], [0, 10], "s"), ("d2", [1, 2], [0, 10, 20, 30], "s")])
+    with pytest.raises(Exception, match="tokens and timestamps differ in length within doc 'd2'"):
         emit(df).collect()
 
 
@@ -198,22 +205,49 @@ def test_tier_from_ts_arrays_matches_groupby_reference(spark):
     assert got == again
 
 
-def test_array_model_plans_have_zero_exchanges(spark):
-    def _plan(df) -> str:
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
+
+def test_array_model_plans_have_zero_exchanges(spark):
     df = _seq(spark, [("d1", [1, 2], [0, 1000], "s")])
     for out in (
         segments_from_ts_arrays(df, gap_us=4000),
         block_bounds_from_ts_arrays(df, gap_us=4000, block_size=2),
         irregular_to_blocks(df, gap_us=4000, block_size=2),
+        to_blocks(df, block_size=2),
         rate_from_ts_arrays(df),
         tier_from_ts_arrays(df, window_us=1000),
     ):
         plan = _plan(out)
         assert "Exchange" not in plan, plan
+    # both block writers run Python only in the codec UDF
+    for out in (irregular_to_blocks(df, gap_us=4000, block_size=2), to_blocks(df, block_size=2)):
+        plan = _plan(out)
+        assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan
+
+
+def test_to_blocks_codec_input_rows_carry_their_block_not_the_doc(spark):
+    # the slice is projected before the codec UDF, so the rows it queues
+    # hold one block each: a doc of k blocks is not copied k times
+    plan = _plan(to_blocks(_seq(spark, [("d1", [1, 2, 3], [0, 1, 2], "s")]), block_size=2))
+    udf_node = plan[plan.index("ArrowEvalPython\nInput"):]
+    udf_input = udf_node.splitlines()[1]
+    assert "_chunk" in udf_input and "tokens" not in udf_input, udf_node
+
+
+def test_block_readers_shuffle_once_on_doc_id(spark):
+    import re
+
+    df = _seq(spark, [("d1", [1, 2, 3], [0, 1000, 2000], "s")])
+    for out in (
+        from_blocks(to_blocks(df, block_size=2)),
+        irregular_from_blocks(irregular_to_blocks(df, gap_us=4000, block_size=2)),
+    ):
+        plan = _plan(out)
+        exchanges = re.findall(r"^\(\d+\) Exchange\nInput.*\nArguments: (.*)$", plan, re.M)
+        assert len(exchanges) == 1, plan
+        assert re.match(r"hashpartitioning\(doc_id#\d+, ", exchanges[0]), plan
 
 
 def test_partition_invariance_and_sample_explode(spark):

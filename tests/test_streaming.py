@@ -4,38 +4,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 import oracle
-from processor_post_timeseries_spark.operators.rollup import tier1_from_tokens
-from processor_post_timeseries_spark.sources.synth import sequences
-from processor_post_timeseries_spark.streaming.stream_rollup import (
-    stream_rollup_available_now,
-    stream_sessionize,
-)
-
-
-def test_stream_rollup_available_now_matches_batch(spark, tmp_path):
-    in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    seq = sequences(spark, 20, seed=8, min_tok=5, max_tok=200, vocab=500)
-    seq.write.mode("overwrite").parquet(in_dir)
-
-    q = stream_rollup_available_now(spark, in_dir, out_dir, ckpt, window=10)
-    q.awaitTermination(120)
-
-    got = {r["doc_id"]: r for r in spark.read.parquet(out_dir).collect()}
-    exp = {r["doc_id"]: r for r in tier1_from_tokens(spark.read.parquet(in_dir), 10).collect()}
-    assert set(got) == set(exp)
-    for d in exp:
-        assert list(got[d]["sums"]) == list(exp[d]["sums"])
-        assert list(got[d]["cnts"]) == list(exp[d]["cnts"])
-
-    # incremental: new files processed exactly once on the next trigger
-    seq2 = sequences(spark, 30, seed=9, min_tok=5, max_tok=100, vocab=500).filter(
-        ~F.col("doc_id").isin(list(got))
-    )
-    seq2.write.mode("append").parquet(in_dir)
-    q2 = stream_rollup_available_now(spark, in_dir, out_dir, ckpt, window=10)
-    q2.awaitTermination(120)
-    total = spark.read.parquet(out_dir).count()
-    assert total == spark.read.parquet(in_dir).count()
+from processor_post_timeseries_spark.streaming.stream_rollup import stream_sessionize
 
 
 def test_stream_sessionize_batch_twin(spark):
