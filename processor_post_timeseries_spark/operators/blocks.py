@@ -11,10 +11,9 @@ consecutive samples, compressed with the delta-of-delta codec
 by ``(source, bucket)`` so scans prune by source and the bucket count
 bounds task skew.
 
-Both directions have the shape of the explicit-timestamp path
-(``operators/irregular.py``): the block bounds and slices are array
-expressions, and Python runs only the codec UDFs. Cutting is a narrow
-map (no shuffle; blocks of a doc never span rows). Reassembly
+Cutting is one Arrow kernel, ``block_batch`` (a narrow map: blocks of a
+doc never span rows), run by ``to_blocks`` through ``mapInArrow`` and by
+the pipeline in the same crossing as the tier kernel. Reassembly
 (``_reassemble``, shared with ``irregular_from_blocks``) is one shuffle
 on ``doc_id`` and a sorted ``collect_list``/``flatten`` per doc, the one
 place the ordered-assembly rule (L2) lives.
@@ -22,11 +21,14 @@ place the ordered-assembly rule (L2) lives.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.codec import dod_decode, dod_encode
+from ..functions.codec import dod_decode, dod_encode_array
+from .rollup import _list_values
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -41,9 +43,31 @@ BLOCK_SCHEMA = T.StructType(
 )
 
 
+def block_batch(batch: pa.RecordBatch, block_size: int) -> pa.RecordBatch:
+    """The block kernel: ``BLOCK_SCHEMA`` rows of the docs in ``batch``
+    (``doc_id``, ``source``, ``tokens``), ``max(1, ceil(n / block_size))``
+    per doc of ``n`` tokens. The bounds are numpy over the batch's
+    offsets; each payload is one ``dod_encode_array`` call over a view of
+    the batch's int32 values."""
+    lengths, vals = _list_values(batch, "tokens")
+    lengths = lengths.astype(np.int64)
+    per_doc = np.maximum(1, -(-lengths // block_size))
+    row = np.repeat(np.arange(len(lengths)), per_doc)
+    block_no = np.arange(len(row)) - (np.cumsum(per_doc) - per_doc)[row]
+    start = block_no * block_size
+    end = np.minimum(start + block_size, lengths[row])
+    base = (np.cumsum(lengths) - lengths)[row]
+    payload = [dod_encode_array(vals[b + s : b + e]) for b, s, e in zip(base, start, end)]
+    take = pa.array(row)
+    cols = [batch.column("doc_id").take(take), batch.column("source").take(take),
+            pa.array(block_no.astype(np.int32)), pa.array(start), pa.array(end),
+            pa.array((end - start).astype(np.int32)), pa.array(payload, pa.binary())]
+    return pa.RecordBatch.from_arrays(cols, names=BLOCK_SCHEMA.names)
+
+
 def to_blocks(seq_df: DataFrame, block_size: int = 131_072) -> DataFrame:
     """Sequences -> one row per (doc, block), payload = DoD-compressed,
-    columns as ``BLOCK_SCHEMA``.
+    columns as ``BLOCK_SCHEMA``: ``block_batch`` through ``mapInArrow``.
 
     Default block_size mirrors the reference default chunk of
     CHUNK_SIZE_MB·2^20/8 = 131072 samples (``/root/reference/processor/main.py:18-20``).
@@ -51,39 +75,9 @@ def to_blocks(seq_df: DataFrame, block_size: int = 131_072) -> DataFrame:
     gets one empty block (``block_no`` 0, ``start_idx = end_idx = n = 0``)
     so ``from_blocks`` returns it and its work unit is checkpointed; a
     NULL ``tokens`` row raises naming the doc.
-
-    The bounds come from one ``posexplode(sequence(...))``, in bigint so
-    no offset overflows int32 under ANSI mode; Python runs only
-    ``codec.dod_encode``. ``_chunk`` is projected once and read three
-    times, so the optimizer keeps the slice next to the explode instead
-    of inlining it into the UDF's input: the rows queued for the UDF
-    carry their block, not the doc's whole array, and a doc of k blocks
-    is copied once, not k times.
     """
-    n = F.size("tokens").cast("long")
-    start = F.col("start_idx")
-    bounds = F.sequence(F.lit(0).cast("long"), F.greatest(n, F.lit(1).cast("long")) - 1,
-                        F.lit(block_size).cast("long"))
-    return (
-        seq_df.filter(
-            F.when(
-                F.col("tokens").isNull(),
-                F.raise_error(F.format_string("NULL tokens for doc_id '%s'", "doc_id")),
-            ).otherwise(F.lit(True))
-        )
-        .select("doc_id", "source", "tokens", F.posexplode(bounds).alias("block_no", "start_idx"))
-        .select("doc_id", "source", "block_no", "start_idx",
-                F.slice("tokens", (start + 1).cast("int"), block_size).alias("_chunk"))
-        .select(
-            "doc_id",
-            "source",
-            "block_no",
-            "start_idx",
-            (start + F.size("_chunk")).alias("end_idx"),
-            F.size("_chunk").alias("n"),
-            dod_encode("_chunk").alias("payload"),
-        )
-    )
+    return seq_df.select("doc_id", "source", "tokens").mapInArrow(
+        lambda batches: (block_batch(b, block_size) for b in batches if b.num_rows), BLOCK_SCHEMA)
 
 
 def block_key(blocks_df: DataFrame) -> DataFrame:

@@ -225,17 +225,19 @@ def irregular_to_blocks(
             F.slice(ts_col, start, "n"), lambda t: (t - F.col("start_us")).cast("int")
         )
     )
+    keys = ["doc_id", "source", "seg_id", "block_no", "start_us", "end_us", "start_pos"]
+    # ``_chunk`` is read twice, so the slices stay projected below the UDFs:
+    # a queued row holds its block, not the doc's ``tokens`` and ``ts``
     return _block_frame(seq, ts_col, gap_us, block_size).select(
-        "doc_id",
-        "source",
-        "seg_id",
-        "block_no",
-        "start_us",
-        "end_us",
-        "start_pos",
-        "n",
-        dod_encode(F.slice("tokens", start, "n")).alias("payload"),
-        dod_encode(rebased).alias("ts_payload"),
+        *keys,
+        F.slice("tokens", start, "n").alias("_chunk"),
+        rebased.alias("_ts_chunk"),
+        "key",
+    ).select(
+        *keys,
+        F.size("_chunk").alias("n"),
+        dod_encode("_chunk").alias("payload"),
+        dod_encode("_ts_chunk").alias("ts_payload"),
         "key",
     )
 

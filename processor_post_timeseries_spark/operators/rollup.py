@@ -103,15 +103,15 @@ def _no_nulls(batch: pa.RecordBatch, name: str) -> None:
 
 
 def _list_values(batch: pa.RecordBatch, name: str) -> tuple[np.ndarray, np.ndarray]:
-    """(per-row lengths, flat int64 values) of a list column, read from its
-    offsets. A sliced batch's offsets need not start at 0. A NULL row
-    raises: its offsets span no values, so it would otherwise pass as an
-    empty doc."""
+    """(per-row lengths, flat values in the column's own dtype) of a list
+    column, read from its offsets without a copy. A sliced batch's offsets
+    need not start at 0. A NULL row raises: its offsets span no values, so
+    it would otherwise pass as an empty doc."""
     _no_nulls(batch, name)
     arr = batch.column(name)
     off = arr.offsets.to_numpy()
     vals = arr.values.slice(off[0], off[-1] - off[0]).to_numpy()
-    return np.diff(off), vals.astype(np.int64, copy=False)
+    return np.diff(off), vals
 
 
 def _tier_batch(doc_id, source, name: str, window, lengths, stats) -> pa.RecordBatch:
@@ -151,11 +151,12 @@ def tier_batches(
     n = batch.num_rows
     if "tokens" in batch.schema.names:
         lengths, vals = _list_values(batch, "tokens")
+        vals = vals.astype(np.int64, copy=False)
         stats = (vals, vals, vals, np.ones(len(vals), np.int64))
         window = np.ones(n, np.int64)
     else:
         cols = [_list_values(batch, c) for c in _STATS]
-        lengths, stats = cols[0][0], tuple(v for _, v in cols)
+        lengths, stats = cols[0][0], tuple(v.astype(np.int64, copy=False) for _, v in cols)
         window = batch.column("window").to_numpy()
     pos = np.zeros(n, np.int64)
     if "offset" in batch.schema.names:
@@ -196,8 +197,8 @@ def fused_tiers(
 
     Semantics identical to ``rollup_all_tiers`` — tier k+1 is composed
     from tier k inside the same kernel — but the plan touches the raw
-    ``tokens`` exactly once and produces one output, so the pipeline
-    needs one write job instead of three chained write+read-backs.
+    ``tokens`` once and produces one output. The pipeline runs the same
+    ``tier_batches`` in its own ingest kernel (``plans/pipeline.py``).
     """
     return _map_tiers(seq_df, tiers, ["tokens"])
 

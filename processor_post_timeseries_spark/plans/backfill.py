@@ -66,8 +66,8 @@ def invalidate_where(
 
 
 def _rewrite_without(spark: SparkSession, root: str, cond) -> int:
-    # under the checkpoint's write lock: a pipeline stage's lineage append
-    # between this read and the overwrite would be lost
+    # under the checkpoint's write lock: a lineage append from another of
+    # the caller's threads between this read and the overwrite would be lost
     with _CKPT_WRITE_LOCK:
         # one read of the (tiny, module docstring) checkpoint with ``cond``
         # as a column; rows where it is NULL go too, as under filter(~cond)

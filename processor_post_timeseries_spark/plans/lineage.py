@@ -34,6 +34,7 @@ the identical code targets ``format("iceberg")`` commits.
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
 import uuid
@@ -98,17 +99,21 @@ def record_stage(
     filtered by the caller to what this run wrote (a resumed run must not
     re-attribute earlier runs' partitions).
     """
-    stats = _partition_stats(written_df, key_cols).select(
-        F.lit(stage).alias("stage"),
-        "partition_key",
-        F.lit(run_id).alias("run_id"),
-        "row_count",
-        "checksum",
-        "input_files",
-        F.lit("done").alias("status"),
-    )
-    # concurrent pipeline stages (plans/pipeline.py) may append lineage at
-    # the same time; the Hadoop committer shares one _temporary dir per
+    return record_stages(spark, root, {stage: (written_df, key_cols)}, run_id)
+
+
+def record_stages(spark: SparkSession, root: str,
+                  written: dict[str, tuple[DataFrame, list[str]]], run_id: str) -> DataFrame:
+    """``record_stage`` for {stage: (written_df, key_cols)}, in one
+    checkpoint append: every stage's rows land, or none do."""
+    stats = functools.reduce(DataFrame.unionByName, (
+        _partition_stats(df, key_cols).select(
+            F.lit(stage).alias("stage"), "partition_key", F.lit(run_id).alias("run_id"),
+            "row_count", "checksum", "input_files", F.lit("done").alias("status"))
+        for stage, (df, key_cols) in written.items()
+    ))
+    # a caller's threads may append, or rewrite the checkpoint (backfill.py),
+    # at the same time; the Hadoop committer shares one _temporary dir per
     # output path, so serialize this (tiny) append within the process
     with _CKPT_WRITE_LOCK:
         stats.write.mode("append").parquet(_ckpt_path(root))

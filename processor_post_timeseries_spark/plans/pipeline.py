@@ -3,80 +3,63 @@
 The engine's flagship plan (reference lifecycle §3.1 re-expressed):
 
     sequences (doc_id, tokens, n_tok, source)
-      -> salt bucket (partitioning.with_bucket)
-      -> [stage blocks]  DoD-compress fixed-size blocks, write
-         partitionBy(source, bucket)                    (narrow map)
-      -> [stage tiers]   cascading continuous aggregates raw->1s->1m->1h,
-         all tiers from one tier-kernel pass (rollup.fused_tiers),
-         sorted by tier within each unit and written
-         partitionBy(source, bucket)                    (narrow map)
-      -> checkpoint rows per stage partition (lineage.py)
+      -> one Arrow kernel per input batch (_ingest_rows, one Python
+         crossing): DoD-compressed fixed-size blocks (blocks.block_batch)
+         and the cascading aggregates raw->1s->1m->1h, every tier from
+         one pass (rollup.tier_batches), in one stage-tagged schema
+      -> salt bucket (partitioning.with_bucket), ONE repartition by
+         (source, bucket), its shuffle run once and read by both writes
+      -> [stage blocks]  written partitionBy(source, bucket)
+      -> [stage tiers]   sorted by tier within each unit, written
+         partitionBy(source, bucket)
+      -> checkpoint rows per stage partition, both stages in one
+         append (lineage.py)
 
 Each (source, bucket) unit of a stage is one Parquet file: ``tier`` is a
-data column of the tiers stage, not a directory level. Every file costs
-a few ms of executor CPU to write or read back whatever its size, and
-the 1m and 1h rows of a unit are 60x and 3600x smaller than its 1s
-rows, so a file per tier would make two thirds of the files tiny. The
-price is on the read side: a ``tier = '1m'`` or ``'1h'`` filter is no
-longer a directory prune, so it opens every unit's file. The filter is
-pushed to the Parquet reader, and a file's rows are in tier order, but
-row-group statistics only skip the 1s rows of a file that holds more
-than one row group (larger than ``parquet.block.size``, 128 MB by
-default); a smaller file is read whole. The checkpoint keeps one key
-per tier ("tier/source/bucket", ``STAGE_KEYS``).
+data column of the tiers stage, not a directory level, since every file
+costs a few ms of executor CPU whatever its size and a unit's 1m and 1h
+rows are 60x and 3600x smaller than its 1s rows. The price: a ``tier``
+filter opens every unit's file, and row-group statistics skip the 1s
+rows only in a file of several row groups (over ``parquet.block.size``).
+The checkpoint keeps one key per tier ("tier/source/bucket",
+``STAGE_KEYS``).
 
 The work units are planned on the driver once per run: the input's
-(source, bucket) keys are collected (a column-pruned distinct, at most
-sources × buckets strings) and, when a checkpoint exists, its done keys
-are read once and shared by both stages. One stage runner,
-``_run_stage``, serves both stages: on a resume its pending units are
-the input units missing any checkpoint key the current config expects
-(one per tier for tiers), on a fresh run every input unit. Either way a
-rewritten unit's keys of tiers no longer configured are dropped first,
-since its new file holds no rows of them. A resumed stage with nothing
-pending starts no job;
-otherwise it scans the raw sequences once, less the done units (a
-literal ``NOT IN``, ``lineage.drop_done``; a fresh run has none),
-writes them with dynamic partition overwrite (an idempotent re-write),
-then certifies lineage from a read-back pruned to the partitions it
-wrote. The stages run on a two-worker thread pool whose threads start
-with the caller's local properties (job group, pool); the caller's
-thread is not touched.
+(source, bucket) keys are collected (a column-pruned distinct) and the
+checkpoint's done keys read once. A stage's pending units are, on a
+resume, the input units missing any key the config expects (one per tier
+for tiers), on a fresh run every input unit; a rewritten unit's keys of
+tiers no longer configured are dropped first. A resume with nothing
+pending starts no job. Otherwise the input of the units pending in
+either stage crosses into Python once, coalesced to the pending share of
+its partitions (``_pending_input``: each Python task has a fixed worker
+cost, about 0.04 s warm), and the stages are written one after the other
+with dynamic partition overwrite (an idempotent re-write), then
+certified from read-backs pruned to the units written.
 
-A resume runs its kernels on its share of the input: with k of N units
-pending, the filtered input is coalesced from its P planned partitions
-to ceil(P·k/N) (``_pending_input``). Every Python task has a fixed
-worker cost before it reads a row: about 0.04 s of CPU on a 4-vCPU host
-once the worker has run an engine task (``_zipcache`` stops
-``importlib.invalidate_caches`` re-reading the zip importers'
-directories), about 0.2 s on a worker's first engine task. So a 2-unit
-backfill should still start few tasks, not one per input split. A unit
-is a ``doc_id`` hash bucket within a source, so its rows are spread over
-every split and each coalesced task carries about as many rows as a
-fresh-run task.
-
-Shuffle census at 100 TB: ZERO wide dependencies in the whole pipeline —
-blocks and every tier are per-row maps before the one
-``repartition(*partition cols)`` every stage write runs to shape output
-files. The only shuffles in the system are (a) that repartition, (b)
-cross-doc summary stats (tiny), (c) lineage groupBys over
-already-reduced outputs.
+Shuffle census at 100 TB: the one ``repartition(source, bucket)`` that
+shapes both stages' files; lineage groupBys run over reduced outputs.
+Nothing is cached: both writes read that exchange's shuffle files
+(``_shuffled_once``), about 2.6 B per token, and AQE coalesces its
+partitions as it would a single write's.
 """
 
 from __future__ import annotations
 
+import functools
 import math
-from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-from pyspark import inheritable_thread_target
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.blocks import to_blocks
+from ..operators.blocks import BLOCK_SCHEMA, block_batch
 from ..operators.partitioning import DEFAULT_BUCKETS, with_bucket
-from ..operators.rollup import DEFAULT_TIERS, fused_tiers
+from ..operators.rollup import DEFAULT_TIERS, TIER_SCHEMA, tier_batches
 from . import lineage
 from .backfill import invalidate_units
 
@@ -87,6 +70,20 @@ STAGE_KEYS = {"blocks": ["source", "bucket"], "tiers": ["tier", "source", "bucke
 # columns of both stages' output
 _UNIT = ["source", "bucket"]
 _POOL = "spark.scheduler.pool"
+# the kernel's one row schema: (doc_id, source), each stage's own columns,
+# NULL in the other stage's rows, and the ``stage`` tag
+_ROW_SCHEMA = T.StructType(
+    BLOCK_SCHEMA.fields[:2]
+    + [T.StructField(f.name, f.dataType, True)
+       for f in BLOCK_SCHEMA.fields[2:] + TIER_SCHEMA.fields[2:]]
+    + [T.StructField("stage", T.StringType(), False)]
+)
+# its Arrow types as the kernels build them (list items named "item"),
+# all fields nullable: one schema for every batch of the kernel's stream
+_ROW_ARROW = pa.schema([
+    (f.name, pa.list_(f.type.value_type) if pa.types.is_list(f.type) else f.type)
+    for f in to_arrow_schema(_ROW_SCHEMA)
+])
 
 
 @dataclass
@@ -159,79 +156,60 @@ def _check_layout(spark: SparkSession, path: str) -> None:
         )
 
 
-def _run_stage(spark: SparkSession, cfg: PipelineConfig, stage: str, seq: DataFrame,
-               build: Callable[[DataFrame], DataFrame], prefixes: tuple[str, ...],
-               units: list[str], done: set[str]) -> None:
-    """Write and certify one stage over its pending units: on a resume,
-    the input ``units`` not every expected checkpoint key ``prefix +
-    unit`` of which is in ``done``; on a fresh run, every input unit. A
-    resume with none pending returns without a job; a fresh run always
-    writes, so an empty input still leaves its (file-less) stage
-    directory and a ``rows_written`` of 0.
+def _ingest_rows(batches: Iterator[pa.RecordBatch], block_size: int, tiers: tuple,
+                 stages: tuple[str, ...]) -> Iterator[pa.RecordBatch]:
+    """The one ingest kernel: each input batch's rows of ``blocks.block_batch``
+    and ``rollup.tier_batches``, for the ``stages`` with pending units,
+    tagged by ``stage`` in ``_ROW_ARROW`` (the other stage's columns NULL)."""
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        parts = [("blocks", block_batch(batch, block_size))] if "blocks" in stages else []
+        if "tiers" in stages:
+            parts += [("tiers", t) for t in tier_batches(batch, tiers)]
+        for stage, part in parts:
+            cols = dict(zip(part.schema.names, part.columns))
+            cols["stage"] = pa.array([stage] * part.num_rows, pa.string())
+            yield pa.RecordBatch.from_arrays(
+                [cols[f.name] if f.name in cols else pa.nulls(part.num_rows, f.type)
+                 for f in _ROW_ARROW], schema=_ROW_ARROW)
 
-    The kernels run on the pending share of the input's partitions
-    (``_pending_input``): each Python task has a fixed worker cost before
-    it reads a row (about 0.04 s of CPU on a warm worker, 0.2 s on a
-    worker's first engine task), so a resume of a few units runs each
-    kernel in a task or two rather than one per input split, each with
-    about a fresh-run task's rows. The limit: a resume whose pending
-    units hold far more than their share of the rows gets fewer, larger
-    tasks than a fresh run would.
 
-    The stage's jobs run in its own FAIR pool (session.py sets
-    scheduler.mode=FAIR): under FIFO whichever stage submits first hogs
-    every slot and the other stalls behind it. Lineage then runs in the
-    inherited pool, keeping its jobs out of the stage pools; a checkpoint
-    row never precedes its data.
-    """
-    if cfg.resume:
-        pending = [u for u in units if any(p + u not in done for p in prefixes)]
-        if not pending:
-            return
-    else:
-        pending = units
-    stale = _stale_keys(done, prefixes, pending)
-    if stale:
-        invalidate_units(spark, cfg.out_dir, stage, stale)
-    seq = _pending_input(seq, units, pending)
-    sc = spark.sparkContext
-    inherited = sc.getLocalProperty(_POOL)
-    sc.setLocalProperty(_POOL, stage)
-    path = f"{cfg.out_dir}/{stage}"
+def _shuffled_once(spark: SparkSession, rows: DataFrame) -> DataFrame:
+    """``rows`` as a frame over its executed RDD: every query of it reads
+    the files of ``rows``' one shuffle, whose map stage runs once (here,
+    under AQE) instead of once per query. Nothing is cached."""
+    rdd = rows._jdf.queryExecution().toRdd()
+    return DataFrame(spark._jsparkSession.internalCreateDataFrame(rdd, rows._jdf.schema(), False),
+                     spark)
+
+
+def _write_stage(cfg: PipelineConfig, stage: str, rows: DataFrame, pending: list[str],
+                 todo: list[str]) -> None:
+    """Write the ``pending`` units of one stage from the shared frame
+    ``rows`` (of the ``todo`` units); keep its ``rows_written``."""
+    df = rows.filter(F.col("stage") == stage)
+    if len(pending) < len(todo):
+        df = _written_units(df, pending)
     obs = Observation()
-    df = with_bucket(build(seq.drop("bucket")), cfg.n_buckets)
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-    # align task partitioning with the sink layout: without this every
-    # task writes a file into every (source, bucket) dir it touches ->
-    # tasks × partitions tiny files; with it, one task owns few dirs and
-    # writes one file to each. The unit is a prefix of the sort order, so
-    # this sort is the writer's own (no second one); the rest of it puts
-    # each tiers file in tier order
+    names = (BLOCK_SCHEMA if stage == "blocks" else TIER_SCHEMA).names
+    # one task owns each unit (the shared repartition): one file per unit.
+    # The unit prefix of the sort is the writer's own (no second one); the
+    # rest puts each tiers file in tier order
     order = _UNIT + [c for c in STAGE_KEYS[stage] if c not in _UNIT]
-    df = df.repartition(*_UNIT).sortWithinPartitions(*order)
-    df.write.mode("overwrite").partitionBy(*_UNIT).parquet(path)
+    (df.select(*names, "bucket").observe(obs, F.count(F.lit(1)).alias("rows_written"))
+     .sortWithinPartitions(*order)
+     .write.mode("overwrite").partitionBy(*_UNIT).parquet(f"{cfg.out_dir}/{stage}"))
     try:
         cfg.metrics[stage] = obs.get
     except Exception:
         # a zero-row write never materializes its observation row (Spark
         # asserts in toPyRow); an empty stage is a valid no-op
         cfg.metrics[stage] = {"rows_written": 0}
-    if cfg.metrics[stage]["rows_written"] == 0:
-        # a zero-row stage leaves no data files to read back — nothing to
-        # certify, so no lineage rows (resume will re-attempt the keys)
-        sc.setLocalProperty(_POOL, inherited)
-        return
-    written = spark.read.parquet(path)
-    sc.setLocalProperty(_POOL, inherited)
-    # lineage covers only the units THIS run wrote (a resumed run must
-    # not re-attribute earlier runs' partitions); the predicate is over
-    # partition columns, so the read-back scan is pruned to their files
-    lineage.record_stage(spark, cfg.out_dir, stage, _written_units(written, pending),
-                         STAGE_KEYS[stage], cfg.run_id)
 
 
 def _written_units(written: DataFrame, units: list[str]) -> DataFrame:
-    """The rows of ``units`` in a stage's read-back."""
+    """The rows of ``units`` in a stage's rows or its read-back."""
     return written.filter(lineage.key_col(_UNIT).isin(units))
 
 
@@ -248,22 +226,14 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     cuts and aggregates explicit-timestamp series). An all-NULL ``ts``,
     an implicit-rate series, runs.
 
-    The blocks stage and the tier cascade are independent DAGs over the
-    same input, so they run as CONCURRENT Spark jobs, each tagged with
-    its own FAIR scheduler pool: when one stage's task count drops below
-    the core count (tail tasks, small cascade tiers), the other fills the
-    idle slots. The pools matter — r3's same-window A/B showed plain FIFO
-    concurrency is bimodal (15-42 s on identical input: first-submitted
-    job starves the other), while FAIR-pooled concurrency is the fastest
-    AND most stable mode measured: {24.4, 19.6, 20.9, 20.5} s vs serial
-    {43.1, 50.1, 26.7, 23.0} s alternating in the same windows.
-
-    Both stages finish (or fail) before this returns; the first stage
-    error is raised after the other stage has stopped.
+    Both stages' lineage is one checkpoint append after both writes: a
+    run that fails before it records neither stage. Against two concurrent
+    stage jobs, the one pass spends less CPU, but its jobs run one at a
+    time: a 660M-token run is about 10 % faster on 1 core, 2 % on 4.
     """
     _check_layout(spark, f"{cfg.out_dir}/tiers")
     if "ts" in seq_df.columns:
-        # a filter on the input both stages share, so pruning cannot drop it
+        # a filter on the kernel's input, so pruning cannot drop it
         seq_df = seq_df.filter(F.when(F.col("ts").isNotNull(), F.raise_error(F.format_string(
             "doc '%s' has stored timestamps (ts), which run_pipeline would drop: it keys "
             "blocks and tiers by sample index; see operators/irregular.py", "doc_id",
@@ -274,19 +244,49 @@ def run_pipeline(spark: SparkSession, seq_df: DataFrame, cfg: PipelineConfig) ->
     # rewrites must go (_stale_keys)
     has_ckpt = _listing(spark, lineage._ckpt_path(cfg.out_dir)) is not None
     done = lineage.done_keys(spark, cfg.out_dir) if has_ckpt else {}
+    paths = {stage: f"{cfg.out_dir}/{stage}" for stage in STAGE_KEYS}
     # the checkpoint key prefixes each unit of a stage must have done
-    stages = {
-        "blocks": (lambda p: to_blocks(p, cfg.block_size), ("",)),
-        "tiers": (lambda p: fused_tiers(p, cfg.tiers), tuple(f"{n}/" for n, _w in cfg.tiers)),
+    prefixes = {"blocks": ("",), "tiers": tuple(f"{n}/" for n, _w in cfg.tiers)}
+    pending = {}
+    for stage, pre in prefixes.items():
+        have = done.get(stage, set())
+        left = [u for u in units if any(p + u not in have for p in pre)] if cfg.resume else units
+        if left or not cfg.resume:
+            pending[stage] = left
+            stale = _stale_keys(have, pre, left)
+            if stale:
+                invalidate_units(spark, cfg.out_dir, stage, stale)
+    if not pending:
+        return paths
+    # the units pending in either stage: the kernel's input
+    todo = sorted(set().union(*pending.values()))
+    kernel = functools.partial(_ingest_rows, block_size=cfg.block_size, tiers=cfg.tiers,
+                               stages=tuple(pending))
+    rows = with_bucket(
+        _pending_input(seq, units, todo).select("doc_id", "source", "tokens")
+        .mapInArrow(kernel, _ROW_SCHEMA),
+        cfg.n_buckets,
+    ).repartition(*_UNIT)
+    sc = spark.sparkContext
+    label = sc.getLocalProperty(_POOL)
+    try:
+        for stage, pend in pending.items():
+            # the stage labels its jobs (the session schedules FIFO); the
+            # shared pass runs under the first stage's label
+            sc.setLocalProperty(_POOL, stage)
+            if stage == next(iter(pending)):
+                rows = _shuffled_once(spark, rows)
+            _write_stage(cfg, stage, rows, pend, todo)
+    finally:
+        sc.setLocalProperty(_POOL, label)
+    # lineage covers only the units THIS run wrote (a resumed run must not
+    # re-attribute earlier runs' partitions); the predicate is over
+    # partition columns, so each read-back scan is pruned to their files.
+    # A zero-row stage has no files to certify: its keys stay pending
+    written = {
+        stage: (_written_units(spark.read.parquet(paths[stage]), pend), STAGE_KEYS[stage])
+        for stage, pend in pending.items() if cfg.metrics[stage]["rows_written"]
     }
-    with ThreadPoolExecutor(len(stages), thread_name_prefix="pipeline") as ex:
-        futures = [
-            # wrapping copies the caller's local properties (job group,
-            # pool) into the worker thread that runs the stage
-            ex.submit(inheritable_thread_target(spark)(_run_stage), spark, cfg, stage, seq,
-                      build, prefixes, units, done.get(stage, set()))
-            for stage, (build, prefixes) in stages.items()
-        ]
-        for f in futures:
-            f.result()
-    return {stage: f"{cfg.out_dir}/{stage}" for stage in stages}
+    if written:
+        lineage.record_stages(spark, cfg.out_dir, written, cfg.run_id)
+    return paths

@@ -98,12 +98,9 @@ def get_spark(
         # job-commit over hundreds of (source,bucket) dirs is pure driver
         # time that caps scaling efficiency
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # FAIR scheduling between named pools: the pipeline's blocks and
-        # tiers stages (plans/pipeline.py _run_stage) run concurrently on
-        # pool threads, each in its own pool so neither job starves the
-        # other under FIFO; their lineage jobs, and single-job workloads,
-        # run in the caller's pool (default unless set)
-        .config("spark.scheduler.mode", "FAIR")
+        # default FIFO scheduling: the pipeline (plans/pipeline.py) computes
+        # both stages in one pass and writes them one after the other, so
+        # its per-stage spark.scheduler.pool property is a job label only
         .config("spark.ui.enabled", "false")
     )
     # file:// FileSystem without the chmod-subprocess fork: PySpark has

@@ -123,9 +123,10 @@ def test_cli_verify_lineage_green_and_detects_tamper(spark, tmp_path, capsys, mo
 
 
 def test_invalidation_keeps_a_concurrent_lineage_append(spark, tmp_path):
-    """A resume's tiers stage may invalidate stale keys while the blocks
-    stage appends its lineage: the checkpoint rewrite holds the append's
-    lock from its read to its overwrite, so no appended row is lost."""
+    """The pipeline writes its stages one after the other, but a caller
+    may run lineage appends and invalidations on threads of its own: the
+    checkpoint rewrite holds the append's lock from its read to its
+    overwrite, so no appended row is lost."""
     import threading
 
     from pyspark import inheritable_thread_target

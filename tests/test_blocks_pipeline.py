@@ -112,6 +112,11 @@ def test_observe_metrics_captured(spark, tmp_path):
     assert cfg.metrics["blocks"]["rows_written"] == 15  # 1 block/doc at default size
     tiers_rows = cfg.metrics["tiers"]["rows_written"]
     assert tiers_rows == 15 * 2  # one row per doc per tier
+    # no tiers configured: the kernel yields blocks rows only, and the
+    # tiers stage of a fresh run writes none
+    bare = PipelineConfig(out_dir=str(tmp_path / "bare"), tiers=(), n_buckets=2, resume=False)
+    run_pipeline(spark, seq, bare)
+    assert bare.metrics == {"blocks": {"rows_written": 15}, "tiers": {"rows_written": 0}}
 
 
 def test_pipeline_empty_input(spark, tmp_path):
@@ -157,23 +162,72 @@ def test_pipeline_leaves_callers_pool_unchanged(spark, tmp_path):
         sc.setLocalProperty("spark.scheduler.pool", None)
 
 
+def _nothing_cached(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pipeline_failure_restores_pool_and_stops_every_job(spark, tmp_path):
+    """A failed run restores the caller's pool label, leaves no job running
+    and releases its persisted frame; so does a successful run."""
     sc = spark.sparkContext
+    spark.catalog.clearCache()
     seq = sequences(spark, 40, seed=9, min_tok=5, max_tok=300)
-    # one NULL tokens row: both stage kernels reject it
+    # one NULL tokens row: the ingest kernel rejects it
     bad = seq.withColumn(
         "tokens", F.when(F.col("doc_id") != "doc-000000007", F.col("tokens"))
     )
+    cfg = dict(n_buckets=2, tiers=(("1s", 10), ("1m", 6)))
     sc.setLocalProperty("spark.scheduler.pool", "mine")
     try:
-        with pytest.raises(Exception):
-            run_pipeline(spark, bad, PipelineConfig(out_dir=str(tmp_path / "f"), n_buckets=2,
-                                                    tiers=(("1s", 10), ("1m", 6))))
+        with pytest.raises(Exception, match="NULL tokens for doc_id 'doc-000000007'"):
+            run_pipeline(spark, bad, PipelineConfig(out_dir=str(tmp_path / "f"), **cfg))
         assert sc.getLocalProperty("spark.scheduler.pool") == "mine"
         _drain(spark)
         assert list(sc.statusTracker().getActiveJobsIds()) == []
+        assert _nothing_cached(spark)
+        run_pipeline(spark, seq, PipelineConfig(out_dir=str(tmp_path / "ok"), **cfg))
+        assert _nothing_cached(spark)
     finally:
         sc.setLocalProperty("spark.scheduler.pool", None)
+
+
+def test_a_run_crosses_into_python_once_and_shuffles_once(spark, tmp_path, monkeypatch):
+    """The shared frame is the raw input's scan, one Python map (the
+    ingest kernel) and one Exchange; both stage writes read its executed
+    shuffle, with no Python node, Exchange or cache of their own."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from processor_post_timeseries_spark.plans import pipeline
+
+    path = str(tmp_path / "seq")
+    sequences(spark, 30, seed=20, min_tok=5, max_tok=300).write.parquet(path)
+    out = str(tmp_path / "o")
+    plans = {}
+    shuffled_once, parquet = pipeline._shuffled_once, DataFrameWriter.parquet
+
+    def recording_shuffle(spark_, rows):
+        plans["shared"] = rows._jdf.queryExecution().executedPlan().toString()
+        return shuffled_once(spark_, rows)
+
+    def recording_write(self, p, *args, **kwargs):
+        plans[p] = self._df._jdf.queryExecution().executedPlan().toString()
+        return parquet(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "_shuffled_once", recording_shuffle)
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_write)
+    spark.catalog.clearCache()
+    run_pipeline(spark, spark.read.parquet(path), PipelineConfig(
+        out_dir=out, block_size=64, n_buckets=2, tiers=(("1s", 10),), resume=False))
+    shared = plans["shared"]
+    assert shared.count("MapInArrow") == 1, shared
+    assert not any(n in shared for n in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"))
+    assert shared.count("Exchange") == 1, shared
+    assert shared.count(f"InMemoryFileIndex(1 paths)[file:{path}]") == 1, shared
+    for stage in ("blocks", "tiers"):
+        plan = plans[f"{out}/{stage}"]
+        assert "ExistingRDD" in plan, plan
+        assert not any(n in plan for n in ("MapInArrow", "Exchange", "InMemoryRelation")), plan
+    assert _nothing_cached(spark)
 
 
 def test_pipeline_jobs_keep_callers_job_group(spark, tmp_path):
@@ -193,10 +247,12 @@ def test_pipeline_jobs_keep_callers_job_group(spark, tmp_path):
     assert set(sc.statusTracker().getJobIdsForGroup(None)) - before == set()
 
 
-def test_partial_tier_invalidation_resumes_every_tier_of_the_unit(spark, tmp_path):
+def test_partial_tier_invalidation_resumes_every_tier_of_the_unit(spark, tmp_path, monkeypatch):
     """One tier's checkpoint row gone -> the unit is pending for tiers
     only, and the resume rewrites all of its tiers (a unit is done only
-    when every tier is)."""
+    when every tier is). Its kernel cuts no blocks."""
+    import pyarrow as pa
+
     tiers = (("1s", 10), ("1m", 6), ("1h", 6))
     seq = sequences(spark, 40, seed=12, min_tok=5, max_tok=400, vocab=500).cache()
 
@@ -217,9 +273,19 @@ def test_partial_tier_invalidation_resumes_every_tier_of_the_unit(spark, tmp_pat
     assert len(unit_tiers) == len(tiers)
     assert invalidate_units(spark, out, "tiers", [f"1m/{unit}"]) == 1
 
+    kernels = []
+    frame = type(seq)
+    map_in_arrow = frame.mapInArrow
+    monkeypatch.setattr(frame, "mapInArrow",
+                        lambda self, f, *a, **k: kernels.append(f) or map_in_arrow(self, f, *a, **k))
     resumed = cfg(out, "run-b")
     run_pipeline(spark, seq, resumed)
+    monkeypatch.undo()
     assert "blocks" not in resumed.metrics  # no blocks work was pending
+    [kernel] = kernels
+    batch = pa.RecordBatch.from_pydict({"doc_id": ["d"], "source": ["s"],
+                                        "tokens": pa.array([[1, 2, 3]], pa.list_(pa.int32()))})
+    assert {s for b in kernel([batch]) for s in b.column("stage").to_pylist()} == {"tiers"}
     assert resumed.metrics["tiers"]["rows_written"] == sum(n for _k, n in unit_tiers)
     ck = lineage.read_checkpoint(spark, out).filter("run_id = 'run-b'").collect()
     assert {(r["partition_key"], r["row_count"]) for r in ck} == unit_tiers
@@ -434,8 +500,10 @@ def test_empty_fresh_run_still_writes_its_stages(spark, tmp_path):
 
 
 def test_failed_read_back_fails_the_run(spark, tmp_path, monkeypatch):
-    """A non-empty stage whose read-back raises fails the run and is not
-    checkpointed as done."""
+    """A non-empty stage whose read-back raises fails the run. Both stages'
+    lineage is one checkpoint append after both writes, so neither stage
+    is checkpointed as done: the blocks stage, whose read-back succeeded,
+    is recomputed by the next resume too."""
     from pyspark.sql.readwriter import DataFrameReader
 
     out = str(tmp_path / "o")
@@ -453,7 +521,8 @@ def test_failed_read_back_fails_the_run(spark, tmp_path, monkeypatch):
         run_pipeline(spark, seq, cfg)
     monkeypatch.undo()
     assert cfg.metrics["tiers"]["rows_written"] > 0
-    assert "tiers" not in lineage.done_keys(spark, out)
+    assert cfg.metrics["blocks"]["rows_written"] > 0
+    assert lineage.done_keys(spark, out) == {}
 
 
 def test_resume_input_is_coalesced_to_the_pending_share(spark, tmp_path):

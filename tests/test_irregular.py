@@ -210,6 +210,8 @@ def _plan(df) -> str:
 
 
 def test_array_model_plans_have_zero_exchanges(spark):
+    import re
+
     df = _seq(spark, [("d1", [1, 2], [0, 1000], "s")])
     for out in (
         segments_from_ts_arrays(df, gap_us=4000),
@@ -221,19 +223,26 @@ def test_array_model_plans_have_zero_exchanges(spark):
     ):
         plan = _plan(out)
         assert "Exchange" not in plan, plan
-    # both block writers run Python only in the codec UDF
-    for out in (irregular_to_blocks(df, gap_us=4000, block_size=2), to_blocks(df, block_size=2)):
-        plan = _plan(out)
-        assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan
+    # the explicit-ts block writer runs Python only in the codec UDF; the
+    # implicit-rate one is one Arrow kernel (blocks.block_batch) per batch
+    plan = _plan(irregular_to_blocks(df, gap_us=4000, block_size=2))
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan
+    plan = _plan(to_blocks(df, block_size=2))
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
-def test_to_blocks_codec_input_rows_carry_their_block_not_the_doc(spark):
-    # the slice is projected before the codec UDF, so the rows it queues
-    # hold one block each: a doc of k blocks is not copied k times
-    plan = _plan(to_blocks(_seq(spark, [("d1", [1, 2, 3], [0, 1, 2], "s")]), block_size=2))
+def test_irregular_to_blocks_codec_input_rows_carry_their_block_not_the_doc(spark):
+    import re
+
+    # the slices are projected before the codec UDFs, so the rows they
+    # queue hold one block each: a doc of k blocks is not copied k times
+    df = _seq(spark, [("d1", [1, 2, 3], [0, 1, 2], "s")])
+    plan = _plan(irregular_to_blocks(df, gap_us=4000, block_size=2))
     udf_node = plan[plan.index("ArrowEvalPython\nInput"):]
     udf_input = udf_node.splitlines()[1]
-    assert "_chunk" in udf_input and "tokens" not in udf_input, udf_node
+    assert "_chunk" in udf_input and "_ts_chunk" in udf_input, udf_node
+    assert not re.search(r"\b(tokens|ts)#", udf_input), udf_node
 
 
 def test_block_readers_shuffle_once_on_doc_id(spark):
