@@ -621,7 +621,7 @@ JOIN sizes sb ON sb.doc_id = doc_b
 WHERE n_common / (sa.n_sh + sb.n_sh - n_common) >= 0.5
 """)
 def _dedup_ngram_jaccard(spark, sf_dir):
-    return dedup.ngram_jaccard_pairs(spark.table("documents"), n=3, threshold=0.5)
+    return dedup.ngram_jaccard_pairs(spark.table("documents"), threshold=0.5)
 
 
 @_query("dedup_minhash_lsh", f"""
@@ -718,7 +718,7 @@ def _ann_cosine_topk(spark, sf_dir):
     return similarity.cosine_topk_np(spark.table("embeddings"), k=5, n_queries=20)
 
 
-def _duck_lsh_bucket_expr(n_planes: int = 8, vec: str = "embedding") -> str:
+def _duck_lsh_bucket_expr(n_planes: int = 8) -> str:
     """DuckDB replay of ``similarity.lsh_buckets``: md5-parity pseudo-plane
     sign sketch packed into an int bucket."""
     plane_terms = []
@@ -728,8 +728,8 @@ def _duck_lsh_bucket_expr(n_planes: int = 8, vec: str = "embedding") -> str:
             "IN ('0','1','2','3','4','5','6','7') THEN 1.0 ELSE -1.0 END"
         )
         plane_terms.append(
-            f"CASE WHEN list_sum(list_transform(range(1, len({vec}) + 1), "
-            f"i -> CAST({vec}[i] AS DOUBLE) * ({sign}))) > 0 "
+            "CASE WHEN list_sum(list_transform(range(1, len(embedding) + 1), "
+            f"i -> CAST(embedding[i] AS DOUBLE) * ({sign}))) > 0 "
             f"THEN {2**p} ELSE 0 END"
         )
     return " + ".join(plane_terms)
@@ -1964,7 +1964,7 @@ def _text_ngram_topk(spark, sf_dir):
     """Text+ — corpus bigram frequency top-20 per source (functions/
     text.py ngram_freq_topk). Non-distinct occurrence counts (frequency,
     not shingle membership); deterministic (count desc, gram asc) rank."""
-    return text.ngram_freq_topk(spark.table("documents"), n=2, k=20, by="source")
+    return text.ngram_freq_topk(spark.table("documents"))
 
 
 _HH_K, _HH_CAP = 5, 30
@@ -2456,7 +2456,7 @@ def _w12_irregular_segments(spark, sf_dir):
     (zero-shuffle narrow map); the oracle replays it row-per-sample with
     lag/running-sum windows."""
     seq = _irregular_ts_seq(spark)
-    out = irregular.segments_from_ts_arrays(seq, ts_col="ts", gap_us=4000)
+    out = irregular.segments_from_ts_arrays(seq)
     return out.select("doc_id", "seg_id", "seg_start_us", "seg_end_us", "n_samples")
 
 
@@ -2484,7 +2484,7 @@ def _w13_irregular_block_keys(spark, sf_dir):
     stored-timestamp bounds). block_size=64 so multi-block segments
     exist at certification scale."""
     seq = _irregular_ts_seq(spark)
-    out = irregular.block_bounds_from_ts_arrays(seq, ts_col="ts", gap_us=4000, block_size=64)
+    out = irregular.block_bounds_from_ts_arrays(seq, block_size=64)
     return out.select(
         "doc_id",
         "seg_id",
@@ -2512,7 +2512,7 @@ def _a2_irregular_rate(spark, sf_dir):
     computed zero-shuffle inside the row. The oracle replays with
     MEDIAN() over the first nine deltas (i = 2..10) per doc."""
     seq = _irregular_ts_seq(spark)
-    return irregular.rate_from_ts_arrays(seq, ts_col="ts", first_k=10)
+    return irregular.rate_from_ts_arrays(seq)
 
 
 _W14_STEP = 100_000
@@ -2591,7 +2591,7 @@ def _w15_irregular_tier(spark, sf_dir):
     discipline: no per-doc Python). The oracle groups the replayed
     samples by ts_us // window."""
     seq = _irregular_ts_seq(spark)
-    return irregular.tier_from_ts_arrays(seq, window_us=_W15_WIN, ts_col="ts").select(
+    return irregular.tier_from_ts_arrays(seq, window_us=_W15_WIN).select(
         "doc_id", "win_us", "min_v", "max_v", "sum_v", "cnt", "mean_v"
     )
 
@@ -2786,7 +2786,6 @@ def _curation_keepset_neardup(spark, sf_dir):
     return curation.curate(
         docs.filter(F.col("doc_id") % 50 != 0),
         docs.filter(F.col("doc_id") % 50 == 0),
-        contam_n=5,
         min_quality=_CURATION_Q,
         targets=_CURATION_TGT,
         near_dup=True,
@@ -2812,7 +2811,6 @@ def _curation_keepset(spark, sf_dir):
     return curation.curate(
         docs.filter(F.col("doc_id") % 50 != 0),
         docs.filter(F.col("doc_id") % 50 == 0),
-        contam_n=5,
         min_quality=_CURATION_Q,
         targets=_CURATION_TGT,
     )
@@ -2965,7 +2963,7 @@ def _text_repetition(spark, sf_dir):
     the MassiveText/Gopher repetition quality family. Computed entirely
     inside the row (zero shuffle); the oracle aggregates the exploded
     grams."""
-    return text.repetition_metrics(spark.table("documents"), n=2)
+    return text.repetition_metrics(spark.table("documents"))
 
 
 @_query("tok_pack_manifest", f"""
@@ -3894,7 +3892,7 @@ def _agg_exact_quantiles(spark, sf_dir):
     replays the same cross-multiplied integer rank thresholds — no
     float quantile math in either engine."""
     return quantiles.exact_group_quantiles(
-        spark.table("documents"), "source", "n_chars", (0.5, 0.9, 0.99)
+        spark.table("documents"), "source", "n_chars"
     )
 
 
@@ -4004,7 +4002,7 @@ def _w_anomaly_zscore(spark, sf_dir):
     + broadcast + zero-shuffle flag projection. Oracle replays the
     identical integer inequality in HUGEINT."""
     return anomaly.zscore_flags(
-        spark.table("events"), "event_type", "value", "event_id", k=2
+        spark.table("events"), "event_type", "value", "event_id"
     )
 
 
@@ -4027,7 +4025,7 @@ def _dedup_containment(spark, sf_dir):
     (Jaccard misses it). Same inverted-index shape as the Jaccard
     verifier; oracle shares the shingle CTE."""
     return dedup.ngram_containment_pairs(
-        spark.table("documents"), n=3, threshold=0.5
+        spark.table("documents")
     )
 
 
@@ -4060,7 +4058,7 @@ def _src_overlap_matrix(spark, sf_dir):
     (mirrored crawls / syndication), so mixture rates don't
     double-count. Shingles dedup'd to the source grain first; the
     per-shingle pair walk is bounded by |sources|."""
-    return dedup.source_overlap_matrix(spark.table("documents"), n=3)
+    return dedup.source_overlap_matrix(spark.table("documents"))
 
 
 @_query("lttb_downsample", """
@@ -4117,7 +4115,7 @@ def _lttb_downsample(spark, sf_dir):
         (F.col("win") - F.col("w0")).alias("x"),
         F.col("v").alias("y"),
     )
-    return downsample.lttb_downsample(pts, 60, part_col="part", x_col="x", y_col="y")
+    return downsample.lttb_downsample(pts, 60)
 
 
 _OBS_CENTS_CTE = """
@@ -4251,7 +4249,7 @@ def _ts_value_histogram(spark, sf_dir):
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("v_c"),
     )
-    return trend.value_histogram(cents, "event_type", "v_c", n_bins=20)
+    return trend.value_histogram(cents, "event_type", "v_c")
 
 
 @_query("w5_time_weighted", """
@@ -4290,7 +4288,7 @@ def _w5_time_weighted(spark, sf_dir):
         F.round(F.col("value") * 100).cast("bigint").alias("v"),
     )
     return irregular.time_weighted_mean(
-        c, 3_600_000_000, part_col="part", ts_col="t", val_col="v"
+        c, 3_600_000_000
     )
 
 

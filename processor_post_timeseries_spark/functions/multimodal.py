@@ -303,7 +303,7 @@ def _rms_chunks(samples: np.ndarray) -> np.ndarray:
     return (rms / peak).astype(np.float32)
 
 
-def _video_features(payload: bytes, max_frames: int = 4) -> np.ndarray:
+def _video_features(payload: bytes) -> np.ndarray:
     if _av is None:
         raise NotImplementedError(
             "real video decode requires PyAV (av) — not installed in this "
@@ -312,7 +312,7 @@ def _video_features(payload: bytes, max_frames: int = 4) -> np.ndarray:
     feats = []
     with _av.open(io.BytesIO(bytes(payload))) as container:
         for i, frame in enumerate(container.decode(video=0)):
-            if len(feats) >= max_frames:
+            if len(feats) >= 4:
                 break
             gray = frame.to_ndarray(format="gray").astype(np.float32)
             feats.append(_grid_means(gray, 2, 2) / 255.0)

@@ -95,13 +95,7 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.trim(canon))
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the rolling-hash fingerprint scheme): hash every k-gram
     of the canonicalized text, slide a w-hash window, keep each window's
@@ -117,10 +111,10 @@ def winnow_fingerprints(
     """
     from pyspark.sql.window import Window
 
-    canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " "))
+    canon = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
     n_grams = F.length(canon) - (k - 1)
     grams = docs.select(
-        F.col(id_col).alias("doc_id"), canon.alias("c")
+        F.col("doc_id"), canon.alias("c")
     ).filter(n_grams >= 1).select(
         "doc_id",
         F.posexplode(
@@ -196,35 +190,29 @@ def word_ngram_array(text: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngram_freq_topk(
-    docs: DataFrame,
-    n: int = 2,
-    k: int = 20,
-    by: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Corpus n-gram frequency stats: the top-``k`` word n-grams per
-    ``by`` group with occurrence counts (NON-distinct, unlike dedup
+def ngram_freq_topk(docs: DataFrame, k: int = 20) -> DataFrame:
+    """Corpus n-gram frequency stats: the top-``k`` word bigrams per
+    ``source`` with occurrence counts (NON-distinct, unlike dedup
     shingles — frequency is the point) and a deterministic rank
     (count desc, gram asc).
 
     Plan: explode grams (JVM array exprs) -> partial-aggregated
-    groupBy((by, gram)) -> per-group top-k window over only the
+    groupBy((source, gram)) -> per-group top-k window over only the
     aggregated counts. The explosion never leaves the JVM and the
     window input is |distinct grams|, not |occurrences|."""
     from pyspark.sql.window import Window
 
-    grams = word_ngram_array(F.col(text_col), n)
+    grams = word_ngram_array(F.col("text"), 2)
     freq = (
-        docs.select(F.col(by), F.explode(grams).alias("gram"))
-        .groupBy(by, "gram")
+        docs.select(F.col("source"), F.explode(grams).alias("gram"))
+        .groupBy("source", "gram")
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
-    w = Window.partitionBy(by).orderBy(F.desc("n_occ"), F.asc("gram"))
+    w = Window.partitionBy("source").orderBy(F.desc("n_occ"), F.asc("gram"))
     return (
         freq.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(by, "gram", "n_occ", "rank")
+        .select("source", "gram", "n_occ", "rank")
     )
 
 
@@ -267,13 +255,7 @@ def pii_hits(text: Column) -> Column:
     return total
 
 
-def repetition_metrics(
-    docs: DataFrame,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    decimals: int = 6,
-) -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Within-document repetition — the duplicate-n-gram quality rules
     of large-corpus filters (the MassiveText/Gopher "repetition" family,
     Rae et al. 2021 §A1.1): heavily self-repeating documents (boiler-
@@ -295,8 +277,8 @@ def repetition_metrics(
     # an inline array_sort(...) expression from inside a lambda makes
     # Catalyst re-evaluate the whole sort per element_at — O(n² log n).
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
-        word_ngram_array(F.col(text_col), n).alias("_g"),
+        F.col("doc_id"),
+        word_ngram_array(F.col("text"), 2).alias("_g"),
     ).select(
         "doc_id",
         F.size("_g").alias("_m"),
@@ -334,20 +316,14 @@ def repetition_metrics(
             F.col("n_grams").cast("long").alias("n_grams"),
             F.col("n_distinct").cast("long").alias("n_distinct"),
             F.round(
-                F.lit(1.0) - F.col("n_distinct") / F.col("n_grams"), decimals
+                F.lit(1.0) - F.col("n_distinct") / F.col("n_grams"), 6
             ).alias("dup_fraction"),
-            F.round(F.col("_top") / F.col("n_grams"), decimals).alias("top_share"),
+            F.round(F.col("_top") / F.col("n_grams"), 6).alias("top_share"),
         )
     )
 
 
-def lm_avg_prob(
-    corpus: DataFrame,
-    model: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    decimals: int = 6,
-) -> DataFrame:
+def lm_avg_prob(corpus: DataFrame, model: DataFrame) -> DataFrame:
     """Char-bigram language-model quality score (the CCNet-style "does a
     simple LM like this text" signal, in its engine-portable form): per
     corpus doc, the MEAN add-one-smoothed bigram probability under a
@@ -371,20 +347,20 @@ def lm_avg_prob(
     broadcast; the corpus explodes to bigrams once and aggregates per
     doc — one map-side-combined shuffle on doc_id."""
     def bigrams(df):
-        chars = F.filter(F.split(F.col(text_col), ""), lambda c: c != "")
+        chars = F.filter(F.split(F.col("text"), ""), lambda c: c != "")
         n = F.size(chars)
         z = F.arrays_zip(
             F.slice(chars, 1, n - 1).alias("a"), F.slice(chars, 2, n - 1).alias("b")
         )
         return df.filter(n >= 2).select(
-            F.col(id_col), F.explode(z).alias("p")
-        ).select(id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            F.col("doc_id"), F.explode(z).alias("p")
+        ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
 
     mb = bigrams(model)
     c_ab = mb.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
     c_a = mb.groupBy("a").agg(F.count(F.lit(1)).alias("c_a"))
     vocab = model.select(
-        F.explode(F.filter(F.split(F.col(text_col), ""), lambda c: c != "")).alias("ch")
+        F.explode(F.filter(F.split(F.col("text"), ""), lambda c: c != "")).alias("ch")
     ).agg(F.countDistinct("ch").alias("v"))
 
     cb = bigrams(corpus)
@@ -395,23 +371,18 @@ def lm_avg_prob(
         cb.join(F.broadcast(c_ab), ["a", "b"], "left")
         .join(F.broadcast(c_a), "a", "left")
         .crossJoin(F.broadcast(vocab))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.round(
                 F.sum(p.cast("decimal(28,12)")).cast("double") / F.count(F.lit(1)),
-                decimals,
+                6,
             ).alias("avg_prob"),
         )
     )
 
 
-def char_distribution_drift(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-    decimals: int = 6,
-) -> DataFrame:
+def char_distribution_drift(docs: DataFrame) -> DataFrame:
     """Per-group TOTAL-VARIATION distance between the group's char
     distribution and the whole corpus's:
 
@@ -420,7 +391,8 @@ def char_distribution_drift(
     over the CORPUS vocabulary (chars a group never emits contribute
     their full corpus probability) — the distribution-drift monitor a
     training pipeline runs per source/snapshot to catch a feed going
-    off-profile. Output: (group, n_chars, tv) rounded to ``decimals``.
+    off-profile. Groups are the ``source`` column. Output: (group,
+    n_chars, tv) rounded to 6 decimals.
 
     Why TV and not KL: KL needs log, and libm log is not correctly
     rounded — JVM and DuckDB can disagree in the last ulp. TV is
@@ -437,8 +409,8 @@ def char_distribution_drift(
     grid (broadcast), and the 1-row corpus total broadcasts onto it —
     the corpus is scanned once, nothing corpus-sized shuffles."""
     chars = docs.select(
-        F.col(group_col).alias("group"),
-        F.explode(F.filter(F.split(F.col(text_col), ""), lambda c: c != "")).alias(
+        F.col("source").alias("group"),
+        F.explode(F.filter(F.split(F.col("text"), ""), lambda c: c != "")).alias(
             "ch"
         ),
     )
@@ -460,7 +432,7 @@ def char_distribution_drift(
             F.max("n_g").cast("long").alias("n_chars"),
             F.round(
                 F.sum(term.cast("decimal(28,12)")).cast("double") / 2,
-                decimals,
+                6,
             ).alias("tv"),
         )
     )
@@ -469,17 +441,11 @@ def char_distribution_drift(
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_quality_flags(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 50,
-    max_words: int = 100_000,
-) -> DataFrame:
+def gopher_quality_flags(docs: DataFrame) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, "Scaling
     Language Models" §A1.1 class of filters) as a per-doc flag frame:
 
-    * ``word_count_ok``    — min_words <= n_words <= max_words
+    * ``word_count_ok``    — 50 <= n_words <= 100,000
     * ``mean_word_len_ok`` — mean word length in [3, 10]
     * ``hash_ratio_ok``    — '#' chars <= 10% of chars
     * ``ellipsis_ratio_ok``— '...' occurrences <= 30% of words
@@ -494,15 +460,15 @@ def gopher_quality_flags(
 
     Plan: pure JVM expressions, zero shuffles/joins — a pushed filter at
     any scale."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     n_words = F.size(words)
     total_len = F.aggregate(
         words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)
     )
-    n_chars = F.length(text_col)
-    n_hash = n_chars - F.length(F.regexp_replace(F.col(text_col), "#", ""))
+    n_chars = F.length("text")
+    n_hash = n_chars - F.length(F.regexp_replace(F.col("text"), "#", ""))
     n_ellipsis = (
-        n_chars - F.length(F.regexp_replace(F.col(text_col), r"\.\.\.", ""))
+        n_chars - F.length(F.regexp_replace(F.col("text"), r"\.\.\.", ""))
     ) / 3
     n_alpha = F.size(F.filter(words, lambda w: w.rlike("[a-zA-Z]")))
     n_stop = F.size(
@@ -511,7 +477,7 @@ def gopher_quality_flags(
             F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]),
         )
     )
-    word_count_ok = (n_words >= min_words) & (n_words <= max_words)
+    word_count_ok = (n_words >= 50) & (n_words <= 100_000)
     mean_len_ok = (total_len >= 3 * n_words.cast("long")) & (
         total_len <= 10 * n_words.cast("long")
     )
@@ -520,7 +486,7 @@ def gopher_quality_flags(
     alpha_ok = n_alpha * 5 >= n_words * 4
     stop_ok = n_stop >= 2
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.cast("long").alias("n_words"),
         word_count_ok.alias("word_count_ok"),
         mean_len_ok.alias("mean_word_len_ok"),

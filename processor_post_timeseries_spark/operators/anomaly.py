@@ -37,14 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def zscore_flags(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_col: str,
-    k: int = 2,
-) -> DataFrame:
-    """(id, group, value_cents, flagged, side) for every input row.
+def zscore_flags(df: DataFrame, group_col: str, value_col: str, id_col: str) -> DataFrame:
+    """(id, group, value_cents, flagged, side) for every input row; a row
+    is flagged when its |z| exceeds k = 2.
 
     ``side`` is -1/0/+1: the sign of (x - mean) for flagged rows, 0 for
     unflagged — so downstream quarantine can distinguish spikes from
@@ -70,7 +65,7 @@ def zscore_flags(
     dev = dec(F.col("v_c") * F.col("n")) - dec(F.col("s"))
     var_num = dec(F.col("n")) * dec(F.col("q")) - dec(F.col("s")) * dec(F.col("s"))
     flagged = (F.col("n") > 1) & (
-        dev * dev * dec(F.col("n") - 1) > F.lit(k * k) * dec(F.col("n")) * var_num
+        dev * dev * dec(F.col("n") - 1) > F.lit(2 * 2) * dec(F.col("n")) * var_num
     )
     return j.select(
         "id",

@@ -42,10 +42,7 @@ def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_hits: int = 1,
-    decimals: int = 6,
     normalize: bool = False,
 ) -> DataFrame:
     """Per-corpus-doc overlap with the benchmark's n-gram set:
@@ -62,11 +59,11 @@ def contamination_report(
       domain (docs with >= n normalized words) shifts accordingly.
     """
     if normalize:
-        corpus = corpus.withColumn(text_col, normalize_text(F.col(text_col)))
-        benchmark = benchmark.withColumn(text_col, normalize_text(F.col(text_col)))
-    cg = shingles(corpus, n=n, text_col=text_col, id_col=id_col)
+        corpus = corpus.withColumn("text", normalize_text(F.col("text")))
+        benchmark = benchmark.withColumn("text", normalize_text(F.col("text")))
+    cg = shingles(corpus, n=n)
     bg = (
-        shingles(benchmark, n=n, text_col=text_col, id_col=id_col)
+        shingles(benchmark, n=n)
         .select("shingle")
         .distinct()
     )
@@ -81,50 +78,43 @@ def contamination_report(
     marked = cg.join(
         F.broadcast(bg.withColumn("_hit", F.lit(1))), "shingle", "left"
     )
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.count("_hit").alias("n_hits"),
-        F.round(F.count("_hit") / F.count(F.lit(1)), decimals).alias(
+        F.round(F.count("_hit") / F.count(F.lit(1)), 6).alias(
             "contamination_ratio"
         ),
         (F.count("_hit") >= min_hits).alias("contaminated"),
     )
 
 
-def bloom_positions(shingle_col, k: int = 3, hex_digits: int = 5):
-    """The k bloom bit positions of a gram: position_j =
-    int(first ``hex_digits`` hex chars of md5(j || ':' || shingle), 16)
-    — m = 16^hex_digits bits (2^20 for the default 5). md5-derived so
+def bloom_positions(shingle_col):
+    """The 3 bloom bit positions of a gram: position_j =
+    int(first 5 hex chars of md5(j || ':' || shingle), 16)
+    — m = 16^5 = 2^20 bits. md5-derived so
     the positions are engine-portable: DuckDB and hashlib replay them
     bit-for-bit (the same determinism rule as the MinHash family)."""
     return [
         F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), shingle_col)), 1, hex_digits),
+            F.substring(F.md5(F.concat(F.lit(f"{j}:"), shingle_col)), 1, 5),
             16,
             10,
         ).cast("long")
-        for j in range(k)
+        for j in range(3)
     ]
 
 
-def build_bloom_bitmap(
-    benchmark: DataFrame,
-    n: int = 5,
-    k: int = 3,
-    hex_digits: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> np.ndarray:
-    """The benchmark gram set as an m = 16^hex_digits-bit bloom bitmap
+def build_bloom_bitmap(benchmark: DataFrame, n: int = 5) -> np.ndarray:
+    """The benchmark gram set as an m = 16^5-bit bloom bitmap
     (bool ndarray). ONE bounded aggregation (distinct positions, capped
-    by min(k·|grams|, m)); build it once and reuse it across calls —
+    by min(3·|grams|, m)); build it once and reuse it across calls —
     e.g. every micro-batch of a streaming ingest gate — instead of
     re-scanning the benchmark per batch."""
-    m = 16**hex_digits
-    bench_grams = shingles(benchmark, n=n, text_col=text_col, id_col=id_col)
+    m = 16**5
+    bench_grams = shingles(benchmark, n=n)
     pos_rows = (
         bench_grams.select(
-            F.explode(F.array(*bloom_positions(F.col("shingle"), k, hex_digits))).alias(
+            F.explode(F.array(*bloom_positions(F.col("shingle")))).alias(
                 "p"
             )
         )
@@ -141,21 +131,17 @@ def bloom_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame | None = None,
     n: int = 5,
-    k: int = 3,
-    hex_digits: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bitmap: np.ndarray | None = None,
 ) -> DataFrame:
     """Approximate-membership decontamination: per corpus doc
     (doc_id, n_grams, n_hits_bloom, flagged) where a gram "hits" iff
-    ALL k of its bloom positions are set by the benchmark gram set.
+    ALL 3 of its bloom positions are set by the benchmark gram set.
 
     Why this exists next to the exact ``contamination_report``: at
     100 TB the exact path broadcasts the benchmark's distinct gram
     STRINGS (GBs for a big eval battery) and explodes the corpus into a
     join. The bloom path compresses the benchmark side to an
-    m = 16^hex_digits-BIT bitmap (128 KiB at the default) built with one
+    m = 16^5-BIT bitmap (128 KiB) built with one
     bounded aggregation, ships it in the task closure, and tests the
     corpus in ONE narrow Arrow-batched pass — zero shuffles, zero joins,
     scan-speed. False positives are possible (never negatives); both
@@ -174,11 +160,11 @@ def bloom_decontaminate(
     if bitmap is None:
         if benchmark is None:
             raise ValueError("bloom_decontaminate needs benchmark or bitmap")
-        bitmap = build_bloom_bitmap(benchmark, n, k, hex_digits, text_col, id_col)
+        bitmap = build_bloom_bitmap(benchmark, n)
 
     out_schema = T.StructType(
         [
-            T.StructField("doc_id", corpus.schema[id_col].dataType, False),
+            T.StructField("doc_id", corpus.schema["doc_id"].dataType, False),
             T.StructField("n_grams", T.LongType(), False),
             T.StructField("n_hits_bloom", T.LongType(), False),
             T.StructField("flagged", T.BooleanType(), False),
@@ -188,7 +174,7 @@ def bloom_decontaminate(
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for d, text in zip(pdf[id_col], pdf[text_col]):
+            for d, text in zip(pdf["doc_id"], pdf["text"]):
                 # NULL text has no grams, as in ``shingles``
                 words = text.split(" ") if isinstance(text, str) else []
                 grams = {
@@ -198,9 +184,9 @@ def bloom_decontaminate(
                 hits = 0
                 for g in grams:
                     ok = True
-                    for j in range(k):
+                    for j in range(3):
                         h = hashlib.md5(f"{j}:{g}".encode()).hexdigest()
-                        if not bitmap[int(h[:hex_digits], 16)]:
+                        if not bitmap[int(h[:5], 16)]:
                             ok = False
                             break
                     hits += ok
@@ -209,42 +195,35 @@ def bloom_decontaminate(
                 rows, columns=["doc_id", "n_grams", "n_hits_bloom", "flagged"]
             )
 
-    return corpus.select(id_col, text_col).mapInPandas(kern, out_schema)
+    return corpus.select("doc_id", "text").mapInPandas(kern, out_schema)
 
 
 def contaminated_ids(
     corpus: DataFrame,
     benchmark: DataFrame,
-    n: int,
     bitmap: np.ndarray | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Ids (``id_col``) of the corpus docs with at least one n-gram in
-    the benchmark — the two-tier check: the bloom prefilter
+    """Ids (``doc_id``) of the corpus docs with at least one word 5-gram
+    in the benchmark — the two-tier check: the bloom prefilter
     (``bloom_decontaminate``) flags candidates in one narrow pass, and
     the exact ``contamination_report`` runs on the flagged docs only.
     Bloom has no false negatives, so the result equals
-    ``contamination_report(corpus, benchmark, n).filter("contaminated")``
+    ``contamination_report(corpus, benchmark, 5).filter("contaminated")``
     while the gram explode shrinks to the flagged sliver.
 
-    ``bitmap``: a precomputed ``build_bloom_bitmap(benchmark, n=n)`` to
+    ``bitmap``: a precomputed ``build_bloom_bitmap(benchmark)`` to
     reuse across calls (the streaming gate builds one per stream);
     built here when None."""
     if bitmap is None:
-        bitmap = build_bloom_bitmap(benchmark, n=n, text_col=text_col, id_col=id_col)
+        bitmap = build_bloom_bitmap(benchmark)
     flagged = (
-        bloom_decontaminate(
-            corpus, n=n, text_col=text_col, id_col=id_col, bitmap=bitmap
-        )
+        bloom_decontaminate(corpus, bitmap=bitmap)
         .filter(F.col("flagged"))
-        .select(F.col("doc_id").alias(id_col))
+        .select(F.col("doc_id"))
     )
     rep = contamination_report(
-        corpus.join(flagged, id_col, "left_semi"),
+        corpus.join(flagged, "doc_id", "left_semi"),
         benchmark,
-        n=n,
-        text_col=text_col,
-        id_col=id_col,
+        n=5,
     )
-    return rep.filter(F.col("contaminated")).select(id_col)
+    return rep.filter(F.col("contaminated")).select("doc_id")

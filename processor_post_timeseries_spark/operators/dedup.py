@@ -36,16 +36,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Content-hash groups: (text_hash, n_docs, keeper_id)."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        docs.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keeper_id"))
     )
 
 
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc: (doc_id, shingle).
 
     Built with array expressions (JVM-side, codegen'd): sliding n-gram =
@@ -53,23 +53,21 @@ def shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = 
     """
     from ..functions.text import word_ngram_array
 
-    grams = word_ngram_array(F.col(text_col), n)
+    grams = word_ngram_array(F.col("text"), n)
     return (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(F.array_distinct(grams)).alias("shingle"))
+        docs.select(F.col("doc_id"), F.explode(F.array_distinct(grams)).alias("shingle"))
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, n: int = 3, threshold: float = 0.8, id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact pairwise n-gram Jaccard ≥ threshold: (doc_a, doc_b, jaccard).
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """Exact pairwise 3-gram Jaccard ≥ threshold: (doc_a, doc_b, jaccard).
 
     Inverted-index pair generation — only doc pairs sharing ≥1 shingle
     are ever materialized (never a cross join). The shingle table is NOT
     cached: at corpus scale it dwarfs RAM, and this op is documented as a
     post-LSH verification stage over a small candidate set anyway.
     """
-    sh = shingles(docs, n, id_col=id_col)
+    sh = shingles(docs, 3)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     inter = (
         sh.alias("a")
@@ -98,9 +96,7 @@ def minhash_signatures(
     docs: DataFrame,
     n_hashes: int = 16,
     n: int = 3,
-    id_col: str = "doc_id",
     hash_fn: str = "xxh64",
-    text_col: str = "text",
 ) -> DataFrame:
     """MinHash signature per doc: (doc_id, h00..hNN) — min per seeded hash
     family.
@@ -137,7 +133,7 @@ def minhash_signatures(
         import pandas as pd
 
         prefixes = [f"{k}:".encode() for k in range(n_hashes)]
-        id_field = docs.schema[id_col]
+        id_field = docs.schema["doc_id"]
         out_schema = T.StructType(
             [T.StructField("doc_id", id_field.dataType, id_field.nullable)]
             + [T.StructField(f"h{k:02d}", T.StringType(), True) for k in range(n_hashes)]
@@ -147,7 +143,7 @@ def minhash_signatures(
             md5 = hashlib.md5
             for pdf in batches:
                 ids, sigs = [], []
-                for d, text in zip(pdf[id_col], pdf[text_col]):
+                for d, text in zip(pdf["doc_id"], pdf["text"]):
                     if text is None:  # NULL text has no grams, not "None"
                         continue
                     words = str(text).split(" ")
@@ -175,10 +171,10 @@ def minhash_signatures(
                         }
                     )
 
-        return docs.select(id_col, text_col).mapInPandas(kern, out_schema)
+        return docs.select("doc_id", "text").mapInPandas(kern, out_schema)
     if hash_fn != "xxh64":
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sh = shingles(docs, n, text_col=text_col, id_col=id_col)
+    sh = shingles(docs, n)
     aggs = [
         F.min(F.xxhash64(F.lit(str(k)), F.col("shingle"))).alias(f"h{k:02d}")
         for k in range(n_hashes)
@@ -210,14 +206,13 @@ def lsh_bucket_stats(
     n_hashes: int = 16,
     n_bands: int = 4,
     n: int = 3,
-    id_col: str = "doc_id",
     max_bucket_size: int | None = 1000,
     hash_fn: str = "xxh64",
 ) -> DataFrame:
     """Per-band-bucket occupancy + how many docs the skew cap would drop:
     (band_no, band_hash, n_docs, n_dropped). Feed this to pipeline
     logging so capped runs report their drop count."""
-    allbands = _band_buckets(docs, n_hashes, n_bands, n, id_col, hash_fn)
+    allbands = _band_buckets(docs, n_hashes, n_bands, n, hash_fn)
     cap = max_bucket_size if max_bucket_size is not None else 2**62
     return allbands.groupBy("band_no", "band_hash").agg(
         F.count("*").alias("n_docs"),
@@ -225,12 +220,10 @@ def lsh_bucket_stats(
     )
 
 
-def _band_buckets(
-    docs: DataFrame, n_hashes: int, n_bands: int, n: int, id_col: str, hash_fn: str
-) -> DataFrame:
+def _band_buckets(docs: DataFrame, n_hashes: int, n_bands: int, n: int, hash_fn: str) -> DataFrame:
     assert n_hashes % n_bands == 0
     r = n_hashes // n_bands
-    sig = minhash_signatures(docs, n_hashes, n, id_col=id_col, hash_fn=hash_fn)
+    sig = minhash_signatures(docs, n_hashes, n, hash_fn=hash_fn)
     # all band hashes in ONE projection + posexplode, folded directly
     # onto the signature aggregate — the n_bands-way union of selects it
     # replaces re-read the signature exchange once per band and defeated
@@ -255,7 +248,6 @@ def lsh_candidate_pairs(
     n_hashes: int = 16,
     n_bands: int = 4,
     n: int = 3,
-    id_col: str = "doc_id",
     max_bucket_size: int | None = 1000,
     hash_fn: str = "xxh64",
 ) -> DataFrame:
@@ -275,8 +267,12 @@ def lsh_candidate_pairs(
 
     ``max_bucket_size=None`` (unbounded buckets) keeps the join form:
     without a cap, a degenerate bucket must spread across tasks rather
-    than sit in one collect_list row."""
-    allbands = _band_buckets(docs, n_hashes, n_bands, n, id_col, hash_fn)
+    than sit in one collect_list row. That form ``localCheckpoint``s its
+    band buckets: the blocks live only on the executors that computed
+    them, so losing one of those executors before the pairs are consumed
+    fails the job with Spark's "Checkpoint block ... not found" error. It
+    never returns fewer pairs."""
+    allbands = _band_buckets(docs, n_hashes, n_bands, n, hash_fn)
     if max_bucket_size is None:
         # the self-join's two branches would otherwise each re-execute
         # the full shingle+signature pipeline (the broadcast build side
@@ -328,7 +324,7 @@ _SIMHASH_SCHEMA = T.StructType(
 )
 
 
-def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash over word features (Charikar'02): per unique word of
     a doc take the first 8 md5 bytes as a little-endian uint64
     fingerprint, sum ±1 votes per bit position, sign -> bit.
@@ -351,8 +347,8 @@ def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
             pdf = pdf.reset_index(drop=True)
             for lo in range(0, len(pdf), CHUNK):
                 sub = pdf.iloc[lo : lo + CHUNK].reset_index(drop=True)
-                ids = sub[id_col].astype(str)
-                ex = sub[text_col].astype(str).str.split(" ").explode()
+                ids = sub["doc_id"].astype(str)
+                ex = sub["text"].astype(str).str.split(" ").explode()
                 ex = ex[ex != ""]
                 # per-doc unique words, order-stable (votes are order-free)
                 dd = pd.DataFrame({"d": ex.index, "w": ex.to_numpy()}).drop_duplicates()
@@ -377,7 +373,7 @@ def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
                     {"doc_id": ids, "simhash": out.astype(np.int64)}
                 )
 
-    return docs.select(F.col(id_col).cast("string").alias(id_col), text_col).mapInPandas(
+    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text").mapInPandas(
         run, schema=_SIMHASH_SCHEMA
     )
 
@@ -426,8 +422,6 @@ def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.4,
     n_planes: int = 8,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: (id_a, id_b, cos_sim >= threshold).
@@ -442,9 +436,9 @@ def embedding_near_dup_pairs(
     from .similarity import lsh_buckets
 
     b = _cap_bucket_size(
-        lsh_buckets(emb, n_planes, vec, id_col), ["bucket"], id_col, max_bucket_size
+        lsh_buckets(emb, n_planes), ["bucket"], "vec_id", max_bucket_size
     )
-    v = emb.select(id_col, vec).join(b, id_col)
+    v = emb.select("vec_id", "embedding").join(b, "vec_id")
 
     # one GEMM per bucket group (applyInPandas): all in-bucket pairwise
     # cosines at BLAS speed, only pairs >= threshold ever emitted — the
@@ -460,8 +454,8 @@ def embedding_near_dup_pairs(
     def pairs_in_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame({f.name: [] for f in out_schema.fields})
-        V = np.stack([np.asarray(x, np.float64) for x in pdf[vec]])
-        ids = pdf[id_col].to_numpy(np.int64)
+        V = np.stack([np.asarray(x, np.float64) for x in pdf["embedding"]])
+        ids = pdf["vec_id"].to_numpy(np.int64)
         # same formula as the SQL oracle: round(dot/(|a||b|), 6)
         nrm = np.linalg.norm(V, axis=1)
         S = np.round((V @ V.T) / np.outer(nrm, nrm), 6)
@@ -522,8 +516,6 @@ def _local_components(spark, edge_rows, id_type) -> DataFrame:
 
 def duplicate_components(
     pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
     max_iters: int = 25,
     local_edge_threshold: int = 1_000_000,
 ) -> DataFrame:
@@ -550,10 +542,13 @@ def duplicate_components(
     with the convergence changed-label count observed on the same
     materializing action — ONE job per round, not two. ``max_iters``
     bounds pathological graphs; if the bound is hit, the labels are
-    still a valid refinement (over-segmented, never wrong-merged).
+    still a valid refinement (over-segmented, never wrong-merged). A
+    checkpointed round's blocks live only on the executors that computed
+    them: losing one of those executors fails the job with Spark's
+    "Checkpoint block ... not found" error, never fewer components.
     """
     spark = pairs.sparkSession
-    e = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
+    e = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     edges = edges.distinct().persist()
     n_edges = edges.count()
@@ -617,10 +612,8 @@ def duplicate_components(
     )
 
 
-def ngram_containment_pairs(
-    docs: DataFrame, n: int = 3, threshold: float = 0.5, id_col: str = "doc_id"
-) -> DataFrame:
-    """Directional n-gram containment ≥ threshold: (doc_a, doc_b, containment).
+def ngram_containment_pairs(docs: DataFrame) -> DataFrame:
+    """Directional 3-gram containment ≥ 0.5: (doc_a, doc_b, containment).
 
     ``containment(a -> b) = |shingles(a) ∩ shingles(b)| / |shingles(a)|`` —
     the asymmetric near-dup measure Jaccard misses: a short doc wholly
@@ -632,7 +625,7 @@ def ngram_containment_pairs(
     ngram_jaccard_pairs — only shingle-sharing pairs materialize, both
     directions of each pair emitted, denominator = left doc's shingles.
     """
-    sh = shingles(docs, n, id_col=id_col)
+    sh = shingles(docs, 3)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     inter = (
         sh.alias("a")
@@ -644,7 +637,7 @@ def ngram_containment_pairs(
     sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a")
     return (
         inter.join(sa, "doc_a")
-        .filter(F.col("n_common") >= F.lit(threshold) * F.col("n_a"))
+        .filter(F.col("n_common") >= F.lit(0.5) * F.col("n_a"))
         .select(
             "doc_a",
             "doc_b",
@@ -653,9 +646,7 @@ def ngram_containment_pairs(
     )
 
 
-def source_overlap_matrix(
-    docs: DataFrame, n: int = 3, source_col: str = "source"
-) -> DataFrame:
+def source_overlap_matrix(docs: DataFrame) -> DataFrame:
     """Pairwise source-level shingle overlap: (source_a, source_b,
     n_common, jaccard) for source_a < source_b.
 
@@ -671,8 +662,8 @@ def source_overlap_matrix(
 
     sh = (
         docs.select(
-            F.col(source_col).alias("src"),
-            F.explode(F.array_distinct(word_ngram_array(F.col("text"), n))).alias(
+            F.col("source").alias("src"),
+            F.explode(F.array_distinct(word_ngram_array(F.col("text"), 3))).alias(
                 "shingle"
             ),
         )

@@ -16,25 +16,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def m4_downsample(
-    seq: DataFrame,
-    n_buckets: int,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def m4_downsample(seq: DataFrame, n_buckets: int) -> DataFrame:
     """Per doc and pixel bucket: (doc_id, bucket, min_v, max_v, first_v,
     last_v, n) over the token stream. Bucket of sample i (0-based) in a
     doc of n samples = floor(i * n_buckets / n) — the fixed-width pixel
     mapping; docs shorter than ``n_buckets`` simply fill fewer buckets.
     first/last are the values at the bucket's smallest/largest index
     (min_by/max_by — deterministic, indices are unique)."""
-    t = F.col(tokens_col)
+    t = F.col("tokens")
     pts = seq.filter(F.size(t) > 0).select(
-        F.col(id_col), F.size(t).alias("_n"), F.posexplode(t).alias("_i", "v")
+        F.col("doc_id"), F.size(t).alias("_n"), F.posexplode(t).alias("_i", "v")
     )
     bucket = F.floor(F.col("_i") * F.lit(n_buckets) / F.col("_n")).cast("int")
     return (
-        pts.groupBy(id_col, bucket.alias("bucket"))
+        pts.groupBy("doc_id", bucket.alias("bucket"))
         .agg(
             F.min("v").alias("min_v"),
             F.max("v").alias("max_v"),
@@ -45,13 +40,7 @@ def m4_downsample(
     )
 
 
-def lttb_downsample(
-    pts: DataFrame,
-    bucket_width: int,
-    part_col: str = "part",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def lttb_downsample(pts: DataFrame, bucket_width: int) -> DataFrame:
     """Largest-triangle downsample (LTTB family, Steinarsson 2013) with
     bucket-MEAN anchors — integer-exact and fully parallel.
 
@@ -93,13 +82,13 @@ def lttb_downsample(
     # truncate bucketed negative x differently per engine and lost bits
     # near 2^53. (x - pmod(x, w)) is divisible by w, so the quotient is
     # an exact integer in decimal.
-    xb = F.col(x_col).cast("bigint")
+    xb = F.col("x").cast("bigint")
     wl = F.lit(int(bucket_width)).cast("bigint")
     b = ((xb - F.pmod(xb, wl)).cast("decimal(38,0)") / wl).cast("bigint")
     p = pts.select(
-        F.col(part_col).alias("part"),
-        F.col(x_col).cast("bigint").alias("x"),
-        F.col(y_col).cast("bigint").alias("y"),
+        F.col("part"),
+        F.col("x").cast("bigint").alias("x"),
+        F.col("y").cast("bigint").alias("y"),
         b.alias("bucket"),
     )
     sums = p.groupBy("part", "bucket").agg(

@@ -51,7 +51,7 @@ def _ffill(n: int, idx: np.ndarray, val: np.ndarray, fill_first: int) -> np.ndar
     return filled.astype(np.int32)
 
 
-def gapfill_tokens(seq_df: DataFrame, fill_first: int = 0) -> DataFrame:
+def gapfill_tokens(seq_df: DataFrame) -> DataFrame:
     """Block-form gap-fill: nulls inside ``tokens`` forward-filled. Narrow map."""
 
     def fill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -63,7 +63,7 @@ def gapfill_tokens(seq_df: DataFrame, fill_first: int = 0) -> DataFrame:
                 mask = pd.isna(vals)
                 n = len(vals)
                 idx = np.nonzero(~mask)[0]
-                filled = _ffill(n, idx, vals[~mask].astype(np.int64), fill_first)
+                filled = _ffill(n, idx, vals[~mask].astype(np.int64), 0)
                 toks_out.append(filled)
             pdf = pdf.copy()
             pdf["tokens"] = toks_out
@@ -97,7 +97,7 @@ def gapfill_samples(obs_df: DataFrame, fill_first: int = 0) -> DataFrame:
     return obs_df.groupBy("doc_id").applyInPandas(fill, schema=SEQ_SCHEMA)
 
 
-def gapfill_samples_sql(obs_df: DataFrame, fill_first: int = 0) -> DataFrame:
+def gapfill_samples_sql(obs_df: DataFrame) -> DataFrame:
     """Oracle-parity long-form gap-fill, pure Spark SQL primitives.
 
     Returns the dense long form ``(doc_id, source, idx, value)``. Used to
@@ -115,7 +115,7 @@ def gapfill_samples_sql(obs_df: DataFrame, fill_first: int = 0) -> DataFrame:
         "doc_id",
         "source",
         "idx",
-        F.coalesce(F.last("value", ignorenulls=True).over(w), F.lit(fill_first))
+        F.coalesce(F.last("value", ignorenulls=True).over(w), F.lit(0))
         .cast("int")
         .alias("value"),
     )

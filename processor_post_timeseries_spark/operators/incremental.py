@@ -43,7 +43,7 @@ def _flat(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return lens, pc.list_flatten(arr).to_numpy().astype(np.int64, copy=False)
 
 
-def _append_batch(batch: pa.RecordBatch, window: int, tier: str) -> pa.RecordBatch:
+def _append_batch(batch: pa.RecordBatch, window: int) -> pa.RecordBatch:
     """One batch of full-outer-joined (stored tier row | delta) rows ->
     the updated ``TIER_SCHEMA`` rows, in the batch's row order."""
     n = batch.num_rows
@@ -56,11 +56,11 @@ def _append_batch(batch: pa.RecordBatch, window: int, tier: str) -> pa.RecordBat
             raise ValueError(f"append_tokens_to_tiers: doc {doc} {what(i)}")
 
     e_window = batch.column("e_window").fill_null(window).to_numpy()
-    e_tier = batch.column("e_tier").fill_null(tier)
+    e_tier = batch.column("e_tier").fill_null("1s")
     fail(
-        (e_window != window) | ~pc.equal(e_tier, tier).to_numpy(zero_copy_only=False),
+        (e_window != window) | ~pc.equal(e_tier, "1s").to_numpy(zero_copy_only=False),
         lambda i: f"is stored as tier {e_tier[i]} window {e_window[i]}, "
-        f"not tier {tier} window {window}",
+        f"not tier 1s window {window}",
     )
 
     # the deltas' windows, from each doc's offset (NULL tokens or offset
@@ -72,7 +72,7 @@ def _append_batch(batch: pa.RecordBatch, window: int, tier: str) -> pa.RecordBat
                 [d.column(c) for c in ("doc_id", "d_source", "d_tokens", "d_offset")],
                 names=["doc_id", "source", "tokens", "offset"],
             ),
-            ((tier, window),),
+            (("1s", window),),
         )
     )
     off = np.zeros(n, np.int64)
@@ -108,7 +108,7 @@ def _append_batch(batch: pa.RecordBatch, window: int, tier: str) -> pa.RecordBat
     return _tier_batch(
         batch.column("doc_id"),
         pc.coalesce(batch.column("e_source"), batch.column("d_source")),
-        tier,
+        "1s",
         np.full(n, window, np.int64),
         e_lens + d_lens - seam,
         stats,
@@ -126,15 +126,10 @@ def _mark_seen(ids: list, seen: set) -> None:
         seen.add(d)
 
 
-def append_tokens_to_tiers(
-    existing: DataFrame,
-    delta: DataFrame,
-    window: int,
-    tier: str = "1s",
-) -> DataFrame:
+def append_tokens_to_tiers(existing: DataFrame, delta: DataFrame, window: int) -> DataFrame:
     """Merge token appends into tier-1 aggregate rows.
 
-    * ``existing`` — TIER_SCHEMA rows (one per doc) for this ``tier`` and
+    * ``existing`` — TIER_SCHEMA rows (one per doc) for tier ``1s`` and
       ``window``; a stored row of another tier or window raises.
     * ``delta`` — (doc_id, tokens, source, offset): ``offset`` is the
       doc's already-ingested token count (0 for brand-new docs). An
@@ -169,6 +164,6 @@ def append_tokens_to_tiers(
         for batch in batches:
             if batch.num_rows:
                 _mark_seen(batch.column("doc_id").to_pylist(), seen)
-                yield _append_batch(batch, window, tier)
+                yield _append_batch(batch, window)
 
     return e.join(d, "doc_id", "full_outer").mapInArrow(kernel, TIER_SCHEMA)

@@ -64,12 +64,12 @@ def _boundary_positions(ts: Column, gap_us: Column) -> Column:
     return F.concat(F.array(F.lit(1)), gaps, F.array(n + 1))
 
 
-def _sorted_nonempty(seq: DataFrame, ts_col: str) -> DataFrame:
+def _sorted_nonempty(seq: DataFrame) -> DataFrame:
     """The docs of ``seq`` with at least one sample, behind the checks
     every emitter here shares: timestamps sorted within a doc and, when
     ``seq`` has ``tokens``, one timestamp per token. A filter, not a
     projected column, so column pruning can never drop it."""
-    ts = F.col(ts_col)
+    ts = F.col("ts")
     check = F.when(
         F.sort_array(ts) != ts,
         F.raise_error(F.format_string("timestamps not sorted within doc '%s'", "doc_id")),
@@ -84,7 +84,7 @@ def _sorted_nonempty(seq: DataFrame, ts_col: str) -> DataFrame:
     return seq.filter(check.otherwise(F.size(ts) > 0))
 
 
-def _segment_frame(seq: DataFrame, ts_col: str, gap_us: int | Column) -> DataFrame:
+def _segment_frame(seq: DataFrame, gap_us: int | Column) -> DataFrame:
     """``seq``'s columns plus one row per gap-delimited segment:
     ``seg_id`` (0-based) and the segment's 1-based half-open positions
     ``[p0, p1)`` into ``ts``. The one place the gap rule is applied."""
@@ -92,25 +92,21 @@ def _segment_frame(seq: DataFrame, ts_col: str, gap_us: int | Column) -> DataFra
     nb = F.size("_b") - 1
     pairs = F.arrays_zip(F.slice("_b", 1, nb).alias("p0"), F.slice("_b", 2, nb).alias("p1"))
     return (
-        _sorted_nonempty(seq, ts_col)
-        .withColumn("_b", _boundary_positions(F.col(ts_col), gap))
+        _sorted_nonempty(seq)
+        .withColumn("_b", _boundary_positions(F.col("ts"), gap))
         .select(*seq.columns, F.posexplode(pairs).alias("seg_id", "_s"))
         .select(*seq.columns, F.col("seg_id").cast("long"), "_s.p0", "_s.p1")
     )
 
 
-def segments_from_ts_arrays(
-    seq: DataFrame,
-    ts_col: str = "ts",
-    gap_us: int | Column = 4000,
-) -> DataFrame:
+def segments_from_ts_arrays(seq: DataFrame) -> DataFrame:
     """Per-segment extents from array-typed timestamps: one output row
     per (doc, segment) with ``seg_id`` (0-based), half-open µs bounds
     and the sample count. Zero shuffles — pure array expressions +
     one explode."""
-    ts = F.col(ts_col)
-    keep = [c for c in seq.columns if c not in (ts_col, "tokens")]
-    return _segment_frame(seq, ts_col, gap_us).select(
+    ts = F.col("ts")
+    keep = [c for c in seq.columns if c not in ("ts", "tokens")]
+    return _segment_frame(seq, 4000).select(
         *keep,
         "seg_id",
         F.element_at(ts, F.col("p0")).alias("seg_start_us"),
@@ -119,16 +115,14 @@ def segments_from_ts_arrays(
     )
 
 
-def _block_frame(
-    seq: DataFrame, ts_col: str, gap_us: int | Column, block_size: int
-) -> DataFrame:
+def _block_frame(seq: DataFrame, gap_us: int | Column, block_size: int) -> DataFrame:
     """``seq``'s columns plus one row per ``block_size`` chunk of each
     segment: (seg_id, block_no, start_us, end_us, start_pos, n, key)."""
-    ts = F.col(ts_col)
+    ts = F.col("ts")
     b0 = F.col("b0")
     b1 = F.least(b0 + block_size, F.col("p1"))
     return (
-        _segment_frame(seq, ts_col, gap_us)
+        _segment_frame(seq, gap_us)
         .select(
             "*",
             F.posexplode(F.sequence("p0", F.col("p1") - 1, F.lit(block_size))).alias(
@@ -152,12 +146,7 @@ def _block_frame(
     )
 
 
-def block_bounds_from_ts_arrays(
-    seq: DataFrame,
-    ts_col: str = "ts",
-    gap_us: int | Column = 4000,
-    block_size: int = 131_072,
-) -> DataFrame:
+def block_bounds_from_ts_arrays(seq: DataFrame, block_size: int = 131_072) -> DataFrame:
     """Fixed-size block bounds cut WITHIN gap-delimited segments, keyed
     with the real µs extents of each chunk's first/last sample —
     ``{doc}_{start_us}_{end_us}.bin``. NOTE: this is an INTENTIONAL
@@ -170,19 +159,19 @@ def block_bounds_from_ts_arrays(
     bound it emits. Returns one row per (doc, seg_id, block_no) with
     (start_us, end_us half-open, start_pos 0-based, n, key). Narrow map
     + two explodes; payload encoding is ``irregular_to_blocks``."""
-    return _block_frame(seq, ts_col, gap_us, block_size).drop(ts_col, "tokens")
+    return _block_frame(seq, 4000, block_size).drop("ts", "tokens")
 
 
-def explode_ts_samples(seq: DataFrame, ts_col: str = "ts") -> DataFrame:
+def explode_ts_samples(seq: DataFrame) -> DataFrame:
     """(doc_id, pos, ts_us, v) row-per-sample view of an explicit-ts
     sequence — the bridge into the row-oriented operators (resample,
     asof, interval joins). ``arrays_zip`` + ``posexplode`` keep it a
     narrow map; positions are 0-based. Behind the emitters' shared
     check, so unsorted timestamps or a ``tokens``/``ts`` length mismatch
     raise instead of exploding into NULL-padded rows."""
-    return _sorted_nonempty(seq, ts_col).select(
+    return _sorted_nonempty(seq).select(
         "doc_id",
-        F.posexplode(F.arrays_zip(F.col(ts_col).alias("ts_us"), F.col("tokens").alias("v"))),
+        F.posexplode(F.arrays_zip(F.col("ts").alias("ts_us"), F.col("tokens").alias("v"))),
     ).select(
         "doc_id",
         F.col("pos").cast("long").alias("pos"),
@@ -193,7 +182,6 @@ def explode_ts_samples(seq: DataFrame, ts_col: str = "ts") -> DataFrame:
 
 def irregular_to_blocks(
     seq: DataFrame,
-    ts_col: str = "ts",
     gap_us: int = 4000,
     block_size: int = 131_072,
 ) -> DataFrame:
@@ -222,13 +210,13 @@ def irregular_to_blocks(
         ),
     ).otherwise(
         F.transform(
-            F.slice(ts_col, start, "n"), lambda t: (t - F.col("start_us")).cast("int")
+            F.slice("ts", start, "n"), lambda t: (t - F.col("start_us")).cast("int")
         )
     )
     keys = ["doc_id", "source", "seg_id", "block_no", "start_us", "end_us", "start_pos"]
     # ``_chunk`` is read twice, so the slices stay projected below the UDFs:
     # a queued row holds its block, not the doc's ``tokens`` and ``ts``
-    return _block_frame(seq, ts_col, gap_us, block_size).select(
+    return _block_frame(seq, gap_us, block_size).select(
         *keys,
         F.slice("tokens", start, "n").alias("_chunk"),
         rebased.alias("_ts_chunk"),
@@ -253,11 +241,7 @@ def irregular_from_blocks(blocks: DataFrame) -> DataFrame:
     ).select("doc_id", "tokens", "ts", F.size("tokens").alias("n_tok"), "source")
 
 
-def rate_from_ts_arrays(
-    seq: DataFrame,
-    ts_col: str = "ts",
-    first_k: int = 10,
-) -> DataFrame:
+def rate_from_ts_arrays(seq: DataFrame, first_k: int = 10) -> DataFrame:
     """Operator A2 for the array model — sampling-rate inference from
     stored timestamps: median delta of the first ``first_k`` samples,
     rate = 1e6/median (reference ``utils.py:6-13`` slices the first 10
@@ -267,7 +251,7 @@ def rate_from_ts_arrays(
     deltas and are absent (the reference would divide by nothing).
     Median of an even count is the mean of the middle two — matching
     both ``F.median`` and DuckDB ``MEDIAN`` interpolation."""
-    ts = F.col(ts_col)
+    ts = F.col("ts")
     k = F.least(F.size(ts), F.lit(first_k)) - 1  # deltas among the first first_k
     d = F.sort_array(F.zip_with(F.slice(ts, 2, k), F.slice(ts, 1, k), lambda a, b: a - b))
     m = F.size(d)
@@ -277,7 +261,7 @@ def rate_from_ts_arrays(
         F.element_at(d, ((m + 1) / 2).cast("int")) + F.element_at(d, (m / 2).cast("int") + 1)
     ) / F.lit(2.0))
     return (
-        _sorted_nonempty(seq, ts_col)
+        _sorted_nonempty(seq)
         .select("doc_id", median.alias("median_delta_us"))
         .filter(F.col("median_delta_us").isNotNull())
         .select(
@@ -290,11 +274,7 @@ def rate_from_ts_arrays(
     )
 
 
-def tier_from_ts_arrays(
-    seq: DataFrame,
-    window_us: int,
-    ts_col: str = "ts",
-) -> DataFrame:
+def tier_from_ts_arrays(seq: DataFrame, window_us: int) -> DataFrame:
     """Time-windowed tier aggregates for explicit-ts sequences — the
     array-model twin of ``rollup.tier1_from_tokens`` (which windows by
     sample COUNT): per (doc, ``ts div window_us``) min/max/sum/count/
@@ -323,8 +303,8 @@ def tier_from_ts_arrays(
             if pdf.empty:
                 continue
             t = np.concatenate([np.asarray(x, dtype=np.int32) for x in pdf["tokens"]])
-            ts = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf[ts_col]])
-            lens = pdf[ts_col].map(len).to_numpy()
+            ts = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["ts"]])
+            lens = pdf["ts"].map(len).to_numpy()
             doc_idx = np.repeat(np.arange(len(pdf)), lens)
             w = ts // window_us
             change = (np.diff(doc_idx) != 0) | (np.diff(w) != 0)
@@ -346,16 +326,10 @@ def tier_from_ts_arrays(
                 }
             )
 
-    return _sorted_nonempty(seq, ts_col).mapInPandas(kern, schema=schema)
+    return _sorted_nonempty(seq).mapInPandas(kern, schema=schema)
 
 
-def time_weighted_mean(
-    obs: DataFrame,
-    window_us: int,
-    part_col: str = "part",
-    ts_col: str = "t",
-    val_col: str = "v",
-) -> DataFrame:
+def time_weighted_mean(obs: DataFrame, window_us: int) -> DataFrame:
     """(part, win, twa_num, covered_us) — time-weighted average over an
     irregular row-per-sample series, as an exact integer fraction.
 
@@ -370,7 +344,7 @@ def time_weighted_mean(
     contributes its clipped overlap to each.
 
     Consumers divide ``twa_num / covered_us`` at display time; both are
-    exact int64 (``val_col`` integral — cents; ``twa_num <= v_max *
+    exact int64 (``v`` integral — cents; ``twa_num <= v_max *
     window_us`` per window, ~1e5 * 3.6e9 = 3.6e14 for 1h windows).
     ``covered_us < window_us`` exposes leading/gap-free coverage
     honestly instead of silently renormalizing.
@@ -385,15 +359,15 @@ def time_weighted_mean(
     # value tiebreak: with duplicate timestamps, which observation owns
     # the zero-length (dropped) segment must not depend on engine sort
     # stability
-    w = Window.partitionBy(part_col).orderBy(ts_col, val_col)
-    t = F.col(ts_col).cast("bigint")
+    w = Window.partitionBy("part").orderBy("t", "v")
+    t = F.col("t").cast("bigint")
     W = F.lit(window_us).cast("bigint")
     seg = obs.select(
-        F.col(part_col).alias("part"),
+        F.col("part"),
         t.alias("t0"),
-        F.col(val_col).cast("bigint").alias("v"),
+        F.col("v").cast("bigint").alias("v"),
         F.coalesce(
-            F.lead(ts_col).over(w).cast("bigint"),
+            F.lead("t").over(w).cast("bigint"),
             (t - (t % W)) + W,
         ).alias("t1"),
     ).filter(F.col("t1") > F.col("t0"))

@@ -27,20 +27,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def shuffle_manifest(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    salt: str = "",
-    bucket_prefix_len: int = 2,
-) -> DataFrame:
+def shuffle_manifest(df: DataFrame, salt: str = "") -> DataFrame:
     """(id, position): 1-based global rank of each row under the
     deterministic permutation ``ORDER BY md5(salt || id), id``. The
     tie-break on id makes the rank total even under hash collisions."""
-    h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    base = df.select(F.col(id_col), h.alias("_h")).withColumn(
-        "_bkt", F.substring("_h", 1, bucket_prefix_len)
+    h = F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
+    base = df.select(F.col("doc_id"), h.alias("_h")).withColumn(
+        "_bkt", F.substring("_h", 1, 2)
     )
-    w_local = Window.partitionBy("_bkt").orderBy("_h", id_col)
+    w_local = Window.partitionBy("_bkt").orderBy("_h", "doc_id")
     # |buckets| summary rows; the rank base of a bucket is the count of
     # all lexicographically lower buckets (md5 prefix == rank-order
     # prefix, so per-bucket rank + base IS the global rank)
@@ -59,19 +54,13 @@ def shuffle_manifest(
         base.withColumn("_lr", F.row_number().over(w_local))
         .join(bases, "_bkt")
         .select(
-            id_col,
+            "doc_id",
             (F.col("_base") + F.col("_lr")).cast("long").alias("position"),
         )
     )
 
 
-def epoch_batches(
-    df: DataFrame,
-    batch_size: int,
-    id_col: str = "doc_id",
-    salt: str = "",
-    bucket_prefix_len: int = 2,
-) -> DataFrame:
+def epoch_batches(df: DataFrame, batch_size: int, salt: str = "") -> DataFrame:
     """The manifest a data loader actually consumes: each row's global
     batch assignment under the deterministic epoch permutation —
     (id, position, batch_no, pos_in_batch) with
@@ -79,14 +68,14 @@ def epoch_batches(
     projection on ``shuffle_manifest``: same plan shape, no extra
     exchange; re-deriving with the same salt reproduces the exact
     batch composition on any cluster (resumable training)."""
-    m = shuffle_manifest(df, id_col, salt, bucket_prefix_len)
+    m = shuffle_manifest(df, salt)
     p0 = F.col("position") - 1
     rem = p0 % batch_size
     # (p0 - rem) / batch_size divides an exact multiple: the correctly-
     # rounded IEEE quotient IS the integer, so the cast never truncates
     # a near-miss (p0 / batch_size alone could, at extreme row counts)
     return m.select(
-        id_col,
+        "doc_id",
         "position",
         ((p0 - rem) / batch_size).cast("long").alias("batch_no"),
         rem.cast("int").alias("pos_in_batch"),

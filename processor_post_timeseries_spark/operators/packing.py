@@ -31,9 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def order_bucket(
-    df: DataFrame, id_col: str, prefix_len: int = 4, num_buckets: int = 4096
-) -> tuple[DataFrame, str]:
+def order_bucket(df: DataFrame, id_col: str) -> tuple[DataFrame, str]:
     """Attach an order-preserving bucket column ``_bkt`` for ``id_col``:
     sorting by ``(_bkt, id)`` equals sorting by ``id`` alone, so a
     per-key window computation can be split into per-``(key, _bkt)``
@@ -41,13 +39,13 @@ def order_bucket(
     prefix-sum primitive ``pack_offsets`` / ``stratified_sample`` build
     on.
 
-    * string ids: the first ``prefix_len`` characters (a lexicographic
+    * string ids: the first 4 characters (a lexicographic
       prefix orders consistently with the full string). Bucket count —
       and thus parallelism — follows the id alphabet; zero-padded or
       uuid-ish ids spread uniformly, a shared long constant prefix
-      degrades toward one bucket (raise ``prefix_len``).
+      degrades toward one bucket.
     * integral ids: ``floor((id - min) / width)`` with ``width`` sized
-      from the (min, max) range for ~``num_buckets`` buckets. The
+      from the (min, max) range for ~4096 buckets. The
       subtraction runs in DOUBLE: monotone (double conversion is
       order-preserving over longs; ties only coarsen buckets, never
       reorder), and immune to ANSI int64-overflow when the id range
@@ -57,7 +55,7 @@ def order_bucket(
     Returns (df_with_bucket, "_bkt")."""
     dtype = dict(df.dtypes)[id_col]
     if dtype == "string":
-        return df.withColumn("_bkt", F.substring(F.col(id_col), 1, prefix_len)), "_bkt"
+        return df.withColumn("_bkt", F.substring(F.col(id_col), 1, 4)), "_bkt"
     if dtype in ("tinyint", "smallint", "int", "bigint"):
         mm = df.agg(
             F.min(id_col).cast("long").alias("_mn"),
@@ -66,7 +64,7 @@ def order_bucket(
         width = F.greatest(
             (
                 (F.col("_mx").cast("double") - F.col("_mn").cast("double"))
-                / F.lit(num_buckets)
+                / F.lit(4096)
             ).cast("long")
             + 1,
             F.lit(1),
@@ -89,14 +87,7 @@ def order_bucket(
     )
 
 
-def pack_offsets(
-    seq: DataFrame,
-    ctx_len: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    n_col: str = "n_tok",
-    bucket_prefix_len: int = 4,
-) -> DataFrame:
+def pack_offsets(seq: DataFrame, ctx_len: int) -> DataFrame:
     """Per-doc packed placement: (source, doc_id, n_tok, offset,
     first_block, last_block). ``offset`` is the exclusive running sum of
     token counts within the source (doc_id order); blocks are
@@ -111,13 +102,12 @@ def pack_offsets(
     back. Values are identical to the naive per-source window at any
     partitioning."""
     base, bkt = order_bucket(
-        seq.filter(F.col(n_col) > 0).select(
-            F.col(source_col).alias("source"),
-            F.col(id_col).alias("doc_id"),
-            F.col(n_col).cast("long").alias("n_tok"),
+        seq.filter(F.col("n_tok") > 0).select(
+            F.col("source"),
+            F.col("doc_id"),
+            F.col("n_tok").cast("long").alias("n_tok"),
         ),
         "doc_id",
-        prefix_len=bucket_prefix_len,
     )
     w_local = (
         Window.partitionBy("source", bkt)
@@ -163,22 +153,17 @@ def pack_offsets(
     )
 
 
-def pack_totals(
-    seq: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    n_col: str = "n_tok",
-) -> DataFrame:
+def pack_totals(seq: DataFrame) -> DataFrame:
     """Per-source packing checkpoint: (source, n_tok_total, max_doc_id)
     over the already-packed corpus — the ONLY state incremental packing
     needs (one tiny aggregate; persist it next to the blocks like
     ``plans/lineage.py`` checkpoints)."""
     return (
-        seq.filter(F.col(n_col) > 0)
-        .groupBy(F.col(source_col).alias("source"))
+        seq.filter(F.col("n_tok") > 0)
+        .groupBy(F.col("source"))
         .agg(
-            F.sum(F.col(n_col).cast("long")).alias("n_tok_total"),
-            F.max(id_col).alias("max_doc_id"),
+            F.sum(F.col("n_tok").cast("long")).alias("n_tok_total"),
+            F.max("doc_id").alias("max_doc_id"),
         )
     )
 
@@ -187,10 +172,6 @@ def pack_offsets_incremental(
     new_seq: DataFrame,
     totals: DataFrame,
     ctx_len: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    n_col: str = "n_tok",
-    bucket_prefix_len: int = 4,
     enforce_append: bool = True,
 ) -> DataFrame:
     """Extend a packed corpus WITHOUT re-scanning it: placement for an
@@ -208,7 +189,7 @@ def pack_offsets_incremental(
     ``max_doc_id`` — out-of-order appends would silently corrupt
     placements otherwise. Unseen sources start at offset 0."""
     p = pack_offsets(
-        new_seq, ctx_len, source_col, id_col, n_col, bucket_prefix_len
+        new_seq, ctx_len
     ).drop("first_block", "last_block")
     t = totals.select("source", "n_tok_total", "max_doc_id")
     j = p.join(t, "source", "left")
@@ -247,13 +228,7 @@ def merge_pack_totals(totals: DataFrame, new_totals: DataFrame) -> DataFrame:
     )
 
 
-def pack_manifest(
-    seq: DataFrame,
-    ctx_len: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    n_col: str = "n_tok",
-) -> DataFrame:
+def pack_manifest(seq: DataFrame, ctx_len: int) -> DataFrame:
     """Per-(block, doc) assembly manifest: (source, block_id, doc_id,
     doc_start, block_off, n_in_block) — exactly which token slice
     ``[doc_start, doc_start + n_in_block)`` of each doc lands at
@@ -262,7 +237,7 @@ def pack_manifest(
     materializing block b reads only the manifest rows of b — packing
     becomes an ordinary partition-pruned join against the sequence
     table."""
-    p = pack_offsets(seq, ctx_len, source_col, id_col, n_col)
+    p = pack_offsets(seq, ctx_len)
     blocks = F.explode(F.sequence("first_block", "last_block")).alias("block_id")
     b = p.select("source", "doc_id", "n_tok", "offset", blocks)
     bstart = F.col("block_id") * ctx_len
@@ -279,14 +254,7 @@ def pack_manifest(
     )
 
 
-def materialize_blocks(
-    seq: DataFrame,
-    ctx_len: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    n_col: str = "n_tok",
-    tokens_col: str = "tokens",
-) -> DataFrame:
+def materialize_blocks(seq: DataFrame, ctx_len: int) -> DataFrame:
     """Assemble the actual packed training blocks: (source, block_id,
     n_tokens, tokens) with each block's token array concatenated from
     its manifest slices in ``block_off`` order. Every block is exactly
@@ -299,9 +267,9 @@ def materialize_blocks(
     deterministic in-group ordering contract as ``blocks.from_blocks``.
     Block rows are bounded by ``ctx_len`` tokens, so group state is
     constant-size regardless of corpus."""
-    man = pack_manifest(seq, ctx_len, source_col, id_col, n_col)
+    man = pack_manifest(seq, ctx_len)
     j = man.join(
-        seq.select(F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_t")),
+        seq.select(F.col("doc_id"), F.col("tokens").alias("_t")),
         "doc_id",
     ).select(
         "source",

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 DEFAULT_BUCKETS = 32
 
 
-def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS, key: str = "doc_id") -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Deterministic salt bucket from the doc key (stable across runs —
     xxhash64 with fixed seed, never Python hash())."""
-    return df.withColumn("bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int"))
+    return df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))

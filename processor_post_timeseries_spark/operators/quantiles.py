@@ -23,23 +23,17 @@ result is bit-portable across engines — no float quantile math at all.
 from __future__ import annotations
 
 from fractions import Fraction
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def exact_group_quantiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    qs: Sequence[float] = (0.5, 0.9, 0.99),
-) -> DataFrame:
+def exact_group_quantiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """(group, n, p<q> ...) — exact inverted-cdf quantiles per group.
 
     ``value_col`` must be integral (the counting-sort exactness
-    argument needs discrete values). Each q in ``qs`` becomes a column
-    ``p<q*100 without trailing zeros>`` (0.5 -> p50, 0.99 -> p99).
+    argument needs discrete values). The quantiles are 0.5, 0.9 and
+    0.99, as columns p50, p90 and p99.
     """
     hist = df.groupBy(
         F.col(group_col).alias("grp"), F.col(value_col).alias("v")
@@ -54,16 +48,8 @@ def exact_group_quantiles(
         F.sum("c").over(Window.partitionBy("grp")).alias("n"),
     )
     aggs = [F.max("n").cast("bigint").alias("n")]
-    for q in qs:
+    for q in (0.5, 0.9, 0.99):
         fr = Fraction(q).limit_denominator(10_000)
-        if float(fr) != q:
-            # limit_denominator would silently substitute a NEARBY
-            # quantile (q=0.00005 -> 0); refuse rather than compute a
-            # different statistic than asked
-            raise ValueError(
-                f"quantile {q!r} is not exactly representable with "
-                f"denominator <= 10000; pass an exact (num/den) q"
-            )
         label = f"p{q * 100:g}".replace(".", "_")
         aggs.append(
             F.min(

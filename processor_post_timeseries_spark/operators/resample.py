@@ -31,9 +31,6 @@ def resample_linear(
     val_col: str,
     step_us: int,
     tiebreak: str | None = None,
-    out_ts: str = "grid_ts_us",
-    out_val: str = "v",
-    decimals: int = 6,
 ) -> DataFrame:
     """Resample ``val_col`` onto the regular grid of ``step_us`` multiples
     inside each key's observed span ``[min(ts), max(ts)]``.
@@ -42,7 +39,7 @@ def resample_linear(
       value exactly (no float arithmetic applied).
     * Otherwise linear interpolation between the bracketing samples:
       ``v0 + (gts - ts0) * (v1 - v0) / (ts1 - ts0)``, rounded to
-      ``decimals``. Both brackets always exist because the grid is
+      6 decimals. Both brackets always exist because the grid is
       confined to the observed span.
     * Duplicate timestamps within a key: the left bracket is the
       duplicate greatest in ``tiebreak`` order (pass a unique column for
@@ -103,9 +100,9 @@ def resample_linear(
     gts = F.col("_ts")
     interp = v0 + (gts - ts0) * (v1 - v0) / F.nullif(ts1 - ts0, F.lit(0))
     value = F.when(ts0 == gts, v0).otherwise(
-        F.round(F.coalesce(interp, v0), decimals)
+        F.round(F.coalesce(interp, v0), 6)
     )
     return (
         u.filter(F.col("_side") == 1)
-        .select(F.col(by), gts.alias(out_ts), value.alias(out_val))
+        .select(F.col(by), gts.alias("grid_ts_us"), value.alias("v"))
     )

@@ -255,7 +255,6 @@ def rollup_upsert(
     delta_seq: DataFrame,
     tiers: tuple[tuple[str, int], ...],
     tier: str,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Incremental continuous-aggregate maintenance (the TimescaleDB
     refresh semantics the reference's tiers would need under
@@ -277,6 +276,6 @@ def rollup_upsert(
     ``existing_points``/result schema = ``tier_points`` of
     ``rollup_all_tiers(seq, tiers)[tier]``."""
     fresh = tier_points(rollup_all_tiers(delta_seq, tiers)[tier])
-    ids = delta_seq.select(F.col(id_col)).distinct()
-    kept = existing_points.join(F.broadcast(ids), id_col, "left_anti")
+    ids = delta_seq.select(F.col("doc_id")).distinct()
+    kept = existing_points.join(F.broadcast(ids), "doc_id", "left_anti")
     return kept.unionByName(fresh)

@@ -35,7 +35,6 @@ def stratified_sample(
     id_col: str,
     num: int,
     den: int,
-    bucket_prefix_len: int = 2,
 ) -> DataFrame:
     """Exact deterministic stratified sample of num/den per stratum:
     (strata, id, sample_rank) for the quota rows with the smallest
@@ -43,16 +42,16 @@ def stratified_sample(
     so every non-empty stratum contributes at least one row.
 
     Two-phase distributed rank (module docstring): the rank order is
-    ``(md5(id), id)`` and the bucket is the first ``bucket_prefix_len``
+    ``(md5(id), id)`` and the bucket is the first 2
     hex chars of that same md5 — a lexicographic prefix, so per-bucket
     ``row_number`` plus the count of all lower buckets IS the global
-    per-stratum rank. md5 prefixes are uniform, so the 16^len buckets
+    per-stratum rank. md5 prefixes are uniform, so the 256 buckets
     split every stratum evenly regardless of data skew; the cross-bucket
     combine windows over |strata|·|buckets| summary rows only."""
     h = F.md5(F.col(id_col).cast("string"))
     base = df.select(
         F.col(strata_col), F.col(id_col), h.alias("_h")
-    ).withColumn("_bkt", F.substring("_h", 1, bucket_prefix_len))
+    ).withColumn("_bkt", F.substring("_h", 1, 2))
     w_local = Window.partitionBy(strata_col, "_bkt").orderBy("_h", id_col)
     # per-(stratum, bucket) counts -> each bucket's rank base (count of
     # all lexicographically-lower buckets) and the stratum total for the
@@ -85,28 +84,20 @@ def stratified_sample(
     )
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, num: int, den: int, salt: str = ""
-) -> DataFrame:
+def hash_sample(df: DataFrame, id_col: str, num: int, den: int) -> DataFrame:
     """Stateless content-hash sample: keep rows where the first 8 hex
-    digits of md5(salt || id), read as an integer, fall in the lowest
+    digits of md5(id), read as an integer, fall in the lowest
     num/den fraction of the 32-bit space. No shuffle; membership is a
     pure function of the row id."""
     h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8),
+        F.substring(F.md5(F.concat(F.lit(""), F.col(id_col).cast("string"))), 1, 8),
         16,
         10,
     ).cast("long")
     return df.filter(h * den < F.lit(num) * F.lit(4294967296))
 
 
-def mixture_rates(
-    seq: DataFrame,
-    targets: dict[str, float],
-    source_col: str = "source",
-    n_col: str = "n_tok",
-    decimals: int = 9,
-) -> DataFrame:
+def mixture_rates(seq: DataFrame, targets: dict[str, float]) -> DataFrame:
     """Domain-mixture planning: given target source proportions
     ``targets`` (summing to 1) and the corpus's available tokens per
     source, compute the LARGEST total corpus achievable at exactly the
@@ -127,8 +118,8 @@ def mixture_rates(
     Plan: one partial-aggregated count per source (tiny), a driver-side
     min over |sources| rows, arithmetic on the same tiny frame. Nothing
     here scales with corpus rows except the one count scan."""
-    avail = seq.groupBy(F.col(source_col).alias("source")).agg(
-        F.sum(n_col).cast("long").alias("n_tok_avail")
+    avail = seq.groupBy(F.col("source")).agg(
+        F.sum("n_tok").cast("long").alias("n_tok_avail")
     )
     spark = seq.sparkSession
     tgt = spark.createDataFrame(
@@ -166,19 +157,13 @@ def mixture_rates(
                        F.least(F.lit(1.0),
                                F.col("target_share") * F.col("_T") / F.col("n_tok_avail")))
                 .otherwise(F.lit(0.0)),
-                decimals,
+                9,
             ).alias("rate"),
         )
     )
 
 
-def apply_mixture(
-    df: DataFrame,
-    rates: DataFrame,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    salt: str = "",
-) -> DataFrame:
+def apply_mixture(df: DataFrame, rates: DataFrame) -> DataFrame:
     """Execute a mixture plan: keep each row iff its content hash falls
     under its source's keep rate (``mixture_rates`` output joined in by
     broadcast — |sources| rows). Same md5-prefix mechanics as
@@ -197,12 +182,12 @@ def apply_mixture(
             "0",
         )
     )
-    r = rates.select(F.col("source").alias(source_col), thresh.alias("_thresh"))
+    r = rates.select(F.col("source"), thresh.alias("_thresh"))
     h8 = F.substring(
-        F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8
+        F.md5(F.concat(F.lit(""), F.col("doc_id").cast("string"))), 1, 8
     )
     return (
-        df.join(F.broadcast(r), source_col)
+        df.join(F.broadcast(r), "source")
         .filter(h8 < F.col("_thresh"))
         .drop("_thresh")
     )

@@ -17,17 +17,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# the reference infers a rate from the first 10 timestamps
+# (reference processor/utils.py:6-13)
+RATE_FIRST_K = 10
+# a declared rate is wrong when the inferred one differs by more than 2 %
+# (reference processor/reader.py:98-106)
+RATE_TOLERANCE = 0.02
 
-def sessionize(df: DataFrame, key: str, ts: str, gap, tiebreak: list[str] | None = None) -> DataFrame:
+
+def sessionize(df: DataFrame, key: str, ts: str, gap) -> DataFrame:
     """Add ``seg_id`` (0-based per key): new segment where ts - lag(ts) > gap.
 
     ``gap`` may be a number (same units as ``ts``) or a Column expression.
-    ``tiebreak``: extra order columns so rows with equal ``ts`` get a
-    deterministic order (goldens must be partitioning-invariant).
     """
     gap_col = gap if isinstance(gap, Column) else F.lit(gap)
-    order = [ts, *(tiebreak or [])]
-    w = Window.partitionBy(key).orderBy(*order)
+    w = Window.partitionBy(key).orderBy(ts)
     delta = F.col(ts) - F.lag(ts).over(w)
     flag = F.when(delta > gap_col, 1).otherwise(0)
     return df.withColumn("seg_id", F.sum(flag).over(w).cast("long"))
@@ -46,10 +50,13 @@ def channel_extents(df: DataFrame, key: str, ts: str, value: str) -> DataFrame:
 
 
 def infer_rate_hz(
-    df: DataFrame, key: str, ts_us: str, tiebreak: list[str] | None = None, first_k: int = 10
+    df: DataFrame,
+    key: str,
+    ts_us: str,
+    tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """A2 — sampling-rate inference per key: median timestamp delta of the
-    first ``first_k`` samples, rate = 1e6/median (reference
+    first ``RATE_FIRST_K`` samples, rate = 1e6/median (reference
     ``/root/reference/processor/utils.py:6-13``: the sample window is the
     first 10 timestamps; ``reader.py:85`` feeds it min(10000, n) but the
     helper slices [:10]). Returns (key, median_delta_us, inferred_rate_hz),
@@ -58,7 +65,7 @@ def infer_rate_hz(
     w = Window.partitionBy(key).orderBy(*order)
     first = (
         df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= first_k)
+        .filter(F.col("_rn") <= RATE_FIRST_K)
         .withColumn("_d", F.col(ts_us) - F.lag(ts_us).over(Window.partitionBy(key).orderBy(ts_us)))
         .filter(F.col("_d").isNotNull())
     )
@@ -70,18 +77,13 @@ def infer_rate_hz(
     )
 
 
-def validate_rates(
-    df: DataFrame,
-    declared: str = "declared_rate_hz",
-    inferred: str = "inferred_rate_hz",
-    tolerance: float = 0.02,
-    mode: str = "flag",
-) -> DataFrame:
+def validate_rates(df: DataFrame, mode: str = "flag") -> DataFrame:
     """Declared-vs-inferred rate cross-validation (reference
     ``/root/reference/processor/reader.py:82-106``): relative error
-    ``|inferred - declared| * (1/declared)``; STRICTLY greater than
-    ``tolerance`` is a violation (error == tolerance passes, matching the
-    reference's ``error > 0.02``).
+    ``|inferred - declared| * (1/declared)`` of the ``inferred_rate_hz``
+    and ``declared_rate_hz`` columns; STRICTLY greater than
+    ``RATE_TOLERANCE`` is a violation (error == tolerance passes, matching
+    the reference's ``error > 0.02``).
 
     ``mode="flag"`` adds (rate_error, rate_valid) — the declarative
     engine shape: callers filter or fail the batch. ``mode="fail"``
@@ -92,12 +94,13 @@ def validate_rates(
     # both the valid and invalid sets (the reference would have raised a
     # ZeroDivisionError here)
     err = F.when(
-        F.col(declared) > 0,
-        F.abs(F.col(inferred) - F.col(declared)) * (F.lit(1.0) / F.col(declared)),
+        F.col("declared_rate_hz") > 0,
+        F.abs(F.col("inferred_rate_hz") - F.col("declared_rate_hz"))
+        * (F.lit(1.0) / F.col("declared_rate_hz")),
     )
     out = df.withColumn("rate_error", err).withColumn(
         "rate_valid",
-        F.when(err.isNull(), F.lit(False)).otherwise(~(err > F.lit(tolerance))),
+        F.when(err.isNull(), F.lit(False)).otherwise(~(err > F.lit(RATE_TOLERANCE))),
     )
     if mode == "fail":
         bad = out.filter(~F.col("rate_valid")).limit(1).collect()
@@ -106,7 +109,7 @@ def validate_rates(
             raise ValueError(
                 "Inferred rate from timestamps ({inferred_rate:.4f}) does not "
                 "match given rate ({given_rate:.4f}).".format(
-                    inferred_rate=r[inferred], given_rate=r[declared]
+                    inferred_rate=r["inferred_rate_hz"], given_rate=r["declared_rate_hz"]
                 )
             )
     elif mode != "flag":

@@ -28,13 +28,11 @@ def _dot(a, b):
     )
 
 
-def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
-    return df.withColumn("norm", F.sqrt(_dot(F.col(vec), F.col(vec))))
+def with_norm(df: DataFrame) -> DataFrame:
+    return df.withColumn("norm", F.sqrt(_dot(F.col("embedding"), F.col("embedding"))))
 
 
-def quantize_embeddings(
-    emb: DataFrame, vec: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """Symmetric int8 quantization: (vec_id, scale, q) with
     ``q[i] = round_away_from_zero(127 · x[i] / scale)``,
     ``scale = max|x|`` per vector (zero vectors quantize to zeros,
@@ -62,12 +60,12 @@ def quantize_embeddings(
             if not len(pdf):
                 yield pd.DataFrame({"vec_id": [], "scale": [], "q": []})
                 continue
-            dims = pdf[vec].map(len).to_numpy()
+            dims = pdf["embedding"].map(len).to_numpy()
             if dims.size and (dims == dims[0]).all() and dims[0] > 0:
                 # fixed-dim fast path (the real case): ONE np.stack per
                 # Arrow batch, then fully vectorized scale + round —
                 # no per-row Python loop (matches the GEMM kernels)
-                X = np.stack([np.asarray(e, dtype=np.float64) for e in pdf[vec]])
+                X = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
                 s = np.abs(X).max(axis=1)
                 safe = np.where(s == 0.0, 1.0, s)
                 Y = 127.0 * X / safe[:, None]
@@ -76,11 +74,11 @@ def quantize_embeddings(
                 Q = (np.sign(Y) * np.floor(np.abs(Y) + 0.5)).astype(np.int32)
                 Q[s == 0.0] = 0
                 yield pd.DataFrame(
-                    {"vec_id": pdf[id_col], "scale": s, "q": list(Q)}
+                    {"vec_id": pdf["vec_id"], "scale": s, "q": list(Q)}
                 )
                 continue
             scales, qs = [], []
-            for e in pdf[vec]:
+            for e in pdf["embedding"]:
                 x = np.asarray(e, dtype=np.float64)
                 s = float(np.abs(x).max()) if x.size else 0.0
                 if s == 0.0:
@@ -91,10 +89,10 @@ def quantize_embeddings(
                 scales.append(s)
                 qs.append(q)
             yield pd.DataFrame(
-                {"vec_id": pdf[id_col], "scale": scales, "q": qs}
+                {"vec_id": pdf["vec_id"], "scale": scales, "q": qs}
             )
 
-    return emb.select(id_col, vec).mapInPandas(kern, schema=schema)
+    return emb.select("vec_id", "embedding").mapInPandas(kern, schema=schema)
 
 
 def dequantize_embeddings(qdf: DataFrame) -> DataFrame:
@@ -109,13 +107,7 @@ def dequantize_embeddings(qdf: DataFrame) -> DataFrame:
     )
 
 
-def cosine_topk_q8(
-    emb: DataFrame,
-    k: int = 5,
-    n_queries: int = 20,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk_q8(emb: DataFrame, k: int = 5, n_queries: int = 20) -> DataFrame:
     """``cosine_topk`` on int8-quantized vectors: (query_id, neighbor_id,
     rank, cos_sim_q8). The scales cancel, so similarity is the pure
     integer-dot ratio ``dot(qa,qb)/(|qa|·|qb|)`` — exact integer
@@ -123,7 +115,7 @@ def cosine_topk_q8(
     is why the quantized variant cross-checks bit-exactly against the
     DuckDB oracle. Zero-norm vectors get similarity 0. Same shape as the
     float path: broadcast bounded query side, corpus streams."""
-    q8 = quantize_embeddings(emb, vec=vec, id_col=id_col).withColumn(
+    q8 = quantize_embeddings(emb).withColumn(
         "qnorm", F.sqrt(_dot(F.col("q"), F.col("q")))
     )
     corpus = q8.select(
@@ -161,23 +153,23 @@ def cosine_topk_q8(
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    k: int = 5,
-    n_queries: int = 20,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, k: int = 5, n_queries: int = 20) -> DataFrame:
     """Exact top-k cosine neighbors for the first ``n_queries`` ids:
     (query_id, neighbor_id, rank, cos_sim). Deterministic: sim rounded
     to 6 dp, ties broken by neighbor id."""
-    corpus = with_norm(emb, vec).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec).alias("v_n"), F.col("norm").alias("norm_n")
+    corpus = with_norm(emb).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("v_n"),
+        F.col("norm").alias("norm_n"),
     )
     queries = (
-        with_norm(emb, vec)
-        .filter(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("query_id"), F.col(vec).alias("v_q"), F.col("norm").alias("norm_q"))
+        with_norm(emb)
+        .filter(F.col("vec_id") < n_queries)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("v_q"),
+            F.col("norm").alias("norm_q"),
+        )
     )
     sims = (
         F.broadcast(queries)
@@ -195,13 +187,7 @@ def cosine_topk(
     )
 
 
-def cosine_topk_np(
-    emb: DataFrame,
-    k: int = 5,
-    n_queries: int = 20,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk_np(emb: DataFrame, k: int = 5, n_queries: int = 20) -> DataFrame:
     """Same semantics as ``cosine_topk`` (round-6 sims, id tie-break) but
     the dot products run as one numpy GEMM per Arrow batch: the query
     matrix ships to every task (broadcast — it's the small side), the
@@ -216,7 +202,7 @@ def cosine_topk_np(
     from pyspark.sql import types as T
 
     qrows = (
-        emb.filter(F.col(id_col) < n_queries).select(id_col, vec).collect()
+        emb.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding").collect()
     )
     if not qrows:
         return emb.sparkSession.createDataFrame(
@@ -241,11 +227,11 @@ def cosine_topk_np(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec]])
+            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             vn = np.linalg.norm(V, axis=1)
             # dot / (|q| * |v|) — same op shape as the SQL oracle
             S = np.round((Qm @ V.T) / np.outer(qn, vn), 6)  # (n_queries, batch)
-            nid = pdf[id_col].to_numpy(np.int64)
+            nid = pdf["vec_id"].to_numpy(np.int64)
             nq, nb = S.shape
             yield pd.DataFrame(
                 {
@@ -255,7 +241,7 @@ def cosine_topk_np(
                 }
             )
 
-    pairs = emb.select(id_col, vec).mapInPandas(sims, schema=schema).filter(
+    pairs = emb.select("vec_id", "embedding").mapInPandas(sims, schema=schema).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -266,7 +252,7 @@ def cosine_topk_np(
     )
 
 
-def lsh_buckets(emb: DataFrame, n_planes: int = 8, vec: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def lsh_buckets(emb: DataFrame, n_planes: int = 8) -> DataFrame:
     """Sign-sketch bucket per vector: (vec_id, bucket) with bucket =
     sum over planes of bit_p * 2^p, bit_p = [dot(plane_p, v) > 0].
 
@@ -278,9 +264,9 @@ def lsh_buckets(emb: DataFrame, n_planes: int = 8, vec: str = "embedding", id_co
     the dim is probed from the first row)."""
     import hashlib
 
-    first = emb.select(F.size(F.col(vec))).first()
+    first = emb.select(F.size(F.col("embedding"))).first()
     dim = int(first[0]) if first is not None else 0
-    out = emb.select(id_col, vec)
+    out = emb.select("vec_id", "embedding")
     bucket = F.lit(0)
     for p in range(n_planes):
         signs = [
@@ -291,7 +277,7 @@ def lsh_buckets(emb: DataFrame, n_planes: int = 8, vec: str = "embedding", id_co
         ]
         plane = F.array(*[F.lit(s) for s in signs]) if dim else F.array().cast("array<double>")
         proj = F.aggregate(
-            F.zip_with(F.col(vec), plane, lambda x, s: x.cast("double") * s),
+            F.zip_with(F.col("embedding"), plane, lambda x, s: x.cast("double") * s),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
@@ -299,36 +285,35 @@ def lsh_buckets(emb: DataFrame, n_planes: int = 8, vec: str = "embedding", id_co
     # a vector whose dim differs from the probed one would NULL-poison
     # its projections and silently collapse into bucket 0 (re-creating
     # the hot bucket this module exists to avoid) — raise loudly instead
-    bucket = F.when(F.size(F.col(vec)) == dim, bucket).otherwise(
+    bucket = F.when(F.size(F.col("embedding")) == dim, bucket).otherwise(
         F.raise_error(
             F.lit(f"lsh_buckets: embedding dim differs from probed dim {dim}")
         ).cast("int")
     )
-    return out.withColumn("bucket", bucket.cast("int")).select(id_col, "bucket")
+    return out.withColumn("bucket", bucket.cast("int")).select("vec_id", "bucket")
 
 
-def ann_lsh_topk(
-    emb: DataFrame,
-    k: int = 5,
-    n_planes: int = 8,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
+def ann_lsh_topk(emb: DataFrame, k: int = 5, n_planes: int = 8) -> DataFrame:
     """Approximate top-k: exact cosine ranking *within* LSH bucket.
-    ``max_bucket_size`` caps bucket occupancy before the self-join (skew
+    Bucket occupancy is capped at 10,000 before the self-join (skew
     guard: a degenerate corpus of near-identical vectors lands in one
     sign-sketch bucket and the join goes quadratic)."""
     from .dedup import _cap_bucket_size
 
-    b = lsh_buckets(emb, n_planes, vec, id_col)
-    b = _cap_bucket_size(b, ["bucket"], id_col, max_bucket_size)
-    v = with_norm(emb, vec).join(b, id_col)
+    b = lsh_buckets(emb, n_planes)
+    b = _cap_bucket_size(b, ["bucket"], "vec_id", 10_000)
+    v = with_norm(emb).join(b, "vec_id")
     a = v.select(
-        F.col(id_col).alias("query_id"), F.col(vec).alias("v_q"), F.col("norm").alias("norm_q"), "bucket"
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("v_q"),
+        F.col("norm").alias("norm_q"),
+        "bucket",
     )
     c = v.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec).alias("v_n"), F.col("norm").alias("norm_n"), "bucket"
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("v_n"),
+        F.col("norm").alias("norm_n"),
+        "bucket",
     )
     sims = (
         a.join(c, "bucket")
@@ -349,15 +334,8 @@ def ann_lsh_topk(
 # ----------------------------------------------------------------- IVF ANN
 
 
-def ivf_build(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_decimals: int = 6,
-):
-    """Deterministic IVF coarse quantizer: k centroids via Lloyd iterations.
+def ivf_build(emb: DataFrame, k: int = 16):
+    """Deterministic IVF coarse quantizer: k centroids via 3 Lloyd iterations.
 
     * Seeds: the k vectors with the smallest ``(md5(id), id)`` sort key —
       a deterministic pseudo-random spread that is a distributed top-k
@@ -367,27 +345,26 @@ def ivf_build(
       partial per Arrow batch — at most k × n_batches tiny rows ever
       leave the executors, never member vectors (the r1 collect_list
       update was the engine's one OOM-at-scale path).
-    * Centroids are quantized (rounded to ``centroid_decimals``) after
+    * Centroids are quantized (rounded to 6 decimals) after
       every update: the codebook is exactly representable, so an
       independent engine replaying Lloyd from the same data converges to
       bit-identical centroids (float sum-order drift ≪ the quantum).
 
     Returns a list of (cluster_id, centroid ndarray) — the coarse index
     is tiny by construction and ships as a broadcast, like a real IVF
-    codebook. Training cost: ``iters`` distributed assign+partial-sum
-    passes.
+    codebook. Training cost: 3 distributed assign+partial-sum passes.
     """
     import numpy as np
 
     seeds = (
-        emb.select(id_col, vec)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        emb.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(k)
         .collect()
     )
     if not seeds:
         raise ValueError("ivf_build: input has no vectors")
-    C = np.round(np.stack([np.asarray(r[1], np.float64) for r in seeds]), centroid_decimals)
+    C = np.round(np.stack([np.asarray(r[1], np.float64) for r in seeds]), 6)
     kk, dim = C.shape
 
     from collections.abc import Iterator
@@ -403,7 +380,7 @@ def ivf_build(
         ]
     )
 
-    for _ in range(iters):
+    for _ in range(3):
         bc = emb.sparkSession.sparkContext.broadcast(C)
 
         def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -412,7 +389,7 @@ def ivf_build(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                V = np.stack([np.asarray(v, np.float64) for v in pdf[vec]])
+                V = np.stack([np.asarray(v, np.float64) for v in pdf["embedding"]])
                 a = (cn2[None, :] - 2.0 * (V @ Cm.T)).argmin(1)
                 sums = np.zeros((kk, dim))
                 np.add.at(sums, a, V)
@@ -426,7 +403,7 @@ def ivf_build(
                     }
                 )
 
-        rows = emb.select(vec).mapInPandas(partials, schema=partial_schema).collect()
+        rows = emb.select("embedding").mapInPandas(partials, schema=partial_schema).collect()
         S = np.zeros((kk, dim))
         N = np.zeros(kk, np.int64)
         for r in rows:
@@ -434,11 +411,11 @@ def ivf_build(
             N[r["cluster_id"]] += r["n"]
         nzc = N > 0
         C = C.copy()
-        C[nzc] = np.round(S[nzc] / N[nzc, None], centroid_decimals)
+        C[nzc] = np.round(S[nzc] / N[nzc, None], 6)
     return [(i, C[i]) for i in range(kk)]
 
 
-def _ivf_assign_df(emb: DataFrame, C, vec: str, id_col: str) -> DataFrame:
+def _ivf_assign_df(emb: DataFrame, C) -> DataFrame:
     """Nearest-centroid assignment, one GEMM per Arrow batch."""
     from collections.abc import Iterator
 
@@ -449,8 +426,8 @@ def _ivf_assign_df(emb: DataFrame, C, vec: str, id_col: str) -> DataFrame:
     bc = emb.sparkSession.sparkContext.broadcast(np.asarray(C, np.float64))
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField(vec, T.ArrayType(T.FloatType()), False),
+            T.StructField("vec_id", T.LongType(), False),
+            T.StructField("embedding", T.ArrayType(T.FloatType()), False),
             T.StructField("cluster_id", T.IntegerType(), False),
         ]
     )
@@ -461,23 +438,16 @@ def _ivf_assign_df(emb: DataFrame, C, vec: str, id_col: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, np.float64) for v in pdf[vec]])
+            V = np.stack([np.asarray(v, np.float64) for v in pdf["embedding"]])
             d2 = cn2[None, :] - 2.0 * (V @ Cm.T)  # ||v||^2 constant per row
-            pdf = pdf[[id_col, vec]].copy()
+            pdf = pdf[["vec_id", "embedding"]].copy()
             pdf["cluster_id"] = d2.argmin(1).astype(np.int32)
             yield pdf
 
-    return emb.select(id_col, vec).mapInPandas(assign, schema=schema)
+    return emb.select("vec_id", "embedding").mapInPandas(assign, schema=schema)
 
 
-def ann_ivf_topk(
-    emb: DataFrame,
-    k: int = 5,
-    n_clusters: int = 16,
-    nprobe: int = 2,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ann_ivf_topk(emb: DataFrame, k: int = 5, n_clusters: int = 16, nprobe: int = 2) -> DataFrame:
     """IVF-ANN: exact cosine rank over the union of each query's nprobe
     nearest clusters. Probe cost ~ nprobe/n_clusters of the corpus."""
     import numpy as np
@@ -486,7 +456,7 @@ def ann_ivf_topk(
 
     C = ivf_build(emb, n_clusters)
     Cm = np.stack([c for _i, c in C])
-    assigned = _ivf_assign_df(emb, Cm, vec, id_col)
+    assigned = _ivf_assign_df(emb, Cm)
 
     from collections.abc import Iterator
 
@@ -496,7 +466,7 @@ def ann_ivf_topk(
     bc = emb.sparkSession.sparkContext.broadcast(Cm)
     probe_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType(), False),
+            T.StructField("vec_id", T.LongType(), False),
             T.StructField("cluster_id", T.IntegerType(), False),
         ]
     )
@@ -507,26 +477,26 @@ def ann_ivf_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, np.float64) for v in pdf[vec]])
+            V = np.stack([np.asarray(v, np.float64) for v in pdf["embedding"]])
             d2 = cn2[None, :] - 2.0 * (V @ Cm_.T)
             # stable sort: ties fall to the lower cluster_id, matching the
             # oracle's ORDER BY (d2, cluster_id)
             near = np.argsort(d2, axis=1, kind="stable")[:, :nprobe]
-            ids = pdf[id_col].to_numpy(np.int64)
+            ids = pdf["vec_id"].to_numpy(np.int64)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(ids, nprobe),
+                    "vec_id": np.repeat(ids, nprobe),
                     "cluster_id": near.reshape(-1).astype(np.int32),
                 }
             )
 
-    qprobes = emb.select(id_col, vec).mapInPandas(probes, schema=probe_schema)
+    qprobes = emb.select("vec_id", "embedding").mapInPandas(probes, schema=probe_schema)
     qside = emb.select(
-        F.col(id_col).alias("query_id"), F.col(vec).alias("v_q")
-    ).join(qprobes.withColumnRenamed(id_col, "query_id"), "query_id")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("v_q")
+    ).join(qprobes.withColumnRenamed("vec_id", "query_id"), "query_id")
     cside = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec).alias("v_n")
-    ).join(assigned.select(F.col(id_col).alias("neighbor_id"), "cluster_id"), "neighbor_id")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v_n")
+    ).join(assigned.select(F.col("vec_id").alias("neighbor_id"), "cluster_id"), "neighbor_id")
 
     # per-cluster GEMM scoring with LOSSLESS per-cluster top-k pruning:
     # the global top-k over a query's probed clusters is contained in the
@@ -589,15 +559,11 @@ def ann_ivf_topk(
     )
 
 
-def label_centroids(
-    emb: DataFrame,
-    group_col: str = "label",
-    vec: str = "embedding",
-    decimals: int = 6,
-) -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """Per-group mean embedding: (group, dim, c) exploded — the
     SemDeDup-style cluster summary a curation pipeline uses for
-    embedding-space filtering. Rounded to ``decimals`` so the value is
+    embedding-space filtering; groups are the ``label`` column. Rounded
+    to 6 decimals so the value is
     an engine-portable contract (float sums are order-sensitive at the
     1e-15 level; rounding far above it makes every engine agree).
 
@@ -607,25 +573,19 @@ def label_centroids(
     (exact, summation-order-independent — raw double sums differ at
     1e-15 across partial-agg orders) divided as DOUBLE, then round."""
     return (
-        emb.select(F.col(group_col).alias("group"), F.posexplode(vec).alias("dim", "x"))
+        emb.select(F.col("label").alias("group"), F.posexplode("embedding").alias("dim", "x"))
         .groupBy("group", "dim")
         .agg(
             F.round(
                 F.sum(F.col("x").cast("decimal(28,12)")).cast("double")
                 / F.count(F.lit(1)),
-                decimals,
+                6,
             ).alias("c"),
         )
     )
 
 
-def centroid_outliers(
-    emb: DataFrame,
-    group_col: str = "label",
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-    decimals: int = 6,
-) -> DataFrame:
+def centroid_outliers(emb: DataFrame) -> DataFrame:
     """Cosine of every vector to ITS OWN group's centroid:
     (vec_id, group, cos_centroid) — the outlier score for embedding-
     based quality filtering (drop the far tail of each cluster).
@@ -636,7 +596,7 @@ def centroid_outliers(
     broadcast; the corpus side is ONE narrow pass (no shuffle of
     vectors)."""
     cent = (
-        label_centroids(emb, group_col, vec, decimals)
+        label_centroids(emb)
         .groupBy("group")
         .agg(
             F.array_sort(
@@ -644,21 +604,21 @@ def centroid_outliers(
             ).alias("_dc")
         )
         .select(
-            F.col("group").alias(group_col),
+            F.col("group").alias("label"),
             F.transform("_dc", lambda s: s["c"]).alias("_cent"),
         )
     )
-    d = _dot(F.col(vec), F.col("_cent"))
-    nv = F.sqrt(_dot(F.col(vec), F.col(vec)))
+    d = _dot(F.col("embedding"), F.col("_cent"))
+    nv = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
     nc = F.sqrt(_dot(F.col("_cent"), F.col("_cent")))
     return (
-        emb.join(F.broadcast(cent), group_col)
+        emb.join(F.broadcast(cent), "label")
         .select(
-            id_col,
-            F.col(group_col).alias("group"),
+            "vec_id",
+            F.col("label").alias("group"),
             F.round(
                 F.when((nv > 0) & (nc > 0), d / (nv * nc)).otherwise(F.lit(0.0)),
-                decimals,
+                6,
             ).alias("cos_centroid"),
         )
     )

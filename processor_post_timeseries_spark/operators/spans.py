@@ -33,18 +33,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _window_hashes(
-    docs: DataFrame, window: int, stride: int, text_col: str, id_col: str
-) -> DataFrame:
+def _window_hashes(docs: DataFrame, window: int, stride: int) -> DataFrame:
     """(doc_id, pos, whash) for every strided window. md5 of the raw
     window text: engine-portable (the DuckDB oracle replays it
     verbatim) and collision-safe at any corpus size that fits storage."""
-    n = F.length(text_col)
+    n = F.length("text")
     return (
         docs.filter(n >= window)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("_t"),
+            F.col("doc_id"),
+            F.col("text").alias("_t"),
             F.explode(
                 F.sequence(F.lit(1), n - window + 1, F.lit(stride))
             ).alias("pos"),
@@ -57,18 +55,13 @@ def _window_hashes(
     )
 
 
-def duplicate_spans(
-    docs: DataFrame,
-    window: int = 32,
-    stride: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Window occurrences whose content appears in MORE THAN ONE doc:
+def duplicate_spans(docs: DataFrame) -> DataFrame:
+    """32-character windows, taken every 8 characters, whose content
+    appears in MORE THAN ONE doc:
     (doc_id, pos, whash, n_docs). ``n_docs`` counts distinct docs
     sharing the window text. Downstream removal logic merges adjacent
     flagged positions into spans (positions are stride-aligned)."""
-    w = _window_hashes(docs, window, stride, text_col, id_col)
+    w = _window_hashes(docs, 32, 8)
     shared = (
         w.select("whash", "doc_id")
         .distinct()
@@ -82,8 +75,6 @@ def duplicate_spans(
 def exact_duplicate_runs(
     docs: DataFrame,
     min_len: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT shared-run extraction — the stride-1 verification pass that
@@ -115,11 +106,11 @@ def exact_duplicate_runs(
     d = docs
     if candidates is not None:
         d = d.join(
-            F.broadcast(candidates.select(F.col(id_col)).distinct()),
-            id_col,
+            F.broadcast(candidates.select(F.col("doc_id")).distinct()),
+            "doc_id",
             "left_semi",
         )
-    w = _window_hashes(d, min_len, 1, text_col, id_col)
+    w = _window_hashes(d, min_len, 1)
     shared = (
         w.select("whash", "doc_id")
         .distinct()
@@ -163,21 +154,14 @@ def exact_duplicate_runs(
             F.element_at(arr, s["b1"] - 1).alias("e"),
         ),
     )
-    return ps.select(id_col, F.explode(runs).alias("_r")).select(
-        id_col,
+    return ps.select("doc_id", F.explode(runs).alias("_r")).select(
+        "doc_id",
         F.col("_r.s").cast("long").alias("run_start"),
         (F.col("_r.e") - F.col("_r.s") + min_len).cast("long").alias("run_len"),
     )
 
 
-def span_dup_report(
-    docs: DataFrame,
-    window: int = 32,
-    stride: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    decimals: int = 6,
-) -> DataFrame:
+def span_dup_report(docs: DataFrame, window: int = 32, stride: int = 8) -> DataFrame:
     """Per-doc span-duplication summary: (doc_id, n_windows,
     n_dup_windows, dup_fraction). Docs shorter than ``window`` have no
     windows and are absent (nothing to test — the decontam convention)."""
@@ -190,7 +174,7 @@ def span_dup_report(
     # three-branch plan (sizes/shared/flagged each reading the hash
     # frame) recomputes the strided md5 scan three times.
     wd = (
-        _window_hashes(docs, window, stride, text_col, id_col)
+        _window_hashes(docs, window, stride)
         .groupBy("whash", "doc_id")
         .agg(F.count("*").alias("_c"))
         .withColumn("_nd", F.count("*").over(Window.partitionBy("whash")))
@@ -207,7 +191,7 @@ def span_dup_report(
             "doc_id",
             "n_windows",
             "n_dup_windows",
-            F.round(F.col("n_dup_windows") / F.col("n_windows"), decimals).alias(
+            F.round(F.col("n_dup_windows") / F.col("n_windows"), 6).alias(
                 "dup_fraction"
             ),
         )

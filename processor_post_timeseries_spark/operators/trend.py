@@ -148,17 +148,12 @@ def diff2_extrema(
     )
 
 
-def value_histogram(
-    series: DataFrame,
-    part_col: str,
-    val_col: str,
-    n_bins: int = 20,
-) -> DataFrame:
+def value_histogram(series: DataFrame, part_col: str, val_col: str) -> DataFrame:
     """(part, bin, n, lo) — equi-width value histogram per channel.
 
     The monitoring primitive behind drift dashboards and range checks.
     Bin edges come from each channel's own min/max:
-    ``bin = (v - mn) * n_bins div (mx - mn + 1)`` — integer division of
+    ``bin = (v - mn) * 20 div (mx - mn + 1)`` (20 bins) — integer division of
     non-negative integers, where floor == truncate in every engine, so
     bin assignment is bit-portable (``val_col`` must be integral; the
     +1 keeps the max value inside the last bin). ``lo`` is the bin's
@@ -172,7 +167,7 @@ def value_histogram(
     j = series.select(
         F.col(part_col).alias("part"), F.col(val_col).alias("v")
     ).join(F.broadcast(ext), "part")
-    bin_ = F.expr(f"((v - mn) * {n_bins}) div (mx - mn + 1)")
+    bin_ = F.expr("((v - mn) * 20) div (mx - mn + 1)")
     return (
         j.groupBy("part", bin_.alias("bin"))
         .agg(
@@ -185,8 +180,8 @@ def value_histogram(
             "bin",
             F.col("n").cast("bigint").alias("n"),
             F.expr(
-                f"part_min + (bin * (part_max - part_min + 1)) div {n_bins}"
-                f" + (CASE WHEN (bin * (part_max - part_min + 1)) % {n_bins}"
+                "part_min + (bin * (part_max - part_min + 1)) div 20"
+                " + (CASE WHEN (bin * (part_max - part_min + 1)) % 20"
                 f" > 0 THEN 1 ELSE 0 END)"
             ).alias("lo"),
         )

@@ -46,13 +46,7 @@ def invalidate_units(
     )
 
 
-def invalidate_where(
-    spark: SparkSession,
-    root: str,
-    source: str,
-    bucket: int,
-    stages: list[str] | None = None,
-) -> int:
+def invalidate_where(spark: SparkSession, root: str, source: str, bucket: int) -> int:
     """Invalidate one (source, bucket) work unit across stages. Handles
     both key layouts the pipeline writes: ``source/bucket`` (blocks) and
     ``tier/source/bucket`` (tier stages) via exact-match-or-suffix."""
@@ -60,8 +54,6 @@ def invalidate_where(
     cond = (F.col("partition_key") == unit) | F.col("partition_key").endswith(
         "/" + unit
     )
-    if stages is not None:
-        cond = cond & F.col("stage").isin(stages)
     return _rewrite_without(spark, root, cond)
 
 

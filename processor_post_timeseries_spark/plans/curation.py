@@ -42,15 +42,10 @@ from pyspark.sql import functions as F
 def curate(
     docs: DataFrame,
     benchmark: DataFrame,
-    contam_n: int = 5,
     min_quality: float = 0.0,
     targets: dict[str, float] | None = None,
     near_dup: bool = False,
     lsh: tuple[int, int, int] = (16, 4, 3),
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    salt: str = "",
     hash_fn: str = "xxh64",
     lsh_max_bucket_size: int | None = 1000,
     drop_stats: dict | None = None,
@@ -70,18 +65,26 @@ def curate(
     (``operators/dedup.py:lsh_bucket_stats``). No-op unless
     ``near_dup=True``.
 
-    Decontamination (word ``contam_n``-grams) is the two-tier
+    Decontamination (word 5-grams) is the two-tier
     ``decontam.contaminated_ids``: bloom prefilter, then the exact report
     on the flagged docs only. Its contaminated set equals the exact
-    report's, for any id type."""
+    report's, for any id type.
+
+    A doc with a NULL ``text`` raises: it has no content digest, so the
+    exact-dedup join would drop it from the audit."""
     from ..functions.text import quality_score
     from ..operators.decontam import contaminated_ids
 
+    # in the projection, not a filter: the join's inferred not-null filter
+    # on the digest would run first and drop the row
+    text = F.when(F.col("text").isNull(), F.raise_error(F.format_string(
+        "doc '%s' has NULL text, which curate cannot audit", "doc_id",
+    ))).otherwise(F.col("text"))
     d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(source_col).alias("source"),
-        F.col(text_col).alias("_text"),
-        F.length(text_col).cast("long").alias("n_tok"),
+        F.col("doc_id"),
+        F.col("source"),
+        text.alias("_text"),
+        F.length("text").cast("long").alias("n_tok"),
     )
 
     # 1. exact dedup: keeper = min doc_id per content digest
@@ -104,7 +107,7 @@ def curate(
 
         n_hashes, n_bands, n_sh = lsh
         pairs = lsh_candidate_pairs(
-            surv.select("doc_id", F.col("_text").alias(text_col)),
+            surv.select("doc_id", F.col("_text").alias("text")),
             n_hashes,
             n_bands,
             n_sh,
@@ -118,7 +121,7 @@ def curate(
             from ..operators.dedup import lsh_bucket_stats
 
             stats = lsh_bucket_stats(
-                surv.select("doc_id", F.col("_text").alias(text_col)),
+                surv.select("doc_id", F.col("_text").alias("text")),
                 n_hashes,
                 n_bands,
                 n_sh,
@@ -139,10 +142,10 @@ def curate(
         d = d.withColumn("_near_dup", F.lit(None).cast("boolean"))
 
     # 3. decontamination: contaminated ids among remaining survivors
-    corpus_side = surv.select("doc_id", F.col("_text").alias(text_col))
-    bench_side = benchmark.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    corpus_side = surv.select("doc_id", F.col("_text").alias("text"))
+    bench_side = benchmark.select(F.col("doc_id"), F.col("text"))
     contam = contaminated_ids(
-        corpus_side, bench_side, n=contam_n, text_col=text_col
+        corpus_side, bench_side
     ).withColumn("_contam", F.lit(True))
     d = d.join(contam, "doc_id", "left")
     surv = surv.join(contam, "doc_id", "left_anti")
@@ -158,7 +161,7 @@ def curate(
     if targets is not None:
         from ..operators.sampling import mixture_rates
 
-        rates = mixture_rates(surv, targets, source_col="source", n_col="n_tok")
+        rates = mixture_rates(surv, targets)
         thresh = F.when(F.col("rate") >= 1.0, F.lit("g")).otherwise(
             F.lpad(
                 F.lower(
@@ -170,7 +173,7 @@ def curate(
         )
         r = rates.select("source", thresh.alias("_thresh"))
         h8 = F.substring(
-            F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 8
+            F.md5(F.concat(F.lit(""), F.col("doc_id").cast("string"))), 1, 8
         )
         d = d.join(F.broadcast(r), "source", "left").withColumn(
             "_mix_out", ~(h8 < F.coalesce(F.col("_thresh"), F.lit("0")))
@@ -193,17 +196,15 @@ def curate_and_pack(
     docs: DataFrame,
     benchmark: DataFrame,
     ctx_len: int,
-    tokens_fn=None,
     audit: DataFrame | None = None,
     **curate_kwargs,
 ) -> DataFrame:
     """The full raw->examples path: ``curate`` keepset joined back to
     token arrays, packed into fixed-``ctx_len`` blocks
-    (``packing.materialize_blocks``). ``tokens_fn(docs) -> DataFrame``
-    must supply (doc_id, tokens, n_tok, source); default is the
-    char-token convention. One extra broadcast-or-shuffle semi-join of
-    the keepset onto the sequence table — the keepset ids are the only
-    new exchange.
+    (``packing.materialize_blocks``). Tokens follow the char-token
+    convention: one token per character, its ``ascii`` code. One extra
+    broadcast-or-shuffle semi-join of the keepset onto the sequence
+    table — the keepset ids are the only new exchange.
 
     ``audit``: a precomputed/materialized ``curate`` audit frame — pass
     the parquet you already wrote so the expensive curation stages
@@ -213,21 +214,14 @@ def curate_and_pack(
 
     if audit is None:
         audit = curate(docs, benchmark, **curate_kwargs)
-    keep = audit.filter(F.col("stage") == "kept").select("doc_id")
-    if tokens_fn is None:
-        seq = docs.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.transform(F.split("text", ""), lambda c: F.ascii(c)).alias("tokens"),
-            F.length("text").cast("int").alias("n_tok"),
-            F.col("source"),
-        )
-        keep = keep.select(F.col("doc_id").cast("string").alias("doc_id"))
-    else:
-        seq = tokens_fn(docs)
-        # align key types: the audit carries docs' native id type while a
-        # custom tokens_fn may key doc_id differently (e.g. string)
-        keep = keep.select(
-            F.col("doc_id").cast(seq.schema["doc_id"].dataType).alias("doc_id")
-        )
+    keep = audit.filter(F.col("stage") == "kept").select(
+        F.col("doc_id").cast("string").alias("doc_id")
+    )
+    seq = docs.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.transform(F.split("text", ""), lambda c: F.ascii(c)).alias("tokens"),
+        F.length("text").cast("int").alias("n_tok"),
+        F.col("source"),
+    )
     seq = seq.join(keep, "doc_id", "left_semi")
     return materialize_blocks(seq, ctx_len=ctx_len)

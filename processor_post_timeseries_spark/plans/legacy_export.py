@@ -45,26 +45,19 @@ _RECEIPT_SCHEMA = T.StructType(
 )
 
 
-def channel_blocks(
-    events: DataFrame,
-    chunk_size: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-    tiebreak: str = "event_id",
-) -> DataFrame:
+def channel_blocks(events: DataFrame, chunk_size: int) -> DataFrame:
     """W3/W4 over an events-like table: per channel, ordered samples cut
     into chunk_size blocks with µs frame bounds:
     (channel_index, block_no, start_us, end_us, values array<double>)."""
     # parquet timestamps may arrive as TIMESTAMP_NTZ; the session tz is
     # pinned UTC (session.py), so the cast is UTC wall-clock
-    ts_us = F.unix_micros(F.col(ts).cast("timestamp"))
-    w = Window.partitionBy(key).orderBy(ts_us, F.col(tiebreak))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
     numbered = events.select(
-        F.col(key).cast("bigint").alias("channel_index"),
+        F.col("user_id").cast("bigint").alias("channel_index"),
         ts_us.alias("ts_us"),
-        F.col(value).cast("double").alias("v"),
-        F.col(tiebreak).alias("_tb"),
+        F.col("value").cast("double").alias("v"),
+        F.col("event_id").alias("_tb"),
         ((F.row_number().over(w) - 1) / chunk_size).cast("bigint").alias("block_no"),
     )
     return (
@@ -85,22 +78,16 @@ def export_legacy_channels(
     events: DataFrame,
     out_dir: str,
     chunk_size: int = 1_000,
-    key: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-    tiebreak: str = "event_id",
-    group: str = "default",
-    manifest_max_bytes: int | None = None,
 ) -> dict[str, str]:
     """Write the full reference artifact set under ``out_dir``; returns
     {"blocks": dir, "metadata": dir, "manifest": parquet path}.
 
     The manifest rows preserve per-channel, per-block insertion order
     (the reference's across-batch ordering guarantee) and are batched by
-    the sampled-mean-entry-size rule when ``manifest_max_bytes`` is set.
+    the sampled-mean-entry-size rule.
     """
     os.makedirs(out_dir, exist_ok=True)
-    blocks = channel_blocks(events, chunk_size, key, ts, value, tiebreak)
+    blocks = channel_blocks(events, chunk_size)
 
     def write_block_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -147,17 +134,17 @@ def export_legacy_channels(
 
     # -- channel metadata sidecars (S6) ------------------------------------
     ext = (
-        events.groupBy(key)
+        events.groupBy("user_id")
         .agg(
-            F.min(F.unix_micros(F.col(ts).cast("timestamp"))).alias("start_us"),
-            F.max(F.unix_micros(F.col(ts).cast("timestamp"))).alias("end_us"),
+            F.min(F.unix_micros(F.col("ts").cast("timestamp"))).alias("start_us"),
+            F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("end_us"),
             F.count("*").alias("n"),
         )
         .select(
-            F.col(key).cast("bigint").alias("channel_index"),
-            legacy_metadata_key(F.col(key)).alias("file_name"),
+            F.col("user_id").cast("bigint").alias("channel_index"),
+            legacy_metadata_key(F.col("user_id")).alias("file_name"),
             channel_metadata_json(
-                name=F.concat(F.lit("channel-"), F.col(key).cast("string")),
+                name=F.concat(F.lit("channel-"), F.col("user_id").cast("string")),
                 start_us=F.col("start_us"),
                 end_us=F.col("end_us"),
                 # (n-1) intervals span (end-start) µs: for uniform sampling
@@ -168,7 +155,7 @@ def export_legacy_channels(
                     / F.greatest(F.col("end_us") - F.col("start_us"), F.lit(1)),
                     6,
                 ),
-                group=F.lit(group),
+                group=F.lit("default"),
             ).alias("meta_json"),
         )
     )
@@ -203,10 +190,7 @@ def export_legacy_channels(
         "channel_index",
         "start_us",
     ).withColumn("order_key", F.format_string("%010d/%020d", "channel_index", "start_us"))
-    if manifest_max_bytes is not None:
-        bs = calculate_batch_size(entries, "order_key", max_size_bytes=manifest_max_bytes)
-    else:
-        bs = calculate_batch_size(entries, "order_key")
+    bs = calculate_batch_size(entries, "order_key")
     manifest = assign_manifest_batches(entries, bs, "order_key").select(
         "batch_no", "pos_in_batch", "global_pos", "upload_key", "file_path"
     )

@@ -182,29 +182,30 @@ DEFAULT_BATCH_SIZE = 1000
 # json.dumps' default separators plus one joining comma:
 # 35 fixed chars + the two value lengths + 1  (import_client.py:176-178)
 _ENTRY_OVERHEAD = 36
+# the reference sizes batches from its list's first 100 entries
+# (reference processor/clients/import_client.py:161-190)
+_SAMPLE_ENTRIES = 100
 
 
 def calculate_batch_size(
     entries: DataFrame,
     order_col: str,
-    key_col: str = "upload_key",
-    path_col: str = "file_path",
     max_size_bytes: int = MAX_REQUEST_SIZE_BYTES,
-    sample_n: int = 100,
 ) -> int:
     """A4 — manifest batch sizing from a sampled mean entry size with an
     80% safety margin (reference
     ``/root/reference/processor/clients/import_client.py:161-190``).
-    The reference samples its list's first 100 entries; a DataFrame has
+    The reference samples its list's first 100 entries of
+    (``upload_key``, ``file_path``); a DataFrame has
     no order, so ``order_col`` pins the sample deterministically
     (TakeOrdered — no full sort). Assumes manifest values need no JSON
     escaping (true for object keys/paths)."""
     sample = (
         entries.orderBy(order_col)
-        .limit(sample_n)
+        .limit(_SAMPLE_ENTRIES)
         .select(
             (
-                F.length(key_col) + F.length(path_col) + F.lit(_ENTRY_OVERHEAD)
+                F.length("upload_key") + F.length("file_path") + F.lit(_ENTRY_OVERHEAD)
             ).alias("entry_len")
         )
         .agg(F.sum("entry_len").alias("s"), F.count("*").alias("n"))

@@ -36,11 +36,11 @@ class RetentionPolicy:
     keep_days: dict[str, int]
 
 
-def write_time_partitioned(tiers: DataFrame, path: str, ts_col: str = "win_start_us") -> None:
+def write_time_partitioned(tiers: DataFrame, path: str) -> None:
     """Materialize a tier DataFrame partitioned by (tier, day) so
     retention can drop partitions instead of rewriting files."""
     (
-        tiers.withColumn("day", F.floor(F.col(ts_col) / DAY_US).cast("long"))
+        tiers.withColumn("day", F.floor(F.col("win_start_us") / DAY_US).cast("long"))
         .repartition("tier", "day")
         .write.mode("overwrite")
         .partitionBy("tier", "day")

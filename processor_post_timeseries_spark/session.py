@@ -117,8 +117,15 @@ def get_spark(
     )
     if os.path.exists(_fs_jar):
         b = (
+            # ships the jar to the executors of a cluster (at local[N]
+            # they run inside the driver JVM, so this host cannot check it)
             b.config("spark.jars", _fs_jar)
+            # the driver JVM's classpath at launch, before Hadoop resolves
+            # file://; without it the gateway exits at launch
+            # (JAVA_GATEWAY_EXITED), as spark.jars loads too late
             .config("spark.driver.extraClassPath", _fs_jar)
+            # the same for executor JVMs on hosts that hold the jar at
+            # this path
             .config("spark.executor.extraClassPath", _fs_jar)
             .config("spark.hadoop.fs.file.impl", "pts.fs.NioLocalFileSystem")
         )

@@ -92,6 +92,9 @@ def sequences(
 
 _SIZE_UNITS = {"B": 1, "KB": 1024, "MB": 1024**2, "GB": 1024**3, "TB": 1024**4}
 _SIZE_RE = r"^([0-9]+(?:\.[0-9]+)?)\s*(B|KB|MB|GB|TB)$"
+# the reference generator's file: two channels of float64 values, ~5%
+# container overhead, at least 1000 samples
+_NUM_CHANNELS, _BYTES_PER_VALUE, _OVERHEAD_FACTOR, _MIN_SAMPLES = 2, 8, 0.95, 1000
 
 
 def parse_size(size_str: str) -> int:
@@ -106,17 +109,11 @@ def parse_size(size_str: str) -> int:
     return int(float(m.group(1)) * _SIZE_UNITS[m.group(2)])
 
 
-def samples_for_size(
-    target_bytes: int,
-    num_channels: int = 2,
-    bytes_per_value: int = 8,
-    overhead_factor: float = 0.95,
-    min_samples: int = 1000,
-) -> int:
+def samples_for_size(target_bytes: int) -> int:
     """Samples needed for a target file size: float64 values per channel
     with ~5% container overhead, floored at 1000 samples."""
-    bps = bytes_per_value * num_channels
-    return max(int(target_bytes * overhead_factor / bps), min_samples)
+    bps = _BYTES_PER_VALUE * _NUM_CHANNELS
+    return max(int(target_bytes * _OVERHEAD_FACTOR / bps), _MIN_SAMPLES)
 
 
 def parse_size_col(c):

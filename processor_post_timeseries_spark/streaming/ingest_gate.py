@@ -34,27 +34,21 @@ DOC_SCHEMA = T.StructType(
 )
 
 
-def gate_batch(
-    batch: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    min_quality: float = 0.0,
-    bitmap=None,
-) -> DataFrame:
+def gate_batch(batch: DataFrame, benchmark: DataFrame, bitmap=None) -> DataFrame:
     """Pure (testable) gate: admit docs that are NOT contaminated
     (``decontam.contaminated_ids``: bloom prefilter, exact report on the
-    flagged docs only) and score at least ``min_quality``. Docs too
-    short to have n-grams are admitted (nothing to test), mirroring the
+    flagged docs only) in word 5-grams, and score at least 0.0. Docs too
+    short to have 5-grams are admitted (nothing to test), mirroring the
     batch report's domain.
 
-    ``bitmap``: ``build_bloom_bitmap(benchmark, n=n)``, built once and
+    ``bitmap``: ``build_bloom_bitmap(benchmark)``, built once and
     reused across micro-batches so no batch re-scans the benchmark;
     built per call when None."""
-    flagged = contaminated_ids(batch, benchmark, n=n, bitmap=bitmap)
+    flagged = contaminated_ids(batch, benchmark, bitmap=bitmap)
     return (
         batch.join(flagged, "doc_id", "left_anti")
         .withColumn("quality", quality_score(F.col("text")))
-        .filter(F.col("quality") >= min_quality)
+        .filter(F.col("quality") >= 0.0)
     )
 
 
@@ -82,9 +76,7 @@ def write_admitted_batch(
     admitted.write.mode("overwrite").parquet(f"{out_dir}/batch={int(batch_id)}")
 
 
-def write_hash_index_batch(
-    admitted: DataFrame, out_dir: str, batch_id: int, text_col: str = "text"
-) -> None:
+def write_hash_index_batch(admitted: DataFrame, out_dir: str, batch_id: int) -> None:
     """Append this batch's content hashes to the admitted-hash index:
     ``out_dir/_hash_index/batch=<id>/_hp=<xx>/`` holding ONLY the
     32-char md5 (``_h``), partitioned by its first ``HASH_PREFIX_LEN``
@@ -94,7 +86,7 @@ def write_hash_index_batch(
     ``write_admitted_batch`` — a replayed batch rewrites its own index
     partition."""
     idx = (
-        admitted.select(F.md5(F.col(text_col)).alias("_h"))
+        admitted.select(F.md5(F.col("text")).alias("_h"))
         .distinct()
         .withColumn("_hp", F.substring("_h", 1, HASH_PREFIX_LEN))
     )
@@ -123,7 +115,7 @@ def _read_admitted_hashes(spark: SparkSession, out_dir: str, batch_id: int):
     return idx.filter(F.col("batch") != int(batch_id))
 
 
-def rebuild_hash_index(spark: SparkSession, out_dir: str, text_col: str = "text") -> None:
+def rebuild_hash_index(spark: SparkSession, out_dir: str) -> None:
     """One-time migration for lakes written before the index existed:
     derive every batch's index partition from its admitted documents.
     The per-batch loop is over the bounded batch count (driver-side
@@ -132,7 +124,7 @@ def rebuild_hash_index(spark: SparkSession, out_dir: str, text_col: str = "text"
     for r in lake.select("batch").distinct().collect():
         b = int(r["batch"])
         write_hash_index_batch(
-            lake.filter(F.col("batch") == b), out_dir, b, text_col=text_col
+            lake.filter(F.col("batch") == b), out_dir, b
         )
 
 
@@ -220,7 +212,6 @@ def dedup_against_admitted(
     batch: DataFrame,
     out_dir: str,
     batch_id: int,
-    text_col: str = "text",
 ) -> DataFrame:
     """Cross-micro-batch exact dedup: drop docs whose content hash was
     already admitted in ANY earlier batch. The dedup state is the
@@ -245,7 +236,7 @@ def dedup_against_admitted(
 
     w = Window.partitionBy("_h").orderBy("doc_id")
     batch = (
-        batch.withColumn("_h", F.md5(F.col(text_col)))
+        batch.withColumn("_h", F.md5(F.col("text")))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -274,8 +265,6 @@ def run_ingest_gate_available_now(
     out_dir: str,
     checkpoint_dir: str,
     benchmark: DataFrame,
-    n: int = 5,
-    min_quality: float = 0.0,
     dedupe: bool = False,
 ):
     """readStream(documents parquet) -> per-batch gate -> per-batch
@@ -290,15 +279,13 @@ def run_ingest_gate_available_now(
 
     The benchmark bloom bitmap is built ONCE, before the stream starts,
     and every batch's ``gate_batch`` reuses it."""
-    bitmap = build_bloom_bitmap(benchmark, n=n)
+    bitmap = build_bloom_bitmap(benchmark)
     src = spark.readStream.schema(DOC_SCHEMA).parquet(in_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         admitted = gate_batch(
             batch_df,
             benchmark,
-            n=n,
-            min_quality=min_quality,
             bitmap=bitmap,
         )
         if dedupe:

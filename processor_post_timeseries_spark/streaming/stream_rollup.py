@@ -18,26 +18,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def stream_sessionize(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming W1: per-key session windows with late-data watermark.
+def stream_sessionize(events: DataFrame) -> DataFrame:
+    """Streaming W1: per-``user_id`` session windows (30-minute gap)
+    with a 1-hour late-data watermark.
     Works on both streaming and batch DataFrames (batch = exact result,
     used by tests to cross-check against the lag/cumsum sessionizer)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key), F.session_window(F.col(ts_col), gap))
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.col("user_id"), F.session_window(F.col("ts"), "30 minutes"))
         .agg(
             F.count("*").alias("n_samples"),
-            F.min(ts_col).alias("seg_start"),
-            F.max(ts_col).alias("seg_end"),
+            F.min("ts").alias("seg_start"),
+            F.max("ts").alias("seg_end"),
         )
         .select(
-            key,
+            "user_id",
             "n_samples",
             F.unix_micros(F.col("seg_start").cast("timestamp")).alias("seg_start_us"),
             F.unix_micros(F.col("seg_end").cast("timestamp")).alias("seg_end_us"),
@@ -45,24 +40,17 @@ def stream_sessionize(
     )
 
 
-def stream_sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key: str = "event_type",
-    width: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming W8: sliding (hopping) windows with a late-data
-    watermark — the overlap semantics the batch ``w8_sliding_windows``
+def stream_sliding_counts(events: DataFrame) -> DataFrame:
+    """Streaming W8: per-``event_type`` 2-hour windows sliding by 1 hour,
+    with a 1-hour late-data watermark — the overlap semantics the batch ``w8_sliding_windows``
     query certifies, maintained incrementally. Append mode emits a
     window only once the watermark passes its end, so sink rows are
     FINAL (exactly the property a tier sink needs: no in-place updates).
     Batch callers get the exact full result."""
-    win = F.window(F.col(ts_col), width, slide)
+    win = F.window(F.col("ts"), "2 hours", "1 hour")
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), F.col(key))
+        events.withWatermark("ts", "1 hour")
+        .groupBy(win.alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,4)")), 4)
@@ -72,7 +60,7 @@ def stream_sliding_counts(
         .select(
             F.unix_micros(F.col("w.start").cast("timestamp")).alias("win_start_us"),
             F.unix_micros(F.col("w.end").cast("timestamp")).alias("win_end_us"),
-            key,
+            "event_type",
             "n_events",
             "sum_value",
         )

@@ -212,7 +212,7 @@ class TestNgramTopk:
             [("s", "a b a b a"), ("s", "a b"), ("s", "x")],
             "source string, text string",
         )
-        out = {(r["gram"]): (r["n_occ"], r["rank"]) for r in ngram_freq_topk(df, n=2, k=10).collect()}
+        out = {(r["gram"]): (r["n_occ"], r["rank"]) for r in ngram_freq_topk(df, k=10).collect()}
         # "a b" occurs 2x in doc1 + 1x in doc2 = 3; "b a" 2x; "x" has no bigram
         assert out == {"a b": (3, 1), "b a": (2, 2)}
 

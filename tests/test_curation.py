@@ -37,7 +37,7 @@ def test_stage_attribution_first_match_wins(spark):
     )
     out = {
         r["doc_id"]: r["stage"]
-        for r in curate(docs, bench, contam_n=5, min_quality=0.3).collect()
+        for r in curate(docs, bench, min_quality=0.3).collect()
     }
     assert out == {
         1: "kept",
@@ -213,7 +213,7 @@ def test_curate_bloom_exact_mode_identical_to_exact(spark):
     }
     assert exact
     for c, b in ((docs, bench), (as_str(docs), as_str(bench))):
-        assert {str(r["doc_id"]) for r in contaminated_ids(c, b, n=5).collect()} == exact
+        assert {str(r["doc_id"]) for r in contaminated_ids(c, b).collect()} == exact
 
     audit = sorted(
         (str(r[0]), *r[1:]) for r in curate(docs, bench, min_quality=0.0).collect()
@@ -223,3 +223,11 @@ def test_curate_bloom_exact_mode_identical_to_exact(spark):
     )
     assert audit == audit_str
     assert sum(r[3] == "contaminated" for r in audit) == len(exact)
+
+
+def test_curate_raises_on_null_text(spark):
+    """A NULL text has no content digest: the audit must not drop the doc."""
+    bench = _docs(spark, [(900, "q w e r t y u i o p", "bench")])
+    docs = _docs(spark, [(1, GOOD, "a"), (2, None, "a"), (3, GOOD + " more", "b")])
+    with pytest.raises(Exception, match="doc '2' has NULL text"):
+        curate(docs, bench, min_quality=0.0).collect()

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from processor_post_timeseries_spark.functions.multimodal import (
@@ -53,7 +54,7 @@ def test_shingles_and_jaccard(spark):
     d1 = {r["shingle"] for r in sh.filter("doc_id = 'd1'").collect()}
     assert "the quick brown" in d1 and len(d1) == 7
     assert sh.filter("doc_id = 'd5'").count() == 0  # shorter than n
-    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in ngram_jaccard_pairs(_docs(spark), 3, 0.3).collect()}
+    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in ngram_jaccard_pairs(_docs(spark), 0.3).collect()}
     assert pairs[("d1", "d2")] == 1.0
     # d1 vs d3: 7 shingles each; only the final shingle differs
     # ("the lazy dog" vs "the lazy cat") -> 6 common / 8 union = 0.75
@@ -238,6 +239,22 @@ def test_lsh_hot_bucket_cap_bounds_skew(spark):
     assert all(d == 950 for d in drops.values()) and len(drops) == 4
     # sanity: identical docs all landed in one bucket per band
     assert all(r["n_docs"] == 1000 for r in stats.collect())
+
+
+def test_uncapped_lsh_raises_when_its_checkpoint_blocks_are_lost(spark):
+    """The uncapped path ``localCheckpoint``s its band buckets. Losing
+    those blocks, as a lost executor does, makes the next action raise
+    instead of returning fewer pairs."""
+    jsc = spark.sparkContext._jsc
+    before = set(dict(jsc.getPersistentRDDs()))
+    pairs = lsh_candidate_pairs(_docs(spark), 16, 4, max_bucket_size=None)
+    assert pairs.count() > 0
+    lost = {k: r for k, r in dict(jsc.getPersistentRDDs()).items() if k not in before}
+    assert lost
+    for rdd in lost.values():
+        rdd.unpersist(True)
+    with pytest.raises(Exception, match="Checkpoint block"):
+        pairs.count()
 
 
 def test_simhash_near_pairs_cap(spark):

@@ -55,7 +55,7 @@ def test_gapfill_tokens_block_form(spark):
         [("d1", [None, 5, None, None, 7, None], 6, "s"), ("d2", [1, None, 2], 3, "s")],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    got = {r["doc_id"]: list(r["tokens"]) for r in gapfill_tokens(df, fill_first=0).collect()}
+    got = {r["doc_id"]: list(r["tokens"]) for r in gapfill_tokens(df).collect()}
     assert got["d1"] == [0, 5, 5, 5, 7, 7]
     assert got["d2"] == [1, 1, 2]
 

@@ -36,7 +36,7 @@ def test_gate_batch_blocks_contaminated_admits_short(spark):
             (3, "hi"),                # too short for 5-grams -> admitted
         ],
     )
-    got = {r["doc_id"] for r in gate_batch(batch, bench, n=5).collect()}
+    got = {r["doc_id"] for r in gate_batch(batch, bench).collect()}
     assert got == {1, 3}
 
 
@@ -47,7 +47,7 @@ def test_streaming_gate_exactly_once_across_restart(spark, tmp_path):
     _docs(spark, [(1, "a b c d e f"), (2, "x q w e r t y")]).write.mode(
         "append"
     ).parquet(in_dir)
-    q = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, n=5)
+    q = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench)
     q.awaitTermination()
     first = spark.read.parquet(out_dir)
     assert {r["doc_id"] for r in first.collect()} == {1}
@@ -57,7 +57,7 @@ def test_streaming_gate_exactly_once_across_restart(spark, tmp_path):
     _docs(spark, [(3, "m n o p q r"), (4, "z q w e r t z")]).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, n=5)
+    q2 = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench)
     q2.awaitTermination()
     out = spark.read.parquet(out_dir)
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
@@ -84,10 +84,10 @@ def test_gate_batch_bloom_exact_identical_to_exact(spark):
         r["doc_id"]
         for r in batch.join(contaminated, "doc_id", "left_anti").collect()
     }
-    assert {r["doc_id"] for r in gate_batch(batch, bench, n=5).collect()} == ref
+    assert {r["doc_id"] for r in gate_batch(batch, bench).collect()} == ref
     bm = build_bloom_bitmap(bench, n=5)
     assert {
-        r["doc_id"] for r in gate_batch(batch, bench, n=5, bitmap=bm).collect()
+        r["doc_id"] for r in gate_batch(batch, bench, bitmap=bm).collect()
     } == ref
     assert 100 not in ref and 101 not in ref and 102 in ref
 
@@ -98,7 +98,7 @@ def test_streaming_gate_bloom_exact_mode(spark, tmp_path):
     _docs(spark, [(1, "a b c d e f"), (2, "x q w e r t y")]).write.mode(
         "append"
     ).parquet(in_dir)
-    q = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, n=5)
+    q = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench)
     q.awaitTermination()
     assert {r["doc_id"] for r in spark.read.parquet(out_dir).collect()} == {1}
 
@@ -114,7 +114,7 @@ def test_streaming_dedupe_across_waves(spark, tmp_path):
     _docs(spark, [(1, "a b c d e f"), (2, "a b c d e f")]).write.mode(
         "append"
     ).parquet(in_dir)
-    q = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, n=5, dedupe=True)
+    q = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, dedupe=True)
     q.awaitTermination()
     assert sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect()) == [1]
 
@@ -122,7 +122,7 @@ def test_streaming_dedupe_across_waves(spark, tmp_path):
     _docs(spark, [(3, "a b c d e f"), (4, "m n o p q r")]).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, n=5, dedupe=True)
+    q2 = run_ingest_gate_available_now(spark, in_dir, out_dir, ck, bench, dedupe=True)
     q2.awaitTermination()
     assert sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect()) == [1, 4]
 

@@ -43,7 +43,7 @@ def test_split_on_gap_and_halfopen_bounds(spark):
     df = _seq(spark, [("d1", [1, 2, 3, 4, 5], [0, 1000, 2000, 52000, 53000], "s")])
     out = {
         r["seg_id"]: (r["seg_start_us"], r["seg_end_us"], r["n_samples"])
-        for r in segments_from_ts_arrays(df, gap_us=4000).collect()
+        for r in segments_from_ts_arrays(df).collect()
     }
     assert out == {0: (0, 2001, 3), 1: (52000, 53001, 2)}
 
@@ -51,13 +51,13 @@ def test_split_on_gap_and_halfopen_bounds(spark):
 def test_gap_equal_to_threshold_does_not_split(spark):
     # reference splits on delta > threshold, not >=
     df = _seq(spark, [("d1", [1, 2], [0, 4000], "s")])
-    segs = segments_from_ts_arrays(df, gap_us=4000).collect()
+    segs = segments_from_ts_arrays(df).collect()
     assert len(segs) == 1 and segs[0]["n_samples"] == 2
 
 
 def test_single_sample_and_empty(spark):
     df = _seq(spark, [("one", [7], [123], "s"), ("empty", [], [], "s")])
-    segs = segments_from_ts_arrays(df, gap_us=4000).collect()
+    segs = segments_from_ts_arrays(df).collect()
     assert len(segs) == 1
     r = segs[0]
     assert (r["doc_id"], r["seg_start_us"], r["seg_end_us"], r["n_samples"]) == (
@@ -72,7 +72,7 @@ def test_blocks_cut_within_segments_with_real_us_keys(spark):
     rows = sorted(
         (
             (r["seg_id"], r["block_no"], r["start_us"], r["end_us"], r["n"], r["key"])
-            for r in block_bounds_from_ts_arrays(df, gap_us=4000, block_size=2).collect()
+            for r in block_bounds_from_ts_arrays(df, block_size=2).collect()
         )
     )
     assert rows == [
@@ -115,8 +115,8 @@ def test_payload_blocks_refuse_int32_span_overflow(spark):
 @pytest.mark.parametrize(
     "emit",
     [
-        lambda df: segments_from_ts_arrays(df, gap_us=4000),
-        lambda df: block_bounds_from_ts_arrays(df, gap_us=4000, block_size=2),
+        lambda df: segments_from_ts_arrays(df),
+        lambda df: block_bounds_from_ts_arrays(df, block_size=2),
         lambda df: irregular_to_blocks(df, gap_us=4000, block_size=2),
         lambda df: rate_from_ts_arrays(df),
         lambda df: tier_from_ts_arrays(df, window_us=1000),
@@ -214,8 +214,8 @@ def test_array_model_plans_have_zero_exchanges(spark):
 
     df = _seq(spark, [("d1", [1, 2], [0, 1000], "s")])
     for out in (
-        segments_from_ts_arrays(df, gap_us=4000),
-        block_bounds_from_ts_arrays(df, gap_us=4000, block_size=2),
+        segments_from_ts_arrays(df),
+        block_bounds_from_ts_arrays(df, block_size=2),
         irregular_to_blocks(df, gap_us=4000, block_size=2),
         to_blocks(df, block_size=2),
         rate_from_ts_arrays(df),
@@ -264,8 +264,8 @@ def test_partition_invariance_and_sample_explode(spark):
         (f"d{i}", [i, i + 1, i + 2], [0, 1000, 60000 + i], "s") for i in range(20)
     ]
     df = _seq(spark, rows)
-    a = sorted(map(tuple, segments_from_ts_arrays(df.repartition(1), gap_us=4000).collect()))
-    b = sorted(map(tuple, segments_from_ts_arrays(df.repartition(7), gap_us=4000).collect()))
+    a = sorted(map(tuple, segments_from_ts_arrays(df.repartition(1)).collect()))
+    b = sorted(map(tuple, segments_from_ts_arrays(df.repartition(7)).collect()))
     assert a == b
     flat = explode_ts_samples(df)
     assert flat.count() == 60

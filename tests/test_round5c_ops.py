@@ -140,7 +140,7 @@ def test_zscore_flags_spike_and_dropout(spark):
     rows = [(i, "g", v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "id long, grp string, value double")
     got = {r["id"]: (r["flagged"], r["side"]) for r in
-           zscore_flags(df, "grp", "value", "id", k=2).collect()}
+           zscore_flags(df, "grp", "value", "id").collect()}
     assert got[22] == (True, 1)      # spike
     assert got[23] == (True, -1)     # dropout
     assert all(not got[i][0] for i in range(22))
@@ -152,7 +152,7 @@ def test_zscore_flags_match_numpy_inequality(spark):
     rows = [(i, "g", float(v)) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "id long, grp string, value double")
     got = {r["id"]: r["flagged"] for r in
-           zscore_flags(df, "grp", "value", "id", k=2).collect()}
+           zscore_flags(df, "grp", "value", "id").collect()}
     c = np.round(vals * 100).astype(np.int64)
     n, s, q = len(c), int(c.sum()), int((c.astype(object) ** 2).sum())
     for i, v in enumerate(c):
@@ -163,7 +163,7 @@ def test_zscore_flags_match_numpy_inequality(spark):
 
 def test_zscore_flags_singleton_group_unflagged(spark):
     df = spark.createDataFrame([(1, "solo", 42.0)], "id long, grp string, value double")
-    r = zscore_flags(df, "grp", "value", "id", k=2).collect()[0]
+    r = zscore_flags(df, "grp", "value", "id").collect()[0]
     assert (r["flagged"], r["side"]) == (False, 0)
 
 
@@ -179,7 +179,7 @@ def test_containment_detects_embedded_doc(spark):
         [(1, short, "s"), (2, long_, "s")], ["doc_id", "text", "source"]
     )
     got = {(r["doc_a"], r["doc_b"]): r["containment"] for r in
-           ngram_containment_pairs(df, n=3, threshold=0.5).collect()}
+           ngram_containment_pairs(df).collect()}
     assert got[(1, 2)] == 1.0          # short wholly inside long
     assert (2, 1) not in got           # reverse direction below threshold
 
@@ -190,7 +190,7 @@ def test_source_overlap_matrix_counts(spark):
     df = spark.createDataFrame(
         [(1, a, "sA"), (2, b, "sB"), (3, a, "sA")], ["doc_id", "text", "source"]
     )
-    rows = source_overlap_matrix(df, n=3).collect()
+    rows = source_overlap_matrix(df).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["source_a"], r["source_b"], r["n_common"]) == ("sA", "sB", 1)
@@ -247,7 +247,7 @@ def test_lttb_matches_bruteforce_and_keeps_edges(spark):
     )
     got = {
         r["bucket"]: (r["x"], r["y"], r["area2"])
-        for r in lttb_downsample(df, 30, "part", "x", "y").collect()
+        for r in lttb_downsample(df, 30).collect()
     }
     want = _lttb_reference(points, 30)
     assert got == want
@@ -344,7 +344,7 @@ def test_value_histogram_bins_and_edges(spark):
         [("c", v) for v in range(100)], "part string, v long"
     )
     rows = {r["bin"]: (r["n"], r["lo"]) for r in
-            value_histogram(df, "part", "v", n_bins=20).collect()}
+            value_histogram(df, "part", "v").collect()}
     assert len(rows) == 20
     for b in range(20):
         assert rows[b] == (5, 5 * b), b
@@ -354,7 +354,7 @@ def test_value_histogram_constant_channel_single_bin(spark):
     from processor_post_timeseries_spark.operators.trend import value_histogram
 
     df = spark.createDataFrame([("c", 7)] * 9, "part string, v long")
-    rows = value_histogram(df, "part", "v", n_bins=20).collect()
+    rows = value_histogram(df, "part", "v").collect()
     assert len(rows) == 1
     assert (rows[0]["bin"], rows[0]["n"], rows[0]["lo"]) == (0, 9, 7)
 
@@ -375,7 +375,7 @@ def test_time_weighted_mean_hand_calc(spark):
     df = spark.createDataFrame(rows, "part string, t long, v long")
     got = {
         r["win"]: (r["twa_num"], r["covered_us"])
-        for r in time_weighted_mean(df, W, "part", "t", "v").collect()
+        for r in time_weighted_mean(df, W).collect()
     }
     # v=10 holds [20,250): win0 80us, win1 100us, win2 50us
     # v=30 holds [250,260): win2 10us
@@ -397,8 +397,8 @@ def test_time_weighted_mean_partition_invariant_and_single_point(spark):
     rows = [("a", int(t), int(rng.randint(1, 50))) for t in ts]
     rows.append(("solo", 1234, 7))  # single point: holds to window end
     df = spark.createDataFrame(rows, "part string, t long, v long")
-    a = sorted(tuple(r) for r in time_weighted_mean(df.repartition(1), 1000, "part", "t", "v").collect())
-    b = sorted(tuple(r) for r in time_weighted_mean(df.repartition(13), 1000, "part", "t", "v").collect())
+    a = sorted(tuple(r) for r in time_weighted_mean(df.repartition(1), 1000).collect())
+    b = sorted(tuple(r) for r in time_weighted_mean(df.repartition(13), 1000).collect())
     assert a == b
     solo = [r for r in a if r[0] == "solo"]
     # win 1, covers [1234, 2000): 766 us at v=7

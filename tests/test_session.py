@@ -95,3 +95,28 @@ def test_worker_tasks_reread_no_zip_directory_after_the_first_engine_task():
     assert [n for _pid, n in second] == [0, 0]
     assert got["driver_stock"]
     assert not getattr(zipimport.zipimporter.invalidate_caches, "_stat_keyed", False)
+
+
+_FS_SCRIPT = r"""
+from processor_post_timeseries_spark.session import get_spark
+
+spark = get_spark("fs-probe", master="local[1]", extra_conf={"spark.driver.memory": "1g"})
+jvm = spark.sparkContext._jvm
+fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+    jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration())
+print(fs.getClass().getName(), fs.getRawFileSystem().getClass().getName())
+spark.stop()
+"""
+
+
+def test_fresh_session_resolves_file_scheme_to_the_nio_filesystem():
+    """A fresh ``get_spark`` session loads the shipped jar: ``file:///``
+    resolves to the NIO filesystem, not a silent fallback to the stock
+    ``RawLocalFileSystem``, which forks ``chmod`` for every file it
+    creates."""
+    pkg_dir = os.path.dirname(os.path.abspath(session.__file__))
+    out = subprocess.run([sys.executable, "-c", _FS_SCRIPT], cwd=os.path.dirname(pkg_dir),
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-4000:]
+    got = out.stdout.strip().splitlines()[-1].split()
+    assert got == ["pts.fs.NioLocalFileSystem", "pts.fs.NioRawLocalFileSystem"]

@@ -31,7 +31,7 @@ class TestDuplicateSpans:
         # same phase (both copies start at position 1): every aligned
         # window of the run matches across docs
         docs = _docs(spark, [(1, BOILER + "abcdefgh"), (2, BOILER + "zzzzzzzz")])
-        out = duplicate_spans(docs, window=32, stride=8)
+        out = duplicate_spans(docs)
         by_doc = {}
         for r in out.collect():
             by_doc.setdefault(r["doc_id"], set()).add(r["pos"])
@@ -45,7 +45,7 @@ class TestDuplicateSpans:
         rng = random.Random(0)
         mk = lambda: "".join(rng.choice("abcdefghij") for _ in range(80))  # noqa: E731
         docs = _docs(spark, [(1, mk()), (2, mk())])
-        assert duplicate_spans(docs, window=32, stride=8).count() == 0
+        assert duplicate_spans(docs).count() == 0
 
     def test_report_fraction(self, spark):
         # doc 3 too short for a window -> absent from the report
@@ -120,7 +120,7 @@ class TestRepetition:
         # "a b a b a": bigrams [a b, b a, a b, b a] -> 4 grams, 2 distinct,
         # dup_fraction 0.5, top_share 0.5
         docs = _docs(spark, [(1, "a b a b a"), (2, "q w e r t"), (3, "solo")])
-        out = {r["doc_id"]: r for r in repetition_metrics(docs, n=2).collect()}
+        out = {r["doc_id"]: r for r in repetition_metrics(docs).collect()}
         assert set(out) == {1, 2}  # "solo" has no bigram
         r1 = out[1]
         assert (r1["n_grams"], r1["n_distinct"]) == (4, 2)

@@ -19,7 +19,7 @@ def test_stream_sessionize_batch_twin(spark):
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
     got = {
         (r["user_id"], r["seg_start_us"]): r["n_samples"]
-        for r in stream_sessionize(df, gap="30 minutes").collect()
+        for r in stream_sessionize(df).collect()
     }
     exp_sessions = {(1, 0): 3, (1, 3600): 2, (2, 0): 1, (2, 5000): 1}
     base_us = int(base.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
